@@ -546,8 +546,9 @@ def _hnsw_index(spark: SparkSession, sf_dir: str):
 
 def q_hnsw_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HNSW offline build + batch graph query (Q5/Q6) over a fixed
-    200-vector subset: distributed LSH-candidate + NN-descent graph
-    build (no driver-side collect — operators/hnsw.py), prebuilt to a
+    200-vector subset: LSH-candidate + NN-descent graph build (at 200
+    rows "auto" resolves to the pure-JVM expr scorer, so the graph is
+    built by the distributed plan — operators/hnsw.py), prebuilt to a
     level-partitioned layout, then greedy descent + beam search query.
     Graph traversal itself is not SQL-expressible, but the search is
     engineered to achieve recall 1.0 on this contract instance (beam

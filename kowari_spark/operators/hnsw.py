@@ -13,8 +13,13 @@ per level L, the layer is {nodes with level >= L} and its edges are each
 node's M (approximate) nearest neighbors within the layer. Quality is
 validated by recall against brute force, not graph isomorphism.
 
-The neighbor graph is built WITHOUT any driver-side collect, in one
-declarative plan covering every level at once:
+A graph of at most ``HNSW.BUILD_MAX_NODES`` nodes (measured break-even,
+inside the driver beam's ``HNSW.BEAM_MAX_NODES``) is built in memory on
+the driver by the same algorithm with the same arithmetic, so its edge
+set is identical to the distributed build's (``HNSW.build`` states the
+rule and its fall-through). Every other graph is built WITHOUT any
+driver-side collect, in one declarative plan covering every level at
+once:
 
 1. each node explodes into rows for levels 0..node_level, so a single
    (level, table, bucket) self-join builds all layers together;
@@ -77,6 +82,24 @@ def assign_levels(
     return df.withColumn("node_level", F.least(lvl, F.lit(max_level)).cast("int"))
 
 
+def _stable_topk(A, k: int):
+    """``np.argsort(A, axis=1, kind="stable")[:, :k]`` without sorting
+    whole rows: a partition finds each row's k-th smallest value, and
+    only the entries at or below it are ordered by (value, column).
+    Rows holding NaN take the full sort (NaN orders last there)."""
+    import numpy as np
+
+    rows, width = A.shape
+    if k <= 0 or k >= width or np.isnan(A).any():
+        return np.argsort(A, axis=1, kind="stable")[:, :k]
+    kth = np.partition(A, k - 1, axis=1)[:, k - 1:k]
+    r, c = np.nonzero(A <= kth)  # >= k per row; row-major
+    o = np.lexsort((c, A[r, c], r))
+    r, c = r[o], c[o]
+    rank = np.arange(len(r)) - np.searchsorted(r, r)
+    return c[rank < k].reshape(rows, k)
+
+
 class HNSW:
     """Offline-built layered neighbor graph (reference defaults M=16,
     ef=32, src/index.rs:364-368)."""
@@ -120,6 +143,17 @@ class HNSW:
     #: the pure-JVM plan is as fast (measured equal at n=200) and skips
     #: the session's first-Python-worker spinup entirely
     AUTO_GEMM_MIN_ROWS = 1000
+
+    #: ``build`` runs in memory only up to this many nodes (and within
+    #: the beam's node bound). Measured on 64-d vectors at local[4]
+    #: (4 cores), in-memory vs distributed wall time: the library
+    #: defaults win 18.6 vs 57.4 s at 10k nodes, 42.0 vs 110.7 s at 20k
+    #: and 112.5 vs 212.8 s at 40k; the cheapest build (num_tables=2,
+    #: refine_rounds=0) wins 5.7 vs 8.9 s at 10k and 10.8 vs 11.5 s at
+    #: 20k but loses 26.9 vs 19.3 s at 40k, where the driver's serial
+    #: kernel calls fall behind four executor cores. More executor
+    #: cores move the break-even lower.
+    BUILD_MAX_NODES = 20000
 
     def _resolve_scorer(self, metric: str, n: int | None = None) -> str:
         if self.scorer == "auto":
@@ -253,89 +287,90 @@ class HNSW:
             .select("level", "src", "dst", "__s")
         )
 
-    def _group_topm_fn(self, metric: str, id_type: str):
-        """(pandas fn, output schema) scoring every ordered pair inside
-        one group — the shared kernel of the bucket scorer (groups =
-        (level, table, bucket)) and the GEMM refine (groups = (level,
-        common-neighbor)). The group's rows must carry ``level``,
-        ``__vid`` and ``__v``; extra group-key columns are ignored.
-        Per-row reductions only, so scores are independent of grouping
-        and Arrow batching — the same pair scores identically in every
+    def _pair_topm(self, V, metric: str):
+        """Score every ordered pair of the rows of ``V`` (one group,
+        rows in id order) and keep each row's top-m — the shared kernel
+        of the bucket scorer (groups = (level, table, bucket)), the GEMM
+        refine (groups = (level, common-neighbor)) and the in-memory
+        build. Returns (row, col, score) arrays, row-major. Per-row
+        reductions only, so scores are independent of grouping and
+        Arrow batching — the same pair scores identically in every
         group that contains it, which is what lets the downstream
         groupBy(level, src, dst).max dedupe across groups."""
         import numpy as np
+
+        n, d = V.shape
+        k = min(self.m, n - 1)
+        if metric == "cosine":
+            norms = np.linalg.norm(V, axis=1, keepdims=True)
+            zero = (norms == 0.0).ravel()
+            norms[norms == 0.0] = 1.0
+            Vn = V / norms
+        if metric == "manhattan":
+            # the |diff| broadcast temp is (chunk, b, d) — budget it
+            chunk = max(1, min(1024, (1 << 24) // max(n * d, 1)))
+        else:
+            chunk = max(1, min(1024, (1 << 22) // max(n, 1)))
+        out_r, out_c, out_s = [], [], []
+        for lo in range(0, n, chunk):
+            hi = min(lo + chunk, n)
+            if metric == "cosine":
+                S = Vn[lo:hi] @ Vn.T
+                # zero-norm rows score 0.0 (reference utils.rs:9-13)
+                if zero.any():
+                    S[:, zero] = 0.0
+                    S[zero[lo:hi], :] = 0.0
+            elif metric == "dot":
+                S = V[lo:hi] @ V.T
+            elif metric == "euclidean":
+                d2 = (
+                    np.sum(V[lo:hi] * V[lo:hi], axis=1)[:, None]
+                    + np.sum(V * V, axis=1)[None, :]
+                    - 2.0 * (V[lo:hi] @ V.T)
+                )
+                S = -np.sqrt(np.maximum(d2, 0.0))
+            else:  # manhattan
+                S = -np.abs(V[lo:hi, None, :] - V[None, :, :]).sum(axis=2)
+            # vectorized top-k selection: self-score -> -inf, stable
+            # order over id-ordered columns == (-score, id) ranking,
+            # then drop non-finite picks (self, NaN-poisoned)
+            rows = np.arange(lo, hi)
+            S[rows - lo, rows] = -np.inf
+            order = _stable_topk(-S, k)
+            picked = S[np.arange(hi - lo)[:, None], order]
+            r, c = np.nonzero(np.isfinite(picked))
+            out_r.append(r + lo)
+            out_c.append(order[r, c])
+            out_s.append(picked[r, c])
+        return (np.concatenate(out_r), np.concatenate(out_c),
+                np.concatenate(out_s))
+
+    def _group_topm_fn(self, metric: str, id_type: str):
+        """(pandas fn, output schema) running ``_pair_topm`` over one
+        ``applyInPandas`` group. The group's rows must carry ``level``,
+        ``__vid`` and ``__v``; extra group-key columns are ignored."""
+        import numpy as np
         import pandas as pd
 
-        m = self.m
         out_schema = f"level int, src {id_type}, dst {id_type}, __s double"
 
         def group_topm(pdf: pd.DataFrame) -> pd.DataFrame:
-            n = len(pdf)
-            if n < 2:
+            if len(pdf) < 2:
                 return pd.DataFrame(
                     {"level": [], "src": [], "dst": [], "__s": []}
                 )
             level = int(pdf["level"].iloc[0])
-            # id-ascending row order: the vectorized stable argsort
-            # below then breaks exact score ties by POSITION = by id —
-            # the same (-score, id) ordering the scalar selection used.
-            # Scores are position-independent (same vectors, same BLAS
-            # reduction), so this only fixes the tie-break frame.
+            # id-ascending row order: the stable argsort then breaks
+            # exact score ties by POSITION = by id, the (-score, id)
+            # ordering of the windows downstream. Scores are
+            # position-independent (same vectors, same BLAS reduction),
+            # so this only fixes the tie-break frame.
             pdf = pdf.sort_values("__vid", kind="mergesort")
-            ids = list(pdf["__vid"])
-            ids_arr = np.empty(n, dtype=object)
-            ids_arr[:] = ids
+            ids = pdf["__vid"].to_numpy()
             V = np.asarray(list(pdf["__v"]), dtype=np.float64)  # (b, d)
-            if metric == "cosine":
-                norms = np.linalg.norm(V, axis=1, keepdims=True)
-                zero = (norms == 0.0).ravel()
-                norms[norms == 0.0] = 1.0
-                Vn = V / norms
-            out_src, out_dst, out_s = [], [], []
-            k = min(m, n - 1)
-            d = V.shape[1]
-            if metric == "manhattan":
-                # the |diff| broadcast temp is (chunk, b, d) — budget it
-                chunk = max(1, min(1024, (1 << 24) // max(n * d, 1)))
-            else:
-                chunk = max(1, min(1024, (1 << 22) // max(n, 1)))
-            for lo in range(0, n, chunk):
-                hi = min(lo + chunk, n)
-                if metric == "cosine":
-                    S = Vn[lo:hi] @ Vn.T
-                    # zero-norm rows score 0.0 (reference utils.rs:9-13)
-                    if zero.any():
-                        S[:, zero] = 0.0
-                        S[zero[lo:hi], :] = 0.0
-                elif metric == "dot":
-                    S = V[lo:hi] @ V.T
-                elif metric == "euclidean":
-                    d2 = (
-                        np.sum(V[lo:hi] * V[lo:hi], axis=1)[:, None]
-                        + np.sum(V * V, axis=1)[None, :]
-                        - 2.0 * (V[lo:hi] @ V.T)
-                    )
-                    S = -np.sqrt(np.maximum(d2, 0.0))
-                else:  # manhattan
-                    S = -np.abs(V[lo:hi, None, :] - V[None, :, :]).sum(axis=2)
-                # vectorized top-k selection (the per-row Python
-                # sorted() loop was the task bottleneck for big
-                # buckets): self-score -> -inf, stable argsort over
-                # id-ordered columns == (-score, id) ranking, then drop
-                # non-finite picks (self, NaN-poisoned) exactly as the
-                # scalar path's isfinite/kth filters did
-                rows = np.arange(lo, hi)
-                S[rows - lo, rows] = -np.inf
-                order = np.argsort(-S, axis=1, kind="stable")[:, :k]
-                picked = S[np.arange(hi - lo)[:, None], order]
-                finite = np.isfinite(picked)
-                for i in range(hi - lo):
-                    sel = order[i][finite[i]]
-                    out_src.extend([ids[lo + i]] * len(sel))
-                    out_dst.extend(ids_arr[sel])
-                    out_s.extend(float(x) for x in picked[i][finite[i]])
+            r, c, s = self._pair_topm(V, metric)
             return pd.DataFrame(
-                {"level": level, "src": out_src, "dst": out_dst, "__s": out_s}
+                {"level": level, "src": ids[r], "dst": ids[c], "__s": s}
             )
 
         return group_topm, out_schema
@@ -449,6 +484,206 @@ class HNSW:
             .select("src", "dst", "level")
         )
 
+    # -- bounded in-memory build --------------------------------------------
+
+    def _top_m_local(self, key, s, n: int):
+        """numpy twin of the distributed tail over edges encoded as
+        ``key = (level·n + src)·n + dst``: the ``groupBy(level, src,
+        dst).max`` dedupe, then the M best per (level, src) ordered by
+        (-score, dst). Node positions are id-ordered (see
+        ``_build_in_memory``), so position order IS id order."""
+        import numpy as np
+
+        order = np.argsort(key, kind="stable")
+        key, s = key[order], s[order]
+        first = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
+        key, s = key[first], np.maximum.reduceat(s, first)
+        # stable: score ties keep the key order, i.e. ascending dst
+        order = np.lexsort((-s, key // n))
+        key = key[order]
+        grp = key // n
+        pos = np.arange(len(key))
+        start = np.r_[True, grp[1:] != grp[:-1]]
+        rank = pos - np.maximum.accumulate(np.where(start, pos, 0))
+        return key[rank < self.m]
+
+    def _collect_bounded_nodes(self, df: DataFrame, id_col: str,
+                               vec_col: str, max_nodes: int):
+        """(ids, V, levels) of ``df``'s nodes in collect order, with
+        their ``assign_levels`` level: one collect capped at max_nodes +
+        1 rows — the bounded node input of both driver-side paths (the
+        query beam and the in-memory build). None when the nodes do not
+        fit (none, or more than max_nodes), an id or vector is null,
+        the vectors are ragged (the distributed fold's zip_with
+        truncation is not replicated) or an entry is non-finite (NaN
+        sorts last in Python keys but first in Spark's descending
+        double order)."""
+        import numpy as np
+
+        if max_nodes <= 0:
+            return None
+        rows = (
+            assign_levels(df.select(id_col, vec_col), id_col, self.seed,
+                          self.max_level)
+            .limit(max_nodes + 1)
+            .collect()
+        )
+        if not rows or len(rows) > max_nodes:
+            return None
+        if any(r[0] is None or r[1] is None for r in rows):
+            return None
+        width = len(rows[0][1])
+        if any(len(r[1]) != width for r in rows):
+            return None
+        V = np.asarray([r[1] for r in rows], dtype=np.float64)  # null -> nan
+        if not np.isfinite(V).all():
+            return None
+        levels = np.asarray([r[2] for r in rows], dtype=np.int64)
+        return [r[0] for r in rows], V, levels
+
+    def _build_in_memory(self, df: DataFrame, id_col: str, vec_col: str,
+                         metric: str, dim: int | None,
+                         max_nodes: int) -> DataFrame | None:
+        """The GEMM-scorer build on the driver, over the nodes
+        ``_collect_bounded_nodes`` returns for at most ``max_nodes``
+        rows. Returns None — the caller then runs the distributed plan
+        — when that collect does, and for the other input the
+        distributed plan may treat differently: duplicate or
+        non-integral/non-string ids, a ``dim`` the vectors do not have,
+        or a score or LSH projection that overflows to NaN.
+
+        Every step repeats one statement of the distributed plan with
+        the same arithmetic, so the edge set is identical (pinned by
+        tests/test_hnsw.py::test_build_in_memory_parity): sign-LSH
+        buckets fold ``x_j·p_j`` in dimension order like
+        ``SignLSH.bucket_sql``; pair scores come from the same
+        ``_pair_topm`` kernel, called once per (level, table, bucket)
+        group and, in each refine round, once per (level, mid) group;
+        refine 1-hop edges score through the ``similarity_expr`` fold;
+        dedupe, top-M, entry point and isolated-node patch follow
+        ``build`` step by step."""
+        import numpy as np
+        from pyspark.sql import types as T
+
+        from kowari_spark.fsutil import local_df
+        from kowari_spark.operators.lsh import SignLSH
+
+        id_type = df.schema[id_col].dataType
+        if not isinstance(id_type, (T.IntegralType, T.StringType)):
+            return None  # only these order identically in Python and Spark
+        nodes = self._collect_bounded_nodes(df, id_col, vec_col, max_nodes)
+        if nodes is None:
+            return None
+        ids, V, levels = nodes
+        n, width = V.shape
+        if dim not in (None, width) or len(set(ids)) != n:
+            return None
+        # node position == id rank: every id tie-break of the plan
+        # becomes a position tie-break
+        order = sorted(range(n), key=ids.__getitem__)
+        ids = [ids[i] for i in order]
+        V, levels = V[order], levels[order]
+        top = int(levels.max())
+
+        def fold(term):
+            # aggregate(..., 0.0D, (acc, x) -> acc + x): left to right
+            acc = 0.0
+            for j in range(width):
+                acc = acc + term(j)
+            return acc
+
+        keys, scores = [], []
+
+        def score_group(level: int, members: np.ndarray) -> None:
+            if len(members) >= 2:
+                r, c, s = self._pair_topm(V[members], metric)
+                keys.append((level * n + members[r]) * n + members[c])
+                scores.append(s)
+
+        def merged():
+            if not keys:
+                return np.empty(0, dtype=np.int64)
+            key = self._top_m_local(np.concatenate(keys),
+                                    np.concatenate(scores), n)
+            keys.clear()
+            scores.clear()
+            return key
+
+        # candidate pass: one kernel call per (level, table, bucket)
+        for t in range(self.num_tables):
+            planes = SignLSH(dim=width, num_planes=self.num_planes,
+                             seed=self.seed + t).planes
+            proj = fold(lambda j: V[:, j, None] * planes[None, :, j])
+            if np.isnan(proj).any():
+                return None  # Spark orders NaN above 0.0; numpy does not
+            bucket = ((proj >= 0.0) << np.arange(self.num_planes)).sum(axis=1)
+            for level in range(top + 1):
+                layer = np.flatnonzero(levels >= level)
+                for b in np.unique(bucket[layer]):
+                    score_group(level, layer[bucket[layer] == b])
+        edges = merged()
+
+        # connectivity patch (see build): isolated members link to the
+        # entry point; an isolated entry point links to the smallest
+        # other member of its layer
+        ep = int(np.flatnonzero(levels == top)[0])
+        patch = []
+        for level in range(top + 1):
+            layer = np.flatnonzero(levels >= level)
+            linked = edges[edges // (n * n) == level] // n % n
+            for src in np.setdiff1d(layer, linked):
+                if src != ep:
+                    patch.append((level * n + src) * n + ep)
+                elif len(layer) > 1:
+                    patch.append((level * n + ep) * n + layer[layer != ep][0])
+        edges = np.concatenate([edges, np.asarray(patch, dtype=np.int64)])
+
+        VT = np.ascontiguousarray(V.T)
+        if metric == "cosine":
+            norm = np.sqrt(fold(lambda j: VT[j] * VT[j]))
+        for _ in range(self.refine_rounds):
+            if not len(edges):
+                break  # no edge, no 2-hop candidate (one-node graph)
+            lvl, src, dst = edges // (n * n), edges // n % n, edges % n
+            # two-hop candidates: one kernel call per (level, mid) over
+            # mid's undirected neighbors, distinct like the plan's
+            und = np.unique(np.concatenate([edges, (lvl * n + dst) * n + src]))
+            mids = und // n
+            bounds = np.flatnonzero(np.diff(mids)) + 1
+            for g in np.split(np.arange(len(und)), bounds):
+                score_group(int(mids[g[0]] // n), und[g] % n)
+            # 1-hop edges: similarity_expr(metric, dst_vec, src_vec),
+            # gathered one dimension at a time (O(edges) memory)
+            if metric in ("cosine", "dot"):
+                s = fold(lambda j: VT[j, dst] * VT[j, src])
+            elif metric == "euclidean":
+                s = -np.sqrt(
+                    fold(lambda j: np.square(VT[j, dst] - VT[j, src]))
+                )
+            else:  # manhattan
+                s = -fold(lambda j: np.abs(VT[j, dst] - VT[j, src]))
+            if metric == "cosine":
+                na, nb = norm[dst], norm[src]
+                zero = (na == 0.0) | (nb == 0.0)
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    s = np.where(zero, 0.0, s / (na * nb))
+            if not np.isfinite(s).all():
+                return None  # Spark orders NaN first; numpy does not
+            keys.append(edges)
+            scores.append(s)
+            edges = merged()
+
+        out = [
+            (ids[e // n % n], ids[e % n], e // (n * n))
+            for e in edges.tolist()
+        ]
+        schema = T.StructType([
+            T.StructField("src", id_type),
+            T.StructField("dst", id_type),
+            T.StructField("level", T.IntegerType()),
+        ])
+        return local_df(df.sparkSession, out, schema)
+
     def build(
         self,
         df: DataFrame,
@@ -459,22 +694,46 @@ class HNSW:
     ) -> DataFrame:
         """Edges (src, dst, level): per level, each layer member's M
         approximate nearest neighbors within the layer — built by LSH
-        candidate generation + NN-descent, all levels in ONE plan, with
-        no driver-side collect of any layer (the round-1 build broadcast
-        every layer member as a query batch; see module docstring for
-        the distributed design). Returns the edge DataFrame (persist
-        with .write.partitionBy('level').parquet(...) for the
-        pruned-probe layout)."""
+        candidate generation + NN-descent. Returns the edge DataFrame
+        (persist with .write.partitionBy('level').parquet(...) for the
+        pruned-probe layout).
+
+        Two executions of one algorithm, chosen by a node bound:
+        ``BUILD_MAX_NODES`` (the measured break-even) capped by the
+        beam's node bound (``_beam_bounds``):
+
+        - bounded: unless the scorer is "expr" (set, or forced by a
+          custom metric), one count capped at the bound + 1 rows, which
+          also sizes "auto". When the scorer resolves to "gemm" and the
+          graph fits, one collect of (id, vector, node_level); when
+          every row has one finite vector width, ``_build_in_memory``
+          runs the same steps in numpy and returns the identical edge
+          set through ``fsutil.local_df`` — two Spark jobs instead of
+          ~16;
+        - distributed: every other case — larger graphs, the "expr"
+          scorer, custom metrics, degraded input (see
+          ``_build_in_memory``) — runs the one declarative plan of the
+          module docstring, with no driver-side collect of any layer."""
+        # "expr" here is final (set, or forced by a custom metric);
+        # "gemm" may still resolve to "expr" for a small "auto" corpus
+        scorer = self._resolve_scorer(metric)
+        max_nodes = min(self._beam_bounds()[0], self.BUILD_MAX_NODES)
+        if scorer == "gemm" and (max_nodes > 0 or self.scorer == "auto"):
+            # one bounded count sizes both "auto" and the in-memory
+            # path; vectors are collected only for a graph that fits
+            n = df.limit(max(max_nodes, self.AUTO_GEMM_MIN_ROWS) + 1).count()
+            if self.scorer == "auto":
+                scorer = self._resolve_scorer(metric, n)
+            if scorer == "gemm" and n <= max_nodes:
+                edges = self._build_in_memory(df, id_col, vec_col, metric,
+                                              dim, max_nodes)
+                if edges is not None:
+                    return edges
+
         leveled = assign_levels(df.select(id_col, vec_col), id_col, self.seed,
                                 self.max_level)
         exploded = self._exploded_levels(leveled, id_col, vec_col)
         vecs = exploded.filter(F.col("level") == 0).select("__vid", "__v")
-        # resolve the scorer ONCE for the whole build: the refine rounds
-        # use the matching path (GEMM group scoring vs expression joins)
-        # so a big corpus never falls back into the wide two-hop shuffle
-        scorer = self._resolve_scorer(
-            metric, df.count() if self.scorer == "auto" else None
-        )
         # lazy checkpoints through the build: lineage truncates per
         # stage, but the only blocking actions are the entry-point
         # lookup and the final eager materialization
@@ -563,7 +822,8 @@ class HNSW:
     #: materialization jobs (the per-job floor, not the plan, was the
     #: measured cost — VERDICT r15 ask #4). The collect is bounded the
     #: same way the CC union-find bounds its edge collect; any larger
-    #: graph takes the distributed path unchanged.
+    #: graph takes the distributed path unchanged. ``build`` caps its
+    #: in-memory path by the same node bound.
     BEAM_MAX_NODES = 65536
     BEAM_MAX_EDGES = 1 << 20
 
@@ -626,15 +886,8 @@ class HNSW:
             # duplicated query ids share one window partition in the
             # distributed plan; the beam keys per id — don't replicate
             return None
-        lev_rows = (
-            assign_levels(
-                base.select(F.col(id_col), F.col(vec_col)), id_col,
-                self.seed, self.max_level,
-            )
-            .limit(max_nodes + 1)
-            .collect()
-        )
-        if not lev_rows or len(lev_rows) > max_nodes:
+        nodes = self._collect_bounded_nodes(base, id_col, vec_col, max_nodes)
+        if nodes is None:
             return None
         e_rows = (
             edges.select("src", "dst", "level").limit(max_edges + 1).collect()
@@ -643,18 +896,16 @@ class HNSW:
             return None
 
         spark = base.sparkSession
-        n = len(lev_rows)
-        top_level = max(r["node_level"] for r in lev_rows)
-        ids = [r[id_col] for r in lev_rows]
+        ids, V, levels = nodes
+        n = len(ids)
+        top_level = int(levels.max())
         idx = {i: j for j, i in enumerate(ids)}
-        V = np.asarray([r[vec_col] for r in lev_rows], dtype=np.float64)
-        levels = np.asarray([r["node_level"] for r in lev_rows])
         Q = np.asarray([r["__qvec"] for r in q_rows], dtype=np.float64)
         nq = len(qids)
-        if V.ndim != 2 or Q.ndim != 2 or V.shape[1] != Q.shape[1]:
+        if Q.ndim != 2 or V.shape[1] != Q.shape[1]:
             return None  # ragged dims: the distributed fold's zip_with
             # semantics (shorter-array truncation) aren't replicated here
-        if not (np.isfinite(V).all() and np.isfinite(Q).all()):
+        if not np.isfinite(Q).all():
             return None  # NaN sorts LAST in Python keys but FIRST in
             # Spark's descending double order — don't replicate
 

@@ -1105,8 +1105,13 @@ def delete_from_layout(
 
     ``partition_cols=None`` (e.g. the PQ codes relation, which is
     unpartitioned) rewrites the whole layout through staging —
-    documented O(layout). When the ids spread across more than
-    ``max_pruned_partitions`` partitions the pruned plan's literal
+    documented O(layout). So does a layout whose files are NOT
+    partitioned by ``partition_cols`` on disk (a CP-LSH
+    ``layout="sorted"`` build keeps ``__tbl``/``bucket`` as data
+    columns); its survivors are rewritten hash-clustered and sorted by
+    ``partition_cols``, the build's own file shape, and a delete set
+    that hits no row rewrites nothing. When the ids spread across more
+    than ``max_pruned_partitions`` partitions the pruned plan's literal
     filter stops paying for itself and the full rewrite path is taken
     too. Layout sidecars (``_*_meta.json``) are never touched — codes/
     cells/buckets of surviving rows are still valid under the frozen
@@ -1118,7 +1123,13 @@ def delete_from_layout(
     snapshot/emptied-dir bookkeeping — use ``partition_cols=None``'s
     full rewrite for such layouts). Returns the rewritten (or removed)
     partition names, or ``["*"]`` for a full rewrite."""
-    from kowari_spark.fsutil import create_marker, delete, exists
+    from kowari_spark.fsutil import (
+        create_marker,
+        delete,
+        exists,
+        list_dirs,
+        write_parallelism,
+    )
 
     ids = ids_df.select(F.col(id_col)).distinct()
     # bounded size probe picks broadcast (maintenance-sized sets) vs
@@ -1138,6 +1149,21 @@ def delete_from_layout(
     try:
         layout = spark.read.parquet(path)
         pcols = list(partition_cols) if partition_cols else []
+        sort_cols: list[str] = []
+        if pcols and not any(
+            d.startswith(f"{pcols[0]}=") for d in list_dirs(spark, path)
+        ):
+            # plain files holding pcols as DATA columns (a CP-LSH
+            # layout="sorted" build): a partition-pruned overwrite would
+            # add partition dirs beside files that still hold every row.
+            # Full rewrite instead, re-clustered the way the build wrote
+            # them.
+            pcols, sort_cols = [], pcols
+            if not (
+                layout.select(id_col).join(_b(ids), id_col, "left_semi")
+                .limit(1).collect()
+            ):
+                return []
         if pcols:
             # the limit BOUNDS the locate collect: a delete set spread
             # across the whole table must not ship every partition
@@ -1197,6 +1223,10 @@ def delete_from_layout(
                         fs.rename(st.getPath(), hpath(f"{stash_dir}/{name}"))
                         stashed.append(name)
                 staged = spark.read.schema(layout.schema).parquet(staging)
+                if sort_cols:
+                    staged = staged.repartition(
+                        write_parallelism(staged), *sort_cols
+                    ).sortWithinPartitions(*sort_cols)
                 writer = staged.write.mode("overwrite")
                 if pcols:
                     writer = writer.partitionBy(*pcols)

@@ -155,21 +155,52 @@ def _data_files_by_dir(root):
     return out
 
 
+def _sorted_keys_per_file(root):
+    """(__tbl, bucket) key sequence of every data file at the root."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = {}
+    for f in sorted(os.listdir(root)):
+        if f.endswith(".parquet") and not f.startswith(("_", ".")):
+            t = pq.read_table(os.path.join(root, f), columns=["__tbl", "bucket"])
+            out[f] = list(zip(t["__tbl"].to_pylist(), t["bucket"].to_pylist()))
+    return out
+
+
 def test_build_file_count_control(spark, embeddings, tmp_path):
-    """max_records_per_file rolls big (table, bucket) dirs into several
-    scan-parallel files; the default stays one file per dir (VERDICT
-    r5 #5)."""
+    """The default "sorted" layout writes write_parallelism plain files,
+    each sorted by (__tbl, bucket) with every (table, bucket) group
+    whole inside one file. layout="dirs" keeps one file per (table,
+    bucket) dir, and max_records_per_file rolls big dirs into several
+    scan-parallel files (VERDICT r5 #5) and caps rows per file in the
+    sorted format too."""
     import math
+
+    from kowari_spark.fsutil import write_parallelism
 
     cp2 = CrossPolytopeLSH(dim=64, num_tables=2, seed=100)
     base = embeddings.select("vec_id", "embedding").limit(300)
 
     plain = str(tmp_path / "cp_plain")
     cp2.build(base, plain)
-    assert set(_data_files_by_dir(plain).values()) == {1}
+    assert set(_data_files_by_dir(plain)) == {"."}  # no partition dirs
+    keys = _sorted_keys_per_file(plain)
+    assert len(keys) == write_parallelism(base)
+    owner = {}
+    for f, seq in keys.items():
+        assert seq == sorted(seq), f"{f} is not sorted by (__tbl, bucket)"
+        for k in set(seq):
+            assert owner.setdefault(k, f) == f, f"group {k} split over files"
+    assert sum(len(seq) for seq in keys.values()) == 300 * 2
+
+    dirs = str(tmp_path / "cp_dirs")
+    cp2.build(base, dirs, layout="dirs")
+    assert set(_data_files_by_dir(dirs).values()) == {1}
 
     rolled = str(tmp_path / "cp_rolled")
-    cp2.build(base, rolled, max_records_per_file=2)
+    cp2.build(base, rolled, max_records_per_file=2, layout="dirs")
     files = _data_files_by_dir(rolled)
     rows = {
         f"__tbl={r['__tbl']}/bucket={r['bucket']}": r["n"]
@@ -180,6 +211,44 @@ def test_build_file_count_control(spark, embeddings, tmp_path):
     }
     assert files == {d: math.ceil(n / 2) for d, n in rows.items()}
     assert max(files.values()) > 1  # at least one dir actually rolled
+
+    rolled_sorted = str(tmp_path / "cp_rolled_sorted")
+    cp2.build(base, rolled_sorted, max_records_per_file=2)
+    keys = _sorted_keys_per_file(rolled_sorted)
+    assert len(keys) > write_parallelism(base)
+    assert all(0 < len(seq) <= 2 and seq == sorted(seq)
+               for seq in keys.values())
+    assert sum(len(seq) for seq in keys.values()) == 300 * 2
+
+
+def test_sorted_and_dirs_layouts_probe_identically(spark, embeddings,
+                                                   tmp_path):
+    """The sorted/dirs parity the build docstring cites: both formats
+    store the same (id, __tbl, bucket, vector) rows, and query_batch on
+    either returns the same rows, single- and multi-probe."""
+    cp2 = CrossPolytopeLSH(dim=64, num_tables=4, seed=7)
+    base = embeddings.select("vec_id", "embedding").limit(300)
+    queries = base.filter(F.col("vec_id") < 6).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    srt, drs = str(tmp_path / "cp_sorted"), str(tmp_path / "cp_dirs")
+    cp2.build(base, srt)
+    cp2.build(base, drs, layout="dirs")
+    assert cp2.layout_format(spark, srt) == "sorted"
+    assert cp2.layout_format(spark, drs) == "dirs"
+    a, b = cp2.load(spark, srt), cp2.load(spark, drs)
+    cols = ["vec_id", "__tbl", "bucket", "embedding"]
+    assert sorted(map(tuple, a.select(*cols).collect())) == sorted(
+        map(tuple, b.select(*cols).collect())
+    )
+    for probes in (1, 3):
+        got = sorted(map(tuple, cp2.query_batch(
+            a, queries, 5, id_col="vec_id", round_to=6, probes=probes
+        ).collect()))
+        want = sorted(map(tuple, cp2.query_batch(
+            b, queries, 5, id_col="vec_id", round_to=6, probes=probes
+        ).collect()))
+        assert got == want, f"sorted/dirs probes diverge at probes={probes}"
 
 
 def test_layout_sidecar_rejects_mismatched_hashing(spark, embeddings, tmp_path, cp):

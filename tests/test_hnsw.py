@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kowari_spark.operators.eval import mean_metric, recall_at_k
-from kowari_spark.operators.hnsw import HNSW, assign_levels
+from kowari_spark.operators.hnsw import HNSW, _stable_topk, assign_levels
 from kowari_spark.operators.topk import knn_batch
 
 
@@ -448,3 +448,143 @@ def test_query_batch_driver_beam_bounded_jobs(spark, base, index):
     assert len(rows) == 4 * 5
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) <= 8, f"beam probe ran {len(jobs)} jobs"
+
+
+# -- bounded in-memory build -------------------------------------------------
+
+def _edges(df):
+    return set(map(tuple, df.select("src", "dst", "level").collect()))
+
+
+class _Distributed(Exception):
+    """Raised by the spy when the distributed plan is entered."""
+
+
+def _spy_distributed(monkeypatch, stop=False):
+    """Record every call of the distributed plan's first stage; with
+    ``stop`` raise ``_Distributed`` there instead of running it."""
+    calls = []
+    plan = HNSW.candidate_graph
+
+    def spy(self, *args, **kwargs):
+        calls.append(args)
+        if stop:
+            raise _Distributed()
+        return plan(self, *args, **kwargs)
+
+    monkeypatch.setattr(HNSW, "candidate_graph", spy)
+    return calls
+
+
+@pytest.mark.parametrize("refine_rounds", [0, 1])
+@pytest.mark.parametrize("metric", ["cosine", "dot", "euclidean",
+                                    "manhattan"])
+def test_build_in_memory_parity(base, monkeypatch, metric, refine_rounds):
+    """A graph under the build's node bound is built on the driver with
+    the distributed plan's arithmetic: the edge set is IDENTICAL to the
+    distributed build's (forced with KOWARI_HNSW_BEAM_NODES=0), not
+    merely close."""
+    hnsw = HNSW(m=8, ef=32, seed=42, scorer="gemm",
+                refine_rounds=refine_rounds)
+    one = base.orderBy("id").limit(1)  # no pair: an empty edge set
+    calls = _spy_distributed(monkeypatch)
+    local = _edges(hnsw.build(base, metric=metric))
+    local_one = _edges(hnsw.build(one, metric=metric))
+    assert calls == [], "the in-memory path did not run"
+    monkeypatch.setenv("KOWARI_HNSW_BEAM_NODES", "0")
+    dist = _edges(hnsw.build(base, metric=metric))
+    dist_one = _edges(hnsw.build(one, metric=metric))
+    assert len(calls) == 2
+    assert local == dist, (
+        f"{metric} refine={refine_rounds}: {len(local ^ dist)} edges differ"
+    )
+    assert local_one == dist_one == set()
+
+
+def test_build_in_memory_falls_through(spark, base, monkeypatch):
+    """Degraded input (null or short vectors, null or NaN elements,
+    duplicate ids, a wrong ``dim``), the "expr" scorer and a corpus
+    over either node bound (the beam's or ``BUILD_MAX_NODES``) each take
+    the distributed plan unchanged."""
+    import numpy as np
+
+    hnsw = HNSW(m=4, ef=16, seed=42, scorer="gemm", refine_rounds=0)
+    rows = [(i, np.random.RandomState(i).normal(size=4).tolist())
+            for i in range(20)]
+
+    def in_memory(extra, dim=None, max_nodes=64):
+        df = spark.createDataFrame(rows + extra,
+                                   "id long, embedding array<double>")
+        return hnsw._build_in_memory(df, "id", "embedding", "cosine", dim,
+                                     max_nodes)
+
+    assert in_memory([]) is not None
+    for bad in ([(20, None)],                                # null vector
+                [(20, [1.0, 2.0])],                          # short
+                [(20, [1.0, None, 2.0, 3.0])],               # null element
+                [(20, [1.0, float("nan"), 2.0, 3.0])],       # NaN
+                [(19, [1.0, 2.0, 3.0, 4.0])],                # duplicate id
+                [(None, [1.0, 2.0, 3.0, 4.0])]):             # null id
+        assert in_memory(bad) is None, bad
+    assert in_memory([], dim=8) is None
+    assert in_memory([], max_nodes=19) is None                # over the bound
+
+    calls = _spy_distributed(monkeypatch, stop=True)
+    hnsw.build(base)  # in memory: the spy never fires
+    assert calls == []
+    vec_type = base.schema["embedding"].dataType.simpleString()
+    for bad in ("array(1.0, 2.0)", "NULL"):
+        extra = spark.range(1).select(
+            F.lit(10**6).cast("long").alias("id"),
+            F.expr(f"CAST({bad} AS {vec_type})").alias("embedding"),
+        )
+        degraded = base.select("id", "embedding").unionByName(extra)
+        with pytest.raises(_Distributed):
+            hnsw.build(degraded)
+    with pytest.raises(_Distributed):
+        HNSW(m=4, ef=16, seed=42, scorer="expr").build(base)
+    monkeypatch.setenv("KOWARI_HNSW_BEAM_NODES", "50")
+    with pytest.raises(_Distributed):
+        hnsw.build(base)
+    monkeypatch.delenv("KOWARI_HNSW_BEAM_NODES")
+    monkeypatch.setattr(HNSW, "BUILD_MAX_NODES", 50)
+    with pytest.raises(_Distributed):
+        hnsw.build(base)
+    assert len(calls) == 5
+
+
+def test_build_in_memory_bounded_jobs(spark, base):
+    """The in-memory build is one bounded count and one bounded
+    collect: at most 3 Spark jobs (the distributed plan runs ~16)."""
+    hnsw = HNSW(m=8, ef=32, seed=42, scorer="gemm")
+    sc = spark.sparkContext
+    group = "hnsw-inmem-build"
+    sc.setJobGroup(group, "in-memory build job probe", interruptOnCancel=False)
+    try:
+        edges = hnsw.build(base)
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 3, f"in-memory build ran {len(jobs)} jobs"
+    assert edges.count() > 0
+
+
+def test_stable_topk_matches_stable_argsort():
+    """The kernel's partition-based selection returns exactly the first
+    k columns of a stable argsort: ties (including -0.0 vs 0.0) by
+    column, infinities in place, NaN rows through the full sort."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    for trial in range(400):
+        rows, width = int(rng.integers(1, 20)), int(rng.integers(1, 30))
+        A = rng.integers(-2, 3, size=(rows, width)).astype(float)
+        if trial % 2:
+            A = A * rng.normal(size=(rows, width))
+        A[rng.random(A.shape) < 0.1] *= -0.0
+        A[rng.random(A.shape) < 0.1] = np.inf
+        if trial % 5 == 0:
+            A[rng.random(A.shape) < 0.1] = np.nan
+        for k in range(width + 1):
+            expect = np.argsort(A, axis=1, kind="stable")[:, :k]
+            np.testing.assert_array_equal(_stable_topk(A, k), expect)

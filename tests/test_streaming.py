@@ -745,10 +745,10 @@ def test_delete_from_layout_unpartitioned_and_emptied(spark, embeddings,
 
 
 def test_delete_from_layout_multicol_partitions(spark, embeddings, tmp_path):
-    """Multi-column partitioned layout (CP-LSH: __tbl, bucket): the
-    delete prunes on exact (table, bucket) tuples, removes the doomed
-    id from EVERY table's partition, and the sidecar-gated load still
-    probes."""
+    """Multi-column partitioned layout (CP-LSH layout="dirs": __tbl,
+    bucket): the delete prunes on exact (table, bucket) tuples, removes
+    the doomed id from EVERY table's partition, and the sidecar-gated
+    load still probes."""
     from kowari_spark.operators.cplsh import CrossPolytopeLSH
     from kowari_spark.streaming.ingest import delete_from_layout
 
@@ -757,7 +757,7 @@ def test_delete_from_layout_multicol_partitions(spark, embeddings, tmp_path):
     ).limit(120).cache()
     cp = CrossPolytopeLSH(dim=64, num_tables=3, seed=100)
     path = str(tmp_path / "cp_del")
-    cp.build(vecs, path, vec_col="embedding")
+    cp.build(vecs, path, vec_col="embedding", layout="dirs")
 
     doomed = [r["id"] for r in vecs.limit(4).collect()]
     rewritten = delete_from_layout(
@@ -775,6 +775,78 @@ def test_delete_from_layout_multicol_partitions(spark, embeddings, tmp_path):
     per_tbl = layout.groupBy("__tbl").agg(
         F.countDistinct("id").alias("n")).collect()
     assert all(r["n"] == 120 - 4 for r in per_tbl)
+
+
+def test_delete_from_layout_sorted_cplsh_keeps_survivors(spark, embeddings,
+                                                         tmp_path):
+    """The default CP-LSH layout ("sorted") keeps __tbl/bucket as data
+    columns, not partition dirs. Deleting with partition_cols=(__tbl,
+    bucket) used to drop survivors; it must remove exactly the doomed
+    ids from every table, keep every survivor in every table, keep the
+    build's file shape (plain files, each sorted by (__tbl, bucket)) and
+    probe like a fresh build over the survivors."""
+    import pyarrow.parquet as pq
+
+    from kowari_spark.fsutil import list_dirs, list_files, write_parallelism
+    from kowari_spark.operators.cplsh import CrossPolytopeLSH
+    from kowari_spark.streaming.ingest import delete_from_layout
+
+    vecs = embeddings.select(
+        F.col("vec_id").alias("id"), "embedding"
+    ).limit(120).cache()
+    cp = CrossPolytopeLSH(dim=64, num_tables=3, seed=100)
+    path = str(tmp_path / "cp_del_sorted")
+    cp.build(vecs, path, vec_col="embedding")
+    assert cp.layout_format(spark, path) == "sorted"
+
+    all_ids = {r["id"] for r in vecs.select("id").collect()}
+    doomed = sorted(all_ids)[:4]
+    rewritten = delete_from_layout(
+        spark, path,
+        spark.createDataFrame([(i,) for i in doomed], "id long"),
+        id_col="id", partition_cols=("__tbl", "bucket"),
+    )
+    assert rewritten == ["*"]
+    layout = cp.load(spark, path)
+    survivors = all_ids - set(doomed)
+    for t in range(3):
+        got = {r["id"] for r in layout.filter(F.col("__tbl") == t)
+               .select("id").collect()}
+        assert got == survivors, f"table {t} lost or kept the wrong ids"
+    assert layout.count() == 3 * len(survivors)
+
+    # still the sorted format: no partition dirs, plain files each
+    # sorted by (__tbl, bucket)
+    assert cp.layout_format(spark, path) == "sorted"
+    assert not [d for d in list_dirs(spark, path) if "=" in d]
+    files = [f for f in list_files(spark, path)
+             if f.endswith(".parquet") and not f.startswith(("_", "."))]
+    assert 0 < len(files) <= write_parallelism(vecs)
+    for f in files:
+        keys = pq.read_table(f"{path}/{f}", columns=["__tbl", "bucket"])
+        pairs = list(zip(keys["__tbl"].to_pylist(),
+                         keys["bucket"].to_pylist()))
+        assert pairs == sorted(pairs), f"{f} is not sorted"
+
+    # probes like a fresh build over the survivors
+    fresh = str(tmp_path / "cp_fresh_sorted")
+    cp.build(vecs.filter(~F.col("id").isin(doomed)), fresh,
+             vec_col="embedding")
+    queries = vecs.filter(~F.col("id").isin(doomed)).limit(4).select(
+        F.col("id").alias("query_id"), "embedding"
+    )
+    got = sorted(map(tuple, cp.query_batch(
+        layout, queries, 5, id_col="id", round_to=6).collect()))
+    want = sorted(map(tuple, cp.query_batch(
+        cp.load(spark, fresh), queries, 5, id_col="id",
+        round_to=6).collect()))
+    assert got == want
+
+    # a delete set that hits nothing rewrites nothing
+    assert delete_from_layout(
+        spark, path, spark.createDataFrame([(-1,)], "id long"),
+        id_col="id", partition_cols=("__tbl", "bucket"),
+    ) == []
 
 
 def test_hnsw_delete_tombstone_semantics(spark, embeddings, tmp_path):
@@ -1082,7 +1154,8 @@ def test_stream_into_cplsh_layout(spark, embeddings, tmp_path):
     new = base.filter(F.col("id") % 2 == 1)
     cp = CrossPolytopeLSH(dim=64, num_tables=3, seed=9)
     out = str(tmp_path / "cp_stream")
-    cp.build(hist, out, vec_col="embedding", id_col="id")
+    # streaming appends partition dirs: the layout must be "dirs"
+    cp.build(hist, out, vec_col="embedding", id_col="id", layout="dirs")
 
     src = str(tmp_path / "cp_src")
     new.repartition(2).write.parquet(src)
@@ -1141,6 +1214,16 @@ def test_stream_into_cplsh_layout(spark, embeddings, tmp_path):
     q3.awaitTermination(120)
     relay = SignatureLayout.open(spark, fresh)
     assert relay.meta.get("family") == "crosspolytope"
+
+    # a "sorted" layout (the build default) refuses at stream START
+    sorted_out = str(tmp_path / "cp_sorted")
+    cp.build(hist, sorted_out, vec_col="embedding", id_col="id")
+    with _pt.raises(ValueError, match="'sorted' format"):
+        stream_into_lsh_layout(
+            spark.readStream.schema(new.schema).parquet(src),
+            cp, sorted_out, str(tmp_path / "cp_ck4"), id_col="id",
+        )
+    assert spark.read.parquet(sorted_out).count() == hist.count() * 3
 
 
 def test_stream_into_hll_layout(spark, tmp_path):
