@@ -812,13 +812,8 @@ def _oracle_ivf_knn() -> str:
 # subspaces). m=4/k_sub=8 keeps the unrolled per-subspace SQL replay
 # tractable while still exercising the full PQ pipeline: 4 independent
 # codebooks, 2 Lloyd rounds each, encode, ADC lookup scoring.
-# encoder="arrow": the contract row runs the SCALE encode path (numpy
-# inside mapInPandas — the expression engine's m*k_sub interpreted fold
-# lambdas per row are the measured build bottleneck, BASELINE.md) so
-# the oracle validates it; bit-parity with the expr engine is pinned in
-# tests/test_pq.py.
 _PQ_PARAMS = dict(m=4, k_sub=8, max_iter=2, seed=42,
-                  round_centroids=6, seed_sample=512, encoder="arrow")
+                  round_centroids=6, seed_sample=512)
 _PQ_DIM = 64  # the embeddings table's vector dimension
 
 
@@ -2790,13 +2785,12 @@ def q_doc_despan(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-first duplicated >= 5-token spans (corpus-first occurrence
     survives). The row hashes the rebuilt text (md5) plus token
     counts, so any divergence in span detection, merge, or rebuild
-    order breaks the compare. Runs the ARROW gram hasher — the scale
-    path (identical md5-prefix hashes; expr parity pinned by
-    tests/test_spans.py::test_arrow_gram_engine_parity)."""
+    order breaks the compare (the gram hasher is also pinned against
+    this replay by tests/test_spans.py::test_arrow_gram_engine_parity)."""
     from kowari_spark.operators.spans import remove_duplicate_spans
 
     docs = _t(spark, sf_dir, "documents")
-    return remove_duplicate_spans(docs, min_len=_SPAN_L, engine="arrow").select(
+    return remove_duplicate_spans(docs, min_len=_SPAN_L).select(
         "doc_id", F.md5("clean_text").alias("clean_fp"),
         "n_tokens", "removed_tokens",
     ).orderBy("doc_id")
@@ -3910,16 +3904,15 @@ def q_doc_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     set is the `doc_id % 17 == 0` slice of the corpus itself, so the
     row pins both branches: eval members are fully self-contaminated
     (contam_frac = 1) and the rest exercise the no-match path; docs
-    under 13 tokens take the whole-text fallback gram. The contract
-    runs the ARROW engine — the shuffle-free mapInPandas scale path
-    (eval hashes broadcast into the workers, corpus side row-local) —
-    bit-identical to the expression plan whose equivalence is pinned by
+    under 13 tokens take the whole-text fallback gram. The operator is
+    the shuffle-free mapInPandas pass (eval hashes broadcast into the
+    workers, corpus side row-local), also pinned against this replay by
     tests/test_decontam.py::test_arrow_engine_parity."""
     from kowari_spark.operators.decontam import ngram_decontaminate
 
     docs = _t(spark, sf_dir, "documents")
     eval_df = docs.filter(F.col("doc_id") % 17 == 0)
-    return ngram_decontaminate(docs, eval_df, n=13, engine="arrow")
+    return ngram_decontaminate(docs, eval_df, n=13)
 
 
 def _oracle_doc_decontam() -> str:
@@ -3956,16 +3949,14 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition quality filters (operators/quality.py):
     per document, the occurrence share of its most frequent word 2-gram
     and the share of 5-gram occurrences that are within-document
-    repeats. The contract runs the ARROW engine — the shuffle-free
-    mapInPandas scale path — so the oracle validates the engine a real
-    corpus would use; it is bit-identical to the default expression
-    plan (integer counts, same IEEE division, same decimal HALF_UP
-    rounding), and that equivalence is itself pinned by
+    repeats. The operator is the shuffle-free mapInPandas pass (integer
+    counts, IEEE division, decimal HALF_UP rounding like SQL ROUND),
+    also pinned against this replay by
     tests/test_quality.py::test_arrow_engine_parity."""
     from kowari_spark.operators.quality import repetition_stats
 
     docs = _t(spark, sf_dir, "documents")
-    return repetition_stats(docs, top_n=2, dup_n=5, engine="arrow")
+    return repetition_stats(docs, top_n=2, dup_n=5)
 
 
 def _oracle_doc_repetition() -> str:

@@ -138,7 +138,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     eval_df = docs.filter(F.col("doc_id") % 17 == 0)  # stand-in benchmark
     clean = (
         kept.join(
-            ngram_decontaminate(kept, eval_df, n=13, engine="arrow")
+            ngram_decontaminate(kept, eval_df, n=13)
             .filter(~F.col("is_contaminated")).select("doc_id"),
             "doc_id",
         )
@@ -151,7 +151,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
             "doc_id",
         )
         .join(
-            repetition_stats(kept, engine="arrow")
+            repetition_stats(kept)
             .filter(F.col("dup5gram_frac") < 0.3).select("doc_id"),
             "doc_id",
         )
@@ -260,7 +260,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     fused = rrf_fuse([(kw_list, "bm25"), (vec_list, "score")], id_col="doc_id")
     print("hybrid rrf:", [(r["doc_id"], r["rrf_score"], r["n_lists"])
                           for r in fused.limit(3).collect()])
-    pq = PQ(m=4, k_sub=8, max_iter=2, encoder="arrow").fit(
+    pq = PQ(m=4, k_sub=8, max_iter=2).fit(
         embedded, id_col="doc_id", dim=32)
     codes = pq.with_codes(embedded).select("doc_id", "codes")
     print("pq adc knn:", [(r["doc_id"], r["distance"])

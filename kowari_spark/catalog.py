@@ -510,15 +510,14 @@ class Collection:
         threshold: float,
         eval_vec_col: str = "embedding",
         round_to: int | None = 6,
-        engine: str = "auto",
     ) -> DataFrame:
         """Flag every stored vector whose max cosine against ANY eval
         vector reaches ``threshold`` (operators/decontam.
         embedding_decontaminate — the pre-embedded decontamination
         path): (id, max_eval_cos, is_contaminated). The eval relation
-        broadcasts (decontamination regime: eval ≪ collection), the
-        per-id max collapses map-side, and the arrow engine's
-        GEMM-select/exact-rescore handles signed embeddings exactly.
+        is collected once (decontamination regime: eval ≪ collection),
+        each Arrow batch scores with one GEMM, and the exact rescore
+        handles signed embeddings exactly.
         Enact the keep-list by ``delete``-ing the flagged ids (or
         rebuilding the collection from the clean slice via
         ``add_df``)."""
@@ -527,7 +526,7 @@ class Collection:
         return embedding_decontaminate(
             self.df(), eval_df, threshold, id_col="id",
             vec_col="embedding", eval_vec_col=eval_vec_col,
-            round_to=round_to, engine=engine,
+            round_to=round_to,
         )
 
     def cluster_cap(

@@ -78,8 +78,8 @@ def minhash_signature(
 
     Column form (hash each shingle ONCE, then num_hashes cheap affine
     mins). For whole-table signatures prefer
-    ``operators.dedup.minhash_signatures`` — the explode+groupBy
-    aggregation form that scales with map-side partial mins."""
+    ``operators.dedup.minhash_signatures`` — the row-local
+    ``mapInPandas`` form with no interpreted lambdas."""
     hm = F.transform(shingles(text, shingle_n), lambda s: base_hash64(s) % F.lit(MINHASH_P))
     a, b = minhash_params(num_hashes, seed)
 
@@ -162,8 +162,8 @@ def winnow_fingerprints(text, k: int = 4, window: int = 4) -> Column:
     NOTE: this single-Column form nests higher-order lambdas, and
     Catalyst re-evaluates the inner gram-hash array per window element —
     O(T·window) md5 work per document. Fine for spot use; the corpus
-    pipeline (``dedup.winnow_pairs``) uses the aggregation form (explode
-    → hash once → sliding-window min), which computes identical values
+    pipeline (``dedup.winnow_fps``) hashes each gram once in a
+    row-local ``mapInPandas`` pass, which computes identical values
     (drift-guard test pins the two equal)."""
     hashes = F.transform(winnow_grams(text, k), base_hash64)
     nw = F.greatest(F.size(hashes) - (window - 1), F.lit(1))

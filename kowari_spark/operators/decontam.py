@@ -7,22 +7,22 @@ set must be flagged or dropped — the GPT-3-style 13-gram overlap filter
 
 Spark-first shape: the eval set is reduced to a DISTINCT set of
 portable 64-bit gram hashes (tiny relation — benchmarks are KBs-to-MBs
-next to a 100 TB corpus), which is broadcast; the corpus side explodes
-its own grams, hashes each once, and LEFT SEMI joins against the
-broadcast — so the only shuffle in the whole operator is the final
-per-document count keyed on the document id, carrying one skinny row
-per *matched* gram (almost always none). Nothing corpus-sized is ever
-collected or re-shuffled; the plan is scan → explode → broadcast-semi
-→ partial-count → merge. Every step is hash/aggregate algebra on the
-same md5-based hash the rest of the text suite uses, so the operator
-has an exact ANSI-SQL oracle.
+next to a 100 TB corpus), collected ONCE and broadcast into the Python
+workers; each document's gram set, membership count and fraction are
+then ROW-LOCAL, so the whole corpus side is one ``mapInPandas`` pass
+with zero shuffles and zero joins (4.3x faster at x1 than exploding
+interpreted-lambda gram strings and semi-joining them, BASELINE.md).
+Nothing corpus-sized is ever collected or re-shuffled. Every step is
+hash/count algebra on the same md5-based hash the rest of the text
+suite uses, so the operator has an exact ANSI-SQL oracle.
 
 Short-text semantics: texts with fewer than ``n`` tokens have no
 n-gram. On the EVAL side the whole token sequence is used as a single
 fallback gram (a short benchmark prompt should still decontaminate
 exact copies); on the CORPUS side short documents match only via that
-same whole-text gram. Both sides share one gram generator so the
-fallback is symmetric.
+same whole-text gram. Both sides apply the same fallback rule
+(:func:`contamination_grams` on the eval side, its Python mirror in
+the corpus pass), so the fallback is symmetric.
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kowari_spark.functions.text import _c, base_hash64, tokens
+from kowari_spark.functions.text import _c, base_hash64
 from kowari_spark.operators.quality import word_ngrams
 
 
@@ -60,28 +60,40 @@ def _eval_gram_hashes(eval_df: DataFrame, eval_text: str, n: int) -> DataFrame:
     )
 
 
-def _decontam_arrow(
+def ngram_decontaminate(
     docs: DataFrame,
-    eval_hashes: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int,
+    eval_df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    eval_text_col: str | None = None,
+    n: int = 13,
 ) -> DataFrame:
-    """Arrow-batched engine: the benchmark gram-hash set is tiny by the
-    operator's own premise, so it collects ONCE and broadcasts into the
-    Python workers; each document's gram set, membership counts and
-    fraction are then ROW-LOCAL — the whole corpus side is one
-    ``mapInPandas`` pass with ZERO shuffles and zero joins (the
-    expression engine explodes ~tokens interpreted-lambda gram strings
-    per document and shuffles the per-doc counts). Values are
-    bit-identical to the expression engine: same md5-prefix hash, same
-    whole-text fallback for short docs, integer counts, same IEEE
-    division and decimal HALF_UP rounding (parity-tested)."""
+    """Flag corpus documents that share any word ``n``-gram with the
+    evaluation set.
+
+    Returns one row per input document:
+
+    - ``contam_grams`` — number of DISTINCT grams of the document that
+      appear anywhere in the eval set;
+    - ``total_grams`` — the document's distinct gram count;
+    - ``contam_frac`` — their ratio, rounded to 6 decimals HALF_UP;
+    - ``is_contaminated`` — ``contam_grams > 0`` (the drop filter).
+
+    Building the frame collects the distinct eval gram hashes (the
+    decontamination regime: the benchmark set is small next to the
+    corpus); the corpus side is one row-local ``mapInPandas`` pass —
+    same md5-prefix hash, same whole-text fallback for short docs,
+    integer counts, IEEE division. A NULL text has one NULL gram that
+    never matches (0 of 1)."""
     import pandas as pd
 
+    from kowari_spark.fsutil import scan_parallelism
     from kowari_spark.numerics import py_hash64, round_half_up
 
-    hashes = frozenset(r["__h"] for r in eval_hashes.collect())
+    eval_text = eval_text_col or text_col
+    hashes = frozenset(
+        r["__h"] for r in _eval_gram_hashes(eval_df, eval_text, n).collect()
+    )
     bc = docs.sparkSession.sparkContext.broadcast(hashes)
     id_type = docs.schema[id_col].dataType.simpleString()
     schema = (
@@ -95,8 +107,6 @@ def _decontam_arrow(
             cg, tg, fr, flag = [], [], [], []
             for text in pdf[text_col]:
                 if text is None:
-                    # expression semantics: array(NULL) explodes to one
-                    # NULL gram whose NULL hash never matches
                     c, t = 0, 1
                 else:
                     toks = text.split(" ")
@@ -123,95 +133,12 @@ def _decontam_arrow(
                 }
             )
 
-    from kowari_spark.fsutil import scan_parallelism
-
     # few-split scans serialize the whole scoring pass in one task
     # (guide §2.5; measured: the sf0.1 corpus is ONE parquet split, so
     # the contract line ran single-task with 31 cores idle). No-op
     # whenever the scan is already as parallel as the session.
     return scan_parallelism(docs.select(id_col, text_col)).mapInPandas(
         score, schema
-    )
-
-
-def ngram_decontaminate(
-    docs: DataFrame,
-    eval_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    eval_text_col: str | None = None,
-    n: int = 13,
-    broadcast_eval: bool = True,
-    engine: str = "auto",
-) -> DataFrame:
-    """Flag corpus documents that share any word ``n``-gram with the
-    evaluation set.
-
-    Returns one row per input document:
-
-    - ``contam_grams`` — number of DISTINCT grams of the document that
-      appear anywhere in the eval set;
-    - ``total_grams`` — the document's distinct gram count;
-    - ``contam_frac`` — their ratio, rounded to 6 decimals;
-    - ``is_contaminated`` — ``contam_grams > 0`` (the drop filter).
-
-    ``broadcast_eval=True`` (default) broadcasts the distinct eval gram
-    hashes — correct whenever the benchmark set is small relative to
-    the corpus, which is the decontamination regime; pass ``False`` to
-    let the planner shuffle both sides for a genuinely huge eval set.
-
-    ``engine="expr"`` is the pure-expression plan with the
-    exact SQL oracle; ``engine="arrow"`` computes identical values
-    shuffle-free in ``mapInPandas`` (see :func:`_decontam_arrow`) —
-    the gram construction through interpreted ``transform`` lambdas
-    dominates the expression plan at scale, the same boundary the
-    repetition filters' Arrow engine sits behind. Default ``"auto"``
-    sizes the choice on the corpus (bit-identical engines, so pure
-    performance — see :mod:`kowari_spark.engines`).
-    """
-    eval_text = eval_text_col or text_col
-    eval_grams = _eval_gram_hashes(eval_df, eval_text, n)
-    from kowari_spark.engines import resolve_engine
-
-    if resolve_engine(engine, docs) == "arrow":
-        return _decontam_arrow(docs, eval_grams, text_col, id_col, n)
-    if broadcast_eval:
-        eval_grams = F.broadcast(eval_grams)
-
-    from kowari_spark.fsutil import scan_parallelism
-
-    doc_grams = scan_parallelism(docs.select(id_col, text_col)).select(
-        F.col(id_col),
-        F.explode(
-            F.array_distinct(contamination_grams(F.col(text_col), n))
-        ).alias("__g"),
-    ).select(id_col, base_hash64(F.col("__g")).alias("__h"))
-
-    totals = doc_grams.groupBy(id_col).agg(F.count("*").alias("total_grams"))
-    matched = (
-        doc_grams.join(eval_grams, "__h", "left_semi")
-        .groupBy(id_col)
-        .agg(F.count("*").alias("contam_grams"))
-    )
-    return (
-        docs.select(id_col)
-        .join(totals, id_col, "left")
-        .join(matched, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("contam_grams", F.lit(0)).alias("contam_grams"),
-            F.coalesce("total_grams", F.lit(0)).alias("total_grams"),
-            (
-                F.round(
-                    F.coalesce(
-                        F.col("contam_grams") / F.col("total_grams"), F.lit(0.0)
-                    ),
-                    6,
-                )
-                + F.lit(0.0)
-            ).alias("contam_frac"),
-            (F.coalesce("contam_grams", F.lit(0)) > 0).alias("is_contaminated"),
-        )
     )
 
 
@@ -224,7 +151,6 @@ def semantic_decontaminate(
     eval_text_col: str | None = None,
     dim: int = 32,
     round_to: int | None = 6,
-    engine: str = "auto",
 ) -> DataFrame:
     """Embedding-space decontamination — the companion to
     :func:`ngram_decontaminate` for PARAPHRASED leakage: a benchmark
@@ -240,24 +166,15 @@ def semantic_decontaminate(
     tokens have no embedding and score 0.0 (trivially clean).
 
     Scale shape (the decontamination regime: eval ≪ corpus): the eval
-    embeddings are BROADCAST and cross-joined — each corpus partition
-    scores its own docs against the tiny eval relation and the partial
-    ``max`` collapses to one row per doc map-side, so the only shuffle
-    carries |docs| skinny rows. Nothing corpus-sized moves. For an
-    unusually large eval set, pre-bucket both sides with the LSH
-    operators instead (operators/lsh.py) and verify only co-bucketed
-    pairs.
-
-    ``engine="expr"`` is the pure-expression plan with the exact SQL
-    oracle; ``engine="arrow"`` scores each Arrow batch with ONE numpy
-    GEMM against the collected eval matrix and then exact-rescores the
-    per-doc argmax candidates with the same sequential fold the
-    expression plan folds — BIT-IDENTICAL output (the
-    ``_semantic_pairs_gemm`` margin-select discipline; parity-tested).
-    The per-pair interpreted ``aggregate(zip_with(...))`` cosine is the
-    expression plan's bottleneck (measured 42 s for 5k docs × 295 eval
-    at sf0.1). Default ``"auto"`` sizes the choice on the corpus."""
-    from kowari_spark.engines import resolve_engine
+    embeddings are collected ONCE; each Arrow batch of the corpus
+    scores its docs with ONE numpy GEMM against the eval matrix and
+    exact-rescores the per-doc argmax candidates (see
+    :func:`_max_eval_cos`), so nothing corpus-sized moves and the output
+    is one skinny row per doc (13x faster at sf0.1 than the per-pair
+    interpreted ``aggregate(zip_with(...))`` cosine behind a broadcast
+    cross join, BASELINE.md). For an unusually large eval set,
+    pre-bucket both sides with the LSH operators instead
+    (operators/lsh.py) and verify only co-bucketed pairs."""
     from kowari_spark.functions.text import hashed_embeddings
 
     eval_text = eval_text_col or text_col
@@ -266,9 +183,7 @@ def semantic_decontaminate(
         eval_df.select(F.col(eval_text).alias("__evt")), "__evt",
         id_col="__evt", dim=dim, out_col="__ev",
     ).select("__ev")
-    scored = _embedding_scores(
-        emb, ev, id_col, round_to, resolve_engine(engine, docs)
-    )
+    scored = _max_eval_cos(emb, ev, id_col, round_to)
     # token-less documents have no embedding row: join back over ALL
     # docs and score them 0.0 (trivially clean)
     return (
@@ -292,7 +207,6 @@ def embedding_decontaminate(
     vec_col: str = "embedding",
     eval_vec_col: str | None = None,
     round_to: int | None = 6,
-    engine: str = "auto",
 ) -> DataFrame:
     """:func:`semantic_decontaminate` for corpora that ALREADY carry
     embeddings (a vector collection, a table with a model-produced
@@ -304,19 +218,13 @@ def embedding_decontaminate(
     its hashed embeddings.
 
     Same scale shape as its caller (eval ≪ corpus: eval vectors
-    broadcast / collected once, partial per-row max map-side, the
-    only shuffle carries |rows| skinny rows) and the same two-engine
-    parity contract — the arrow engine's exact-rescore initializes at
-    -inf, so SIGNED model embeddings (negative maxima) score
-    identically under both engines (ADVICE r11 #1)."""
-    from kowari_spark.engines import resolve_engine
-
+    collected once, one GEMM per Arrow batch, no shuffle). The exact
+    rescore initializes at -inf, so SIGNED model embeddings (negative
+    maxima) score exactly (ADVICE r11 #1)."""
     evc = eval_vec_col or vec_col
     ev = eval_emb.select(F.col(evc).alias("__ev"))
     e = emb.select(id_col, F.col(vec_col).alias("embedding"))
-    scored = _embedding_scores(
-        e, ev, id_col, round_to, resolve_engine(engine, emb)
-    )
+    scored = _max_eval_cos(e, ev, id_col, round_to)
     return (
         e.select(id_col)
         .join(scored, id_col, "left")
@@ -330,39 +238,19 @@ def embedding_decontaminate(
     )
 
 
-def _embedding_scores(
-    e: DataFrame, ev: DataFrame, id_col: str, round_to: int | None,
-    engine: str,
-) -> DataFrame:
-    """The shared scoring core: (id_col, max_eval_cos) for rows of
-    ``e`` (id_col, embedding) against ``ev`` (__ev) under the resolved
-    engine — both public decontaminators join this back over their own
-    base relation exactly once."""
-    from kowari_spark.functions.vector import cosine_similarity
-
-    if engine == "arrow":
-        return _semantic_decontam_arrow(e, ev, id_col, round_to)
-    cos = cosine_similarity(F.col("embedding"), F.col("__ev"))
-    if round_to is not None:
-        cos = F.round(cos, round_to) + F.lit(0.0)
-    return (
-        e.crossJoin(F.broadcast(ev))
-        .groupBy(id_col)
-        .agg(F.max(cos).alias("max_eval_cos"))
-    )
-
-
-def _semantic_decontam_arrow(
+def _max_eval_cos(
     emb: DataFrame, ev: DataFrame, id_col: str, round_to: int | None
 ) -> DataFrame:
-    """Row-local max-eval-cosine: the eval matrix is collected ONCE
-    (bounded — the decontamination regime is eval ≪ corpus; it is the
-    same relation the expression plan broadcasts) and each Arrow batch
+    """The shared scoring core of both public decontaminators: (id_col,
+    max_eval_cos) for rows of ``emb`` (id_col, embedding) against ``ev``
+    (__ev). The eval matrix is collected ONCE (bounded — the
+    decontamination regime is eval ≪ corpus) and each Arrow batch
     computes one V·EVᵀ GEMM. The GEMM only SELECTS each doc's argmax
     candidates (margin 1e-9 ≫ the float64 GEMM error at any sane dim);
     every candidate is re-scored with the exact dimension-ordered fold
-    and HALF_UP rounding of the expression engine, so the per-doc max
-    is bit-identical. No shuffle: output is one skinny row per doc."""
+    and HALF_UP rounding that ``functions.vector.cosine_similarity``
+    and the SQL replay use, so the per-doc max is exact. No shuffle:
+    output is one skinny row per doc."""
     import numpy as np
     import pandas as pd
 
@@ -376,13 +264,13 @@ def _semantic_decontam_arrow(
         raise ValueError(
             "eval embeddings must be non-null and share one dimension "
             "(null/mismatched eval vectors would silently contribute "
-            "nothing under the expression engine — refuse instead)"
+            "nothing to the SQL cosine — refuse instead)"
         )
     EV = (
         np.stack([list(r["__ev"]) for r in rows]).astype(np.float64)
         if rows else np.zeros((0, 1))
     )
-    # norms via per-dim accumulation == the expr engine's sqrt fold
+    # norms via per-dim accumulation == cosine_similarity's sqrt fold
     # (numpy's pairwise .sum() adds in a different order — not parity)
     ne = np.zeros(EV.shape[0], dtype=np.float64)
     for _d in range(EV.shape[1] if len(rows) else 0):
@@ -401,7 +289,7 @@ def _semantic_decontam_arrow(
                     {id_col: ids, "max_eval_cos": np.zeros(len(pdf))}
                 )
                 continue
-            # expr-engine parity for degraded rows (the pre-embedded
+            # SQL-cosine semantics for degraded rows (the pre-embedded
             # surface feeds arbitrary user vectors): a NULL embedding
             # or one whose dimension mismatches the eval set yields a
             # null cosine against EVERY eval vector under zip_with
@@ -410,12 +298,12 @@ def _semantic_decontam_arrow(
             vecs = pdf["embedding"].to_list()
             dim = EV.shape[1]
             # a null ELEMENT inside a correct-dimension vector is
-            # degraded too: the expr engine's aggregate fold nulls the
-            # whole cosine (coalesced to 0.0), while astype would turn
-            # it into an all-NaN score row whose argmax set is empty —
+            # degraded too: the SQL aggregate fold nulls the whole
+            # cosine (coalesced to 0.0), while astype would turn it
+            # into an all-NaN score row whose argmax set is empty —
             # crashing round_half_up(-inf) instead of matching. A
-            # literal float NaN element gets the same 0.0 (the expr
-            # engine propagates NaN there — NaN input vectors are
+            # literal float NaN element gets the same 0.0 (SQL
+            # propagates NaN there — NaN input vectors are
             # out-of-contract; 0.0 beats an executor crash)
             good = [
                 i for i, v in enumerate(vecs)
@@ -431,7 +319,7 @@ def _semantic_decontam_arrow(
                 yield pd.DataFrame({id_col: ids, "max_eval_cos": out})
                 continue
             V = np.stack(vecs).astype(np.float64)
-            # norms via per-dim accumulation == the expr sqrt fold
+            # norms via per-dim accumulation == the SQL sqrt fold
             acc = np.zeros(len(V), dtype=np.float64)
             for d in range(V.shape[1]):
                 acc += V[:, d] * V[:, d]

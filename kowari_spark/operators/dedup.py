@@ -6,7 +6,7 @@ near-dup — each designed as a shuffle-conscious DataFrame pipeline:
 
 - exact: hash-groupBy (one shuffle on the content hash, map-side partial
   aggregation free from Catalyst);
-- MinHash LSH: shingle -> signature (narrow, codegen) -> explode bands
+- MinHash LSH: row-local signature (one mapInPandas pass) -> explode bands
   (|docs|·b rows) -> self-join on (band, key) — the join key is the band
   bucket so the shuffle moves only (id, band_key) pairs, never documents;
 - verification joins shingle sets back ONLY for candidate pairs
@@ -88,10 +88,10 @@ def resolve_edges(
     threshold: int = _AUTO_STAR_BUCKET,
 ) -> str:
     """Resolve ``edges="auto"`` with a bounded hot-bucket probe
-    (the ``engines.resolve_engine`` pattern, VERDICT r8 #1): one linear
-    groupBy-count over the (already checkpointed) bucketed relation —
-    map-side partial counts, then a ``limit(1)`` existence check on
-    buckets above ``threshold``; no collect, no second document pass.
+    (VERDICT r8 #1): one linear groupBy-count over the (already
+    checkpointed) bucketed relation — map-side partial counts, then a
+    ``limit(1)`` existence check on buckets above ``threshold``; no
+    collect, no second document pass.
     Returns "pairs" when every bucket is small, "star" when any bucket
     would make the all-pairs self-join quadratic. Explicit
     "pairs"/"star" pass through untouched (the probe costs one Spark
@@ -200,76 +200,39 @@ def minhash_signatures(
     num_hashes: int = 16,
     shingle_n: int = 3,
     seed: int = 42,
-    engine: str = "auto",
 ) -> DataFrame:
     """Whole-table minhash signatures. Output: (id_col,
     m0..m{num_hashes-1}).
 
-    ``engine="expr"`` is the SQL-oracle shape that scales on the JVM:
-    explode shingles (narrow), hash each shingle ONCE, then
-    ``groupBy(id)`` with ``num_hashes`` ``min()`` aggregates — map-side
-    partial mins make the shuffle carry one row per (doc, shingle) of
-    just (id, hash), and the generated code stays tiny (the naive
-    nested-array form recomputes md5 num_hashes× per shingle and blows
-    up codegen). ``engine="arrow"`` computes the identical signature
-    ROW-LOCALLY in one ``mapInPandas`` pass — per-document minhash
-    needs no cross-document state, so the explode+groupBy shuffle (and
-    the interpreted shingle lambdas) disappear entirely; md5-prefix
-    hashing and the affine (a·m + b) mod p mins are exact integer math
-    in both engines, so outputs are BIT-IDENTICAL (parity-tested).
-    "auto" (default) picks arrow at/above ``engines.AUTO_ARROW_MIN_ROWS``
-    via a bounded probe."""
-    from kowari_spark.engines import resolve_engine
+    Per-document minhash needs no cross-document state, so the
+    signature is computed ROW-LOCALLY in one ``mapInPandas`` pass — no
+    shingle explode, no shuffle (4.6x faster than the explode +
+    ``groupBy(id)`` min-aggregate plan at 5M docs, BASELINE.md). Same
+    tokenization as ``functions.text.shingles`` (single-space split,
+    whole-text fallback for sub-``shingle_n`` docs), the md5-prefix
+    base hash (``numerics.py_hash64``, the portable-hash contract's one
+    Python home) and the affine (a·m + b) mod p mins — exact integer
+    math, so the DuckDB replay matches bit-for-bit. NULL text hashes as
+    the empty string, like every fingerprint family here."""
+    import pandas as pd
+
     from kowari_spark.fsutil import scan_parallelism
+    from kowari_spark.numerics import py_hash64
 
     # few-split scans serialize the per-shingle md5 pass (guide §2.5);
     # no-op whenever the input is already as parallel as the session
     df = scan_parallelism(df.select(F.col(id_col), F.col(text_col)))
-
     a, b = minhash_params(num_hashes, seed)
-    if resolve_engine(engine, df=df) == "arrow":
-        return _minhash_signatures_arrow(
-            df, text_col, id_col, a, b, shingle_n
-        )
-    exploded = df.select(
-        F.col(id_col),
-        F.explode(shingles(F.col(text_col), shingle_n)).alias("__sh"),
-    ).select(
-        id_col, (base_hash64(F.col("__sh")) % F.lit(MINHASH_P)).alias("__m")
-    )
-    aggs = [
-        F.min((F.lit(ai) * F.col("__m") + F.lit(bi)) % F.lit(MINHASH_P)).alias(f"m{i}")
-        for i, (ai, bi) in enumerate(zip(a, b))
-    ]
-    return exploded.groupBy(id_col).agg(*aggs)
-
-
-def _minhash_signatures_arrow(
-    df, text_col, id_col, a, b, shingle_n
-) -> DataFrame:
-    """Row-local minhash: same tokenization (single-space split), same
-    whole-text fallback for sub-``shingle_n`` docs, same md5-prefix
-    base hash (via ``numerics.py_hash64`` — the single Python home of
-    the portable-hash contract) and affine mins as the expression
-    engine — Python ints are exact, so every m_i matches bit-for-bit.
-    NULL text scores as the empty string (the quality.py arrow-engine
-    convention; the expr engine propagates nulls instead — filter
-    null text upstream where the distinction matters)."""
-    import pandas as pd
-
-    from kowari_spark.numerics import py_hash64
-
     id_type = df.schema[id_col].dataType.simpleString()
-    n_h = len(a)
     schema = f"{id_col} {id_type}, " + ", ".join(
-        f"m{i} long" for i in range(n_h)
+        f"m{i} long" for i in range(num_hashes)
     )
     p = MINHASH_P
 
     def sig(batches):
         for pdf in batches:
             out = {id_col: pdf[id_col].to_numpy()}
-            cols = [[] for _ in range(n_h)]
+            cols = [[] for _ in range(num_hashes)]
             for txt in pdf[text_col]:
                 toks = ("" if txt is None else txt).split(" ")
                 if len(toks) >= shingle_n:
@@ -282,11 +245,11 @@ def _minhash_signatures_arrow(
                 hs = [py_hash64(g) % p for g in grams]
                 for i, (ai, bi) in enumerate(zip(a, b)):
                     cols[i].append(min((ai * m + bi) % p for m in hs))
-            for i in range(n_h):
+            for i in range(num_hashes):
                 out[f"m{i}"] = pd.array(cols[i], dtype="int64")
             yield pd.DataFrame(out)
 
-    return df.select(id_col, text_col).mapInPandas(sig, schema)
+    return df.mapInPandas(sig, schema)
 
 
 def lsh_match_probability(s: float, num_hashes: int, bands: int) -> float:
@@ -508,35 +471,27 @@ def minhash_dedup_pairs(
 
 def simhash_fingerprints(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    bits: int = 32, engine: str = "expr",
+    bits: int = 32,
 ) -> DataFrame:
-    """Whole-table SimHash. ``engine="expr"`` (DEFAULT — unlike the
-    minhash/winnow passes) is the aggregation shape that scales on the
-    JVM: explode tokens, hash each ONCE, then ``bits`` tiny sum()
+    """Whole-table SimHash, as the aggregation shape that scales on
+    the JVM: explode tokens, hash each ONCE, then ``bits`` tiny sum()
     aggregates (map-side partial) counting set bits; fingerprint bit j
     is set when ones_j outvote zeros. Same values as the
     ``functions.text.simhash`` Column form, which recomputes the
-    token-hash array per bit and blows up codegen at 32 bits.
-    ``engine="arrow"`` is the BIT-IDENTICAL row-local ``mapInPandas``
-    form (parity-tested) — available for clusters where shuffle
-    capacity, not CPU, is the constraint, but MEASURED SLOWER here at
-    every scale (sf0.1 warm: 1.1 s expr vs 1.3 s arrow; 5M docs:
-    53.7 s vs 65.6 s — simhash hashes EVERY token, and per-token md5
-    is cheaper in the JVM than in Python, with no interpreted
-    higher-order lambdas for arrow to remove; contrast the winnow
-    window shuffle, where arrow wins 11×). "auto" therefore resolves
-    to expr-below/arrow-above threshold like its siblings, but expr is
-    the shipped default."""
-    from kowari_spark.engines import resolve_engine
+    token-hash array per bit and blows up codegen at 32 bits. A
+    row-local ``mapInPandas`` form measured SLOWER at every scale
+    (sf0.1: 1.1 s here vs 1.3 s; 5M docs: 53.7 s vs 65.6 s — simhash
+    hashes EVERY token, and per-token md5 is cheaper in the JVM than in
+    Python), so this plan is the one engine. NULL text fingerprints as
+    the empty string, like the minhash and winnow families."""
     from kowari_spark.fsutil import scan_parallelism
     from kowari_spark.functions.text import tokens
 
     # few-split scans serialize the per-token md5 pass (guide §2.5)
     df = scan_parallelism(df.select(F.col(id_col), F.col(text_col)))
-    if resolve_engine(engine, df=df) == "arrow":
-        return _simhash_fingerprints_arrow(df, text_col, id_col, bits)
     exploded = df.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("__t")
+        F.col(id_col),
+        F.explode(tokens(F.coalesce(F.col(text_col), F.lit("")))).alias("__t"),
     ).select(id_col, base_hash64(F.col("__t")).alias("__h"))
     aggs = [
         F.sum(F.shiftright(F.col("__h"), j).bitwiseAND(F.lit(1))).alias(f"__b{j}")
@@ -549,48 +504,6 @@ def simhash_fingerprints(
             F.col(f"__b{j}") * 2 > F.col("__n"), F.lit(1 << j).cast("long")
         ).otherwise(F.lit(0).cast("long"))
     return per.select(F.col(id_col), fp.alias("simhash"))
-
-
-def _simhash_fingerprints_arrow(df, text_col, id_col, bits) -> DataFrame:
-    """Row-local SimHash: same single-space tokenization, same
-    md5-prefix token hash (``numerics.py_hash64``, the portable-hash
-    contract's one Python home), same strict-majority bit vote
-    (2·ones > n) — bit-identical to the expression engine, minus its
-    per-token shuffle. NULL text scores as the empty string (the
-    quality.py arrow-engine convention)."""
-    import numpy as np
-    import pandas as pd
-
-    from kowari_spark.numerics import py_hash64
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = f"{id_col} {id_type}, simhash long"
-
-    def fps(batches):
-        for pdf in batches:
-            out = []
-            for txt in pdf[text_col]:
-                hs = np.array(
-                    [
-                        py_hash64(t)
-                        for t in ("" if txt is None else txt).split(" ")
-                    ],
-                    dtype=np.uint64,
-                )
-                n = hs.size
-                fp = 0
-                for j in range(bits):
-                    if 2 * int(((hs >> np.uint64(j)) & np.uint64(1)).sum()) > n:
-                        fp |= 1 << j
-                out.append(fp)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "simhash": pd.array(out, dtype="int64"),
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(fps, schema)
 
 
 def simhash_near_pairs(
@@ -1143,7 +1056,6 @@ def winnow_fps(
     window: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    engine: str = "auto",
 ) -> DataFrame:
     """Per-document winnowing fingerprint relation (id_col, fp),
     distinct — the selected window-min gram hashes of
@@ -1151,57 +1063,23 @@ def winnow_fps(
     persisted winnow layout stores (operators/dedup_index.py) and every
     winnow consumer joins on.
 
-    ``engine="expr"`` is the SQL-oracle aggregation form (posexplode
-    grams, hash each ONCE, sliding rowsBetween window min; the
-    nested-Column form re-evaluates the gram-hash array per window
-    element — measured 30x slower at sf0.01). Its cost at scale is the
-    ``Window.partitionBy(id)`` shuffle of EVERY gram hash — the
-    heaviest build of the four signature families (BASELINE.md r10:
-    463 s at 5M docs). ``engine="arrow"`` computes the identical
-    selection ROW-LOCALLY in one ``mapInPandas`` pass (winnowing is
-    per-document by definition) — no gram shuffle at all; md5-prefix
-    hashing makes the fingerprints BIT-IDENTICAL (parity-tested).
-    "auto" (default) picks arrow at/above ``engines.AUTO_ARROW_MIN_ROWS``
-    via a bounded probe."""
-    from pyspark.sql.window import Window
-
-    from kowari_spark.engines import resolve_engine
-    from kowari_spark.functions.text import base_hash64, winnow_grams
-
-    from kowari_spark.fsutil import scan_parallelism
-
-    # few-split scans serialize the per-gram md5 + window pass
-    df = scan_parallelism(df.select(F.col(id_col), F.col(text_col)))
-    if resolve_engine(engine, df=df) == "arrow":
-        return _winnow_fps_arrow(df, k, window, id_col, text_col)
-    grams = df.select(
-        F.col(id_col),
-        F.posexplode(winnow_grams(F.col(text_col), k)).alias("__pos", "__g"),
-    )
-    hashed = grams.select(id_col, "__pos", base_hash64(F.col("__g")).alias("__h"))
-    wpart = Window.partitionBy(id_col)
-    wslide = Window.partitionBy(id_col).orderBy("__pos").rowsBetween(0, window - 1)
-    return (
-        hashed.withColumn("__n", F.count("*").over(wpart))
-        .withColumn("fp", F.min("__h").over(wslide))
-        # valid window START positions only (0-based): 0..max(n-window, 0)
-        .filter(F.col("__pos") <= F.greatest(F.col("__n") - window, F.lit(0)))
-        .select(F.col(id_col), "fp")
-        .distinct()
-    )
-
-
-def _winnow_fps_arrow(df, k, window, id_col, text_col) -> DataFrame:
-    """Row-local winnowing: same k-token grams (whole-text fallback
-    below k tokens), same md5-prefix hash (``numerics.py_hash64``),
-    same window-start-min selection over starts 0..max(n-window, 0),
-    distinct per document — bit-identical to the expression engine,
-    minus its per-gram shuffle. NULL text fingerprints as the empty
-    string (the quality.py arrow-engine convention)."""
+    Winnowing is per-document by definition, so the selection runs
+    ROW-LOCALLY in one ``mapInPandas`` pass: no gram shuffle at all,
+    where the ``Window.partitionBy(id)`` aggregation form shuffled
+    EVERY gram hash (the heaviest build of the four signature families:
+    463 s at 5M docs, 11x slower, BASELINE.md r10). Same k-token grams
+    (whole-text fallback below k tokens), same md5-prefix hash
+    (``numerics.py_hash64``), same window-start-min selection over
+    starts 0..max(n-window, 0) as the DuckDB replay. NULL text
+    fingerprints as the empty string, like every fingerprint family
+    here."""
     import pandas as pd
 
+    from kowari_spark.fsutil import scan_parallelism
     from kowari_spark.numerics import py_hash64
 
+    # few-split scans serialize the per-gram md5 pass (guide §2.5)
+    df = scan_parallelism(df.select(F.col(id_col), F.col(text_col)))
     id_type = df.schema[id_col].dataType.simpleString()
     schema = f"{id_col} {id_type}, fp long"
 
@@ -1229,7 +1107,7 @@ def _winnow_fps_arrow(df, k, window, id_col, text_col) -> DataFrame:
                 {id_col: ids, "fp": pd.array(vals, dtype="int64")}
             )
 
-    return df.select(id_col, text_col).mapInPandas(fps, schema)
+    return df.mapInPandas(fps, schema)
 
 
 def winnow_pairs(

@@ -16,13 +16,14 @@ Spark-first design:
   engines). Each seeding round is ONE distributed argmax job (min
   distance to the chosen set is a native fold over a literal centroid
   matrix, TakeOrderedAndProject picks the farthest row); assignment is
-  a native argmin expression over a broadcast centroid array; the
-  update step reduces (cell, dim) partial sums map-side, so each Lloyd
-  iteration shuffles at most n_lists*d tiny rows, never vectors. At
-  100 TB run the k seeding scans over a hash-sampled subset
-  (``fit(df.sample(...))``) — seeds only need to cover the space, and
-  the measured recall win over the round-2 hash-order sample comes
-  from spread, not from seeing every row.
+  the shared numpy argmin encoder in one row-local ``mapInPandas``
+  pass (operators/quantizer.py); the update step reduces (cell, dim)
+  partial sums map-side, so each Lloyd iteration shuffles at most
+  n_lists*d tiny rows, never vectors. At 100 TB run the k seeding
+  scans over a hash-sampled subset (``fit(df.sample(...))``) — seeds
+  only need to cover the space, and the measured recall win over the
+  round-2 hash-order sample comes from spread, not from seeing every
+  row.
 - **build** writes the assigned table ``partitionBy("list_id")`` — a
   probe then reads n_probe/n_lists of the data via partition pruning
   (same layout trick as the LSH index, SURVEY.md §4.1).
@@ -61,8 +62,7 @@ class IVF:
     def __init__(self, n_lists: int | str = 16, n_probe: int | str = 2,
                  max_iter: int = 5,
                  seed: int = 42, round_centroids: int | None = None,
-                 seed_sample: int | str | None = "auto",
-                 assign_engine: str = "auto"):
+                 seed_sample: int | str | None = "auto"):
         # n_lists="auto" resolves to round(sqrt(n)) at fit time — the
         # sizing that balances build vs probe: assignment cost per
         # Lloyd pass is O(n·n_lists·d) and probe cost is
@@ -82,18 +82,6 @@ class IVF:
             raise ValueError(f"n_lists must be an int or 'auto', got {n_lists!r}")
         if isinstance(n_probe, str) and n_probe != "auto":
             raise ValueError(f"n_probe must be an int or 'auto', got {n_probe!r}")
-        # cell-assignment engine: "expr" = the native transform/fold
-        # argmin (the oracle-parity shape; n_lists interpreted fold
-        # lambdas PER ROW — the measured scale killer at large n_lists,
-        # same boundary the PQ arrow encoder closed); "arrow" = the
-        # SHARED quantizer argmin encoder (m=1) — bit-identical by the
-        # same dimension-ordered-fold + first-index-tie argument, parity
-        # pinned in tests. "auto" sizes the choice (engines.resolve_engine).
-        if assign_engine not in ("auto", "expr", "arrow"):
-            raise ValueError(
-                f"assign_engine must be auto|expr|arrow, got {assign_engine!r}"
-            )
-        self.assign_engine = assign_engine
         self.n_lists = n_lists
         self.n_probe = n_probe
         # the constructor-time sizing SPEC ("auto" or the explicit int)
@@ -147,18 +135,6 @@ class IVF:
 
         return d2_fold(F.col(vec_col), c)
 
-    def _assign_expr(self, vec_col: str):
-        """list_id = argmin_i ||v - c_i||² as a native expression over a
-        literal centroid matrix; ties -> lowest index. The distance loop
-        is a higher-order transform over ONE array<array<double>> literal
-        rather than n_lists unrolled fold expressions: the generated code
-        is O(1) in n_lists so Janino compilation stays negligible."""
-        dists = F.transform(
-            self._cents_lit(self.centroids),
-            lambda c: self._d2_fold(vec_col, c),
-        )
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
     def fit(self, df: DataFrame, id_col: str = "id", vec_col: str = "embedding") -> "IVF":
         """Deterministic distributed k-means (Lloyd, ``max_iter`` rounds).
 
@@ -167,7 +143,7 @@ class IVF:
         source per iteration would dominate the build.
 
         Degraded rows (null / wrong-length vectors) carry no fittable
-        signal — they assign a null list_id in both engines by design —
+        signal — they assign a null list_id by design —
         and are filtered before seeding AND the Lloyd reduce, mirroring
         PQ.fit's degraded-row rule: a short vector reaching the seed
         sample would yield a ragged centroid matrix, and a null list_id
@@ -176,12 +152,10 @@ class IVF:
         from the first non-null row, exactly like PQ's dim inference."""
         # per-fit sizing hygiene: restore the constructor spec so an
         # "auto" instance refit on a different-size corpus re-derives
-        # sqrt(n) / n_lists//16 instead of reusing the stale resolution,
-        # and the |df| bound from a previous fit never leaks into this
-        # one's engine choice (ADVICE r8)
+        # sqrt(n) / n_lists//16 instead of reusing the stale resolution
+        # (ADVICE r8)
         self.n_lists = self._n_lists_spec
         self.n_probe = self._n_probe_spec
-        self._seen_rows = None
         first = df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
         if first is None:
             raise ValueError("cannot fit an IVF on an empty DataFrame")
@@ -201,7 +175,6 @@ class IVF:
                 # data — and it gives the exact n the sqrt sizing needs
                 n = vecs.count()
                 self.n_lists = max(1, min(n, int(round(math.sqrt(n)))))
-                self._seen_rows = n  # free |df| bound for engine "auto"
             if self.n_probe == "auto":
                 # ~1/16 of the cells per probe (the measured ~6%-of-
                 # corpus operating point from BASELINE's x1000 table)
@@ -286,13 +259,6 @@ class IVF:
                 f"need >= {self.n_lists} vectors to fit {self.n_lists} lists"
             )
         pts = [(r[id_col], [float(x) for x in r[vec_col]]) for r in rows]
-        # |df| knowledge for the engine choice: a PARTIAL sample is the
-        # exact row count; a FULL sample is only a lower bound — record
-        # None then, so fit() sizes the engine with its own bounded
-        # probe instead of under-reporting (seed_sample=512 made a
-        # 5000-row fit pick the interpreted expr engine: the sample
-        # size is not the table size)
-        self._seen_rows = len(rows) if len(rows) < sample else None
         from kowari_spark.operators.quantizer import gonzalez_maxmin
 
         return np.asarray(gonzalez_maxmin(pts, self.n_lists), dtype=np.float64)
@@ -304,36 +270,13 @@ class IVF:
         # the 100 TB design point (ADVICE r5)
         self.centroids = self._seed_farthest_first(df, id_col, vec_col)
 
-        # resolve assign_engine="auto" ONCE for the whole fit: a
-        # PARTIAL seed sample is the exact row count (free, no scan);
-        # a FULL sample says nothing about n, so size with the bounded
-        # limit-count probe on the persisted projection — engines are
-        # parity-tested bit-identical, the choice is pure performance
-        engine = self.assign_engine
-        if engine == "auto":
-            from kowari_spark.engines import AUTO_ARROW_MIN_ROWS
-
-            seen = getattr(self, "_seen_rows", None)
-            if seen is not None:
-                engine = "arrow" if seen >= AUTO_ARROW_MIN_ROWS else "expr"
-            else:
-                from kowari_spark.engines import resolve_engine
-
-                engine = resolve_engine("auto", df)
-
         for _ in range(self.max_iter):
-            if engine == "arrow":
-                assigned = self._with_lists_arrow(
-                    df.select(vec_col), vec_col
-                ).select("list_id", vec_col)
-            else:
-                assigned = df.select(
-                    self._assign_expr(vec_col).alias("list_id"),
-                    F.col(vec_col),
-                )
+            assigned = self.with_lists(
+                df.select(vec_col), vec_col
+            ).select("list_id", vec_col)
             # degraded rows (null/short/overlong vectors) carry a null
-            # list_id in BOTH engines by design — drop them before the
-            # reduce, mirroring PQ.fit: an unfiltered null key would
+            # list_id by design — drop them before the reduce,
+            # mirroring PQ.fit: an unfiltered null key would
             # reach the driver accumulation as acc[None], and numpy
             # treats None as np.newaxis — new_c[None] = ... broadcasts
             # the assignment over the ENTIRE centroid array (silent
@@ -371,13 +314,18 @@ class IVF:
 
     # -- build (offline layout) -------------------------------------------
 
-    def _with_lists_arrow(self, df: DataFrame, vec_col: str) -> DataFrame:
-        """Arrow assignment: the shared quantizer argmin encoder with a
-        single subspace (= the centroid matrix). Degraded rows mirror
-        the expression engine: null/short/overlong vectors assign a
-        null list_id (zip_with null-padding poisons every expr distance
-        for those shapes), NaN-poisoned full-length vectors resolve to
-        cell 0 in both engines — parity pinned in tests."""
+    def with_lists(self, df: DataFrame, vec_col: str = "embedding") -> DataFrame:
+        """Append ``list_id`` = argmin_i ||v - c_i||² (ties -> lowest
+        index): the shared quantizer argmin encoder with a single
+        subspace (= the centroid matrix), one row-local mapInPandas
+        pass — the interpreted n_lists-lambda fold per row was the
+        measured scale killer at large n_lists. Distances fold
+        dimension-by-dimension like the SQL replay. Degraded rows:
+        null/short/overlong vectors assign a null list_id (the SQL
+        zip_with null-padding poisons every distance for those shapes),
+        NaN-poisoned full-length vectors resolve to cell 0."""
+        if self.centroids is None:
+            raise ValueError("fit() first")
         from kowari_spark.operators.quantizer import argmin_codes_arrow
 
         dim = int(self.centroids.shape[1])
@@ -390,19 +338,6 @@ class IVF:
                 F.size(vec_col) == dim, F.element_at("__cells", 1)
             ).otherwise(F.lit(None).cast("int")),
         ).drop("__cells")
-
-    def with_lists(self, df: DataFrame, vec_col: str = "embedding",
-                   engine: str | None = None) -> DataFrame:
-        if self.centroids is None:
-            raise ValueError("fit() first")
-        from kowari_spark.engines import resolve_engine
-
-        engine = resolve_engine(
-            self.assign_engine if engine is None else engine, df
-        )
-        if engine == "arrow":
-            return self._with_lists_arrow(df, vec_col)
-        return df.withColumn("list_id", self._assign_expr(vec_col))
 
     def build(self, df: DataFrame, path: str, vec_col: str = "embedding") -> None:
         """Materialize the inverted-file layout: one partition per cell;

@@ -17,21 +17,22 @@ Spark-first design:
 - **fit** reuses the IVF fit discipline (ivf.py): deterministic
   farthest-first (Gonzalez maxmin) seeding from ONE md5-ordered sample
   collect, then Lloyd iterations — but all ``m`` subspaces train in the
-  SAME pass: one projection computes every subspace's assignment (a
-  native argmin over a literal codebook), one posexplode keyed by
+  SAME pass: one projection computes every subspace's assignment (the
+  shared numpy argmin encoder), one posexplode keyed by
   (sub, code, dim) reduces the per-centroid sums map-side, so each
   Lloyd iteration shuffles m*k_sub*(d/m) = k_sub*d tiny rows total,
   never vectors, regardless of m. Centroids land on a fixed decimal
   grid (HALF_UP) each round so the whole fit is bit-reproducible across
   engines — same contract as IVF, and the SQL oracle re-derives the
   entire fit (seeding + Lloyd + encode + ADC) independently.
-- **encode/build** is a single codegen projection (m unrolled argmin
-  expressions over literal codebooks — no UDF, no shuffle); ``build``
+- **encode/build** is one row-local ``mapInPandas`` pass (all m
+  argmins per row in vectorized numpy — no shuffle; 9.6x faster at x10
+  than m·k_sub interpreted fold lambdas per row, BASELINE.md); ``build``
   writes ONLY (id, codes) plus a ``_pq_meta.json`` sidecar (codebooks +
   params + hash version), so a later session probes the compressed
   layout without refitting or rereading vectors.
 - **query** computes the m*k_sub distance table driver-side with the
-  same sequential (x-y)^2 fold the engines use (bit-parity), then scores
+  same sequential (x-y)^2 fold the encoder uses (bit-parity), then scores
   every code row with ``m`` element_at lookups summed in FIXED subspace
   order (float addition order is part of the plan) — one skinny scan,
   top-k via TakeOrderedAndProject (single query) or a per-query window
@@ -65,31 +66,11 @@ class PQ:
 
     def __init__(self, m: int = 4, k_sub: int = 16, max_iter: int = 3,
                  seed: int = 42, round_centroids: int | None = 6,
-                 seed_sample: int | str | None = "auto",
-                 encoder: str = "auto"):
+                 seed_sample: int | str | None = "auto"):
         if m < 1:
             raise ValueError(f"m must be >= 1, got {m}")
         if k_sub < 1:
             raise ValueError(f"k_sub must be >= 1, got {k_sub}")
-        if encoder not in ("auto", "expr", "arrow"):
-            raise ValueError(
-                f"encoder must be 'auto', 'expr' or 'arrow', got {encoder!r}"
-            )
-        # encode-path engine ("auto" default sizes the choice per call —
-        # engines.resolve_engine, the HNSW scorer="auto" precedent; the
-        # 629s-vs-3.7s x100 gap in BASELINE.md is what an unaware caller
-        # of the expr default used to eat): "expr" = pure-JVM argmin over literal
-        # codebooks (the oracle-parity default); "arrow" = the SAME
-        # arithmetic vectorized in numpy inside mapInPandas — the
-        # m*k_sub interpreted fold lambdas per row are the measured
-        # build bottleneck at scale (x100: 629s -> see BASELINE.md).
-        # Bit-identical by construction: distances accumulate
-        # DIMENSION-BY-DIMENSION (one vectorized elementwise op per
-        # dim — the same sequential left fold the expression engine
-        # runs, the semantic-dedup GEMM-rescore discipline), and
-        # np.argmin ties break on the first (lowest) index exactly like
-        # array_position(array_min). Parity is pinned in tests.
-        self.encoder = encoder
         self.m = m
         self.k_sub = k_sub
         self.max_iter = max_iter
@@ -108,44 +89,13 @@ class PQ:
         self.dim: int | None = None
         self.codebooks: np.ndarray | None = None  # (m, k_sub, d/m)
 
-    # -- expression helpers -------------------------------------------------
+    # -- helpers ------------------------------------------------------------
 
     @property
     def _ds(self) -> int:
         if self.dim is None:
             raise ValueError("fit() or load() first")
         return self.dim // self.m
-
-    # the literal/fold/seeding arithmetic is SHARED with IVF via
-    # operators/quantizer.py — both SQL oracles replay it CTE-for-CTE,
-    # so it must live exactly once
-    @staticmethod
-    def _cents_lit(cents) -> "F.Column":
-        from kowari_spark.operators.quantizer import cents_lit
-
-        return cents_lit(cents)
-
-    @staticmethod
-    def _d2_fold(sub: "F.Column", c) -> "F.Column":
-        from kowari_spark.operators.quantizer import d2_fold
-
-        return d2_fold(sub, c)
-
-    def _sub_slice(self, vec_col, j: int) -> "F.Column":
-        """Subvector j: elements [j*ds, (j+1)*ds) — F.slice is 1-based."""
-        c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-        return F.slice(c, j * self._ds + 1, self._ds)
-
-    def _code_expr(self, vec_col, j: int) -> "F.Column":
-        """code_j = argmin_c ||v_j - cb[j][c]||^2, ties -> lowest code."""
-        dists = F.transform(
-            self._cents_lit(self.codebooks[j]),
-            lambda c: self._d2_fold(self._sub_slice(vec_col, j), c),
-        )
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-    def _codes_expr(self, vec_col) -> "F.Column":
-        return F.array(*[self._code_expr(vec_col, j) for j in range(self.m)])
 
     # -- fit ----------------------------------------------------------------
 
@@ -180,12 +130,7 @@ class PQ:
             .persist()
         )
         try:
-            # resolve encoder="auto" ONCE for the whole fit (the count
-            # also materializes the persist before the first Lloyd pass)
-            from kowari_spark.engines import resolve_engine
-
-            engine = resolve_engine(self.encoder, n=vecs.count())
-            return self._fit(vecs, id_col, vec_col, engine)
+            return self._fit(vecs, id_col, vec_col)
         finally:
             vecs.unpersist()
 
@@ -222,8 +167,7 @@ class PQ:
 
         return gonzalez_maxmin(pts, self.k_sub)
 
-    def _fit(self, df: DataFrame, id_col: str, vec_col: str,
-             engine: str = "expr") -> "PQ":
+    def _fit(self, df: DataFrame, id_col: str, vec_col: str) -> "PQ":
         rows = self._seed_rows(df, id_col, vec_col)
         ds = self._ds
         books = []
@@ -236,12 +180,10 @@ class PQ:
         self.codebooks = np.asarray(books, dtype=np.float64)
 
         for _ in range(self.max_iter):
-            # one pass: every subspace's code (through the configured
-            # encoder — the arrow path is the scale shape), then
-            # (sub, code, local dim) partial sums — k_sub*d skinny rows
-            # total on the wire
+            # one pass: every subspace's code, then (sub, code, local
+            # dim) partial sums — k_sub*d skinny rows total on the wire
             coded = self.with_codes(
-                df.select(vec_col), vec_col, code_col="__codes", engine=engine
+                df.select(vec_col), vec_col, code_col="__codes"
             ).select(
                 "__codes",
                 F.posexplode(vec_col).alias("dim", "val"),
@@ -283,28 +225,20 @@ class PQ:
 
     # -- encode / build -----------------------------------------------------
 
-    def _codes_arrow(self, df: DataFrame, vec_col: str,
-                     code_col: str) -> DataFrame:
-        """Arrow encode path — the shared quantizer argmin encoder
-        (operators/quantizer.argmin_codes_arrow, also the IVF arrow
-        cell assignment): all m argmins per row from vectorized numpy
-        inside ONE mapInPandas pass, zero shuffles, bit-identical to
-        the expression engine (see __init__)."""
+    def with_codes(self, df: DataFrame, vec_col: str = "embedding",
+                   code_col: str = "codes") -> DataFrame:
+        """Append ``code_col`` (array<int>, one code per subspace): the
+        shared quantizer argmin encoder (operators/quantizer.
+        argmin_codes_arrow, also the IVF cell assignment) — all m
+        argmins per row from vectorized numpy inside ONE mapInPandas
+        pass, zero shuffles. Distances accumulate DIMENSION-BY-DIMENSION
+        (the sequential left fold the SQL replay runs) and np.argmin
+        ties break on the lowest code, like array_position(array_min)."""
+        if self.codebooks is None:
+            raise ValueError("fit() or load() first")
         from kowari_spark.operators.quantizer import argmin_codes_arrow
 
         return argmin_codes_arrow(df, self.codebooks, vec_col, code_col)
-
-    def with_codes(self, df: DataFrame, vec_col: str = "embedding",
-                   code_col: str = "codes",
-                   engine: str | None = None) -> DataFrame:
-        if self.codebooks is None:
-            raise ValueError("fit() or load() first")
-        from kowari_spark.engines import resolve_engine
-
-        engine = resolve_engine(self.encoder if engine is None else engine, df)
-        if engine == "arrow":
-            return self._codes_arrow(df, vec_col, code_col)
-        return df.withColumn(code_col, self._codes_expr(vec_col))
 
     def build(self, df: DataFrame, path: str, id_col: str = "id",
               vec_col: str = "embedding") -> None:
@@ -322,11 +256,9 @@ class PQ:
             "max_iter": self.max_iter,
             "seed": self.seed,
             "round_centroids": self.round_centroids,
-            # full fit/encode provenance: codes are bit-identical across
-            # encoders (tested), but the sidecar must say how the layout
-            # was produced so load() restores an equivalent instance
+            # full fit provenance, so load() restores an equivalent
+            # instance
             "seed_sample": self.seed_sample,
-            "encoder": self.encoder,
             "dim": self.dim,
             "codebooks": [
                 [[float(x) for x in c] for c in book] for book in self.codebooks
@@ -368,7 +300,6 @@ class PQ:
         self.seed = meta["seed"]
         self.round_centroids = meta["round_centroids"]
         self.seed_sample = meta.get("seed_sample", self.seed_sample)
-        self.encoder = meta.get("encoder", self.encoder)
         self.dim = meta["dim"]
         self.codebooks = np.asarray(meta["codebooks"], dtype=np.float64)
         return spark.read.parquet(path)

@@ -6,13 +6,14 @@ pretraining corpora (Rae et al., "Scaling Language Models: Methods,
 Analysis & Insights from Training Gopher", 2021, §A1.1 — fraction of
 content in the most common n-gram, fraction in duplicated n-grams).
 
-Spark-first shape: word n-grams are generated with native array
-expressions (no UDF), EXPLODED once per n, counted with a
-``groupBy(doc, gram)`` whose shuffle carries only (id, gram-hash-sized)
-rows with map-side partial counts, then reduced to one row per document.
-Both shuffles key on the document id, so at 100 TB the two n-gram
-passes co-partition and nothing wide ever moves. Every step is plain
-aggregation — the whole operator has an exact ANSI-SQL oracle.
+Spark-first shape: per-document repetition is row-local, so
+:func:`repetition_stats` counts each document's n-grams inside one
+``mapInPandas`` pass with zero shuffles. Corpus-level n-gram views
+(:func:`top_ngrams`) generate grams with native array expressions (no
+UDF), explode once and count with a ``groupBy`` whose map-side partial
+aggregates keep the shuffle skinny. Every step is integer counting over
+the single-space tokenization, so each operator has an exact ANSI-SQL
+oracle.
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ from kowari_spark.functions.text import _c, tokens
 def word_ngrams(text, n: int) -> Column:
     """Non-distinct word n-grams, order preserved (COUNTS matter here —
     ``functions.text.shingles`` dedupes, which is right for Jaccard and
-    wrong for repetition). Docs shorter than ``n`` tokens yield an
+    wrong for frequency counts). Docs shorter than ``n`` tokens yield an
     empty array (explode drops them; callers re-attach with a left
     join)."""
     toks = tokens(_c(text))
@@ -124,25 +125,46 @@ def top_ngrams(
     )
 
 
-def _repetition_arrow(
-    df: DataFrame, text_col: str, id_col: str, top_n: int, dup_n: int
+def repetition_stats(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    top_n: int = 2,
+    dup_n: int = 5,
 ) -> DataFrame:
-    """Arrow-batched engine: per-document repetition is ROW-LOCAL, so
-    the whole computation runs inside ``mapInPandas`` — one pass over
-    the scan, ZERO shuffles, output one row per input row. This is the
-    100 TB shape: the expression engine below explodes ~2·tokens gram
-    strings per document through interpreted ``transform`` lambdas
-    (measured ~90% of its wall at 500k docs) and shuffles them twice;
-    here each worker counts its own documents' grams with a hash map
-    and nothing ever leaves the task. Results are bit-identical to the
-    expression engine (same tokenization, same fractions, the same
-    decimal HALF_UP rounding Spark's ROUND applies — parity-tested)."""
+    """Per-document repetition fractions:
+
+    - ``top{top_n}gram_frac`` — occurrences of the document's most
+      frequent ``top_n``-gram over its total ``top_n``-gram count
+      (boilerplate headers/footers push this up);
+    - ``dup{dup_n}gram_frac`` — fraction of ``dup_n``-gram occurrences
+      belonging to grams seen more than once in the document (copy-paste
+      repetition pushes this up).
+
+    Documents with fewer than ``n`` tokens have no such n-grams and
+    report 0.0 (no evidence of repetition), so the output keeps exactly
+    one row per input document. Fractions are rounded to 6 decimals
+    HALF_UP, like SQL ``ROUND`` (+0.0 normalizes negative zero).
+
+    Per-document repetition is ROW-LOCAL, so the whole computation runs
+    inside ``mapInPandas`` — one pass over the scan, ZERO shuffles,
+    output one row per input row: each worker counts its own documents'
+    grams with a hash map and nothing ever leaves the task. Exploding
+    ~2·tokens gram strings per document through interpreted
+    ``transform`` lambdas and shuffling them twice measured 3.4x slower
+    at x1 (8.2 s vs 2.4 s, BASELINE.md). Tokenization is the
+    single-space split of ``functions.text.tokens``, so the DuckDB
+    replay is exact; NULL text counts as the empty string."""
+    if not 0 < top_n < dup_n:
+        raise ValueError(f"need 0 < top_n < dup_n, got {top_n}, {dup_n}")
     from collections import Counter
 
     import pandas as pd
 
+    from kowari_spark.fsutil import scan_parallelism
     from kowari_spark.numerics import round_half_up
 
+    df = scan_parallelism(df.select(id_col, text_col))
     id_type = df.schema[id_col].dataType.simpleString()
     top_name, dup_name = f"top{top_n}gram_frac", f"dup{dup_n}gram_frac"
     schema = f"{id_col} {id_type}, {top_name} double, {dup_name} double"
@@ -175,89 +197,7 @@ def _repetition_arrow(
                 {id_col: pdf[id_col], top_name: tops, dup_name: dups}
             )
 
-    return df.select(id_col, text_col).mapInPandas(score, schema)
-
-
-def repetition_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_n: int = 2,
-    dup_n: int = 5,
-    engine: str = "auto",
-) -> DataFrame:
-    """Per-document repetition fractions:
-
-    - ``top{top_n}gram_frac`` — occurrences of the document's most
-      frequent ``top_n``-gram over its total ``top_n``-gram count
-      (boilerplate headers/footers push this up);
-    - ``dup{dup_n}gram_frac`` — fraction of ``dup_n``-gram occurrences
-      belonging to grams seen more than once in the document (copy-paste
-      repetition pushes this up).
-
-    Documents with fewer than ``n`` tokens have no such n-grams and
-    report 0.0 (no evidence of repetition), so the output keeps exactly
-    one row per input document. Fractions are rounded to 6 decimals
-    (+0.0 normalizes negative zero) for cross-engine comparison.
-
-    ``engine="expr"`` is the pure-expression plan with the
-    exact SQL oracle; ``engine="arrow"`` computes identical values
-    shuffle-free inside ``mapInPandas`` — gram construction through
-    interpreted ``transform`` lambdas dominates the expression plan at
-    scale (see ``_repetition_arrow``), the same boundary the LSH GEMM
-    hasher sits behind. Default ``"auto"`` sizes the choice (arrow
-    at/above ``engines.AUTO_ARROW_MIN_ROWS`` — the engines are
-    bit-identical, parity-tested, so this is pure performance)."""
-    if not 0 < top_n < dup_n:
-        raise ValueError(f"need 0 < top_n < dup_n, got {top_n}, {dup_n}")
-    from kowari_spark.engines import resolve_engine
-
-    from kowari_spark.fsutil import scan_parallelism
-
-    df = scan_parallelism(df.select(id_col, text_col))
-    if resolve_engine(engine, df) == "arrow":
-        return _repetition_arrow(df, text_col, id_col, top_n, dup_n)
-
-    def per_doc(n: int, aggs):
-        counts = (
-            df.select(
-                F.col(id_col), F.explode(word_ngrams(F.col(text_col), n)).alias("__g")
-            )
-            .groupBy(id_col, "__g")
-            .agg(F.count("*").alias("__c"))
-        )
-        return counts.groupBy(id_col).agg(*aggs)
-
-    top = per_doc(
-        top_n,
-        [
-            F.max("__c").alias("__top"),
-            F.sum("__c").alias("__tot_t"),
-        ],
-    )
-    dup = per_doc(
-        dup_n,
-        [
-            F.sum(F.when(F.col("__c") > 1, F.col("__c")).otherwise(0)).alias("__dup"),
-            F.sum("__c").alias("__tot_d"),
-        ],
-    )
-
-    def frac(num, den):
-        return (
-            F.round(F.coalesce(num / den, F.lit(0.0)), 6) + F.lit(0.0)
-        )
-
-    return (
-        df.select(id_col)
-        .join(top, id_col, "left")
-        .join(dup, id_col, "left")
-        .select(
-            id_col,
-            frac(F.col("__top"), F.col("__tot_t")).alias(f"top{top_n}gram_frac"),
-            frac(F.col("__dup"), F.col("__tot_d")).alias(f"dup{dup_n}gram_frac"),
-        )
-    )
+    return df.mapInPandas(score, schema)
 
 
 def unigram_surprisal(

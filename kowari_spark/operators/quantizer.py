@@ -29,8 +29,8 @@ def cents_lit(cents) -> Column:
 
 
 def d2_fold(vec: Column, c) -> Column:
-    """Squared L2 as the identical per-element (x-y)^2 SEQUENTIAL fold
-    both engines run — the parity contract of every fit built on it."""
+    """Squared L2 as the per-element (x-y)^2 SEQUENTIAL fold — the same
+    order ``argmin_codes_arrow`` and the SQL replays accumulate in."""
     return F.aggregate(
         F.zip_with(
             vec, c,
@@ -124,12 +124,12 @@ def argmin_codes_arrow(df, books, vec_col: str, code_col: str):
     """Arrow argmin-encode path shared by PQ (m subspaces) and IVF
     (m=1, the cell assignment): all m argmins per row from vectorized
     numpy inside ONE mapInPandas pass — zero shuffles, bit-identical to
-    the expression engine (dimension-ordered sequential fold, np.argmin
-    first-index tie-break == array_position(array_min); parity pinned
-    in tests). ``books`` is (m, k, ds); appends ``code_col``
-    array<int>. Degraded rows mirror the expression engines: null
-    vector -> all-null codes, a subspace not fully covered by a short
-    vector -> null code, NaN-poisoned subspaces -> code 0."""
+    the SQL replay (dimension-ordered sequential fold, np.argmin
+    first-index tie-break == array_position(array_min)). ``books`` is
+    (m, k, ds); appends ``code_col`` array<int>. Degraded rows follow
+    the SQL zip_with semantics: null vector -> all-null codes, a
+    subspace not fully covered by a short vector -> null code,
+    NaN-poisoned subspaces -> code 0."""
     import numpy as np
     import pandas as pd  # noqa: F401  (mapInPandas batches)
     from pyspark.sql.types import (
@@ -154,8 +154,7 @@ def argmin_codes_arrow(df, books, vec_col: str, code_col: str):
                 acc += diff * diff
             # all-NaN rows (a NaN anywhere in the subvector poisons
             # every centroid distance) take index 0 — the same code
-            # the expression engine's array_position(array_min)
-            # resolves to, verified in tests
+            # SQL's array_position(array_min) resolves to
             codes[:, j] = np.argmin(acc, axis=1)
         return codes
 
@@ -174,7 +173,7 @@ def argmin_codes_arrow(df, books, vec_col: str, code_col: str):
                 )
                 out = [list(map(int, row)) for row in encode_block(V)]
             else:
-                # degraded rows mirror the expression engine: a null
+                # degraded rows follow the SQL semantics: a null
                 # vector -> all-null codes; a short vector encodes
                 # only the subspaces its length fully covers (the
                 # zip_with null-padding semantics, pinned in tests)

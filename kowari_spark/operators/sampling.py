@@ -460,58 +460,12 @@ def cluster_cap(
 
 # -- DSIR importance resampling ---------------------------------------------
 
-def _hashed_grams(text_col):
-    """Hashed-ngram DSIR feature array (word unigrams then bigrams,
-    Xie et al. 2023) for one text column. NULL text featurizes as the
-    empty string — one ""-unigram, exactly like the Python mirror
-    ``_py_feats`` — so both engines keep NULL-text rows and count them
-    identically in the histograms."""
-    from kowari_spark.functions.text import tokens
-
-    toks = tokens(F.coalesce(F.col(text_col), F.lit("")))
-    bi = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(toks, i), F.element_at(toks, i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.concat(toks, bi)
-
-
-def _hashed_feature_stream(df, text_col, id_col, buckets):
-    """Per-document hashed n-gram feature stream (id, pos, bucket).
-    ``pos`` is the feature's index in the unigrams-then-bigrams order —
-    the deterministic fold key that makes the per-document float sum
-    engine-portable (the unigram_surprisal discipline)."""
-    return df.select(
-        F.col(id_col), F.posexplode(_hashed_grams(text_col)).alias("__pos", "__g")
-    ).select(
-        id_col, "__pos",
-        (base_hash64(F.col("__g")) % F.lit(buckets)).alias("__b"),
-    )
-
-
-def _hashed_bucket_stream(df, text_col, buckets):
-    """Bucket-only feature stream for HISTOGRAM construction: selects
-    nothing but ``text_col``, so a text-only frame (no id column) is a
-    valid target under every engine — the target histogram never needs
-    document identity or position."""
-    from kowari_spark.fsutil import scan_parallelism
-
-    return scan_parallelism(df).select(
-        F.explode(_hashed_grams(text_col)).alias("__g")
-    ).select((base_hash64(F.col("__g")) % F.lit(buckets)).alias("__b"))
-
-
 def _dsir_ratios(raw_hist, tgt_hist, buckets, dense_over=None):
     """The per-bucket log importance ratio relation (__b, __lr) from
     the two bucket histograms — ≤``buckets`` rows, one shared
-    construction so the expr and arrow engines score with IDENTICAL
-    doubles. Each log is rounded to 9 decimals before the subtraction
-    (cross-engine ln() parity, the idf discipline).
+    construction so the in-corpus weigher and the stored layout score
+    with IDENTICAL doubles. Each log is rounded to 9 decimals before the
+    subtraction (cross-engine ln() parity, the idf discipline).
 
     ``dense_over`` (a SparkSession) materializes the relation DENSE
     over ALL bucket ids 0..buckets-1 (left joins on both histograms;
@@ -555,10 +509,12 @@ def _dsir_ratios(raw_hist, tgt_hist, buckets, dense_over=None):
 
 
 def _py_feats(txt: str, buckets: int) -> list[int]:
-    """Python mirror of ``_hashed_feature_stream``'s per-document
-    feature buckets, in the same unigrams-then-bigrams order
-    (``numerics.py_hash64`` is the portable-hash contract). NULL text
-    featurizes as the empty string."""
+    """Hashed-ngram DSIR feature buckets of one document (Xie et al.
+    2023): word unigrams then bigrams, in that order — the
+    deterministic fold order that makes the per-document float sum
+    reproducible by the SQL replay (``numerics.py_hash64`` is the
+    portable-hash contract). NULL text featurizes as the empty string
+    (one ""-unigram), so NULL-text rows are kept and counted."""
     from kowari_spark.numerics import py_hash64
 
     toks = ("" if txt is None else txt).split(" ")
@@ -568,11 +524,12 @@ def _py_feats(txt: str, buckets: int) -> list[int]:
     return [py_hash64(g) % buckets for g in grams]
 
 
-def _dsir_hist_arrow(frame, text_col, buckets, count_alias):
+def _dsir_hist(frame, text_col, buckets, count_alias):
     """Bucket histogram via per-batch Python partials: each Arrow
     batch emits at most ``buckets`` (bucket, partial count) rows, so
     the shuffle reduces pre-aggregated partials — never the feature
-    stream itself."""
+    stream itself. Selects nothing but ``text_col``, so a text-only
+    frame (no id column) is a valid target."""
     import pandas as pd
 
     def part(batches):
@@ -586,8 +543,7 @@ def _dsir_hist_arrow(frame, text_col, buckets, count_alias):
             )
 
     # spread a few-split scan before the per-row featurize pass (guide
-    # §2.5; the expr engine's _hashed_bucket_stream already does) —
-    # value-safe: integer partials, order-independent groupBy sum
+    # §2.5) — value-safe: integer partials, order-independent groupBy sum
     from kowari_spark.fsutil import scan_parallelism
 
     return (
@@ -598,34 +554,18 @@ def _dsir_hist_arrow(frame, text_col, buckets, count_alias):
     )
 
 
-def _dsir_fold_expr(df, ratios, text_col, id_col, buckets, round_to):
-    """Expression-engine scoring tail, shared by the in-corpus weigher
-    and the stored-layout scorer: feature stream ⋈ broadcast ratio
-    relation, then the position-ordered per-document fold."""
-    raw_feats = _hashed_feature_stream(df, text_col, id_col, buckets)
-    joined = raw_feats.join(F.broadcast(ratios), "__b").select(
-        id_col, "__pos", "__lr"
-    )
-    folded = F.aggregate(
-        F.array_sort(F.collect_list(F.struct(F.col("__pos"), F.col("__lr")))),
-        F.lit(0.0),
-        lambda acc, x: acc + x["__lr"],
-    )
-    return joined.groupBy(id_col).agg(
-        F.count("*").cast("long").alias("n_feats"),
-        (F.round(folded, round_to) + F.lit(0.0)).alias("dsir_logw"),
-    )
-
-
-def _dsir_score_rows_arrow(df, lrs, text_col, id_col, buckets, round_to):
-    """Arrow-engine scoring tail: ONE mapInPandas pass computes each
-    document's weight row-locally against the collected ratio dict,
-    with the same left-fold order and HALF_UP rounding as the
-    expression engine — bit-identical (parity-tested)."""
+def _dsir_score_rows(df, ratios, text_col, id_col, buckets, round_to):
+    """Scoring tail shared by the in-corpus weigher and the stored
+    layout: the ≤``buckets``-row ratio relation is collected ONCE
+    (bounded — the fit-time-collect convention) into a closure dict,
+    then ONE mapInPandas pass computes each document's weight
+    row-locally — position-order left fold, HALF_UP rounding, no
+    per-feature shuffle."""
     import pandas as pd
 
     from kowari_spark.numerics import round_half_up
 
+    lrs = {r["__b"]: r["__lr"] for r in ratios.collect()}
     id_type = df.schema[id_col].dataType.simpleString()
     schema = f"{id_col} {id_type}, n_feats long, dsir_logw double"
 
@@ -654,25 +594,6 @@ def _dsir_score_rows_arrow(df, lrs, text_col, id_col, buckets, round_to):
     return scan_parallelism(df.select(id_col, text_col)).mapInPandas(weigh, schema)
 
 
-def _dsir_logweights_arrow(
-    df, target, text_col, id_col, buckets, round_to
-) -> DataFrame:
-    """Row-local scoring: histograms from Python partials, the shared
-    ratio relation collected (BOUNDED: ≤``buckets`` rows — the
-    fit-time-collect convention) into a closure dict, then the shared
-    arrow scoring tail — no interpreted bigram lambdas and no
-    per-feature fold shuffle."""
-    raw_hist = _dsir_hist_arrow(df, text_col, buckets, "__cr")
-    tgt_hist = _dsir_hist_arrow(target, text_col, buckets, "__ct")
-    lrs = {
-        r["__b"]: r["__lr"]
-        for r in _dsir_ratios(raw_hist, tgt_hist, buckets).collect()
-    }
-    return _dsir_score_rows_arrow(
-        df, lrs, text_col, id_col, buckets, round_to
-    )
-
-
 def dsir_logweights(
     df: DataFrame,
     target: DataFrame,
@@ -680,7 +601,6 @@ def dsir_logweights(
     id_col: str = "doc_id",
     buckets: int = 10_000,
     round_to: int = 6,
-    engine: str = "auto",
 ) -> DataFrame:
     """Data Selection via Importance Resampling (DSIR, Xie et al.
     2023): score each raw document by how much more likely its hashed
@@ -700,39 +620,24 @@ def dsir_logweights(
     order is part of the plan, so the operator has an exact DuckDB
     oracle.
 
-    Scale shape: ONE explode per corpus feeds the bucket histograms
-    (groupBy(bucket), map-side partials, ≤``buckets`` rows out); the
-    ≤``buckets``-row log-ratio relation BROADCASTS into the raw
-    feature stream (no shuffle of the stream for the join); the only
-    stream-sized shuffle is the per-document fold keyed on the id.
-    Raw-corpus buckets always exist in the raw histogram by
-    construction; target counts for unseen buckets coalesce to 0 and
+    Scale shape: each corpus's bucket histogram comes from per-Arrow-
+    batch Python partials (≤``buckets`` rows per batch, so the shuffle
+    carries pre-aggregated partials, never the feature stream); the
+    ≤``buckets``-row log-ratio relation is collected once into the
+    Python workers and each document folds its weight ROW-LOCALLY in
+    one ``mapInPandas`` pass — no interpreted bigram lambdas and no
+    per-feature fold shuffle (2.2x faster at x1 and 6x at 500k docs
+    than the explode + broadcast-join + per-document fold plan,
+    BASELINE.md r10). Building the frame runs the histogram jobs (the
+    ratio collect). Target counts for unseen buckets coalesce to 0 and
     smoothing keeps the ratio finite. NULL text featurizes as the
-    empty string (one ""-unigram) under BOTH engines, so histogram
-    mass and output membership agree on NULL-text corpora, and the
-    target may be a text-only frame — no id column required.
-
-    ``engine="arrow"`` ("auto" default at ≥1000 rows) computes the
-    histograms from per-batch Python partials and the per-document
-    fold row-locally against the collected ratio dict — BIT-IDENTICAL
-    (parity-tested): same portable hash, same shared ratio relation,
-    same left-fold order, same HALF_UP rounding; it removes the
-    expression plan's interpreted bigram lambdas and the per-feature
-    fold shuffle (measured 6× at 500k docs, BASELINE.md r10)."""
-    from kowari_spark.engines import resolve_engine
-
-    if resolve_engine(engine, df=df) == "arrow":
-        return _dsir_logweights_arrow(
-            df, target, text_col, id_col, buckets, round_to
-        )
-    raw_hist = _hashed_bucket_stream(df, text_col, buckets).groupBy(
-        "__b"
-    ).agg(F.count("*").alias("__cr"))
-    tgt_hist = _hashed_bucket_stream(target, text_col, buckets).groupBy(
-        "__b"
-    ).agg(F.count("*").alias("__ct"))
+    empty string (one ""-unigram), so NULL-text rows are kept and
+    counted, and the target may be a text-only frame — no id column
+    required."""
+    raw_hist = _dsir_hist(df, text_col, buckets, "__cr")
+    tgt_hist = _dsir_hist(target, text_col, buckets, "__ct")
     ratios = _dsir_ratios(raw_hist, tgt_hist, buckets)
-    return _dsir_fold_expr(df, ratios, text_col, id_col, buckets, round_to)
+    return _dsir_score_rows(df, ratios, text_col, id_col, buckets, round_to)
 
 
 def dsir_top(
@@ -743,7 +648,6 @@ def dsir_top(
     id_col: str = "doc_id",
     buckets: int = 10_000,
     round_to: int = 6,
-    engine: str = "auto",
 ) -> DataFrame:
     """The ``n`` raw documents most target-like under the DSIR
     importance weight — deterministic selection (ties break on
@@ -752,9 +656,7 @@ def dsir_top(
     selection time what a pipeline needs is a REPRODUCIBLE subset, and
     rank-by-weight is the deterministic limit of importance
     resampling as temperature → 0."""
-    w = dsir_logweights(
-        df, target, text_col, id_col, buckets, round_to, engine
-    )
+    w = dsir_logweights(df, target, text_col, id_col, buckets, round_to)
     return w.orderBy(F.desc("dsir_logw"), F.col(id_col)).limit(n)
 
 
@@ -765,19 +667,6 @@ _DSIR_LAYOUT_VERSION = "dsir-hists-v2"
 _DSIR_V1 = "dsir-ratios-v1"  # legacy: dense ratios at the dir root, no hists
 
 
-def _dsir_hist(frame, text_col, buckets, count_alias, engine):
-    """One bucket histogram under the chosen engine. The engines are
-    parity-tested to produce IDENTICAL counts (exact integers), so the
-    choice never affects stored bits — only which plan builds them."""
-    from kowari_spark.engines import resolve_engine
-
-    if resolve_engine(engine, df=frame) == "arrow":
-        return _dsir_hist_arrow(frame, text_col, buckets, count_alias)
-    return _hashed_bucket_stream(frame, text_col, buckets).groupBy(
-        "__b"
-    ).agg(F.count("*").alias(count_alias))
-
-
 def build_dsir_layout(
     df: DataFrame,
     target: DataFrame,
@@ -785,7 +674,6 @@ def build_dsir_layout(
     text_col: str = "text",
     buckets: int = 10_000,
     round_to: int = 6,
-    engine: str = "auto",
 ) -> None:
     """Fit DSIR ONCE and persist the fitted model: the DENSE
     ``buckets``-row log-ratio relation (__b, __lr) plus a versioned
@@ -803,9 +691,9 @@ def build_dsir_layout(
     with ``dense_over``) gives EVERY bucket its add-one-smoothed
     ratio, so batches hitting buckets unseen in either fit corpus
     score exactly — scoring needs no fallback arithmetic and the
-    stored relation is the complete model. The relation is
-    engine-independent: both histogram engines produce identical
-    counts (parity-tested) and the ratio expression is shared.
+    stored relation is the complete model. Histogram counts are exact
+    integers and the ratio expression is shared with
+    :func:`dsir_logweights`.
 
     Scale shape: two histogram aggregations (map-side partials,
     ≤``buckets`` rows out each) + three ≤``buckets``-row writes
@@ -837,10 +725,10 @@ def build_dsir_layout(
     delete(spark, f"{path}/_batches")
     delete(spark, f"{path}.__roll_tmp")
     delete(spark, f"{path}.__roll_bak")
-    _dsir_hist(df, text_col, buckets, "__cr", engine).coalesce(
+    _dsir_hist(df, text_col, buckets, "__cr").coalesce(
         1
     ).write.mode("overwrite").parquet(f"{path}/raw_hist")
-    _dsir_hist(target, text_col, buckets, "__ct", engine).coalesce(
+    _dsir_hist(target, text_col, buckets, "__ct").coalesce(
         1
     ).write.mode("overwrite").parquet(f"{path}/target_hist")
     _write_dsir_ratios(spark, path, buckets)
@@ -925,7 +813,6 @@ def append_dsir_layout(
     path: str,
     batch: DataFrame,
     which: str = "raw",
-    engine: str = "auto",
     _commit_marker: str | None = None,
 ) -> None:
     """Roll a new batch into a fitted DSIR model WITHOUT re-reading
@@ -960,7 +847,7 @@ def append_dsir_layout(
     present → skipped) or not at all (replayed cleanly). Single
     writer at a time — run appends from the maintenance window or one
     streaming sink."""
-    _roll_dsir_layout(spark, path, batch, which, engine, _commit_marker, 1)
+    _roll_dsir_layout(spark, path, batch, which, _commit_marker, 1)
 
 
 def remove_from_dsir_layout(
@@ -968,7 +855,6 @@ def remove_from_dsir_layout(
     path: str,
     batch: DataFrame,
     which: str = "raw",
-    engine: str = "auto",
 ) -> None:
     """Subtract previously-rolled documents from a fitted DSIR model —
     the unlearn verb a dedup/curation pass implies (the
@@ -986,11 +872,11 @@ def remove_from_dsir_layout(
     detected unless it would drive some bucket negative (which raises
     with no file touched). Same sibling-dir swap, crash recovery, and
     single-writer rules as :func:`append_dsir_layout`."""
-    _roll_dsir_layout(spark, path, batch, which, engine, None, -1)
+    _roll_dsir_layout(spark, path, batch, which, None, -1)
 
 
 def _roll_dsir_layout(
-    spark, path, batch, which, engine, _commit_marker, sign
+    spark, path, batch, which, _commit_marker, sign
 ) -> None:
     """Shared additive-roll body: histogram ± batch, ratios rederived
     from the rolled bits, committed via the sibling-dir rename swap
@@ -1034,7 +920,7 @@ def _roll_dsir_layout(
     )
     other = "target_hist" if which == "raw" else "raw_hist"
     buckets = meta["buckets"]
-    batch_hist = _dsir_hist(batch, meta["text_col"], buckets, cnt, engine)
+    batch_hist = _dsir_hist(batch, meta["text_col"], buckets, cnt)
     if sign < 0:
         batch_hist = batch_hist.select("__b", (-F.col(cnt)).alias(cnt))
     rolled = (
@@ -1130,12 +1016,11 @@ class DsirLayout:
         batch: DataFrame,
         id_col: str = "doc_id",
         round_to: int | None = None,
-        engine: str = "auto",
     ) -> DataFrame:
         """(id_col, n_feats, dsir_logw) for a new batch — ONE pass
         over the batch (:func:`dsir_score_against`)."""
         return dsir_score_against(
-            self.spark, self.path, batch, id_col, round_to, engine
+            self.spark, self.path, batch, id_col, round_to
         )
 
     def top(
@@ -1144,28 +1029,23 @@ class DsirLayout:
         n: int,
         id_col: str = "doc_id",
         round_to: int | None = None,
-        engine: str = "auto",
     ) -> DataFrame:
         """The ``n`` most target-like batch documents under the stored
         model — deterministic selection (desc weight, ties ascending
         id; TakeOrderedAndProject, no global sort), the layout-backed
         twin of :func:`dsir_sample_top`."""
-        w = self.score(batch, id_col, round_to, engine)
+        w = self.score(batch, id_col, round_to)
         return w.orderBy(F.desc("dsir_logw"), F.col(id_col)).limit(n)
 
-    def append(
-        self, batch: DataFrame, which: str = "raw", engine: str = "auto"
-    ) -> None:
+    def append(self, batch: DataFrame, which: str = "raw") -> None:
         """Roll a batch into the model additively — bit-identical to a
         refit over the union (:func:`append_dsir_layout`)."""
-        append_dsir_layout(self.spark, self.path, batch, which, engine)
+        append_dsir_layout(self.spark, self.path, batch, which)
 
-    def remove(
-        self, batch: DataFrame, which: str = "raw", engine: str = "auto"
-    ) -> None:
+    def remove(self, batch: DataFrame, which: str = "raw") -> None:
         """Exact unlearn of previously-rolled documents
         (:func:`remove_from_dsir_layout`)."""
-        remove_from_dsir_layout(self.spark, self.path, batch, which, engine)
+        remove_from_dsir_layout(self.spark, self.path, batch, which)
 
     def stream_into(
         self, stream_df: DataFrame, checkpoint_dir: str, **kw
@@ -1186,25 +1066,16 @@ def dsir_score_against(
     batch: DataFrame,
     id_col: str = "doc_id",
     round_to: int | None = None,
-    engine: str = "auto",
 ) -> DataFrame:
     """Score a NEW batch against the STORED DSIR model — (id_col,
     n_feats, dsir_logw), bit-identical to ``dsir_logweights`` over the
     fit corpora for any document whose text is unchanged
     (parity-tested: scoring the fit raw corpus reproduces the full
-    recompute exactly). ONE pass over the batch: the expr engine
-    broadcasts the ``buckets``-row stored relation into the batch's
-    feature stream; the arrow engine collects it once (bounded) and
-    scores row-locally. Featurization params come from the sidecar,
-    so a batch can never be scored under diverged hashing."""
-    from kowari_spark.engines import resolve_engine
-
+    recompute exactly). ONE pass over the batch: the ``buckets``-row
+    stored relation is collected once (bounded) and every document is
+    scored row-locally. Featurization params come from the sidecar, so
+    a batch can never be scored under diverged hashing."""
     ratios, meta = load_dsir_layout(spark, path)
     text_col, buckets = meta["text_col"], meta["buckets"]
     rt = meta["round_to"] if round_to is None else round_to
-    if resolve_engine(engine, df=batch) == "arrow":
-        lrs = {r["__b"]: r["__lr"] for r in ratios.collect()}
-        return _dsir_score_rows_arrow(
-            batch, lrs, text_col, id_col, buckets, rt
-        )
-    return _dsir_fold_expr(batch, ratios, text_col, id_col, buckets, rt)
+    return _dsir_score_rows(batch, ratios, text_col, id_col, buckets, rt)

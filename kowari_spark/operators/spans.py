@@ -11,10 +11,11 @@ the rest — same detected spans (every duplicated run of length
 >= min_len is a union of duplicated min_len-grams, and conversely),
 no suffix array needed:
 
-1. ``posexplode`` the document's ``min_len``-grams → (doc, pos, hash);
-   one pass, the hash is the portable md5-prefix int64 the whole text
-   suite uses (collision probability ~2^-60 per pair; the SQL oracle
-   replays the identical hashing, so parity is exact by construction);
+1. generate the document's ``min_len``-grams → (doc, pos, hash) in
+   one row-local ``mapInPandas`` pass; the hash is the portable
+   md5-prefix int64 the whole text suite uses (collision probability
+   ~2^-60 per pair; the SQL oracle replays the identical hashing, so
+   parity is exact by construction);
 2. rank each gram occurrence over its hash by (doc, pos) — ONE wide
    shuffle keyed on the gram hash; occurrences ranked > 1 are
    duplicates-to-remove (the first occurrence in global (doc, pos)
@@ -35,23 +36,25 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kowari_spark.functions.text import base_hash64, tokens
-from kowari_spark.operators.quality import word_ngrams
+from kowari_spark.functions.text import tokens
 
 
-def _gram_hashes_arrow(
+def _dup_gram_positions(
     df: DataFrame, min_len: int, text_col: str, id_col: str
 ) -> DataFrame:
-    """Arrow engine for the gram-hash pass: each document's
-    (pos, md5-prefix hash) rows are generated inside ``mapInPandas`` —
-    the expression engine builds every gram string through interpreted
-    ``transform`` lambdas (the measured floor of the whole operator,
-    same boundary as the repetition/decontam Arrow engines). Hash
-    values are IDENTICAL (same md5-prefix int64 over the same gram
-    strings), so everything downstream of the gram-hash shuffle is
-    unchanged (parity-tested)."""
+    """(id, pos) of every min_len-gram occurrence that is NOT the
+    corpus-first occurrence of its gram (0-based token position).
+
+    Each document's (pos, md5-prefix hash) rows are generated inside
+    ``mapInPandas`` (1.9x faster at x1 and 3.1x at x100 than building
+    every gram string through interpreted ``transform`` lambdas,
+    BASELINE.md); the hash is
+    the same md5-prefix int64 over the same gram strings the DuckDB
+    replay computes, so everything downstream of the gram-hash shuffle
+    is exact."""
     import pandas as pd
 
+    from kowari_spark.fsutil import scan_parallelism
     from kowari_spark.numerics import py_hash64
 
     id_type = df.schema[id_col].dataType.simpleString()
@@ -71,36 +74,9 @@ def _gram_hashes_arrow(
 
     # spread a few-split scan before the per-gram hash pass (guide
     # §2.5) — value-safe: per-row generation, downstream keyed on __h
-    from kowari_spark.fsutil import scan_parallelism
-
-    return scan_parallelism(df.select(id_col, text_col)).mapInPandas(gen, schema)
-
-
-def _dup_gram_positions(
-    df: DataFrame, min_len: int, text_col: str, id_col: str,
-    engine: str = "expr",
-) -> DataFrame:
-    """(id, pos) of every min_len-gram occurrence that is NOT the
-    corpus-first occurrence of its gram (0-based token position).
-
-    ``engine="auto"`` (the public functions' default) sizes the choice
-    on the corpus — the arrow gram hasher is bit-identical to the
-    expression path (parity-tested) and 3.1x faster at x100, so this
-    is pure performance (see :mod:`kowari_spark.engines`)."""
-    from kowari_spark.engines import resolve_engine
-
-    engine = resolve_engine(engine, df)
-    if engine == "arrow":
-        grams = _gram_hashes_arrow(df, min_len, text_col, id_col)
-    elif engine == "expr":
-        grams = df.select(
-            F.col(id_col),
-            F.posexplode(word_ngrams(F.col(text_col), min_len)).alias(
-                "__pos", "__g"
-            ),
-        ).select(id_col, "__pos", base_hash64(F.col("__g")).alias("__h"))
-    else:
-        raise ValueError(f"engine must be expr|arrow, got {engine!r}")
+    grams = scan_parallelism(df.select(id_col, text_col)).mapInPandas(
+        gen, schema
+    )
     w = Window.partitionBy("__h").orderBy(F.col(id_col), F.col("__pos"))
     return (
         grams.withColumn("__rk", F.row_number().over(w))
@@ -114,14 +90,13 @@ def duplicate_spans(
     min_len: int = 20,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "auto",
 ) -> DataFrame:
     """Maximal duplicated spans per document: (id, span_start,
     span_end, span_tokens), token positions 0-based inclusive. A span
     covers every token of a non-first duplicated ``min_len``-gram run;
     overlapping/adjacent gram spans merge into one maximal span.
     Documents with no duplicated span produce no row."""
-    dup = _dup_gram_positions(df, min_len, text_col, id_col, engine)
+    dup = _dup_gram_positions(df, min_len, text_col, id_col)
     w = (
         Window.partitionBy(id_col)
         .orderBy("__pos")
@@ -165,7 +140,6 @@ def remove_duplicate_spans(
     min_len: int = 20,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "auto",
 ) -> DataFrame:
     """Lee et al. span removal applied: every document rebuilt without
     the tokens of its non-first duplicated spans (the corpus-first
@@ -180,7 +154,7 @@ def remove_duplicate_spans(
     the doc id; the rebuild is then a ROW-LOCAL native
     filter-by-index over the token array — no position-ordered
     re-aggregation of the corpus."""
-    dup = _dup_gram_positions(df, min_len, text_col, id_col, engine)
+    dup = _dup_gram_positions(df, min_len, text_col, id_col)
     rm_per_doc = (
         dup.select(
             F.col(id_col),

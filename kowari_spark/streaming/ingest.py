@@ -471,9 +471,7 @@ def stream_into_quantized_layout(
     ``index`` is an ``IVF`` (appends its full-row + list_id partitions),
     a ``PQ`` (appends compressed (id, codes) rows), or an ``IVFPQ``
     (appends (id, list_id, codes) partitions). Encoding runs INSIDE the
-    sink on each micro-batch (a batch frame), so the PQ "auto" encoder
-    sizing — a count job — stays legal and per-batch right-sized.
-    Idempotence markers and the cooperative compaction lock follow
+    sink on each micro-batch (a batch frame). Idempotence markers and the cooperative compaction lock follow
     ``stream_into_lsh_layout``; the sidecar written by ``build()`` is
     never touched."""
     import hashlib

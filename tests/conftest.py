@@ -24,3 +24,27 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def embeddings(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+
+
+@pytest.fixture(scope="session")
+def replay(sf_dir):
+    """Run a contract DuckDB replay (an ``__spark_entry__._oracle_*``
+    query) as the independent reference for an operator:
+    ``replay(sql, documents=pdf)`` registers each keyword frame under
+    its table name; every other contract table reads the ``sf_dir``
+    parquet file. Returns the result as a pandas frame."""
+    import duckdb
+
+    def run(sql, **tables):
+        con = duckdb.connect()
+        for name in ("documents", "embeddings"):
+            if name in tables:
+                con.register(name, tables[name])
+            else:
+                con.execute(
+                    f"CREATE VIEW {name} AS "
+                    f"SELECT * FROM '{sf_dir}/{name}.parquet'"
+                )
+        return con.execute(sql).df()
+
+    return run

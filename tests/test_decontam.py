@@ -62,8 +62,10 @@ def test_one_row_per_doc_and_self_contamination(spark, sf_dir):
 
 
 def test_eval_side_is_broadcast_semi_join(corpus, eval_set):
+    """The eval gram hashes reach the workers as a broadcast variable:
+    the corpus side is one MapInPandas pass with no join at all."""
     plan = ngram_decontaminate(corpus, eval_set, n=13)._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" in plan and "Broadcast" in plan
+    assert "MapInPandas" in plan and "Join" not in plan
 
 
 def test_matches_duckdb_oracle(spark, corpus, eval_set):
@@ -104,36 +106,33 @@ ORDER BY doc_id
     assert got.astype("int64").values.tolist() == expected.astype("int64").values.tolist()
 
 
-def test_arrow_engine_parity(spark, corpus, eval_set, sf_dir):
-    """engine='arrow' must reproduce the expression engine bit-for-bit
-    — handcrafted corpus AND the real documents table."""
-    a = ngram_decontaminate(corpus, eval_set, n=13).toPandas().sort_values("doc_id")
-    b = (
-        ngram_decontaminate(corpus, eval_set, n=13, engine="arrow")
-        .toPandas().sort_values("doc_id")
-    )
-    assert a.values.tolist() == b.values.tolist()
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    ev = docs.filter(F.col("doc_id") % 17 == 0)
-    a = ngram_decontaminate(docs, ev, n=13).toPandas().sort_values("doc_id")
-    b = (
-        ngram_decontaminate(docs, ev, n=13, engine="arrow")
-        .toPandas().sort_values("doc_id")
-    )
-    assert a.values.tolist() == b.values.tolist()
+def test_arrow_engine_parity(spark, corpus, sf_dir, replay):
+    """The mapInPandas pass reproduces the contract's DuckDB replay
+    bit-for-bit, every column (IEEE division + HALF_UP rounding) — on
+    the handcrafted corpus (short-doc fallback grams, 12-vs-13-gram
+    near miss) AND the real documents table."""
+    import __spark_entry__ as entry
+
+    real = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    for docs in (corpus, real):
+        ev = docs.filter(F.col("doc_id") % 17 == 0)
+        got = sorted(map(tuple, ngram_decontaminate(docs, ev, n=13).collect()))
+        want = replay(entry._oracle_doc_decontam(), documents=docs.toPandas())
+        assert got == sorted(map(tuple, want.itertuples(index=False)))
 
 
 def test_arrow_engine_is_shuffle_free(corpus, eval_set):
     plan = (
-        ngram_decontaminate(corpus, eval_set, n=13, engine="arrow")
+        ngram_decontaminate(corpus, eval_set, n=13)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan
 
 
 def test_bad_engine_rejected(corpus, eval_set):
-    with pytest.raises(ValueError):
-        ngram_decontaminate(corpus, eval_set, engine="nope")
+    """One engine: there is no engine argument to pass."""
+    with pytest.raises(TypeError, match="engine"):
+        ngram_decontaminate(corpus, eval_set, engine="arrow")
 
 
 def test_semantic_decontaminate_catches_paraphrase(spark):
@@ -166,40 +165,34 @@ def test_semantic_decontaminate_catches_paraphrase(spark):
     assert out[1]["max_eval_cos"] < 0.9
     # the 13-gram filter misses the reorder — the two ops are companions
     ng = {r["doc_id"]: r["is_contaminated"]
-          for r in ngram_decontaminate(corpus, ev, engine="expr").collect()}
+          for r in ngram_decontaminate(corpus, ev).collect()}
     assert not ng[0]
 
-    # eval set broadcast: the corpus side is never shuffled pre-agg
+    # eval set collected once: the corpus is scored batch-wise in
+    # Python, never cross-joined against the eval relation
     plan = (semantic_decontaminate(corpus, ev, 0.9)
             ._jdf.queryExecution().executedPlan().toString())
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+    assert "MapInPandas" in plan and "NestedLoopJoin" not in plan
 
 
-def test_semantic_decontaminate_engines_bit_identical(spark, sf_dir):
-    """engine='arrow' (GEMM select + exact fold rescore) returns
-    EXACTLY the expression engine's rows on the real table — rounded
-    max cosines equal to the last bit; bad engine refused."""
+def test_semantic_decontaminate_engines_bit_identical(spark, sf_dir, replay):
+    """GEMM select + exact fold rescore returns EXACTLY the contract's
+    DuckDB replay on the real table — rounded max cosines equal to the
+    last bit; an empty eval set leaves everything clean."""
+    import __spark_entry__ as entry
     from kowari_spark.operators.decontam import semantic_decontaminate
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     ev = docs.filter(F.col("doc_id") % 17 == 0).select("text")
-    a = sorted(map(tuple, semantic_decontaminate(
-        docs, ev, 0.98, engine="expr").collect()))
-    b = sorted(map(tuple, semantic_decontaminate(
-        docs, ev, 0.98, engine="arrow").collect()))
-    assert a == b and len(a) == docs.count()
+    got = sorted(map(tuple, semantic_decontaminate(docs, ev, 0.98).collect()))
+    want = replay(entry._oracle_doc_semantic_decontam())
+    assert got == sorted(map(tuple, want.itertuples(index=False)))
+    assert len(got) == docs.count()
 
-    # empty eval set: everything clean, both engines
     empty = ev.filter(F.lit(False))
-    for eng in ("expr", "arrow"):
-        out = semantic_decontaminate(docs.limit(5), empty, 0.5, engine=eng)
-        got = out.collect()
-        assert len(got) == 5 and all(
-            r["max_eval_cos"] == 0.0 and not r["is_contaminated"]
-            for r in got), eng
-
-    with pytest.raises(ValueError, match="engine"):
-        semantic_decontaminate(docs, ev, 0.5, engine="gemm")
+    got = semantic_decontaminate(docs.limit(5), empty, 0.5).collect()
+    assert len(got) == 5 and all(
+        r["max_eval_cos"] == 0.0 and not r["is_contaminated"] for r in got)
 
 
 def test_semantic_arrow_rescore_keeps_negative_maxima(spark):
@@ -207,8 +200,8 @@ def test_semantic_arrow_rescore_keeps_negative_maxima(spark):
     (signed embeddings whose best eval match is still anti-aligned) —
     initializing the running max at 0.0 would clamp it and silently
     break the bit-identical claim for any signed-embedding reuse
-    (ADVICE r11). Compared against the expression plan directly."""
-    from kowari_spark.operators.decontam import _semantic_decontam_arrow
+    (ADVICE r11). Compared against the SQL cosine expression directly."""
+    from kowari_spark.operators.decontam import _max_eval_cos
     from kowari_spark.functions.vector import cosine_similarity
 
     # every doc embedding is anti-aligned with every eval vector
@@ -220,8 +213,7 @@ def test_semantic_arrow_rescore_keeps_negative_maxima(spark):
         [([-1.0, -2.0, 1.0],), ([-2.0, -3.0, 0.0],)],
         "__ev array<double>",
     )
-    got = sorted(map(tuple, _semantic_decontam_arrow(
-        emb, ev, "doc_id", 6).collect()))
+    got = sorted(map(tuple, _max_eval_cos(emb, ev, "doc_id", 6).collect()))
     cos = F.round(
         cosine_similarity(F.col("embedding"), F.col("__ev")), 6
     ) + F.lit(0.0)
@@ -238,8 +230,8 @@ def test_semantic_arrow_rescore_keeps_negative_maxima(spark):
 def test_embedding_decontaminate_pre_embedded(spark):
     """embedding_decontaminate over corpora that already carry vectors
     (the Collection-surface decontamination path): signed embeddings
-    flag on max cosine under BOTH engines identically, and composing
-    it with hashed_embeddings reproduces semantic_decontaminate."""
+    flag on max cosine, and composing it with hashed_embeddings
+    reproduces semantic_decontaminate."""
     from kowari_spark.functions.text import hashed_embeddings
     from kowari_spark.operators.decontam import (
         embedding_decontaminate,
@@ -253,15 +245,13 @@ def test_embedding_decontaminate_pre_embedded(spark):
     ev = spark.createDataFrame(
         [([-1.0, 0.0],)], "embedding array<double>"
     )
-    for eng in ("expr", "arrow"):
-        rows = {r["id"]: (r["max_eval_cos"], r["is_contaminated"])
-                for r in embedding_decontaminate(
-                    emb, ev, 0.5, engine=eng).collect()}
-        # 'a' is anti-aligned: max stays NEGATIVE (un-clamped), clean;
-        # 'b' aligned: contaminated; 'c' orthogonal: 0.0, clean
-        assert rows["a"] == (-1.0, False), eng
-        assert rows["b"] == (1.0, True), eng
-        assert rows["c"] == (0.0, False), eng
+    rows = {r["id"]: (r["max_eval_cos"], r["is_contaminated"])
+            for r in embedding_decontaminate(emb, ev, 0.5).collect()}
+    # 'a' is anti-aligned: max stays NEGATIVE (un-clamped), clean;
+    # 'b' aligned: contaminated; 'c' orthogonal: 0.0, clean
+    assert rows["a"] == (-1.0, False)
+    assert rows["b"] == (1.0, True)
+    assert rows["c"] == (0.0, False)
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "delta epsilon"), (3, None)],
@@ -271,7 +261,7 @@ def test_embedding_decontaminate_pre_embedded(spark):
         [("alpha beta gamma",)], "text string"
     )
     want = sorted(map(tuple, semantic_decontaminate(
-        docs, eval_df, 0.9, engine="expr").collect()))
+        docs, eval_df, 0.9).collect()))
     demb = hashed_embeddings(docs, "text", "doc_id", 32)
     devs = hashed_embeddings(
         eval_df, "text", id_col="text", dim=32
@@ -279,7 +269,7 @@ def test_embedding_decontaminate_pre_embedded(spark):
     got = sorted(map(tuple,
         docs.select("doc_id").join(
             embedding_decontaminate(
-                demb, devs, 0.9, id_col="doc_id", engine="expr"
+                demb, devs, 0.9, id_col="doc_id"
             ), "doc_id", "left",
         ).select(
             "doc_id",
@@ -292,9 +282,9 @@ def test_embedding_decontaminate_pre_embedded(spark):
 
 def test_embedding_decontaminate_degraded_rows(spark):
     """Pre-embedded corpora carry arbitrary user vectors: NULL or
-    dimension-mismatched rows must score 0.0 under BOTH engines (the
-    expr plan's zip_with null-padding semantics), not crash the arrow
-    stack; null/ragged EVAL vectors refuse with a clear error."""
+    dimension-mismatched rows must score 0.0 (the SQL cosine's
+    zip_with null-padding semantics), not crash the numpy stack;
+    null/ragged EVAL vectors refuse with a clear error."""
     import pytest as _pt
 
     from kowari_spark.operators.decontam import embedding_decontaminate
@@ -305,14 +295,12 @@ def test_embedding_decontaminate_degraded_rows(spark):
         "id string, embedding array<double>",
     )
     ev = spark.createDataFrame([([1.0, 0.0],)], "embedding array<double>")
-    for eng in ("expr", "arrow"):
-        rows = {r["id"]: (r["max_eval_cos"], r["is_contaminated"])
-                for r in embedding_decontaminate(
-                    emb, ev, 0.5, engine=eng).collect()}
-        assert rows["a"] == (1.0, True), eng
-        assert rows["b"] == (0.0, False), eng   # NULL vector
-        assert rows["c"] == (0.0, False), eng   # dim mismatch
-        assert rows["d"] == (0.0, False), eng   # null ELEMENT
+    rows = {r["id"]: (r["max_eval_cos"], r["is_contaminated"])
+            for r in embedding_decontaminate(emb, ev, 0.5).collect()}
+    assert rows["a"] == (1.0, True)
+    assert rows["b"] == (0.0, False)   # NULL vector
+    assert rows["c"] == (0.0, False)   # dim mismatch
+    assert rows["d"] == (0.0, False)   # null ELEMENT
 
     bad_evs = (
         spark.createDataFrame(
@@ -322,4 +310,4 @@ def test_embedding_decontaminate_degraded_rows(spark):
     )
     for bev in bad_evs:
         with _pt.raises(ValueError, match="share one dimension"):
-            embedding_decontaminate(emb, bev, 0.5, engine="arrow").collect()
+            embedding_decontaminate(emb, bev, 0.5).collect()

@@ -1,52 +1,42 @@
-"""Auto-selection of the bit-identical arrow scale engines
-(kowari_spark/engines.py): "auto" picks arrow at/above the size
-threshold and expr below it, across PQ encode, repetition stats,
-decontamination and span dedup — the round-6 judge's measured
-629s-vs-3.7s x100 gap is what the old expr defaults cost an unaware
-caller."""
+"""No size switch: PQ encode, repetition stats, decontamination and
+span dedup each run one mapInPandas engine on a 50-row and a 1,500-row
+corpus alike (either side of the old 1,000-row switch), and at both
+sizes the output equals an independent reference — numpy argmin for
+the PQ codes, the contract's DuckDB replay for the text operators."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
-
-from kowari_spark.engines import AUTO_ARROW_MIN_ROWS, resolve_engine
-
-
-def test_resolve_engine_passthrough_and_validation():
-    assert resolve_engine("expr") == "expr"
-    assert resolve_engine("arrow") == "arrow"
-    assert resolve_engine("auto", n=AUTO_ARROW_MIN_ROWS) == "arrow"
-    assert resolve_engine("auto", n=AUTO_ARROW_MIN_ROWS - 1) == "expr"
-    with pytest.raises(ValueError, match="auto\\|expr\\|arrow"):
-        resolve_engine("gemm")
-    with pytest.raises(ValueError, match="needs df or n"):
-        resolve_engine("auto")
 
 
 def _plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _docs(spark, n):
+    # 7 tokens per doc; the last token cycles mod 7, so whole texts,
+    # 5-gram spans and eval-set matches repeat across documents
+    return spark.range(n).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("a b c d e f "), (F.col("id") % 7).cast("string"))
+        .alias("text"),
+    ).cache()
+
+
 @pytest.fixture(scope="module")
 def big_docs(spark):
-    # > AUTO_ARROW_MIN_ROWS documents, tiny texts
-    return spark.range(1500).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("a b c d "), F.col("id").cast("string")).alias("text"),
-    ).cache()
+    return _docs(spark, 1500)
 
 
 @pytest.fixture(scope="module")
 def small_docs(spark):
-    return spark.range(50).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("a b c d "), F.col("id").cast("string")).alias("text"),
-    ).cache()
+    return _docs(spark, 50)
 
 
 def test_pq_default_fit_takes_arrow_above_threshold(spark):
-    """PQ() (no encoder arg) on a >threshold frame must run the arrow
-    encode path — the judge's round-7 'done' criterion."""
+    """PQ() fit on a 1,200-row frame encodes through the arrow argmin
+    for that frame and for a 40-row slice of it, and every code is the
+    first-occurrence numpy argmin over the fitted codebooks."""
     from kowari_spark.operators.pq import PQ
 
     big = spark.range(1200).select(
@@ -54,52 +44,59 @@ def test_pq_default_fit_takes_arrow_above_threshold(spark):
         F.array(*[(F.col("id") * (i + 1) % 97).cast("double")
                   for i in range(8)]).alias("embedding"),
     ).cache()
-    pq = PQ(m=2, k_sub=4, max_iter=1, seed=42)
-    assert pq.encoder == "auto"
-    pq.fit(big, id_col="id", dim=8)
-    assert "MapInPandas" in _plan(pq.with_codes(big))
-    small = big.limit(40).cache()
-    assert "MapInPandas" not in _plan(pq.with_codes(small))
-    # both paths produce identical codes on the same rows
-    a = sorted((r["id"], tuple(r["codes"]))
-               for r in pq.with_codes(small, engine="expr").collect())
-    b = sorted((r["id"], tuple(r["codes"]))
-               for r in pq.with_codes(small, engine="arrow").collect())
-    assert a == b
+    pq = PQ(m=2, k_sub=4, max_iter=1, seed=42).fit(big, id_col="id", dim=8)
+    small = big.filter(F.col("id") < 40).cache()
+    for df in (big, small):
+        coded = pq.with_codes(df)
+        assert "MapInPandas" in _plan(coded)
+        got = {r["id"]: list(r["codes"])
+               for r in coded.select("id", "codes").collect()}
+        rows = df.collect()
+        assert len(got) == len(rows)
+        for r in rows:
+            v = np.asarray(r["embedding"], dtype=np.float64)
+            want = [
+                int(np.argmin(((pq.codebooks[j] - v[j * 4:(j + 1) * 4]) ** 2)
+                              .sum(axis=1)))
+                for j in range(2)
+            ]
+            assert got[r["id"]] == want, r["id"]
 
 
-def test_repetition_auto_matches_both_engines(big_docs, small_docs):
+def test_repetition_auto_matches_both_engines(big_docs, small_docs, replay):
+    import __spark_entry__ as entry
     from kowari_spark.operators.quality import repetition_stats
 
-    assert "MapInPandas" in _plan(repetition_stats(big_docs))
-    assert "MapInPandas" not in _plan(repetition_stats(small_docs))
-    auto = sorted(map(tuple, repetition_stats(small_docs).collect()))
-    expr = sorted(map(tuple, repetition_stats(small_docs, engine="expr").collect()))
-    assert auto == expr
+    for docs in (big_docs, small_docs):
+        out = repetition_stats(docs, top_n=2, dup_n=5)
+        assert "MapInPandas" in _plan(out)
+        want = replay(entry._oracle_doc_repetition(), documents=docs.toPandas())
+        assert sorted(map(tuple, out.collect())) == sorted(
+            map(tuple, want.itertuples(index=False)))
 
 
-def test_decontam_auto_dispatch(big_docs, small_docs, spark):
+def test_decontam_auto_dispatch(big_docs, small_docs, replay):
+    import __spark_entry__ as entry
     from kowari_spark.operators.decontam import ngram_decontaminate
 
-    ev = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
-    assert "MapInPandas" in _plan(ngram_decontaminate(big_docs, ev, n=3))
-    assert "MapInPandas" not in _plan(ngram_decontaminate(small_docs, ev, n=3))
+    for docs in (big_docs, small_docs):
+        ev = docs.filter(F.col("doc_id") % 17 == 0)
+        out = ngram_decontaminate(docs, ev, n=13)
+        assert "MapInPandas" in _plan(out)
+        got = sorted(map(tuple, out.collect()))
+        want = replay(entry._oracle_doc_decontam(), documents=docs.toPandas())
+        assert got == sorted(map(tuple, want.itertuples(index=False)))
+        assert any(r[-1] for r in got)
 
 
-def test_spans_auto_dispatch(big_docs, small_docs):
+def test_spans_auto_dispatch(big_docs, small_docs, replay):
+    import __spark_entry__ as entry
     from kowari_spark.operators.spans import duplicate_spans
 
-    assert "MapInPandas" in _plan(duplicate_spans(big_docs, min_len=3))
-    assert "MapInPandas" not in _plan(duplicate_spans(small_docs, min_len=3))
-
-
-def test_resolve_engine_bounded_probe_on_derived_frames(spark):
-    """'auto' sizes with limit(threshold).count() — a bounded probe
-    that is still correct on both sides of the threshold for DERIVED
-    frames (where a bare count() would re-execute the whole upstream
-    plan; ADVICE r7)."""
-    big = spark.range(3000).filter(F.col("id") % 2 == 0).select(
-        F.col("id"))  # 1500 rows through a non-scan plan
-    small = spark.range(3000).filter(F.col("id") < 10).select(F.col("id"))
-    assert resolve_engine("auto", big) == "arrow"
-    assert resolve_engine("auto", small) == "expr"
+    for docs in (big_docs, small_docs):
+        out = duplicate_spans(docs, min_len=entry._SPAN_L)
+        assert "MapInPandas" in _plan(out)
+        got = sorted(map(tuple, out.collect()))
+        want = replay(entry._oracle_doc_dup_spans(), documents=docs.toPandas())
+        assert got
+        assert got == sorted(map(tuple, want.itertuples(index=False)))

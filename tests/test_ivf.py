@@ -155,19 +155,33 @@ def test_seed_sample_string_typos_rejected_at_construction():
     assert IVF(seed_sample="auto").seed_sample == "auto"
 
 
+def _fold_cell(cents, vec):
+    """Reference assignment, written as the SQL replay computes it:
+    each centroid's squared distance is a sequential dimension-ordered
+    (x-y)^2 sum, and the FIRST minimum wins."""
+    dists = []
+    for c in cents:
+        acc = 0.0
+        for x, y in zip(vec, c):
+            acc += (x - y) * (x - y)
+        dists.append(acc)
+    return dists.index(min(dists))
+
+
 def test_with_lists_arrow_parity_and_auto_dispatch(spark, embeddings):
-    """The arrow cell assignment (shared quantizer argmin encoder, m=1)
-    is bit-identical to the expression engine — real table plus
-    handcrafted degraded rows (null/short/overlong vectors assign null
-    list_id in BOTH engines; NaN resolves identically)."""
+    """The cell assignment (shared quantizer argmin encoder, m=1)
+    equals the reference fold on the real table; handcrafted degraded
+    rows (null/short/overlong vectors) assign a null list_id and a
+    NaN-poisoned vector resolves to cell 0. The same row-local plan
+    runs at every input size."""
     base = embeddings.select(F.col("vec_id").alias("id"), "embedding").limit(300)
     ivf = IVF(n_lists=8, n_probe=2, max_iter=2, seed=42,
               round_centroids=6).fit(base, id_col="id")
-    a = sorted((r["id"], r["list_id"]) for r in
-               ivf.with_lists(base, engine="expr").select("id", "list_id").collect())
-    b = sorted((r["id"], r["list_id"]) for r in
-               ivf.with_lists(base, engine="arrow").select("id", "list_id").collect())
-    assert a == b
+    got = sorted((r["id"], r["list_id"]) for r in
+                 ivf.with_lists(base).select("id", "list_id").collect())
+    want = sorted((r["id"], _fold_cell(ivf.centroids, list(r["embedding"])))
+                  for r in base.collect())
+    assert got == want
 
     dim = 64
     degraded = spark.createDataFrame(
@@ -180,61 +194,51 @@ def test_with_lists_arrow_parity_and_auto_dispatch(spark, embeddings):
         ],
         "id long, embedding array<double>",
     )
-    da = sorted((r["id"], r["list_id"]) for r in
-                ivf.with_lists(degraded, engine="expr").select("id", "list_id").collect())
-    db = sorted((r["id"], r["list_id"]) for r in
-                ivf.with_lists(degraded, engine="arrow").select("id", "list_id").collect())
-    assert da == db
-    got = dict(da)
-    assert got[0] is None and got[1] is None and got[2] is None
-    assert got[3] is not None and got[4] is not None
+    got = dict((r["id"], r["list_id"]) for r in
+               ivf.with_lists(degraded).select("id", "list_id").collect())
+    assert got == {0: None, 1: None, 2: None, 3: 0,
+                   4: _fold_cell(ivf.centroids, [0.25] * dim)}
 
-    # auto: arrow at/above threshold, expr below
-    big = spark.range(1200).select(
-        F.col("id"),
-        F.array(*[((F.col("id") * (i + 3)) % 17).cast("double")
-                  for i in range(dim)]).alias("embedding"),
-    )
-    plan_big = ivf.with_lists(big)._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan_big
-    plan_small = ivf.with_lists(base)._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in plan_small
+    plan = ivf.with_lists(base)._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan
 
 
 def test_fit_engines_agree_and_auto_fit_uses_arrow(spark):
-    """Fitting with assign_engine='expr' and 'arrow' produces IDENTICAL
-    centroids (the Lloyd assignment is the only engine-dependent step,
-    and it is bit-identical); the default 'auto' on a big frame runs
-    the arrow Lloyd passes without any extra count scan."""
+    """The fitted centroids equal a by-hand Lloyd replay from the same
+    seeds: each round every vector joins its reference-fold cell and
+    every non-empty cell moves to its members' mean on the 1e-6
+    HALF_UP grid (summation order differences vanish on the grid)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
     import numpy as np
+
+    def grid(x):
+        return float(Decimal(x).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
 
     big = spark.range(1500).select(
         F.col("id"),
         F.array(*[((F.col("id") * (i + 3)) % 29).cast("double")
                   for i in range(16)]).alias("embedding"),
     ).cache()
-    a = IVF(n_lists=8, n_probe=2, max_iter=3, seed=42, round_centroids=6,
-            assign_engine="expr").fit(big, id_col="id")
-    b = IVF(n_lists=8, n_probe=2, max_iter=3, seed=42, round_centroids=6,
-            assign_engine="arrow").fit(big, id_col="id")
-    # auto sizing: a FULL seed sample (1024 rows for n_lists=16 on a
-    # 1500-row frame) is only a lower bound on n, so fit records
-    # _seen_rows=None and sizes the engine with the bounded
-    # limit-count probe on the persisted projection — which resolves
-    # to arrow here (1500 >= threshold). A PARTIAL sample is the exact
-    # n and skips the probe.
-    c = IVF(n_lists=16, n_probe=2, max_iter=3, seed=42, round_centroids=6).fit(
-        big, id_col="id"
-    )
-    d = IVF(n_lists=16, n_probe=2, max_iter=3, seed=42, round_centroids=6,
-            assign_engine="expr").fit(big, id_col="id")
-    assert np.array_equal(a.centroids, b.centroids)
-    assert np.array_equal(c.centroids, d.centroids)
-    assert c.assign_engine == "auto" and c._seen_rows is None
-    # partial sample: sample (512) > n (300) -> exact count recorded
-    e = IVF(n_lists=8, n_probe=2, max_iter=1, seed=42, round_centroids=6)
-    e.fit(big.limit(300), id_col="id")
-    assert e._seen_rows == 300
+    kw = dict(n_lists=8, n_probe=2, seed=42, round_centroids=6)
+    fitted = IVF(max_iter=3, **kw).fit(big, id_col="id")
+    cents = IVF(max_iter=0, **kw).fit(big, id_col="id").centroids.copy()
+    vecs = [list(r["embedding"]) for r in big.collect()]
+    for _ in range(3):
+        sums = np.zeros_like(cents)
+        cnts = np.zeros(len(cents), dtype=np.int64)
+        for v in vecs:
+            c = _fold_cell(cents, v)
+            sums[c] += v
+            cnts[c] += 1
+        new = cents.copy()
+        for c in np.flatnonzero(cnts):
+            new[c] = [grid(x) for x in sums[c] / cnts[c]]
+        if np.allclose(new, cents, atol=1e-12):
+            cents = new
+            break
+        cents = new
+    assert np.array_equal(fitted.centroids, cents)
 
 
 def test_gonzalez_vectorized_matches_scalar():

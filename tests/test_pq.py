@@ -222,61 +222,102 @@ def test_fit_replay_in_duckdb(base):
     assert np.array_equal(np.asarray(seeds), fitted0.codebooks[0])
 
 
+def _fold_codes(books, vec):
+    """Reference encode, written as the SQL replay computes it: per
+    subspace, each centroid's squared distance is a sequential
+    dimension-ordered (x-y)^2 sum, and the FIRST minimum wins."""
+    m, _, ds = books.shape
+    codes = []
+    for j in range(m):
+        sub = vec[j * ds:(j + 1) * ds]
+        dists = []
+        for c in books[j]:
+            acc = 0.0
+            for x, y in zip(sub, c):
+                acc += (x - y) * (x - y)
+            dists.append(acc)
+        codes.append(dists.index(min(dists)))
+    return codes
+
+
 def test_arrow_encoder_parity_on_real_table(base, fitted):
-    """engine='arrow' must produce byte-identical codes to the
-    expression engine on the real embeddings table — the contract that
-    lets the scale path share the SQL oracle."""
-    expr = {
+    """The numpy encoder produces exactly the reference fold's codes
+    on every row of the real embeddings table — the contract that lets
+    it share the SQL oracle."""
+    got = {
         r["vec_id"]: list(r["codes"])
         for r in fitted.with_codes(base).select("vec_id", "codes").collect()
     }
-    arrow = {
-        r["vec_id"]: list(r["codes"])
-        for r in fitted.with_codes(base, engine="arrow")
-        .select("vec_id", "codes").collect()
+    want = {
+        r["vec_id"]: _fold_codes(
+            fitted.codebooks, [float(x) for x in r["embedding"]])
+        for r in base.select("vec_id", "embedding").collect()
     }
-    assert arrow == expr
+    assert got == want
 
 
 def test_arrow_encoder_tie_breaks_lowest_code(spark):
     """A vector exactly equidistant from two centroids must take the
-    LOWER code in both engines (array_position(array_min) finds the
-    first match; np.argmin returns the first occurrence)."""
+    LOWER code (array_position(array_min) finds the first match in the
+    SQL replay; np.argmin returns the first occurrence)."""
     pq = PQ(m=1, k_sub=2, max_iter=0)
     pq.dim = 2
     pq.codebooks = np.array([[[0.0, 0.0], [2.0, 0.0]]])
     df = spark.createDataFrame(
         [(0, [1.0, 0.0])], "vec_id long, embedding array<double>"
     )
-    for eng in ("expr", "arrow"):
-        assert list(pq.with_codes(df, engine=eng).first()["codes"]) == [0]
+    assert list(pq.with_codes(df).first()["codes"]) == [0]
 
 
 def test_arrow_encoder_is_shuffle_free(base, fitted):
-    plan = fitted.with_codes(base, engine="arrow")._jdf.queryExecution(
+    plan = fitted.with_codes(base)._jdf.queryExecution(
     ).executedPlan().toString()
     assert "Exchange" not in plan
 
 
 def test_fit_codebooks_agree_across_encoders(base):
-    a = PQ(m=4, k_sub=8, max_iter=2, seed=42).fit(base, id_col="vec_id", dim=64)
-    b = PQ(m=4, k_sub=8, max_iter=2, seed=42, encoder="arrow").fit(
-        base, id_col="vec_id", dim=64
-    )
-    assert np.array_equal(a.codebooks, b.codebooks)
+    """The fitted codebooks equal a by-hand Lloyd replay from the same
+    seeds: each round every vector joins its reference-fold code per
+    subspace, and every non-empty centroid moves to its members' mean
+    on the 1e-6 HALF_UP grid (summation order differences vanish on
+    the grid)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def grid(x):
+        return float(Decimal(x).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
+
+    fitted = PQ(m=4, k_sub=8, max_iter=2, seed=42).fit(
+        base, id_col="vec_id", dim=64)
+    books = PQ(m=4, k_sub=8, max_iter=0, seed=42).fit(
+        base, id_col="vec_id", dim=64).codebooks.copy()
+    vecs = [[float(x) for x in r["embedding"]]
+            for r in base.select("embedding").collect()]
+    for _ in range(2):
+        sums = np.zeros((4, 8, 16))
+        cnts = np.zeros((4, 8), dtype=np.int64)
+        for v in vecs:
+            for j, c in enumerate(_fold_codes(books, v)):
+                sums[j, c] += v[j * 16:(j + 1) * 16]
+                cnts[j, c] += 1
+        for j in range(4):
+            for c in range(8):
+                if cnts[j, c]:
+                    books[j, c] = [grid(x) for x in sums[j, c] / cnts[j, c]]
+    assert np.array_equal(fitted.codebooks, books)
 
 
 def test_encoder_typo_rejected():
-    with pytest.raises(ValueError, match="encoder"):
-        PQ(encoder="gemm")
+    """One encoder: there is no encoder argument to pass."""
+    with pytest.raises(TypeError, match="encoder"):
+        PQ(encoder="arrow")
 
 
 def test_arrow_encoder_degraded_rows_match_expr(spark):
-    """Null / short / NaN embeddings must take the SAME codes through
-    both engines: null vector -> all-null codes, a short vector encodes
-    only the subspaces its length fully covers (the expression engine's
-    zip_with null-padding semantics), and a NaN-poisoned subspace
-    resolves to code 0 in both (all distances NaN -> first index)."""
+    """Null / short / NaN embeddings take the SQL replay's codes: null
+    vector -> all-null codes, a short vector encodes only the subspaces
+    its length fully covers (zip_with null-padding semantics), a
+    NaN-poisoned subspace resolves to code 0 (all distances NaN ->
+    first index), and an overlong vector ignores its tail."""
     pq = PQ(m=2, k_sub=2, max_iter=0)
     pq.dim = 4
     pq.codebooks = np.array(
@@ -293,31 +334,25 @@ def test_arrow_encoder_degraded_rows_match_expr(spark):
         ],
         "vec_id long, embedding array<double>",
     )
-    expr = {
-        r["vec_id"]: list(r["codes"])
-        for r in pq.with_codes(df, engine="expr").collect()
+    got = {r["vec_id"]: list(r["codes"]) for r in pq.with_codes(df).collect()}
+    assert got == {
+        0: [0, 1], 1: [None, None], 2: [0, None], 3: [0, None],
+        4: [0, 1], 5: [1, 0],
     }
-    arrow = {
-        r["vec_id"]: list(r["codes"])
-        for r in pq.with_codes(df, engine="arrow").collect()
-    }
-    assert arrow == expr
-    assert expr[1] == [None, None]
-    assert expr[2] == [0, None]
-    assert expr[3] == [0, None]
-    assert expr[4][0] == 0  # NaN subspace -> first code in BOTH engines
-    assert expr[5] == [1, 0]
 
 
 def test_layout_sidecar_records_encoder_provenance(base, tmp_path, spark):
-    pq = PQ(m=4, k_sub=8, max_iter=1, seed=42, encoder="arrow",
+    import json
+
+    pq = PQ(m=4, k_sub=8, max_iter=1, seed=42,
             seed_sample=512).fit(base, id_col="vec_id", dim=64)
     path = str(tmp_path / "pq_prov")
     pq.build(base, path, id_col="vec_id")
     fresh = PQ()
     fresh.load(spark, path)
-    assert fresh.encoder == "arrow"
     assert fresh.seed_sample == 512
+    with open(f"{path}/_pq_meta.json") as f:
+        assert "encoder" not in json.load(f)  # one encoder: nothing to record
 
 
 def test_fit_ignores_degraded_rows(spark):

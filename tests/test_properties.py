@@ -130,16 +130,34 @@ def test_decontam_self_eval_is_total(spark, batch):
 @settings(max_examples=5, deadline=None)
 @given(batch=docs_strategy)
 def test_decontam_engines_agree(spark, batch):
+    """The operator agrees with a by-hand reference: distinct word
+    3-grams (whole-text fallback below 3 tokens) matched on their
+    md5-prefix hashes, fraction rounded HALF_UP to 6 decimals."""
+    import hashlib
+    from decimal import ROUND_HALF_UP, Decimal
+
     from kowari_spark.operators.decontam import ngram_decontaminate
 
-    df = spark.createDataFrame(
-        [(i, " ".join(ws)) for i, ws in enumerate(batch)],
-        "doc_id long, text string",
-    )
+    rows = [(i, " ".join(ws)) for i, ws in enumerate(batch)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
     ev = df.filter(F.col("doc_id") % 2 == 0)
-    a = sorted(map(tuple, ngram_decontaminate(df, ev, n=3).collect()))
-    b = sorted(map(tuple, ngram_decontaminate(df, ev, n=3, engine="arrow").collect()))
-    assert a == b
+
+    def hashes(text):
+        toks = text.split(" ")
+        grams = ({" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+                 if len(toks) >= 3 else {text})
+        return {int(hashlib.md5(g.encode()).hexdigest()[:15], 16) for g in grams}
+
+    ev_h = set().union(*(hashes(t) for i, t in rows if i % 2 == 0))
+    want = []
+    for i, t in rows:
+        hs = hashes(t)
+        c = len(hs & ev_h)
+        frac = float(Decimal(c / len(hs)).quantize(
+            Decimal("1e-6"), rounding=ROUND_HALF_UP))
+        want.append((i, c, len(hs), frac, c > 0))
+    got = sorted(map(tuple, ngram_decontaminate(df, ev, n=3).collect()))
+    assert got == want
 
 
 @settings(max_examples=5, deadline=None)

@@ -65,20 +65,23 @@ def test_parameter_validation(spark, docs):
         repetition_stats(docs, top_n=5, dup_n=5)
 
 
-def test_arrow_engine_parity(spark, docs, sf_dir):
-    """engine="arrow" (shuffle-free mapInPandas) must reproduce the
-    expression plan bit-for-bit — handcrafted dup corpus AND the real
-    documents table (tokenization, short-doc and rounding semantics)."""
+def test_arrow_engine_parity(spark, docs, sf_dir, replay):
+    """The shuffle-free mapInPandas pass reproduces the contract's
+    DuckDB replay bit-for-bit — handcrafted dup corpus AND the real
+    documents table (tokenization, short-doc and HALF_UP rounding
+    semantics)."""
+    import __spark_entry__ as entry
+
     real = spark.read.parquet(f"{sf_dir}/documents.parquet")
     for df in (docs, real):
-        a = sorted(map(tuple, repetition_stats(df).collect()))
-        b = sorted(map(tuple, repetition_stats(df, engine="arrow").collect()))
-        assert a == b
+        got = sorted(map(tuple, repetition_stats(df, top_n=2, dup_n=5).collect()))
+        want = replay(entry._oracle_doc_repetition(), documents=df.toPandas())
+        assert got == sorted(map(tuple, want.itertuples(index=False)))
 
 
 def test_arrow_engine_plan_is_shuffle_free(spark, docs):
     plan = (
-        repetition_stats(docs, engine="arrow")
+        repetition_stats(docs)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -87,8 +90,9 @@ def test_arrow_engine_plan_is_shuffle_free(spark, docs):
 
 
 def test_engine_validation(docs):
-    with pytest.raises(ValueError, match="engine"):
-        repetition_stats(docs, engine="gemm")
+    """One engine: there is no engine argument to pass."""
+    with pytest.raises(TypeError, match="engine"):
+        repetition_stats(docs, engine="arrow")
 
 
 # -- corpus heavy hitters ----------------------------------------------------

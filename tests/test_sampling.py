@@ -73,12 +73,50 @@ def test_stratified_sample_per_group_rates(spark):
     assert a == b
 
 
-def test_dsir_logweights_hand_computed(spark):
-    """Pin one DSIR weight against a by-hand bucket-model computation
-    (same md5 hashing, add-one smoothing, rounded-log fold order)."""
+def _dsir_feats(txt, B):
+    """By-hand DSIR features: md5-prefix buckets of the unigrams then
+    bigrams of the single-space split; NULL text featurizes as ""."""
     import hashlib
+
+    toks = ("" if txt is None else txt).split(" ")
+    grams = toks + [f"{toks[i]} {toks[i+1]}" for i in range(len(toks) - 1)]
+    return [int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % B for g in grams]
+
+
+def _dsir_fold(lrs, txt, B):
+    """(n_feats, dsir_logw) of one document: position-ordered sum of
+    its features' log ratios, rounded to 6 decimals."""
+    fs = _dsir_feats(txt, B)
+    s = 0.0
+    for b in fs:
+        s = s + lrs[b]
+    return len(fs), round(s, 6) + 0.0
+
+
+def _dsir_reference(raw_rows, tgt_texts, B=10_000):
+    """By-hand bucket model (same md5 hashing, add-one smoothing,
+    rounded-log fold order): {doc_id: (n_feats, dsir_logw)}."""
     import math
 
+    raw_hist, tgt_hist = {}, {}
+    for _, t in raw_rows:
+        for b in _dsir_feats(t, B):
+            raw_hist[b] = raw_hist.get(b, 0) + 1
+    for t in tgt_texts:
+        for b in _dsir_feats(t, B):
+            tgt_hist[b] = tgt_hist.get(b, 0) + 1
+    totr, tott = sum(raw_hist.values()), sum(tgt_hist.values())
+    lrs = {
+        b: round(math.log((tgt_hist.get(b, 0) + 1) / (tott + B)), 9)
+        - round(math.log((c + 1) / (totr + B)), 9)
+        for b, c in raw_hist.items()
+    }
+    return {i: _dsir_fold(lrs, t, B) for i, t in raw_rows}
+
+
+def test_dsir_logweights_hand_computed(spark):
+    """Pin DSIR weights against a by-hand bucket-model computation
+    (same md5 hashing, add-one smoothing, rounded-log fold order)."""
     from kowari_spark.operators.sampling import dsir_logweights
 
     B = 64
@@ -86,41 +124,11 @@ def test_dsir_logweights_hand_computed(spark):
     tgt_rows = [(10, "aa bb"), (11, "aa bb aa")]
     raw = spark.createDataFrame(raw_rows, "doc_id long, text string")
     tgt = spark.createDataFrame(tgt_rows, "doc_id long, text string")
-
-    def feats(txt):
-        toks = txt.split(" ")
-        grams = toks + [
-            f"{toks[i]} {toks[i+1]}" for i in range(len(toks) - 1)
-        ]
-        return [
-            int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % B
-            for g in grams
-        ]
-
-    raw_hist, tgt_hist = {}, {}
-    for _, t in raw_rows:
-        for b in feats(t):
-            raw_hist[b] = raw_hist.get(b, 0) + 1
-    for _, t in tgt_rows:
-        for b in feats(t):
-            tgt_hist[b] = tgt_hist.get(b, 0) + 1
-    totr, tott = sum(raw_hist.values()), sum(tgt_hist.values())
-
-    def lw(txt):
-        s = 0.0
-        for b in feats(txt):
-            lt = round(math.log((tgt_hist.get(b, 0) + 1) / (tott + B)), 9)
-            lr = round(math.log((raw_hist.get(b, 0) + 1) / (totr + B)), 9)
-            s = s + (lt - lr)
-        return round(s, 6) + 0.0
-
     got = {
         r["doc_id"]: (r["n_feats"], r["dsir_logw"])
         for r in dsir_logweights(raw, tgt, buckets=B).collect()
     }
-    assert got == {
-        i: (len(feats(t)), lw(t)) for i, t in raw_rows
-    }
+    assert got == _dsir_reference(raw_rows, [t for _, t in tgt_rows], B)
 
 
 def test_dsir_ranks_target_like_docs_first(spark, docs):
@@ -150,9 +158,9 @@ def test_dsir_ranks_target_like_docs_first(spark, docs):
 
 
 def test_dsir_engines_bit_identical(spark, docs):
-    """The arrow DSIR engine (Python-partial histograms + collected
-    ratio dict + row-local fold) matches the expression engine
-    bit-for-bit, including on sub-bigram/empty edge docs."""
+    """Python-partial histograms + collected ratio dict + row-local
+    fold match the by-hand bucket model bit-for-bit — on the real
+    documents table AND on sub-bigram / empty / NULL edge docs."""
     from kowari_spark.operators.sampling import dsir_logweights
 
     target = docs.filter(F.col("lang") == "en")
@@ -169,38 +177,39 @@ def test_dsir_engines_bit_identical(spark, docs):
             ),
         ),
     ):
-        e = sorted(map(tuple, dsir_logweights(
-            frame, tgt, engine="expr").collect()))
-        a = sorted(map(tuple, dsir_logweights(
-            frame, tgt, engine="arrow").collect()))
-        assert e == a
-    # NULL-text docs stay IN the output (featurized as "") — membership
-    # and histogram mass agree across engines
-    assert {t[0] for t in e} == {1, 2, 3, 4}
-    with pytest.raises(ValueError, match="engine must be"):
-        dsir_logweights(docs, target, engine="fast")
+        got = {
+            r["doc_id"]: (r["n_feats"], r["dsir_logw"])
+            for r in dsir_logweights(frame, tgt).collect()
+        }
+        want = _dsir_reference(
+            [(r["doc_id"], r["text"]) for r in frame.collect()],
+            [r["text"] for r in tgt.collect()],
+        )
+        assert got == want
+    # NULL-text docs stay IN the output (featurized as "")
+    assert set(got) == {1, 2, 3, 4}
 
 
 def test_dsir_accepts_text_only_target(spark):
     """The target histogram never needs ids: a frame with ONLY the text
-    column is a valid target under both engines (the expr engine must
-    not reach for id_col on the target side)."""
+    column is a valid target."""
     from kowari_spark.operators.sampling import dsir_logweights
 
-    raw = spark.createDataFrame(
-        [(1, "aa bb"), (2, "cc dd")], "doc_id long, text string"
-    )
+    raw_rows = [(1, "aa bb"), (2, "cc dd")]
+    raw = spark.createDataFrame(raw_rows, "doc_id long, text string")
     tgt = spark.createDataFrame([("aa bb aa",)], "text string")
-    e = sorted(map(tuple, dsir_logweights(raw, tgt, engine="expr").collect()))
-    a = sorted(map(tuple, dsir_logweights(raw, tgt, engine="arrow").collect()))
-    assert e == a and len(e) == 2
+    got = {
+        r["doc_id"]: (r["n_feats"], r["dsir_logw"])
+        for r in dsir_logweights(raw, tgt).collect()
+    }
+    assert got == _dsir_reference(raw_rows, ["aa bb aa"])
 
 
 def test_dsir_layout_scores_match_full_recompute(spark, docs, tmp_path):
     """build_dsir_layout + dsir_score_against == dsir_logweights
-    bit-for-bit over the fit corpus (stored-model parity), under both
-    engines; batches with buckets unseen at fit time score through the
-    dense relation (every bucket carries its smoothed ratio)."""
+    bit-for-bit over the fit corpus (stored-model parity); batches with
+    buckets unseen at fit time score through the dense relation (every
+    bucket carries its smoothed ratio)."""
     from kowari_spark.operators.sampling import (
         build_dsir_layout,
         dsir_logweights,
@@ -214,23 +223,19 @@ def test_dsir_layout_scores_match_full_recompute(spark, docs, tmp_path):
     ratios, meta = load_dsir_layout(spark, path)
     assert ratios.count() == meta["buckets"] == 10_000  # dense
     want = sorted(map(tuple, dsir_logweights(docs, target).collect()))
-    for eng in ("expr", "arrow"):
-        got = sorted(map(tuple, dsir_score_against(
-            spark, path, docs, engine=eng
-        ).collect()))
-        assert got == want
+    got = sorted(map(tuple, dsir_score_against(spark, path, docs).collect()))
+    assert got == want
 
-    # unseen-vocabulary batch: inner join against the DENSE relation
-    # keeps every feature; engines agree bit-for-bit
-    odd = spark.createDataFrame(
-        [(1, "zzqj vvwk zzqj"), (2, ""), (3, None)],
-        "doc_id long, text string",
-    )
-    e = sorted(map(tuple, dsir_score_against(
-        spark, path, odd, engine="expr").collect()))
-    a = sorted(map(tuple, dsir_score_against(
-        spark, path, odd, engine="arrow").collect()))
-    assert e == a and {t[0] for t in e} == {1, 2, 3}
+    # unseen-vocabulary batch: the DENSE relation carries every
+    # feature's ratio — a by-hand fold over the stored ratios agrees
+    odd_rows = [(1, "zzqj vvwk zzqj"), (2, ""), (3, None)]
+    odd = spark.createDataFrame(odd_rows, "doc_id long, text string")
+    lrs = {r["__b"]: r["__lr"] for r in ratios.collect()}
+    got = {
+        r["doc_id"]: (r["n_feats"], r["dsir_logw"])
+        for r in dsir_score_against(spark, path, odd).collect()
+    }
+    assert got == {i: _dsir_fold(lrs, t, 10_000) for i, t in odd_rows}
 
     # provenance: sidecar-less and version-mismatched dirs refuse
     import json

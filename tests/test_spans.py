@@ -71,21 +71,27 @@ def test_whole_doc_removed_yields_empty_text(spark):
     assert out[1]["removed_tokens"] == 4
 
 
-def test_arrow_gram_engine_parity(spark, corpus, sf_dir):
-    """engine='arrow' emits identical gram hashes, so spans and
-    rebuilt text match the expression engine exactly — handcrafted
-    corpus AND the real documents table."""
-    for df, L in ((corpus, 4), (spark.read.parquet(f"{sf_dir}/documents.parquet"), 5)):
-        a = duplicate_spans(df, min_len=L).toPandas().sort_values(
-            ["doc_id", "span_start"]).reset_index(drop=True)
-        b = duplicate_spans(df, min_len=L, engine="arrow").toPandas().sort_values(
-            ["doc_id", "span_start"]).reset_index(drop=True)
-        assert a.values.tolist() == b.values.tolist()
-        ra = remove_duplicate_spans(df, min_len=L).toPandas().sort_values("doc_id")
-        rb = remove_duplicate_spans(df, min_len=L, engine="arrow").toPandas().sort_values("doc_id")
-        assert ra.values.tolist() == rb.values.tolist()
+def test_arrow_gram_engine_parity(spark, corpus, sf_dir, replay):
+    """The mapInPandas gram hasher emits the same md5-prefix hashes
+    the contract's DuckDB replay computes, so spans and rebuilt text
+    match it exactly — handcrafted corpus AND the real documents
+    table (the replay is fixed at the contract's min_len)."""
+    import __spark_entry__ as entry
+
+    L = entry._SPAN_L
+    for df in (corpus, spark.read.parquet(f"{sf_dir}/documents.parquet")):
+        pdf = df.toPandas()
+        got = sorted(map(tuple, duplicate_spans(df, min_len=L).collect()))
+        want = replay(entry._oracle_doc_dup_spans(), documents=pdf)
+        assert got == sorted(map(tuple, want.itertuples(index=False)))
+        got = sorted(map(tuple, remove_duplicate_spans(df, min_len=L).select(
+            "doc_id", F.md5("clean_text"), "n_tokens", "removed_tokens",
+        ).collect()))
+        want = replay(entry._oracle_doc_despan(), documents=pdf)
+        assert got == sorted(map(tuple, want.itertuples(index=False)))
 
 
 def test_bad_engine_rejected(corpus):
-    with pytest.raises(ValueError):
-        duplicate_spans(corpus, engine="nope")
+    """One engine: there is no engine argument to pass."""
+    with pytest.raises(TypeError, match="engine"):
+        duplicate_spans(corpus, engine="arrow")

@@ -211,35 +211,24 @@ def _run_suite(
                 probes=4).count())
             rec("cp_knn_prebuilt", s, r)
 
-    if want("pq_build") or want("pq_build_arrow") or want("pq_knn_prebuilt"):
+    if want("pq_build") or want("pq_knn_prebuilt"):
         # PQ's 100 TB shape: fit + encode into the compressed (id,
         # codes) layout once offline, then the ADC probe scans codes
-        # only — never the raw vectors. pq_build = expression encoder
-        # (the oracle-parity default, m*k_sub interpreted folds/row);
-        # pq_build_arrow = the bit-identical numpy encode path
+        # only — never the raw vectors
         from kowari_spark.operators.pq import PQ
 
         playout = os.path.join(SCALE_DIR, f"x{mult}", "pq_layout")
-        if want("pq_build"):
-            pqe = PQ(m=8, k_sub=16, max_iter=2, seed=42)
-            s, _ = timed(lambda: (
-                pqe.fit(emb, id_col="vec_id", dim=64),
-                pqe.build(emb, playout, id_col="vec_id"),
-            ) and 0)
-            rec("pq_build", s, 0)
         have_layout = os.path.exists(os.path.join(playout, "_pq_meta.json"))
-        if want("pq_build_arrow") or (
-            want("pq_knn_prebuilt") and not want("pq_build") and not have_layout
-        ):
-            # a probe-only run reuses an existing layout instead of
-            # paying an untimed refit+re-encode per invocation
-            pqi = PQ(m=8, k_sub=16, max_iter=2, seed=42, encoder="arrow")
+        # a probe-only run reuses an existing layout instead of paying an
+        # untimed refit+re-encode per invocation
+        if want("pq_build") or not have_layout:
+            pqb = PQ(m=8, k_sub=16, max_iter=2, seed=42)
             s, _ = timed(lambda: (
-                pqi.fit(emb, id_col="vec_id", dim=64),
-                pqi.build(emb, playout, id_col="vec_id"),
+                pqb.fit(emb, id_col="vec_id", dim=64),
+                pqb.build(emb, playout, id_col="vec_id"),
             ) and 0)
-            if want("pq_build_arrow"):
-                rec("pq_build_arrow", s, 0)
+            if want("pq_build"):
+                rec("pq_build", s, 0)
         if want("pq_knn_prebuilt"):
             pqp = PQ()
             pcodes = pqp.load(spark, playout)
@@ -402,44 +391,26 @@ def _run_suite(
               F.sum("end_pos")).collect()[0]["n"]))
         rec("doc_pack_chunks", s, r)
 
-    if want("doc_repetition") or want("doc_repetition_arrow"):
+    if want("doc_repetition"):
         from kowari_spark.operators.quality import repetition_stats
 
-        def rep(engine):
-            return int(repetition_stats(docs, engine=engine).agg(
-                F.count("*").alias("n"), F.sum("top2gram_frac"),
-                F.sum("dup5gram_frac")).collect()[0]["n"])
+        s, r = timed(lambda: int(repetition_stats(docs).agg(
+            F.count("*").alias("n"), F.sum("top2gram_frac"),
+            F.sum("dup5gram_frac")).collect()[0]["n"]))
+        rec("doc_repetition", s, r)
 
-        if want("doc_repetition"):
-            s, r = timed(lambda: rep("expr"))
-            rec("doc_repetition", s, r)
-        if want("doc_repetition_arrow"):
-            # shuffle-free mapInPandas engine (parity-tested): the expr
-            # plan's interpreted gram lambdas dominate at scale
-            s, r = timed(lambda: rep("arrow"))
-            rec("doc_repetition_arrow", s, r)
-
-    if want("doc_decontam") or want("doc_decontam_arrow"):
+    if want("doc_decontam"):
         # eval/benchmark sets do NOT grow with the corpus: fixed
         # 500-doc eval slice at every multiplier, so this measures the
-        # corpus-side gram scaling (expr: explode + broadcast semi;
-        # arrow: shuffle-free row-local counting, parity-tested)
+        # corpus-side gram scaling
         from kowari_spark.operators.decontam import ngram_decontaminate
 
         eval_df = docs.filter(F.col("doc_id") < 500)
-
-        def dec(engine):
-            return int(ngram_decontaminate(
-                docs, eval_df, n=13, engine=engine
-            ).agg(F.count("*").alias("n"), F.sum("contam_grams"),
-                  F.sum("total_grams")).collect()[0]["n"])
-
-        if want("doc_decontam"):
-            s, r = timed(lambda: dec("expr"))
-            rec("doc_decontam", s, r)
-        if want("doc_decontam_arrow"):
-            s, r = timed(lambda: dec("arrow"))
-            rec("doc_decontam_arrow", s, r)
+        s, r = timed(lambda: int(ngram_decontaminate(
+            docs, eval_df, n=13
+        ).agg(F.count("*").alias("n"), F.sum("contam_grams"),
+              F.sum("total_grams")).collect()[0]["n"]))
+        rec("doc_decontam", s, r)
 
     if want("doc_bm25"):
         from kowari_spark.operators.search import bm25_search
@@ -854,24 +825,16 @@ def _run_suite(
                 rec(f"semdedup_hot{fs}_{mode}", s, r)
             corpus.unpersist()
 
-    if want("doc_despan") or want("doc_despan_arrow"):
+    if want("doc_despan"):
         # exact-substring span removal: the wide shuffle is the global
-        # first-occurrence rank keyed on the gram hash; the arrow gram
-        # hasher replaces the interpreted gram lambdas (parity-tested)
+        # first-occurrence rank keyed on the gram hash
         from kowari_spark.operators.spans import remove_duplicate_spans
 
-        def despan(engine):
-            return int(remove_duplicate_spans(
-                docs, min_len=5, engine=engine
-            ).agg(F.count("*").alias("n"), F.sum("removed_tokens"),
-                  F.sum("n_tokens")).collect()[0]["n"])
-
-        if want("doc_despan"):
-            s, r = timed(lambda: despan("expr"))
-            rec("doc_despan", s, r)
-        if want("doc_despan_arrow"):
-            s, r = timed(lambda: despan("arrow"))
-            rec("doc_despan_arrow", s, r)
+        s, r = timed(lambda: int(remove_duplicate_spans(
+            docs, min_len=5
+        ).agg(F.count("*").alias("n"), F.sum("removed_tokens"),
+              F.sum("n_tokens")).collect()[0]["n"]))
+        rec("doc_despan", s, r)
 
     if want("doc_dsir"):
         # DSIR importance selection: two explodes feed the bucket
@@ -1074,7 +1037,7 @@ def _run_suite(
     if want("semdecon"):
         # embedding-space decontamination: the eval set stays FIXED
         # (the benchmark doesn't grow with the corpus) while the corpus
-        # multiplies — the arrow engine should track the corpus
+        # multiplies — scoring should track the corpus
         # linearly (one GEMM per batch, no shuffle beyond the
         # embedding groupBy).
         from kowari_spark.operators.decontam import semantic_decontaminate
@@ -1083,8 +1046,8 @@ def _run_suite(
         ev = docs.filter(F.col("doc_id") % 17 == 0).select(
             "text").limit(300)
         s, r = timed(lambda: semantic_decontaminate(
-            docs, ev, 0.98, engine="arrow").filter("is_contaminated").count())
-        rec("semdecon_arrow", s, r)
+            docs, ev, 0.98).filter("is_contaminated").count())
+        rec("semdecon", s, r)
 
     if want("corpus_balance"):
         # the round-11 corpus-balancing ops: per-source frequency cap
