@@ -16,6 +16,7 @@ Numerics policy (so Spark and DuckDB hash-match):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -195,22 +196,11 @@ def _lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Offline-built partitionBy(bucket) LSH layout, cached per source
     file (same build-once/probe-many shape as ``_ivf_index``): a bucket
     probe against it is STATIC partition pruning."""
-    import hashlib
-    import os
-    import tempfile
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        stamp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        stamp = "na"
-    tag = hashlib.md5(
-        f"{src}:{stamp}:p{_LSH.num_planes}:s{_LSH.seed}".encode()
-    ).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"kowari_lsh_{tag}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _LSH.build(_t(spark, sf_dir, "embeddings"), path)
+    path = _cached_layout(
+        sf_dir, "embeddings", f"p{_LSH.num_planes}:s{_LSH.seed}", "lsh",
+        "_lsh_meta.json",
+        lambda p: _LSH.build(_t(spark, sf_dir, "embeddings"), p),
+    )
     return _LSH.load(spark, path)
 
 
@@ -517,38 +507,27 @@ def _hnsw_index(spark: SparkSession, sf_dir: str):
     subset, cached as a level-partitioned parquet layout per source file
     (same build-once/probe-many shape as ``_ivf_index``/``_lsh_index``;
     the per-level greedy descent reads one level partition at a time)."""
-    import hashlib
-    import os
-    import tempfile
-
     from kowari_spark.operators.hnsw import HNSW
 
     h = HNSW(**_HNSW_PARAMS)
     base = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        stamp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        stamp = "na"
-    tag = hashlib.md5(
-        f"{src}:{stamp}:{sorted(_HNSW_PARAMS.items())}".encode()
-    ).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"kowari_hnsw_{tag}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        # dim is the fixtures' fixed 64 (every knn row pins it): skips
-        # the per-build first() inference job (ADVICE r5 pattern)
-        h.build(base, id_col="vec_id", dim=64).write.mode("overwrite").partitionBy(
-            "level"
-        ).parquet(path)
+    # dim is the fixtures' fixed 64 (every knn row pins it): skips the
+    # per-build dim inference job (ADVICE r5 pattern)
+    path = _cached_layout(
+        sf_dir, "embeddings", str(sorted(_HNSW_PARAMS.items())), "hnsw",
+        "_SUCCESS",
+        lambda p: h.build(base, id_col="vec_id", dim=64).write.mode(
+            "overwrite"
+        ).partitionBy("level").parquet(p),
+    )
     return h, base, spark.read.parquet(path)
 
 
 def q_hnsw_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HNSW offline build + batch graph query (Q5/Q6) over a fixed
-    200-vector subset: LSH-candidate + NN-descent graph build (at 200
-    rows "auto" resolves to the pure-JVM expr scorer, so the graph is
-    built by the distributed plan — operators/hnsw.py), prebuilt to a
+    200-vector subset: LSH-candidate + NN-descent graph build (a
+    200-node graph is built in memory on the driver, with the edges of
+    the distributed plan — operators/hnsw.py), prebuilt to a
     level-partitioned layout, then greedy descent + beam search query.
     Graph traversal itself is not SQL-expressible, but the search is
     engineered to achieve recall 1.0 on this contract instance (beam
@@ -647,28 +626,19 @@ def _ivf_index(spark: SparkSession, sf_dir: str):
     probes it — the shape this index has at 100 TB, where the build is a
     scheduled job and the probe a partition-pruned read. The cache key
     includes the source mtime/size so a regenerated sf dir rebuilds."""
-    import hashlib
-    import os
-    import tempfile
-
     from kowari_spark.operators.ivf import IVF
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        stamp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        stamp = "na"
-    # the algo tag versions the cache: a seeding/fit change must not
-    # reuse a layout built by the previous algorithm
-    key = f"{src}:{stamp}:{sorted(_IVF_PARAMS.items())}:maxmin-v1"
-    tag = hashlib.md5(key.encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"kowari_ivf_{tag}")
     ivf = IVF(**_IVF_PARAMS)
-    if not os.path.exists(os.path.join(path, "_ivf_meta.json")):
+
+    def build(path):
         base = _t(spark, sf_dir, "embeddings")
         ivf.fit(base, id_col="vec_id")
         ivf.build(base, path)
+
+    path = _cached_layout(
+        sf_dir, "embeddings", str(sorted(_IVF_PARAMS.items())), "ivf",
+        "_ivf_meta.json", build,
+    )
     lists = ivf.load(spark, path)
     return ivf, lists
 
@@ -823,26 +793,19 @@ def _pq_index(spark: SparkSession, sf_dir: str):
     scratch dir, then every query ``load()``s it and probes WITHOUT
     touching the raw vectors — the 100 TB shape this index exists for
     (codes are ~32x smaller than the vectors they stand in for)."""
-    import hashlib
-    import os
-    import tempfile
-
     from kowari_spark.operators.pq import PQ
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        stamp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        stamp = "na"
-    key = f"{src}:{stamp}:{sorted(_PQ_PARAMS.items())}:pq-maxmin-v1"
-    tag = hashlib.md5(key.encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"kowari_pq_{tag}")
     pq = PQ(**_PQ_PARAMS)
-    if not os.path.exists(os.path.join(path, "_pq_meta.json")):
+
+    def build(path):
         base = _t(spark, sf_dir, "embeddings")
         pq.fit(base, id_col="vec_id", dim=_PQ_DIM)
         pq.build(base, path, id_col="vec_id")
+
+    path = _cached_layout(
+        sf_dir, "embeddings", str(sorted(_PQ_PARAMS.items())), "pq",
+        "_pq_meta.json", build,
+    )
     codes = pq.load(spark, path)
     return pq, codes
 
@@ -1012,29 +975,18 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str):
     every query ``load()``s it and probes partition-pruned compressed
     codes: cell pruning x 32x compression, the two reduction factors
     the 100 TB serving shape multiplies."""
-    import hashlib
-    import os
-    import tempfile
-
     from kowari_spark.operators.ivfpq import IVFPQ
 
     ivf, _ = _ivf_index(spark, sf_dir)
     pq, _ = _pq_index(spark, sf_dir)
     comp = IVFPQ(ivf, pq)
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        stamp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        stamp = "na"
-    key = (
-        f"{src}:{stamp}:{sorted(_IVF_PARAMS.items())}"
-        f":{sorted(_PQ_PARAMS.items())}:ivfpq-v1"
+    path = _cached_layout(
+        sf_dir, "embeddings",
+        f"{sorted(_IVF_PARAMS.items())}:{sorted(_PQ_PARAMS.items())}",
+        "ivfpq", "_ivfpq_meta.json",
+        lambda p: comp.build(_t(spark, sf_dir, "embeddings"), p,
+                             id_col="vec_id"),
     )
-    tag = hashlib.md5(key.encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"kowari_ivfpq_{tag}")
-    if not os.path.exists(os.path.join(path, "_ivfpq_meta.json")):
-        comp.build(_t(spark, sf_dir, "embeddings"), path, id_col="vec_id")
     coded = comp.load(spark, path)
     return comp, coded
 
@@ -1866,16 +1818,34 @@ FROM j WHERE jac >= 0.5 ORDER BY id_a, id_b
 """
 
 
+_CACHE_DIR: str | None = None
+
+
+def _cache_dir() -> str:
+    """This process's layout-cache root, created on first use and
+    removed when the process exits: a layout is built once per run and
+    probed many times within it, but never outlives the code that
+    built it, so no later run can probe a stale layout."""
+    global _CACHE_DIR
+    if _CACHE_DIR is None:
+        import atexit
+        import shutil
+        import tempfile
+
+        _CACHE_DIR = tempfile.mkdtemp(prefix="kowari_cache_")
+        atexit.register(shutil.rmtree, _CACHE_DIR, ignore_errors=True)
+    return _CACHE_DIR
+
+
 def _cached_layout(sf_dir, table, tag_suffix, prefix, marker, build_fn):
-    """Shared tag-cached tmp-layout stanza: rebuild iff the source
-    table's stamp or the param tag changed. ``marker`` is the layout
-    family's LAST-written file (its params sidecar) — NEVER _SUCCESS:
-    a crash between the parquet commit and the sidecar write must not
-    poison the cache (the drift that bit _text_lsh_layout's first
-    version). ``build_fn(path)`` runs only on a cache miss."""
+    """Shared tag-cached layout stanza under ``_cache_dir()``: rebuild
+    iff the source table's stamp or the param tag changed. ``marker``
+    is the layout family's LAST-written file — its params sidecar, or
+    ``_SUCCESS`` only for a bare parquet write: a crash between the
+    parquet commit and the sidecar write must not poison the cache (the
+    drift that bit _text_lsh_layout's first version). ``build_fn(path)``
+    runs only on a cache miss."""
     import hashlib
-    import os
-    import tempfile
 
     src = os.path.join(sf_dir, f"{table}.parquet")
     try:
@@ -1886,7 +1856,7 @@ def _cached_layout(sf_dir, table, tag_suffix, prefix, marker, build_fn):
     tag = hashlib.md5(
         f"{src}:{stamp}:{tag_suffix}".encode()
     ).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"kowari_{prefix}_{tag}")
+    path = os.path.join(_cache_dir(), f"{prefix}_{tag}")
     if not os.path.exists(os.path.join(path, marker)):
         build_fn(path)
     return path

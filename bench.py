@@ -109,10 +109,9 @@ def bench_queries(spark, sf_dir, scratch):
         )
 
     def hnsw_build_full():
-        # full-table graph build with the r6 GEMM bucket scorer ("auto"
-        # picks it above 1000 rows — the contract hnsw_build line stays
-        # on the 200-vector expr instance, so this line is what tracks
-        # the scale-path build cost)
+        # full-table graph build (GEMM bucket scoring; the contract
+        # hnsw_build line stays on the 200-vector instance, so this
+        # line is what tracks the larger build's cost)
         from kowari_spark.operators.hnsw import HNSW
 
         base = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -262,7 +261,7 @@ def quality_gates(spark, sf_dir) -> dict:
         )
     finally:
         _sh.rmtree(_cd, ignore_errors=True)
-    # HNSW full-table graph (auto scorer = GEMM at this n), so all
+    # HNSW full-table graph (GEMM bucket scoring), so all
     # index families publish recall next to their cost lines
     from kowari_spark.operators.hnsw import HNSW
 
@@ -532,30 +531,20 @@ def _clustered_quality(spark) -> dict:
 
 
 def _clear_index_caches() -> None:
-    """Remove ALL prebuilt-layout caches so every ``*_build`` line times
-    a COLD build every run (round 3's numbers silently measured cache
-    loads); the contract queries that follow still exercise the
-    build-once/probe-many split against the indexes built this run.
-
-    Round 16 (VERDICT r15 "what's wrong" #1): the old five-prefix list
-    (lsh/ivf/hnsw/pq/ivfpq) missed every ``_cached_layout`` family the
-    entry grew since (bm25*, *sig, dsir*, hll/kmv, morwh, ...), so after
-    the auto-warmup pass nine ``*_build`` lines timed a cache-stat hit
-    (0.0 s), and the caches even survived ACROSS runs (keyed on the
-    testdata stamp). Clearing ``kowari_*`` wholesale — minus the bench's
-    own ``kowari_bench*`` scratch dirs — covers every present and future
-    cache family by construction.
+    """Remove every prebuilt layout the contract queries cached in this
+    process so every ``*_build`` line times a COLD build every run
+    (round 3's numbers silently measured cache loads); the contract
+    queries that follow still exercise the build-once/probe-many split
+    against the indexes built this run. All of them live in the entry's
+    one per-process cache directory (``_cache_dir``), so clearing it
+    covers every present and future cache family by construction.
 
     Set KOWARI_BENCH_WARM=1 to keep caches (for probe-only profiling)."""
-    import glob
-
     if os.environ.get("KOWARI_BENCH_WARM", "").strip() in ("1", "true"):
         return
-    tmp = tempfile.gettempdir()
-    for path in glob.glob(os.path.join(tmp, "kowari_*")):
-        if os.path.basename(path).startswith("kowari_bench"):
-            continue  # the bench's own scratch/warm-up dirs
-        shutil.rmtree(path, ignore_errors=True)
+    root = entrymod._cache_dir()
+    for name in os.listdir(root):
+        shutil.rmtree(os.path.join(root, name), ignore_errors=True)
 
 
 def _cache_state() -> dict:

@@ -485,23 +485,25 @@ class Collection:
         n_lists: int = 16,
         ivf=None,
         round_to: int | None = 6,
-        scorer: str = "expr",
         edges: str = "auto",
         max_cell: int = 8192,
     ) -> DataFrame:
         """SemDeDup over the collection (operators/dedup.semantic_dedup):
         (id, list_id, rep_id, is_kept) — cluster with the IVF quantizer,
-        compare cosines cluster-locally, keep the min-id representative
-        per near-dup component. A fitted ``ivf`` (e.g. the collection's
-        existing search index) reuses its cells. ``edges="auto"``
-        bounds pathologically dense cells via verified-star scoring
-        once one exceeds ``max_cell`` members."""
+        score each cell's cosines with one numpy GEMM plus an exact
+        rescore, keep the min-id representative per near-dup
+        component; a row IVF leaves without a cell (null or
+        wrong-length vector) is its own representative. A fitted
+        ``ivf`` (e.g. the collection's existing search index) reuses
+        its cells. ``edges="auto"`` bounds pathologically dense cells
+        via verified-star scoring once one exceeds ``max_cell``
+        members."""
         from kowari_spark.operators.dedup import semantic_dedup
 
         return semantic_dedup(
             self.df(), threshold, id_col="id", vec_col="embedding",
-            n_lists=n_lists, ivf=ivf, round_to=round_to, scorer=scorer,
-            edges=edges, max_cell=max_cell,
+            n_lists=n_lists, ivf=ivf, round_to=round_to, edges=edges,
+            max_cell=max_cell,
         )
 
     def semantic_decontaminate(

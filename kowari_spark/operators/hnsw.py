@@ -26,12 +26,13 @@ once:
 2. candidate pairs come from a multi-table sign-LSH OR-construction
    (same machinery as dedup.embedding_near_dups_lsh) — pairs only form
    inside buckets, never the n² cross product;
-3. pairs score INSIDE their bucket (default: one numpy GEMM per bucket
-   group via applyInPandas — candidate scoring is the dominant build
-   cost and a per-pair fold never enters whole-stage codegen;
-   ``scorer="expr"`` keeps the whole plan in native JVM expressions),
-   with an exact per-(bucket, src) top-m pushdown so only skinny rows
-   reach the global per-(level, src) top-M window;
+3. pairs score INSIDE their bucket — one numpy GEMM per bucket group
+   via applyInPandas for the four built-in metrics (candidate scoring
+   is the dominant build cost and a per-pair fold never enters
+   whole-stage codegen); a custom ``register_metric`` metric has no
+   numpy form and scores through native JVM expressions — with an
+   exact per-(bucket, src) top-m pushdown so only skinny rows reach
+   the global per-(level, src) top-M window;
 4. ``refine_rounds`` rounds of NN-descent (candidates = neighbors of
    neighbors over forward ∪ reverse edges, re-scored, re-pruned) repair
    LSH misses — the standard distributed kNN-graph refinement;
@@ -42,6 +43,10 @@ At 100 TB the shuffles are keyed by (level, bucket) and (level, src) —
 bucket width is tuned by ``num_planes`` (2^p buckets; size p so a
 bucket holds ~100-1000 vectors), and no stage ever materializes a
 layer on one node.
+
+A row whose vector is null, or is not the graph's dimension long
+(``dim`` when given, else the first non-null vector's length), is not a
+graph node in either build: no edge leaves or reaches it.
 
 Levels are assigned DETERMINISTICALLY (geometric via a seeded hash, same
 distribution as the reference's coin flips) so builds are reproducible —
@@ -61,6 +66,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kowari_spark.functions.vector import _BUILTIN_METRICS
 from kowari_spark.operators.topk import _score, _rounded
 
 
@@ -104,13 +110,9 @@ class HNSW:
     """Offline-built layered neighbor graph (reference defaults M=16,
     ef=32, src/index.rs:364-368)."""
 
-    #: metrics the bucket-local GEMM scorer vectorizes
-    _GEMM_METRICS = ("cosine", "dot", "euclidean", "manhattan")
-
     def __init__(self, m: int = 16, ef: int = 32, seed: int = 42,
                  max_level: int = 16, num_planes: int = 4,
-                 num_tables: int = 6, refine_rounds: int = 1,
-                 scorer: str = "auto"):
+                 num_tables: int = 6, refine_rounds: int = 1):
         self.m = m
         self.ef = ef
         self.seed = seed
@@ -123,26 +125,17 @@ class HNSW:
         self.num_planes = num_planes
         self.num_tables = num_tables
         self.refine_rounds = refine_rounds
-        # first-round pair scoring: "gemm" = one numpy GEMM per
-        # (level, table, bucket) group inside applyInPandas — candidate
-        # scoring is the whole build cost at scale (~n·bucket·T pairs,
-        # and a higher-order-function fold per pair never enters
-        # whole-stage codegen), so this is the same "built-ins
+        # pair scoring follows the metric, not an option: the four
+        # built-in metrics score each candidate group with one numpy
+        # GEMM (in memory up to BUILD_MAX_NODES, inside applyInPandas
+        # above it) — candidate scoring is the whole build cost at scale
+        # (~n·bucket·T pairs, and a higher-order-function fold per pair
+        # never enters whole-stage codegen), the same "built-ins
         # genuinely can't express it" boundary CP-LSH hashing sits
-        # behind. "expr" = the pure-JVM native-expression plan (no
-        # Python anywhere — the plan-audit mode). "auto" = gemm for the
-        # standard metrics, expr for custom registered ones. Scores
-        # agree to ulp (BLAS vs sequential fold); only score-tied edge
-        # choices can differ between scorers, and each scorer is
-        # deterministic run-to-run.
-        if scorer not in ("auto", "gemm", "expr"):
-            raise ValueError(f"scorer must be auto|gemm|expr, got {scorer!r}")
-        self.scorer = scorer
-
-    #: "auto" picks the GEMM scorer at/above this corpus size; below it
-    #: the pure-JVM plan is as fast (measured equal at n=200) and skips
-    #: the session's first-Python-worker spinup entirely
-    AUTO_GEMM_MIN_ROWS = 1000
+        # behind. A custom ``register_metric`` metric has no numpy form
+        # and takes the pure-JVM native-expression plan. GEMM and fold
+        # scores agree to ulp; only score-tied edge choices could differ
+        # between the two plans, and each is deterministic run-to-run.
 
     #: ``build`` runs in memory only up to this many nodes (and within
     #: the beam's node bound). Measured on 64-d vectors at local[4]
@@ -155,22 +148,25 @@ class HNSW:
     #: cores move the break-even lower.
     BUILD_MAX_NODES = 20000
 
-    def _resolve_scorer(self, metric: str, n: int | None = None) -> str:
-        if self.scorer == "auto":
-            if metric not in self._GEMM_METRICS:
-                return "expr"
-            return "gemm" if n is None or n >= self.AUTO_GEMM_MIN_ROWS else "expr"
-        if self.scorer == "gemm" and metric not in self._GEMM_METRICS:
-            # a custom registered metric has no numpy form — silently
-            # scoring it as something else would build the graph on the
-            # wrong geometry
-            raise ValueError(
-                f"scorer='gemm' supports only {self._GEMM_METRICS}; "
-                f"use scorer='expr' (or 'auto') for metric {metric!r}"
-            )
-        return self.scorer
-
     # -- build -------------------------------------------------------------
+
+    @staticmethod
+    def _infer_dim(df: DataFrame, vec_col: str) -> int:
+        """The first non-null vector's length: one Spark job."""
+        row = df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
+        if row is None:
+            raise ValueError(f"no non-null {vec_col!r} vector to size the graph")
+        return len(row[0])
+
+    @staticmethod
+    def _graph_nodes(df: DataFrame, id_col: str, vec_col: str,
+                     dim: int) -> DataFrame:
+        """The rows that are graph nodes: a null vector, or one that is
+        not ``dim`` long, gets no edge from or to it in any plan."""
+        v = F.col(vec_col)
+        return df.select(id_col, vec_col).filter(
+            v.isNotNull() & (F.size(v) == F.lit(dim))
+        )
 
     def _exploded_levels(self, leveled: DataFrame, id_col: str,
                          vec_col: str) -> DataFrame:
@@ -189,11 +185,10 @@ class HNSW:
         vec_col: str = "embedding",
         metric: str = "cosine",
         dim: int | None = None,
-        scorer: str | None = None,
     ) -> DataFrame:
         """First-round edge set as ONE un-materialized declarative plan.
 
-        Shape (both scorers): LSH (level, table, bucket) self-join →
+        Shape (either scoring): LSH (level, table, bucket) self-join →
         score pairs INSIDE their bucket (map-side; no pair ever
         shuffles carrying vectors) → per-(bucket, src) top-m pushdown —
         EXACT, because any edge in a src's global top-M beats all but
@@ -204,22 +199,22 @@ class HNSW:
         global shuffle (the round-5 shape shuffled the full pair
         relation through a distinct and two vector-attach joins).
 
-        Scorers (see ``__init__``): "gemm" computes each bucket's score
-        matrix as one numpy GEMM inside ``applyInPandas`` (measured
-        ~10x the expression fold on the 20k/200k-row scale benches);
-        "expr" keeps the whole plan in native JVM expressions — use it
-        when auditing plans for Python-free execution or with custom
-        registered metrics.
+        Scoring follows the metric (see ``__init__``): a built-in
+        metric computes each bucket's score matrix as one numpy GEMM
+        inside ``applyInPandas`` (measured ~10x the expression fold on
+        the 20k/200k-row scale benches); a custom registered metric
+        keeps the whole plan in native JVM expressions.
 
-        Pass ``dim`` when the caller knows the vector dimension (a
-        Collection always does) — the ``first()`` fallback costs one
-        Spark job per build (ADVICE r5, same pattern as dedup)."""
+        Only graph nodes take part (``_graph_nodes``). Pass ``dim`` when
+        the caller knows the vector dimension (a Collection always
+        does) — the ``_infer_dim`` fallback costs one Spark job per
+        build (ADVICE r5, same pattern as dedup)."""
         from kowari_spark.operators.lsh import SignLSH
 
         if dim is None:
-            dim = len(df.select(vec_col).first()[0])
-        leveled = assign_levels(df.select(id_col, vec_col), id_col, self.seed,
-                                self.max_level)
+            dim = self._infer_dim(df, vec_col)
+        leveled = assign_levels(self._graph_nodes(df, id_col, vec_col, dim),
+                                id_col, self.seed, self.max_level)
         exploded = self._exploded_levels(leveled, id_col, vec_col)
 
         buckets = F.array(
@@ -233,14 +228,7 @@ class HNSW:
             "level", "__vid", "__v", F.posexplode(buckets).alias("__tbl", "__bkt")
         )
 
-        # "auto" sizes the choice to the corpus (one cheap count against
-        # a build that is O(n·bucket·T)); explicit scorers skip the job.
-        # ``scorer`` (already-resolved) lets build() decide ONCE for the
-        # candidate pass and every refine round together.
-        if scorer is None:
-            n = df.count() if self.scorer == "auto" else None
-            scorer = self._resolve_scorer(metric, n)
-        if scorer == "gemm":
+        if metric in _BUILTIN_METRICS:
             per_bucket = self._bucket_topm_gemm(bucketed, metric)
         else:
             per_bucket = self._bucket_topm_expr(bucketed, metric)
@@ -508,16 +496,20 @@ class HNSW:
         return key[rank < self.m]
 
     def _collect_bounded_nodes(self, df: DataFrame, id_col: str,
-                               vec_col: str, max_nodes: int):
+                               vec_col: str, max_nodes: int,
+                               graph: bool = False, dim: int | None = None):
         """(ids, V, levels) of ``df``'s nodes in collect order, with
         their ``assign_levels`` level: one collect capped at max_nodes +
         1 rows — the bounded node input of both driver-side paths (the
-        query beam and the in-memory build). None when the nodes do not
+        query beam and the in-memory build). None when the rows do not
         fit (none, or more than max_nodes), an id or vector is null,
         the vectors are ragged (the distributed fold's zip_with
         truncation is not replicated) or an entry is non-finite (NaN
         sorts last in Python keys but first in Spark's descending
-        double order)."""
+        double order). With ``graph`` (the build), rows that are not
+        graph nodes are dropped first, as ``_graph_nodes`` drops them;
+        ``dim`` None is inferred from the collected rows the way
+        ``_infer_dim`` infers it, with no Spark job."""
         import numpy as np
 
         if max_nodes <= 0:
@@ -528,9 +520,14 @@ class HNSW:
             .limit(max_nodes + 1)
             .collect()
         )
-        if not rows or len(rows) > max_nodes:
+        if len(rows) > max_nodes:
             return None
-        if any(r[0] is None or r[1] is None for r in rows):
+        if graph:
+            if dim is None:
+                dim = next((len(r[1]) for r in rows if r[1] is not None),
+                           None)
+            rows = [r for r in rows if r[1] is not None and len(r[1]) == dim]
+        if not rows or any(r[0] is None or r[1] is None for r in rows):
             return None
         width = len(rows[0][1])
         if any(len(r[1]) != width for r in rows):
@@ -544,13 +541,13 @@ class HNSW:
     def _build_in_memory(self, df: DataFrame, id_col: str, vec_col: str,
                          metric: str, dim: int | None,
                          max_nodes: int) -> DataFrame | None:
-        """The GEMM-scorer build on the driver, over the nodes
+        """The GEMM build on the driver, over the graph nodes
         ``_collect_bounded_nodes`` returns for at most ``max_nodes``
         rows. Returns None — the caller then runs the distributed plan
         — when that collect does, and for the other input the
         distributed plan may treat differently: duplicate or
-        non-integral/non-string ids, a ``dim`` the vectors do not have,
-        or a score or LSH projection that overflows to NaN.
+        non-integral/non-string ids, or a score or LSH projection that
+        overflows to NaN.
 
         Every step repeats one statement of the distributed plan with
         the same arithmetic, so the edge set is identical (pinned by
@@ -571,12 +568,13 @@ class HNSW:
         id_type = df.schema[id_col].dataType
         if not isinstance(id_type, (T.IntegralType, T.StringType)):
             return None  # only these order identically in Python and Spark
-        nodes = self._collect_bounded_nodes(df, id_col, vec_col, max_nodes)
+        nodes = self._collect_bounded_nodes(df, id_col, vec_col, max_nodes,
+                                            graph=True, dim=dim)
         if nodes is None:
             return None
         ids, V, levels = nodes
         n, width = V.shape
-        if dim not in (None, width) or len(set(ids)) != n:
+        if len(set(ids)) != n:
             return None
         # node position == id rank: every id tie-break of the plan
         # becomes a position tie-break
@@ -698,47 +696,42 @@ class HNSW:
         (persist with .write.partitionBy('level').parquet(...) for the
         pruned-probe layout).
 
-        Two executions of one algorithm, chosen by a node bound:
-        ``BUILD_MAX_NODES`` (the measured break-even) capped by the
-        beam's node bound (``_beam_bounds``):
+        Only graph nodes get edges (``_graph_nodes``). Two executions
+        of one algorithm, chosen by a node bound: ``BUILD_MAX_NODES``
+        (the measured break-even) capped by the beam's
+        ``BEAM_MAX_NODES``:
 
-        - bounded: unless the scorer is "expr" (set, or forced by a
-          custom metric), one count capped at the bound + 1 rows, which
-          also sizes "auto". When the scorer resolves to "gemm" and the
-          graph fits, one collect of (id, vector, node_level); when
-          every row has one finite vector width, ``_build_in_memory``
-          runs the same steps in numpy and returns the identical edge
-          set through ``fsutil.local_df`` — two Spark jobs instead of
-          ~16;
-        - distributed: every other case — larger graphs, the "expr"
-          scorer, custom metrics, degraded input (see
-          ``_build_in_memory``) — runs the one declarative plan of the
-          module docstring, with no driver-side collect of any layer."""
-        # "expr" here is final (set, or forced by a custom metric);
-        # "gemm" may still resolve to "expr" for a small "auto" corpus
-        scorer = self._resolve_scorer(metric)
-        max_nodes = min(self._beam_bounds()[0], self.BUILD_MAX_NODES)
-        if scorer == "gemm" and (max_nodes > 0 or self.scorer == "auto"):
-            # one bounded count sizes both "auto" and the in-memory
-            # path; vectors are collected only for a graph that fits
-            n = df.limit(max(max_nodes, self.AUTO_GEMM_MIN_ROWS) + 1).count()
-            if self.scorer == "auto":
-                scorer = self._resolve_scorer(metric, n)
-            if scorer == "gemm" and n <= max_nodes:
-                edges = self._build_in_memory(df, id_col, vec_col, metric,
-                                              dim, max_nodes)
-                if edges is not None:
-                    return edges
+        - bounded: for a built-in metric, one count capped at the
+          bound + 1 rows; when the rows fit, one collect of (id,
+          vector, node_level), and ``_build_in_memory`` runs the same
+          steps in numpy and returns the identical edge set through
+          ``fsutil.local_df`` — three Spark jobs instead of ~16;
+        - distributed: every other case — larger graphs, custom
+          metrics, input ``_build_in_memory`` declines — runs the one
+          declarative plan of the module docstring, with no
+          driver-side collect of any layer."""
+        gemm = metric in _BUILTIN_METRICS
+        max_nodes = min(self.BEAM_MAX_NODES, self.BUILD_MAX_NODES)
+        # vectors are collected only for a graph that fits
+        if gemm and max_nodes > 0 and (
+            df.limit(max_nodes + 1).count() <= max_nodes
+        ):
+            edges = self._build_in_memory(df, id_col, vec_col, metric,
+                                          dim, max_nodes)
+            if edges is not None:
+                return edges
 
-        leveled = assign_levels(df.select(id_col, vec_col), id_col, self.seed,
-                                self.max_level)
+        if dim is None:
+            dim = self._infer_dim(df, vec_col)
+        df = self._graph_nodes(df, id_col, vec_col, dim)
+        leveled = assign_levels(df, id_col, self.seed, self.max_level)
         exploded = self._exploded_levels(leveled, id_col, vec_col)
         vecs = exploded.filter(F.col("level") == 0).select("__vid", "__v")
         # lazy checkpoints through the build: lineage truncates per
         # stage, but the only blocking actions are the entry-point
         # lookup and the final eager materialization
         edges = self.candidate_graph(
-            df, id_col, vec_col, metric, dim=dim, scorer=scorer
+            df, id_col, vec_col, metric, dim=dim
         ).localCheckpoint(eager=False)
 
         # connectivity patch BEFORE refinement: a node alone in all its
@@ -750,7 +743,10 @@ class HNSW:
         # node the buckets isolated, it links to the smallest other
         # member of the layer (singleton layers have nothing to link to
         # and legitimately stay edgeless).
-        ep_id, _ = self.entry_point(leveled, id_col)
+        entry = self.entry_point(leveled, id_col)
+        if entry is None:  # no row is a graph node: an empty graph
+            return edges.select("src", "dst", "level").localCheckpoint()
+        ep_id = entry[0]
         missing = exploded.select("level", F.col("__vid").alias("src")).join(
             edges.select("level", "src").distinct(), ["level", "src"],
             "left_anti",
@@ -776,7 +772,7 @@ class HNSW:
             # NN-descent: candidates = 2-hop neighbors over the
             # UNDIRECTED edge set (forward ∪ reverse), re-scored and
             # re-pruned; repairs pairs the LSH buckets missed
-            if scorer == "gemm":
+            if gemm:
                 # group-local scoring — identical candidate set, but the
                 # n·M² pair relation never shuffles carrying vectors
                 # (see _refine_topm_gemm)
@@ -811,14 +807,16 @@ class HNSW:
     # -- query -------------------------------------------------------------
 
     def entry_point(self, leveled: DataFrame, id_col: str = "id"):
-        row = (
-            leveled.orderBy(F.desc("node_level"), F.asc(id_col)).limit(1).collect()[0]
+        """(id, node_level) of the smallest id on the top level, or None
+        when ``leveled`` has no row."""
+        rows = (
+            leveled.orderBy(F.desc("node_level"), F.asc(id_col)).limit(1).collect()
         )
-        return row[id_col], row["node_level"]
+        return (rows[0][id_col], rows[0]["node_level"]) if rows else None
 
-    #: driver-beam routing bounds (env-overridable): graphs whose node /
-    #: edge / query counts all fit under these run the EXACT same search
-    #: as a bounded driver-side fold instead of ~25-30 tiny AQE
+    #: driver-beam routing bounds: graphs whose node / edge / query
+    #: counts all fit under these run the EXACT same search as a
+    #: bounded driver-side fold instead of ~25-30 tiny AQE
     #: materialization jobs (the per-job floor, not the plan, was the
     #: measured cost — VERDICT r15 ask #4). The collect is bounded the
     #: same way the CC union-find bounds its edge collect; any larger
@@ -826,21 +824,6 @@ class HNSW:
     #: in-memory path by the same node bound.
     BEAM_MAX_NODES = 65536
     BEAM_MAX_EDGES = 1 << 20
-
-    def _beam_bounds(self) -> tuple[int, int]:
-        import os
-
-        try:
-            mn = int(os.environ.get("KOWARI_HNSW_BEAM_NODES",
-                                    str(self.BEAM_MAX_NODES)))
-        except ValueError:
-            mn = self.BEAM_MAX_NODES
-        try:
-            me = int(os.environ.get("KOWARI_HNSW_BEAM_EDGES",
-                                    str(self.BEAM_MAX_EDGES)))
-        except ValueError:
-            me = self.BEAM_MAX_EDGES
-        return mn, me
 
     def _try_driver_beam(
         self, base, edges, queries, k, metric, id_col, vec_col,
@@ -865,9 +848,9 @@ class HNSW:
 
         import numpy as np
 
-        if round_to is None or metric not in self._GEMM_METRICS:
+        if round_to is None or metric not in _BUILTIN_METRICS:
             return None
-        max_nodes, max_edges = self._beam_bounds()
+        max_nodes, max_edges = self.BEAM_MAX_NODES, self.BEAM_MAX_EDGES
         if max_nodes <= 0:
             return None
         q_bound = max_batch or 8192

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from kowari_spark.functions.vector import lit_vec_sql, similarity_expr
+from kowari_spark.functions.vector import _BUILTIN_METRICS, lit_vec_sql, similarity_expr
 
 
 def _score(metric: str, vec_col: Column | str, query: Column) -> Column:
@@ -129,13 +129,10 @@ def _knn_batch_window(
     )
 
 
-_NUMPY_METRICS = ("cosine", "dot", "euclidean", "manhattan")
-
-
 def _knn_batch_heap(
     df, queries, k, metric, id_col, vec_col, query_id_col, query_vec_col, round_to
 ) -> DataFrame:
-    if metric not in _NUMPY_METRICS:
+    if metric not in _BUILTIN_METRICS:
         # custom registered metrics fall back to the declarative plan
         return _knn_batch_window(
             df, queries, k, metric, id_col, vec_col, query_id_col, query_vec_col, round_to

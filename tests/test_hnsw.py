@@ -5,6 +5,7 @@ defines but never asserts (src/utils.rs:64-79; SURVEY.md §5.2.6)."""
 import pytest
 from pyspark.sql import functions as F
 
+from kowari_spark.functions import vector
 from kowari_spark.operators.eval import mean_metric, recall_at_k
 from kowari_spark.operators.hnsw import HNSW, _stable_topk, assign_levels
 from kowari_spark.operators.topk import knn_batch
@@ -13,6 +14,18 @@ from kowari_spark.operators.topk import knn_batch
 @pytest.fixture(scope="module")
 def base(spark, embeddings):
     return embeddings.withColumnRenamed("vec_id", "id").limit(200).cache()
+
+
+#: a registered alias of cosine: a custom metric has no numpy form, so
+#: it takes the pure-JVM expression plan — the reference the GEMM plan
+#: is checked against
+ALIAS = "cosine_alias"
+
+
+@pytest.fixture
+def alias(monkeypatch):
+    monkeypatch.setitem(vector._METRICS, ALIAS, vector.cosine_similarity)
+    return ALIAS
 
 
 @pytest.fixture(scope="module")
@@ -58,13 +71,16 @@ def test_recall_vs_bruteforce(base, index):
     assert m >= 0.9, f"hnsw recall@10 too low: {m}"
 
 
-def test_build_plan_no_python_no_collect(base):
+def test_build_plan_no_python_no_collect(base, alias):
     """The round-1 build collected every layer to the driver (via
-    knn_batch's query broadcast). scorer="expr" must be pure JVM: no
-    Python eval nodes, no driver-side collect of the layer —
-    candidates come from the LSH self-join, pruning from a window."""
-    hnsw = HNSW(m=8, ef=32, seed=42, scorer="expr")
-    plan = hnsw.candidate_graph(base)._jdf.queryExecution().executedPlan().toString()
+    knn_batch's query broadcast). The expression plan (a custom
+    metric's) must be pure JVM: no Python eval nodes, no driver-side
+    collect of the layer — candidates come from the LSH self-join,
+    pruning from a window."""
+    hnsw = HNSW(m=8, ef=32, seed=42)
+    plan = hnsw.candidate_graph(
+        base, metric=alias
+    )._jdf.queryExecution().executedPlan().toString()
     for forbidden in ("MapInPandas", "BatchEvalPython", "ArrowEvalPython",
                       "PythonUDF", "FlatMapGroupsInPandas"):
         assert forbidden not in plan, f"{forbidden} in build plan"
@@ -73,21 +89,20 @@ def test_build_plan_no_python_no_collect(base):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
-def test_gemm_scorer_plan_and_agreement(base):
-    """The GEMM bucket scorer ("auto" picks it at >= AUTO_GEMM_MIN_ROWS;
-    forced here since the fixture is tiny): the plan is the grouped-map
-    GEMM — still no cartesian product, no driver collect — and the
-    resulting edges agree with the pure-expression scorer except
-    possibly at exact score ties (ulp-level BLAS vs fold differences).
-    On this data the graphs must be near-identical."""
-    gemm = HNSW(m=8, ef=32, seed=42, scorer="gemm")
-    expr = HNSW(m=8, ef=32, seed=42, scorer="expr")
+def test_gemm_scorer_plan_and_agreement(base, alias):
+    """The GEMM bucket scorer (every built-in metric's): the plan is the
+    grouped-map GEMM — still no cartesian product, no driver collect —
+    and the resulting edges agree with the pure-expression plan (the
+    cosine alias) except possibly at exact score ties (ulp-level BLAS
+    vs fold differences). On this data the graphs must be
+    near-identical."""
+    gemm = HNSW(m=8, ef=32, seed=42)
     plan = gemm.candidate_graph(base)._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
     eg = set(map(tuple, gemm.candidate_graph(base).collect()))
-    ee = set(map(tuple, expr.candidate_graph(base).collect()))
+    ee = set(map(tuple, gemm.candidate_graph(base, metric=alias).collect()))
     # tie flips only: symmetric difference is a tiny fraction
     assert len(eg ^ ee) <= max(4, len(ee) // 100), (
         f"gemm vs expr edge sets diverge: {len(eg ^ ee)} of {len(ee)}"
@@ -216,22 +231,27 @@ def test_contract_forwards_metric_to_graph_navigation(spark):
     assert sorted(map(tuple, auto.collect())) == sorted(map(tuple, rows))
 
 
-def test_gemm_scorer_rejects_unknown_metric():
-    """An explicit scorer="gemm" with a custom registered metric must
-    error, not silently score with the wrong geometry."""
-    h = HNSW(scorer="gemm")
-    with pytest.raises(ValueError, match="gemm"):
-        h._resolve_scorer("my_custom_metric")
-    # auto degrades to the expression path instead
-    assert HNSW(scorer="auto")._resolve_scorer("my_custom_metric") == "expr"
+def test_gemm_scorer_rejects_unknown_metric(base, alias, monkeypatch):
+    """A custom registered metric has no numpy form: the GEMM scorer
+    must never score it (that would build the graph on the wrong
+    geometry). Its candidate plan is the expression plan, and its build
+    skips the in-memory (GEMM) path for the distributed one."""
+    h = HNSW(m=4, ef=16, seed=42, refine_rounds=0)
+    plan = h.candidate_graph(
+        base, metric=alias
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan
+    calls = _spy_distributed(monkeypatch)
+    edges = _edges(h.build(base, metric=alias))
+    assert len(calls) == 1 and edges
 
 
 def test_build_dim_param_skips_inference_job(spark, base):
-    """candidate_graph(dim=) makes plan construction job-free for an
-    explicit scorer (the first() dim inference costs one Spark job per
-    build — ADVICE r5, same pattern as the dedup joins), with an edge
-    set identical to the inferred-dim build."""
-    hnsw = HNSW(m=4, ef=16, seed=42, scorer="expr")
+    """candidate_graph(dim=) makes plan construction job-free (the
+    dim inference costs one Spark job per build — ADVICE r5, same
+    pattern as the dedup joins), with an edge set identical to the
+    inferred-dim build."""
+    hnsw = HNSW(m=4, ef=16, seed=42)
     sc = spark.sparkContext
     group = "hnsw-dim-probe"
     sc.setJobGroup(group, "plan-time job probe", interruptOnCancel=False)
@@ -246,16 +266,17 @@ def test_build_dim_param_skips_inference_job(spark, base):
     )
 
 
-def test_gemm_refine_build_matches_expr_build(base):
+def test_gemm_refine_build_matches_expr_build(base, alias, monkeypatch):
     """The GEMM refine (group-local scoring of the two-hop candidates,
-    _refine_topm_gemm) must reproduce the expression path's NN-descent:
-    identical candidate set (edges ∪ two-hop via a shared neighbor, plus
-    the 1-hop edges scored separately), so full builds agree except at
-    ulp-level score ties (BLAS vs fold summation)."""
-    gemm = HNSW(m=8, ef=32, seed=42, scorer="gemm", refine_rounds=2)
-    expr = HNSW(m=8, ef=32, seed=42, scorer="expr", refine_rounds=2)
+    _refine_topm_gemm) must reproduce the expression path's NN-descent
+    (the cosine alias): identical candidate set (edges ∪ two-hop via a
+    shared neighbor, plus the 1-hop edges scored separately), so full
+    distributed builds agree except at ulp-level score ties (BLAS vs
+    fold summation)."""
+    monkeypatch.setattr(HNSW, "BEAM_MAX_NODES", 0)  # distributed plan
+    gemm = HNSW(m=8, ef=32, seed=42, refine_rounds=2)
     eg = set(map(tuple, gemm.build(base).collect()))
-    ee = set(map(tuple, expr.build(base).collect()))
+    ee = set(map(tuple, gemm.build(base, metric=alias).collect()))
     assert len(eg ^ ee) <= max(4, len(ee) // 100), (
         f"gemm vs expr refined builds diverge: {len(eg ^ ee)} of {len(ee)}"
     )
@@ -378,12 +399,12 @@ def test_query_batch_driver_beam_parity(base, index, monkeypatch):
             hnsw.query_batch(base, edges, queries, 7, metric=metric,
                              round_to=6)
         )
-        monkeypatch.setenv("KOWARI_HNSW_BEAM_NODES", "0")
-        got_dist = _qb_rows(
-            hnsw.query_batch(base, edges, queries, 7, metric=metric,
-                             round_to=6)
-        )
-        monkeypatch.delenv("KOWARI_HNSW_BEAM_NODES")
+        with monkeypatch.context() as mp:
+            mp.setattr(HNSW, "BEAM_MAX_NODES", 0)
+            got_dist = _qb_rows(
+                hnsw.query_batch(base, edges, queries, 7, metric=metric,
+                                 round_to=6)
+            )
         assert got_beam == got_dist, f"beam/distributed diverged: {metric}"
 
 
@@ -408,7 +429,7 @@ def test_query_batch_driver_beam_parity_flat_graph(spark, embeddings,
                              entry_budget=32)
         )
     assert any("flat graph" in str(w.message) for w in caught)
-    monkeypatch.setenv("KOWARI_HNSW_BEAM_NODES", "0")
+    monkeypatch.setattr(HNSW, "BEAM_MAX_NODES", 0)
     got_dist = _qb_rows(
         hnsw.query_batch(base, edges, queries, 5, round_to=6,
                          entry_budget=32)
@@ -482,16 +503,15 @@ def _spy_distributed(monkeypatch, stop=False):
 def test_build_in_memory_parity(base, monkeypatch, metric, refine_rounds):
     """A graph under the build's node bound is built on the driver with
     the distributed plan's arithmetic: the edge set is IDENTICAL to the
-    distributed build's (forced with KOWARI_HNSW_BEAM_NODES=0), not
+    distributed build's (forced with ``BEAM_MAX_NODES = 0``), not
     merely close."""
-    hnsw = HNSW(m=8, ef=32, seed=42, scorer="gemm",
-                refine_rounds=refine_rounds)
+    hnsw = HNSW(m=8, ef=32, seed=42, refine_rounds=refine_rounds)
     one = base.orderBy("id").limit(1)  # no pair: an empty edge set
     calls = _spy_distributed(monkeypatch)
     local = _edges(hnsw.build(base, metric=metric))
     local_one = _edges(hnsw.build(one, metric=metric))
     assert calls == [], "the in-memory path did not run"
-    monkeypatch.setenv("KOWARI_HNSW_BEAM_NODES", "0")
+    monkeypatch.setattr(HNSW, "BEAM_MAX_NODES", 0)
     dist = _edges(hnsw.build(base, metric=metric))
     dist_one = _edges(hnsw.build(one, metric=metric))
     assert len(calls) == 2
@@ -501,14 +521,17 @@ def test_build_in_memory_parity(base, monkeypatch, metric, refine_rounds):
     assert local_one == dist_one == set()
 
 
-def test_build_in_memory_falls_through(spark, base, monkeypatch):
-    """Degraded input (null or short vectors, null or NaN elements,
-    duplicate ids, a wrong ``dim``), the "expr" scorer and a corpus
-    over either node bound (the beam's or ``BUILD_MAX_NODES``) each take
-    the distributed plan unchanged."""
+def test_build_in_memory_falls_through(spark, base, alias, monkeypatch):
+    """Input the in-memory build does not replicate (null or NaN
+    elements, duplicate or null ids), a custom metric and a corpus over
+    either node bound (the beam's or ``BUILD_MAX_NODES``) each take the
+    distributed plan unchanged. Rows that are not graph nodes (a null
+    or short vector) are dropped in memory, not a reason to fall
+    through; a ``dim`` no vector has, like an empty input, leaves no
+    node at all, and the build returns an empty graph."""
     import numpy as np
 
-    hnsw = HNSW(m=4, ef=16, seed=42, scorer="gemm", refine_rounds=0)
+    hnsw = HNSW(m=4, ef=16, seed=42, refine_rounds=0)
     rows = [(i, np.random.RandomState(i).normal(size=4).tolist())
             for i in range(20)]
 
@@ -518,20 +541,25 @@ def test_build_in_memory_falls_through(spark, base, monkeypatch):
         return hnsw._build_in_memory(df, "id", "embedding", "cosine", dim,
                                      max_nodes)
 
-    assert in_memory([]) is not None
-    for bad in ([(20, None)],                                # null vector
-                [(20, [1.0, 2.0])],                          # short
-                [(20, [1.0, None, 2.0, 3.0])],               # null element
+    clean = _edges(in_memory([]))
+    assert clean
+    for dropped in ([(20, None)],                            # null vector
+                    [(20, [1.0, 2.0])]):                     # short
+        assert _edges(in_memory(dropped)) == clean, dropped
+    for bad in ([(20, [1.0, None, 2.0, 3.0])],               # null element
                 [(20, [1.0, float("nan"), 2.0, 3.0])],       # NaN
                 [(19, [1.0, 2.0, 3.0, 4.0])],                # duplicate id
                 [(None, [1.0, 2.0, 3.0, 4.0])]):             # null id
         assert in_memory(bad) is None, bad
     assert in_memory([], dim=8) is None
     assert in_memory([], max_nodes=19) is None                # over the bound
+    # no row is a graph node: the distributed build returns no edge
+    none = spark.createDataFrame(rows, "id long, embedding array<double>")
+    assert _edges(hnsw.build(none, dim=8)) == set()
+    assert _edges(hnsw.build(none.limit(0), dim=4)) == set()
 
     calls = _spy_distributed(monkeypatch, stop=True)
     hnsw.build(base)  # in memory: the spy never fires
-    assert calls == []
     vec_type = base.schema["embedding"].dataType.simpleString()
     for bad in ("array(1.0, 2.0)", "NULL"):
         extra = spark.range(1).select(
@@ -539,24 +567,26 @@ def test_build_in_memory_falls_through(spark, base, monkeypatch):
             F.expr(f"CAST({bad} AS {vec_type})").alias("embedding"),
         )
         degraded = base.select("id", "embedding").unionByName(extra)
+        got = _edges(hnsw.build(degraded))
+        assert not any(10**6 in (s, d) for s, d, _ in got), bad
+    assert calls == []
+    with pytest.raises(_Distributed):
+        hnsw.build(base, metric=alias)
+    with monkeypatch.context() as mp:
+        mp.setattr(HNSW, "BEAM_MAX_NODES", 50)
         with pytest.raises(_Distributed):
-            hnsw.build(degraded)
-    with pytest.raises(_Distributed):
-        HNSW(m=4, ef=16, seed=42, scorer="expr").build(base)
-    monkeypatch.setenv("KOWARI_HNSW_BEAM_NODES", "50")
-    with pytest.raises(_Distributed):
-        hnsw.build(base)
-    monkeypatch.delenv("KOWARI_HNSW_BEAM_NODES")
+            hnsw.build(base)
     monkeypatch.setattr(HNSW, "BUILD_MAX_NODES", 50)
     with pytest.raises(_Distributed):
         hnsw.build(base)
-    assert len(calls) == 5
+    assert len(calls) == 3
 
 
 def test_build_in_memory_bounded_jobs(spark, base):
-    """The in-memory build is one bounded count and one bounded
-    collect: at most 3 Spark jobs (the distributed plan runs ~16)."""
-    hnsw = HNSW(m=8, ef=32, seed=42, scorer="gemm")
+    """The default build of a graph under the node bound is in memory:
+    one bounded count and one bounded collect, at most 3 Spark jobs
+    (the distributed plan runs ~16-40)."""
+    hnsw = HNSW()
     sc = spark.sparkContext
     group = "hnsw-inmem-build"
     sc.setJobGroup(group, "in-memory build job probe", interruptOnCancel=False)
@@ -567,6 +597,83 @@ def test_build_in_memory_bounded_jobs(spark, base):
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 1 <= len(jobs) <= 3, f"in-memory build ran {len(jobs)} jobs"
     assert edges.count() > 0
+
+
+#: md5 of the sorted (src, dst, level) edge list of the contract's
+#: hnsw_knn build, per fixture, as the distributed expression plan
+#: built it when that plan still served small corpora of built-in
+#: metrics (24 Spark jobs); the in-memory GEMM build must reproduce it
+_CONTRACT_EDGES_MD5 = {
+    "sf0.001": "a2c3467d857cf185b09cf0c40881debf",
+    "sf0.01": "b47a9f476854005bc46fb5efb681b6e2",
+}
+
+
+def test_contract_build_matches_pinned_edges(spark, sf_dir):
+    """The contract's default build (``_HNSW_PARAMS`` over the 200
+    vectors ``vec_id < 200``, dim 64) runs in at most 3 Spark jobs and
+    its edge set hashes to the pinned distributed build's."""
+    import hashlib
+    import os
+
+    import __spark_entry__ as entry
+
+    base = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+        F.col("vec_id") < 200
+    )
+    sc = spark.sparkContext
+    group = "hnsw-contract-build"
+    sc.setJobGroup(group, "contract build job probe", interruptOnCancel=False)
+    try:
+        edges = HNSW(**entry._HNSW_PARAMS).build(base, id_col="vec_id",
+                                                  dim=64)
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 3, f"contract build ran {len(jobs)} jobs"
+    rows = sorted(map(tuple, edges.select("src", "dst", "level").collect()))
+    want = _CONTRACT_EDGES_MD5[os.path.basename(sf_dir.rstrip("/"))]
+    assert hashlib.md5(repr(rows).encode()).hexdigest() == want
+
+
+def _degraded_corpus(spark, n: int, kind: str):
+    """n 8-d rows, some of them not graph nodes: null vectors (the
+    first row's among them) and/or 5-d vectors. Returns (df, bad ids)."""
+    import numpy as np
+
+    rng = np.random.RandomState(n)
+    rows = [(i, rng.normal(size=8).tolist()) for i in range(n)]
+    bad = set()
+    if kind in ("null", "mixed"):
+        for i in (0, n // 3, n - 1):
+            rows[i] = (i, None)
+            bad.add(i)
+    if kind in ("ragged", "mixed"):
+        for i in (5, n // 2):
+            rows[i] = (i, rng.normal(size=5).tolist())
+            bad.add(i)
+    return spark.createDataFrame(rows, "id long, embedding array<double>"), bad
+
+
+@pytest.mark.parametrize("kind", ["null", "ragged", "mixed"])
+@pytest.mark.parametrize("n", [60, 1100])
+def test_build_drops_degraded_rows(spark, monkeypatch, n, kind):
+    """A row whose vector is null, or is not the graph's dimension long
+    (inferred past a null first row), is not a graph node in either
+    build: the in-memory and the distributed builds return the same
+    edges, none of them leaves or reaches a degraded id, and every
+    other node keeps a level-0 out-edge."""
+    df, bad = _degraded_corpus(spark, n, kind)
+    hnsw = HNSW(m=8, ef=32, seed=42)
+    calls = _spy_distributed(monkeypatch)
+    local = _edges(hnsw.build(df))
+    assert calls == [], "the in-memory path did not run"
+    monkeypatch.setattr(HNSW, "BEAM_MAX_NODES", 0)
+    dist = _edges(hnsw.build(df))
+    assert len(calls) == 1
+    assert local == dist, f"{len(local ^ dist)} edges differ"
+    assert not any(s in bad or d in bad for s, d, _ in local)
+    assert {s for s, _, lvl in local if lvl == 0} == set(range(n)) - bad
 
 
 def test_stable_topk_matches_stable_argsort():

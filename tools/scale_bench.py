@@ -775,7 +775,7 @@ def _run_suite(
     if want("semantic_dedup"):
         # SemDeDup at scale: cells must stay task-sized, so n_lists
         # grows with the corpus (sqrt growth like the partitions);
-        # GEMM cell scorer; round_to=None skips the per-pair decimal
+        # round_to=None skips the per-pair decimal
         # rounding only the SQL oracle needs. NOTE the derived
         # embeddings are M jittered copies of each original, so dup
         # FAMILIES grow with M (pair count is family-quadratic) — a
@@ -789,7 +789,7 @@ def _run_suite(
         # cost (the library default is edges="auto" since r9)
         s, r = timed(lambda: semantic_dedup(
             emb, threshold=0.5, id_col="vec_id", ivf=sivf,
-            scorer="gemm", round_to=None, edges="pairs",
+            round_to=None, edges="pairs",
         ).filter("NOT is_kept").count())
         rec("semantic_dedup", s, r)
 
@@ -820,7 +820,7 @@ def _run_suite(
                 hivf = IVF(n_lists=nl, n_probe=1, max_iter=2, seed=42)
                 s, r = timed(lambda m=mode: semantic_dedup(
                     corpus, threshold=0.99, id_col="vec_id", ivf=hivf,
-                    scorer="gemm", round_to=None, edges=m,
+                    round_to=None, edges=m,
                 ).filter("NOT is_kept").count())
                 rec(f"semdedup_hot{fs}_{mode}", s, r)
             corpus.unpersist()
