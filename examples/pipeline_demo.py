@@ -23,6 +23,15 @@ from kowari_spark.operators.multimodal import media_features, media_meta, synth_
 
 
 def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
+    """Run the walkthrough. Its layout directories live under one
+    temporary directory, removed at exit even when a step fails."""
+    import tempfile
+
+    with tempfile.TemporaryDirectory(prefix="kowari_demo_") as root:
+        _walkthrough(sf_dir, root)
+
+
+def _walkthrough(sf_dir: str, root: str) -> None:
     spark = get_session(app="kowari_pipeline")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").cache()
     n = docs.count()
@@ -60,7 +69,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
         build_minhash_layout,
     )
 
-    sig_path = tempfile.mkdtemp(prefix="kowari_demo_sig_")
+    sig_path = tempfile.mkdtemp(prefix="sig_", dir=root)
     history = kept.filter(F.col("doc_id") % 2 == 0)
     batch = kept.filter(F.col("doc_id") % 2 == 1)
     build_minhash_layout(history, sig_path)
@@ -98,7 +107,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     vhist = vecs.filter(F.col("doc_id") % 2 == 0)
     vbatch = vecs.filter(F.col("doc_id") % 2 == 1)
     vlsh = SignLSH(dim=32, num_planes=6, seed=42)
-    vpath = tempfile.mkdtemp(prefix="kowari_demo_vsig_")
+    vpath = tempfile.mkdtemp(prefix="vsig_", dir=root)
     vlsh.build(vhist, vpath, vec_col="embedding", id_col="doc_id")
     vlayout = SignatureLayout.open(spark, vpath)  # fifth family
     vfresh = vlayout.filter_new(vbatch, threshold=0.9, round_to=6)
@@ -117,7 +126,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
         hll_layout_estimate,
     )
 
-    skpath = tempfile.mkdtemp(prefix="kowari_demo_hll_")
+    skpath = tempfile.mkdtemp(prefix="hll_", dir=root)
     build_hll_layout(history, skpath, ["lang"], "text", p=6)
     append_hll_layout(spark, skpath, batch)  # max-merge, O(batch+state)
     print("distinct docs per lang (stored HLL):", sorted(
@@ -188,7 +197,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
         dsir_score_against,
     )
 
-    dpath = tempfile.mkdtemp(prefix="kowari_demo_dsir_")
+    dpath = tempfile.mkdtemp(prefix="dsir_", dir=root)
     build_dsir_layout(clean, clean.filter(F.col("lang") == "en"), dpath)
     scored = dsir_score_against(spark, dpath, batch)
     print("dsir stored-model batch scores (3):", [
@@ -217,7 +226,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
         delete_from_bm25_layout,
     )
 
-    bpath = tempfile.mkdtemp(prefix="kowari_demo_bm25_")
+    bpath = tempfile.mkdtemp(prefix="bm25_", dir=root)
     build_bm25_layout(mixed, bpath)
     print("bm25 indexed('hash join'):", [
         (r["doc_id"], r["bm25"])

@@ -464,8 +464,11 @@ class Collection:
     ) -> DataFrame:
         """Near-duplicate pairs within the collection (id_a < id_b,
         cosine >= threshold) via the bucketed sign-LSH path
-        (operators/dedup.embedding_near_dups_lsh). The collection knows
-        its dimension, so no inference job fires (ADVICE r5).
+        (operators/dedup.embedding_near_dups_lsh): in memory, in two
+        Spark jobs, while the collection fits the driver bound
+        (``dedup._DRIVER_MAX_ROWS`` rows), distributed above it, with
+        the same rows either way. The collection knows its dimension,
+        so the distributed plan runs no inference job (ADVICE r5).
         ``hasher="gemm"`` takes the big-corpus GEMM hash path;
         ``edges`` defaults to "auto" — a bounded bucket probe keeps the
         exact pairwise mode until a duplicate family could make it

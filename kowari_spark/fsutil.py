@@ -365,3 +365,53 @@ def local_df(spark: SparkSession, rows, schema=None):
         return spark.createDataFrame(pdf, schema=st)
     except Exception:
         return spark.createDataFrame(list(rows), schema=schema)
+
+
+# -- bounded driver-side input ---------------------------------------------
+
+def infer_dim(df, vec_col: str) -> int:
+    """The first non-null vector's length: one Spark job. The fallback
+    of every operator that is not told its vector dimension."""
+    from pyspark.sql import functions as F
+
+    row = df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
+    if row is None:
+        raise ValueError(f"no non-null {vec_col!r} vector to infer the "
+                         "dimension from")
+    return len(row[0])
+
+
+def collect_vectors(df, max_rows: int, drop: bool = False,
+                    dim: int | None = None):
+    """(rows, V) for ``df``'s columns (id, vector, ...): the collected
+    rows and their vectors as one float64 matrix, from one collect
+    capped at ``max_rows`` + 1 rows — the bounded input of every
+    driver-side path (the HNSW beam and in-memory build, the in-memory
+    embedding near-dup). None when the rows do not fit (none, or more
+    than ``max_rows``), an id or vector is null, the vectors are ragged
+    (the distributed fold's zip_with truncation is not replicated) or
+    an entry is non-finite (NaN sorts last in Python keys but first in
+    Spark's descending double order). With ``drop``, rows whose vector
+    is null or not ``dim`` long are dropped first; ``dim`` None is then
+    inferred from the collected rows the way ``infer_dim`` infers it,
+    with no Spark job."""
+    import numpy as np
+
+    if max_rows <= 0:
+        return None
+    rows = df.limit(max_rows + 1).collect()
+    if len(rows) > max_rows:
+        return None
+    if drop:
+        if dim is None:
+            dim = next((len(r[1]) for r in rows if r[1] is not None), None)
+        rows = [r for r in rows if r[1] is not None and len(r[1]) == dim]
+    if not rows or any(r[0] is None or r[1] is None for r in rows):
+        return None
+    width = len(rows[0][1])
+    if any(len(r[1]) != width for r in rows):
+        return None
+    V = np.asarray([r[1] for r in rows], dtype=np.float64)  # null -> nan
+    if not np.isfinite(V).all():
+        return None
+    return rows, V

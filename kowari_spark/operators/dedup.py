@@ -12,7 +12,11 @@ near-dup — each designed as a shuffle-conscious DataFrame pipeline:
 - verification joins shingle sets back ONLY for candidate pairs
   (candidate set << n²);
 - embedding near-dup: exact O(n²) variant for oracles/small n, LSH-bucket
-  variant as the 100 TB path (pairs only form inside a bucket).
+  variant as the 100 TB path (pairs only form inside a bucket); a corpus
+  within the driver bound (``_DRIVER_MAX_ROWS``) runs that same LSH
+  algorithm in memory — one bounded collect, numpy buckets and GEMM
+  pair selection, the exact SQL cosine fold to verify — and returns
+  identical rows in two Spark jobs.
 
 All hashing is md5-based and engine-portable so every operator has an
 exact DuckDB oracle (see functions/text.py).
@@ -107,23 +111,29 @@ def resolve_edges(
         .count()
     )
     if hot:
-        # the flip is a data-dependent OUTPUT change on *_pairs-named
-        # generators (star edges, not the complete pair list) — make it
-        # loud so callers who need exact pairwise semantics pin
-        # edges="pairs" (ADVICE r9)
-        import warnings
-
-        warnings.warn(
-            f"edges='auto' resolved to 'star': a bucket on {bucket_cols} "
-            f"exceeds {threshold} members, so the complete all-pairs "
-            "list would be quadratic. Emitting bucket-min star edges "
-            "(component-identical for connected-components/keep-list "
-            "consumers, NOT the complete pair list). Pass edges='pairs' "
-            "to force exact pairwise output, or edges='star' to silence "
-            "this warning.",
-            stacklevel=3,
-        )
+        _warn_star(bucket_cols, threshold, stacklevel=4)
     return "star" if hot else "pairs"
+
+
+def _warn_star(bucket_cols: list[str], threshold: int,
+               stacklevel: int) -> None:
+    """The warning of every ``edges="auto"`` that resolves to star."""
+    import warnings
+
+    # the flip is a data-dependent OUTPUT change on *_pairs-named
+    # generators (star edges, not the complete pair list) — make it
+    # loud so callers who need exact pairwise semantics pin
+    # edges="pairs" (ADVICE r9)
+    warnings.warn(
+        f"edges='auto' resolved to 'star': a bucket on {bucket_cols} "
+        f"exceeds {threshold} members, so the complete all-pairs "
+        "list would be quadratic. Emitting bucket-min star edges "
+        "(component-identical for connected-components/keep-list "
+        "consumers, NOT the complete pair list). Pass edges='pairs' "
+        "to force exact pairwise output, or edges='star' to silence "
+        "this warning.",
+        stacklevel=stacklevel,
+    )
 
 
 def bucket_star_edges(
@@ -658,7 +668,7 @@ def _cc_star(canon: DataFrame, max_iter: int) -> DataFrame:
 
 def _cc_unionfind(canon0: DataFrame) -> DataFrame:
     """Exact connected components for SMALL edge sets (the ``auto``
-    route at or under ``_CC_SMALL_EDGES`` rows, checked by the caller's
+    route at or under ``_DRIVER_MAX_ROWS`` rows, checked by the caller's
     count): ONE bounded collect (≤ 64k canonical edges ≈ 1 MB) and a
     driver-side union-find, instead of O(diameter) iterative rounds.
 
@@ -715,10 +725,15 @@ def _cc_unionfind(canon0: DataFrame) -> DataFrame:
     )
 
 
-# edge sets at or below this size route to the driver union-find in
-# "auto" mode: one ~1 MB bounded collect beats ANY number of iterative
-# rounds, and star contraction still owns everything larger
-_CC_SMALL_EDGES = 65536
+#: the driver-side bound of this module: an edge set of at most this
+#: many rows routes to the driver union-find in "auto" mode (one ~1 MB
+#: bounded collect beats ANY number of iterative rounds; star
+#: contraction still owns everything larger), and an embedding corpus
+#: of at most this many rows finds its near-dups in memory
+#: (``embedding_near_dups_lsh``; measured on 64-d clustered vectors at
+#: local[4] with edges="pairs": 6.8 s in memory vs 500.7 s distributed
+#: at 65,536 rows, plans/r19/README.md)
+_DRIVER_MAX_ROWS = 65536
 
 
 def dedup_clusters(
@@ -773,7 +788,7 @@ def dedup_clusters(
         return child.unionByName(roots)
 
     if algorithm == "star" or (
-        algorithm == "auto" and canon0.count() > _CC_SMALL_EDGES
+        algorithm == "auto" and canon0.count() > _DRIVER_MAX_ROWS
     ):
         return _finish(_cc_star(canon, max_iter))
 
@@ -908,19 +923,19 @@ def similarity_join(
     cos).
 
     Pass ``dim`` when the caller knows the vector dimension (a
-    Collection always does) — the ``first()`` fallback costs one Spark
-    job per invocation (ADVICE r5). ``hasher="gemm"`` swaps the bucket
+    Collection always does) — the ``fsutil.infer_dim`` fallback (the
+    first non-null vector's length) costs one Spark job per invocation
+    (ADVICE r5). ``hasher="gemm"`` swaps the bucket
     expressions for the MultiSignLSH GEMM kernel (identical buckets,
     one matmul per Arrow batch — the big-corpus hash path).
     """
+    from kowari_spark.fsutil import infer_dim, scan_parallelism
     from kowari_spark.functions.vector import magnitude
 
     if dim is None:
-        dim = len(left.select(vec_col).first()[0])
+        dim = infer_dim(left, vec_col)
     # spread few-split scans before the per-row hash pass (guide §2.5);
     # no-op at scale, value-safe (per-row hashing + set-shaped output)
-    from kowari_spark.fsutil import scan_parallelism
-
     left = scan_parallelism(left.select(F.col(left_id), F.col(vec_col)))
     right = scan_parallelism(right.select(F.col(right_id), F.col(vec_col)))
     buckets = _sign_buckets_col(vec_col, dim, num_planes, num_tables,
@@ -962,6 +977,106 @@ def similarity_join(
     )
 
 
+def _near_dups_in_memory(
+    df: DataFrame,
+    threshold: float,
+    num_planes: int,
+    num_tables: int,
+    seed: int,
+    id_col: str,
+    vec_col: str,
+    round_to: int | None,
+    dim: int | None,
+    hasher: str,
+    edges: str,
+) -> DataFrame | None:
+    """``embedding_near_dups_lsh`` on the driver, over the rows
+    ``fsutil.collect_vectors`` returns for at most ``_DRIVER_MAX_ROWS``
+    rows. Returns None — the caller then runs the distributed plan —
+    when that collect does, and for the other input the distributed
+    plan may treat differently: a vector that is not ``dim`` long,
+    duplicate or non-integral/non-string ids, a squared norm that
+    overflows or underflows (the SQL division would give NaN or null),
+    or more than ``HNSW.BEAM_MAX_EDGES`` verified pairs.
+
+    Every step repeats one statement of the distributed plan with the
+    same arithmetic, so the rows are identical (pinned by
+    tests/test_text_dedup.py::test_near_dups_in_memory_parity):
+    buckets from ``MultiSignLSH.buckets_local`` (the hasher's exact
+    numpy twin), "auto" edges from the exact bucket sizes with
+    ``resolve_edges``' rule, candidates per (table, bucket) — all
+    pairs, or member ↔ bucket-min like ``bucket_star_edges`` — scored
+    by ``_cosine_pairs`` against norms folded like ``magnitude``, and
+    pairs deduplicated across tables."""
+    import numpy as np
+    from pyspark.sql import types as T
+
+    from kowari_spark.fsutil import collect_vectors, local_df
+    from kowari_spark.operators.hnsw import HNSW
+    from kowari_spark.operators.lsh import MultiSignLSH
+
+    field = df.schema[id_col]
+    if not isinstance(field.dataType, (T.IntegralType, T.StringType)):
+        return None  # only these order identically in Python and Spark
+    got = collect_vectors(df.select(id_col, vec_col), _DRIVER_MAX_ROWS)
+    if got is None:
+        return None
+    rows, V = got
+    n, width = V.shape
+    ids = [r[0] for r in rows]
+    if (dim is not None and width != dim) or len(set(ids)) != n:
+        return None
+    # position == id rank: bucket mins and id_a < id_b are positional
+    order = sorted(range(n), key=ids.__getitem__)
+    ids = [ids[i] for i in order]
+    V = V[order]
+    sq = np.zeros(n)
+    for j in range(width):  # magnitude's fold, left to right
+        sq = sq + V[:, j] * V[:, j]
+    tiny = np.finfo(np.float64).tiny
+    if not np.isfinite(sq).all() or ((sq > 0.0) & (sq < tiny)).any():
+        return None
+    nn = np.sqrt(sq)
+
+    buckets = MultiSignLSH(width, num_planes, num_tables, seed,
+                           hasher).buckets_local(V)
+    groups = []
+    for t in range(num_tables):
+        _, inv, size = np.unique(buckets[:, t], return_inverse=True,
+                                 return_counts=True)
+        by_bucket = np.argsort(inv, kind="stable")  # id order inside
+        groups += np.split(by_bucket, np.cumsum(size)[:-1])
+    if edges == "auto":
+        edges = "pairs"
+        if any(len(g) > _AUTO_STAR_BUCKET for g in groups):
+            _warn_star(["__tbl", "bucket"], _AUTO_STAR_BUCKET, stacklevel=4)
+            edges = "star"
+
+    budget = HNSW.BEAM_MAX_EDGES
+    keys, cos = [np.zeros(0, dtype=np.int64)], [np.zeros(0)]
+    for g in groups:
+        if len(g) < 2:
+            continue
+        got = _cosine_pairs(V[g], nn[g], threshold, round_to,
+                            star=edges == "star", max_pairs=budget)
+        if got is None:
+            return None
+        ia, ib, c = got
+        budget -= len(ia)
+        keys.append(g[ia] * n + g[ib])
+        cos.append(c)
+    keys, first = np.unique(np.concatenate(keys), return_index=True)
+    cos = np.concatenate(cos)[first]
+    out = [(ids[k // n], ids[k % n], c)
+           for k, c in zip(keys.tolist(), cos.tolist())]
+    schema = T.StructType([
+        T.StructField("id_a", field.dataType, field.nullable),
+        T.StructField("id_b", field.dataType, field.nullable),
+        T.StructField("cos", T.DoubleType()),
+    ])
+    return local_df(df.sparkSession, out, schema)
+
+
 def embedding_near_dups_lsh(
     df: DataFrame,
     threshold: float,
@@ -977,14 +1092,28 @@ def embedding_near_dups_lsh(
 ) -> DataFrame:
     """Approximate near-dup via sign-LSH OR-construction: ``num_tables``
     independent plane sets; a pair becomes a candidate when it collides
-    in ANY table (recall 1-(1-p^planes)^tables, p = 1 - θ/π). Each
-    table's join shuffles by bucket, so candidate pairs only form inside
-    buckets — never the n² explosion. This is the 100 TB path; the exact
-    variant above is the oracle baseline.
+    in ANY table (recall 1-(1-p^planes)^tables, p = 1 - θ/π), and every
+    candidate is verified by its exact cosine (rounded to ``round_to``)
+    against ``threshold``. Output: (id_a, id_b, cos), id_a < id_b.
 
-    Pass ``dim`` when known (a Collection always knows) — the
-    ``first()`` fallback costs one Spark job per invocation (ADVICE
-    r5). ``hasher="gemm"`` hashes with the MultiSignLSH GEMM kernel
+    Two executions of one algorithm, chosen by the input alone:
+
+    - bounded: one row count capped at ``_DRIVER_MAX_ROWS`` + 1 rows;
+      when the rows fit, one collect of (id, vector), and
+      ``_near_dups_in_memory`` hashes, buckets and scores them in
+      numpy and returns the identical rows through ``fsutil.local_df``
+      — two Spark jobs, whatever the arguments;
+    - distributed: every other case — a larger corpus, or input the
+      in-memory path declines — runs the plan below. Each table's join
+      shuffles by bucket, so candidate pairs only form inside buckets
+      — never the n² explosion — and candidates are verified by the
+      SQL cosine fold. This is the 100 TB path; ``embedding_near_dups``
+      is the exact oracle baseline.
+
+    Pass ``dim`` when known (a Collection always knows) — on the
+    distributed plan the ``fsutil.infer_dim`` fallback (the first
+    non-null vector's length) costs one Spark job (ADVICE r5).
+    ``hasher="gemm"`` hashes with the MultiSignLSH GEMM kernel
     (identical buckets, one matmul per Arrow batch).
 
     ``edges="star"`` verifies only member↔bucket-min candidates (O(B)
@@ -992,13 +1121,28 @@ def embedding_near_dups_lsh(
     100k-copy boilerplate image/doc family puts them all in ONE bucket
     per table): every surviving edge still passes the exact cosine
     threshold, with the verified-variant component-splitting trade
-    documented in the module docstring. ``"auto"`` (default) probes the
-    (table, bucket) sizes and stays on "pairs" until one could go
-    quadratic — pin "pairs" when the complete verified pair list is the
+    documented in the module docstring. ``"auto"`` (default) stays on
+    "pairs" until some (table, bucket) holds more than 1,024 rows —
+    a bounded probe on the distributed plan, the exact bucket sizes in
+    memory — pin "pairs" when the complete verified pair list is the
     contract."""
     _check_edges(edges)
+    bound = _DRIVER_MAX_ROWS
+    # vectors are collected only for a corpus that fits. The size check
+    # collects zero columns under the same limit: one job and no
+    # shuffle, where limit().count() adds a single-partition exchange
+    if bound > 0 and len(df.select().limit(bound + 1).collect()) <= bound:
+        pairs = _near_dups_in_memory(
+            df, threshold, num_planes, num_tables, seed, id_col, vec_col,
+            round_to, dim, hasher, edges,
+        )
+        if pairs is not None:
+            return pairs
+
+    from kowari_spark.fsutil import infer_dim, scan_parallelism
+
     if dim is None:
-        dim = len(df.select(vec_col).first()[0])
+        dim = infer_dim(df, vec_col)
     # all tables' buckets in ONE pass over the data: posexplode the
     # per-table bucket array, then a single (table, bucket) self-join —
     # instead of num_tables scans + joins + a union
@@ -1007,8 +1151,6 @@ def embedding_near_dups_lsh(
     # few-split scans serialize the T*p plane-dot hash pass in one task
     # (guide §2.5); no-op at scale, value-safe (per-row hashing, pair
     # outputs are set-shaped)
-    from kowari_spark.fsutil import scan_parallelism
-
     df = scan_parallelism(df.select(F.col(id_col), F.col(vec_col)))
     # lazy checkpoint: the bucketed relation feeds the auto probe AND
     # both self-join sides — hash once (matters for the GEMM hasher)
@@ -1172,6 +1314,84 @@ def winnow_pairs(
 
 # -- semantic dedup (SemDeDup) ----------------------------------------------
 
+def _cosine_pairs(V, nn, threshold: float, round_to: int | None,
+                  star: bool = False, max_pairs: int | None = None):
+    """Position pairs (ia, ib, cos), ia < ib, among the rows of ``V``
+    (id-ordered, ``nn`` their norms) whose cosine — rounded HALF_UP to
+    ``round_to`` — is at least ``threshold``: every pair, or with
+    ``star`` each row against row 0 (the group's min id). The numpy
+    core of every GEMM pair scorer; None once more than ``max_pairs``
+    pairs pass.
+
+    The GEMM only SELECTS candidates, with a margin wider than its
+    ~d·eps float error, one block of rows at a time: no block holds
+    more than ``HNSW.BEAM_MAX_EDGES`` scores, so memory is O(block·B),
+    never B×B (star needs one GEMV). Every candidate is then
+    re-scored with the exact sequential (x·y) fold and decimal HALF_UP
+    rounding of the SQL cosine (``similarity_expr``), so the pairs and
+    values are the exact cosine's."""
+    import numpy as np
+
+    from kowari_spark.numerics import round_half_up
+    from kowari_spark.operators.hnsw import HNSW
+
+    n = len(V)
+    # a rounded cos >= t implies the raw cos >= t - 0.5*10^-round_to;
+    # widen by 1e-9 (>> the GEMM's accumulated float error at any sane
+    # dimension) so no pair over the threshold can escape selection
+    floor = threshold - 1e-9 - (
+        0.5 * 10.0 ** (-round_to) if round_to is not None else 0.0
+    )
+    VT = np.ascontiguousarray(V.T)
+
+    def exact(ia, ib):
+        # accumulate dimension by dimension (one vectorized op per
+        # dim): the SAME sequential left fold the SQL cosine runs, so
+        # each value is bit-identical to aggregate(zip_with)
+        if not len(ia):
+            return ia, ib, np.zeros(0)
+        acc = np.zeros(len(ia), dtype=np.float64)
+        for d in range(len(VT)):
+            acc += VT[d, ia] * VT[d, ib]
+        zero = (nn[ia] == 0.0) | (nn[ib] == 0.0)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = np.where(zero, 0.0, acc / (nn[ia] * nn[ib]))
+        if round_to is not None:
+            cos = np.fromiter(
+                (round_half_up(float(c), round_to) + 0.0 for c in cos),
+                dtype=np.float64, count=len(cos),
+            )
+        keep = cos >= threshold
+        return ia[keep], ib[keep], cos[keep]
+
+    if star:
+        ib = np.arange(1, n, dtype=np.int64)
+        denom = nn[ib] * nn[0]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            c0 = np.where(denom == 0.0, 0.0, (V[ib] @ V[0]) / denom)
+        ib = ib[c0 >= floor]
+        blocks = [exact(np.zeros(len(ib), dtype=np.int64), ib)]
+    else:
+        blocks, kept = [], 0
+        step = max(1, HNSW.BEAM_MAX_EDGES // max(n, 1))
+        for i0 in range(0, max(n, 1), step):
+            i1 = min(n, i0 + step)
+            denom = np.outer(nn[i0:i1], nn[i0:])
+            with np.errstate(divide="ignore", invalid="ignore"):
+                C = np.where(denom == 0.0, 0.0,
+                             (V[i0:i1] @ VT[:, i0:]) / denom)
+            r, c = np.nonzero(C >= floor)
+            upper = c > r  # column i0+c, row i0+r
+            blocks.append(exact(r[upper] + i0, c[upper] + i0))
+            kept += len(blocks[-1][0])
+            if max_pairs is not None and kept > max_pairs:
+                return None
+    ia, ib, cos = (np.concatenate(x) for x in zip(*blocks))
+    if max_pairs is not None and len(ia) > max_pairs:
+        return None
+    return ia, ib, cos
+
+
 def _semantic_pairs_gemm(
     normed: DataFrame,
     threshold: float,
@@ -1180,17 +1400,13 @@ def _semantic_pairs_gemm(
     round_to: int | None,
     edges: str = "pairs",
 ) -> DataFrame:
-    """Cell-local GEMM pair scorer: each cluster's pairwise cosine
-    matrix is ONE numpy V·Vᵀ inside ``applyInPandas`` — a per-pair
+    """Cell-local GEMM pair scorer: each cluster's pairs score in
+    ``_cosine_pairs`` inside ``applyInPandas`` — a per-pair
     interpreted expression fold is the bottleneck at scale (the same
     Python/JVM boundary the LSH GEMM hasher and HNSW GEMM refine sit
-    behind). The GEMM only SELECTS candidates (with a margin wider than
-    its ~d·eps float error); every candidate is then re-scored with the
-    exact sequential (x·y) fold and decimal HALF_UP rounding of the SQL
-    cosine (``similarity_expr``), so the emitted (id_a, id_b, cos) set
-    is the exact cosine's (checked row for row against the contract's
-    DuckDB replay). Only the skinny surviving pairs ever leave the
-    worker.
+    behind). The emitted (id_a, id_b, cos) set is the exact cosine's
+    (checked row for row against the contract's DuckDB replay). Only
+    the skinny surviving pairs ever leave the worker.
 
     ``edges="star"`` scores member↔cell-min only: one GEMV per cell —
     O(B·d) compute and O(B) candidate memory instead of the pair
@@ -1198,14 +1414,8 @@ def _semantic_pairs_gemm(
     import numpy as np
     import pandas as pd
 
-    from kowari_spark.numerics import round_half_up
-
     id_type = normed.schema[id_col].dataType.simpleString()
     out_schema = f"id_a {id_type}, id_b {id_type}, cos double"
-    # a rounded cos >= t implies the raw cos >= t - 0.5*10^-round_to;
-    # widen by 1e-9 (>> the GEMM's accumulated float error at any sane
-    # dimension) so no pair over the threshold can escape selection
-    margin = (0.5 * 10.0 ** (-round_to) if round_to is not None else 0.0) + 1e-9
     star = edges == "star"
 
     def score(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1213,44 +1423,8 @@ def _semantic_pairs_gemm(
         ids = pdf[id_col].to_numpy()
         V = np.stack(pdf[vec_col].to_list()).astype(np.float64)
         nn = pdf["__n"].to_numpy(dtype=np.float64)
-        if star:
-            # row 0 is the cell-min id after the sort: one GEMV against
-            # it, never the BxB matrix
-            ia = np.zeros(max(len(ids) - 1, 0), dtype=np.int64)
-            ib = np.arange(1, len(ids), dtype=np.int64)
-            denom = nn[ib] * nn[0]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                c0 = np.where(denom == 0.0, 0.0, (V[ib] @ V[0]) / denom)
-            sel = c0 >= threshold - margin
-        else:
-            denom = np.outer(nn, nn)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                C = np.where(denom == 0.0, 0.0, (V @ V.T) / denom)
-            ia, ib = np.triu_indices(len(ids), 1)
-            sel = C[ia, ib] >= threshold - margin
-        ia, ib = ia[sel], ib[sel]
-        if len(ia) == 0:
-            return pd.DataFrame({"id_a": ids[:0], "id_b": ids[:0],
-                                 "cos": np.zeros(0)})
-        # exact rescore of the candidates: accumulate dimension-by-
-        # dimension (one vectorized elementwise op per dim), which is
-        # the SAME sequential left fold the SQL cosine runs —
-        # each candidate's value is bit-identical to aggregate(zip_with)
-        acc = np.zeros(len(ia), dtype=np.float64)
-        for d in range(V.shape[1]):
-            acc += V[ia, d] * V[ib, d]
-        dsel = nn[ia] * nn[ib]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where((nn[ia] == 0.0) | (nn[ib] == 0.0), 0.0, acc / dsel)
-        if round_to is not None:
-            cos = np.fromiter(
-                (round_half_up(float(c), round_to) + 0.0 for c in cos),
-                dtype=np.float64, count=len(cos),
-            )
-        keep = cos >= threshold
-        return pd.DataFrame(
-            {"id_a": ids[ia[keep]], "id_b": ids[ib[keep]], "cos": cos[keep]}
-        )
+        ia, ib, cos = _cosine_pairs(V, nn, threshold, round_to, star)
+        return pd.DataFrame({"id_a": ids[ia], "id_b": ids[ib], "cos": cos})
 
     return normed.groupBy("list_id").applyInPandas(score, out_schema)
 

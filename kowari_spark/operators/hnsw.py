@@ -66,6 +66,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kowari_spark.fsutil import collect_vectors, infer_dim
 from kowari_spark.functions.vector import _BUILTIN_METRICS
 from kowari_spark.operators.topk import _score, _rounded
 
@@ -151,14 +152,6 @@ class HNSW:
     # -- build -------------------------------------------------------------
 
     @staticmethod
-    def _infer_dim(df: DataFrame, vec_col: str) -> int:
-        """The first non-null vector's length: one Spark job."""
-        row = df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
-        if row is None:
-            raise ValueError(f"no non-null {vec_col!r} vector to size the graph")
-        return len(row[0])
-
-    @staticmethod
     def _graph_nodes(df: DataFrame, id_col: str, vec_col: str,
                      dim: int) -> DataFrame:
         """The rows that are graph nodes: a null vector, or one that is
@@ -207,12 +200,12 @@ class HNSW:
 
         Only graph nodes take part (``_graph_nodes``). Pass ``dim`` when
         the caller knows the vector dimension (a Collection always
-        does) — the ``_infer_dim`` fallback costs one Spark job per
+        does) — the ``fsutil.infer_dim`` fallback costs one Spark job per
         build (ADVICE r5, same pattern as dedup)."""
         from kowari_spark.operators.lsh import SignLSH
 
         if dim is None:
-            dim = self._infer_dim(df, vec_col)
+            dim = infer_dim(df, vec_col)
         leveled = assign_levels(self._graph_nodes(df, id_col, vec_col, dim),
                                 id_col, self.seed, self.max_level)
         exploded = self._exploded_levels(leveled, id_col, vec_col)
@@ -499,42 +492,20 @@ class HNSW:
                                vec_col: str, max_nodes: int,
                                graph: bool = False, dim: int | None = None):
         """(ids, V, levels) of ``df``'s nodes in collect order, with
-        their ``assign_levels`` level: one collect capped at max_nodes +
-        1 rows — the bounded node input of both driver-side paths (the
-        query beam and the in-memory build). None when the rows do not
-        fit (none, or more than max_nodes), an id or vector is null,
-        the vectors are ragged (the distributed fold's zip_with
-        truncation is not replicated) or an entry is non-finite (NaN
-        sorts last in Python keys but first in Spark's descending
-        double order). With ``graph`` (the build), rows that are not
-        graph nodes are dropped first, as ``_graph_nodes`` drops them;
-        ``dim`` None is inferred from the collected rows the way
-        ``_infer_dim`` infers it, with no Spark job."""
+        their ``assign_levels`` level, through ``fsutil.collect_vectors``
+        — the bounded collect and row gate of every driver-side path.
+        With ``graph`` (the build), rows that are not graph nodes are
+        dropped first, as ``_graph_nodes`` drops them."""
         import numpy as np
 
-        if max_nodes <= 0:
-            return None
-        rows = (
+        got = collect_vectors(
             assign_levels(df.select(id_col, vec_col), id_col, self.seed,
-                          self.max_level)
-            .limit(max_nodes + 1)
-            .collect()
+                          self.max_level),
+            max_nodes, drop=graph, dim=dim,
         )
-        if len(rows) > max_nodes:
+        if got is None:
             return None
-        if graph:
-            if dim is None:
-                dim = next((len(r[1]) for r in rows if r[1] is not None),
-                           None)
-            rows = [r for r in rows if r[1] is not None and len(r[1]) == dim]
-        if not rows or any(r[0] is None or r[1] is None for r in rows):
-            return None
-        width = len(rows[0][1])
-        if any(len(r[1]) != width for r in rows):
-            return None
-        V = np.asarray([r[1] for r in rows], dtype=np.float64)  # null -> nan
-        if not np.isfinite(V).all():
-            return None
+        rows, V = got
         levels = np.asarray([r[2] for r in rows], dtype=np.int64)
         return [r[0] for r in rows], V, levels
 
@@ -546,13 +517,12 @@ class HNSW:
         rows. Returns None — the caller then runs the distributed plan
         — when that collect does, and for the other input the
         distributed plan may treat differently: duplicate or
-        non-integral/non-string ids, or a score or LSH projection that
-        overflows to NaN.
+        non-integral/non-string ids, or a score that overflows to NaN.
 
         Every step repeats one statement of the distributed plan with
         the same arithmetic, so the edge set is identical (pinned by
         tests/test_hnsw.py::test_build_in_memory_parity): sign-LSH
-        buckets fold ``x_j·p_j`` in dimension order like
+        buckets come from ``SignLSH.buckets_fold``, the numpy twin of
         ``SignLSH.bucket_sql``; pair scores come from the same
         ``_pair_topm`` kernel, called once per (level, table, bucket)
         group and, in each refine round, once per (level, mid) group;
@@ -609,12 +579,8 @@ class HNSW:
 
         # candidate pass: one kernel call per (level, table, bucket)
         for t in range(self.num_tables):
-            planes = SignLSH(dim=width, num_planes=self.num_planes,
-                             seed=self.seed + t).planes
-            proj = fold(lambda j: V[:, j, None] * planes[None, :, j])
-            if np.isnan(proj).any():
-                return None  # Spark orders NaN above 0.0; numpy does not
-            bucket = ((proj >= 0.0) << np.arange(self.num_planes)).sum(axis=1)
+            bucket = SignLSH(dim=width, num_planes=self.num_planes,
+                             seed=self.seed + t).buckets_fold(V)
             for level in range(top + 1):
                 layer = np.flatnonzero(levels >= level)
                 for b in np.unique(bucket[layer]):
@@ -722,7 +688,7 @@ class HNSW:
                 return edges
 
         if dim is None:
-            dim = self._infer_dim(df, vec_col)
+            dim = infer_dim(df, vec_col)
         df = self._graph_nodes(df, id_col, vec_col, dim)
         leveled = assign_levels(df, id_col, self.seed, self.max_level)
         exploded = self._exploded_levels(leveled, id_col, vec_col)

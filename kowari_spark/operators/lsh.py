@@ -156,6 +156,18 @@ class SignLSH:
             acc = acc + F.when(d >= 0.0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
         return acc
 
+    def buckets_fold(self, V: np.ndarray) -> np.ndarray:
+        """numpy twin of ``bucket_sql`` over the rows of ``V``: each
+        plane's dot folds ``x_j·p_j`` left to right in dimension order,
+        as the SQL ``aggregate`` does, so every bucket is bit-identical.
+        A projection that overflows to NaN sets its bit, because Spark
+        orders NaN above 0.0."""
+        acc = np.zeros((len(V), self.num_planes))
+        for j in range(V.shape[1]):
+            acc = acc + V[:, j, None] * self.planes[None, :, j]
+        bits = (acc >= 0.0) | np.isnan(acc)
+        return (bits << np.arange(self.num_planes)).sum(axis=1)
+
     def bucket_of(self, vec: Sequence[float]) -> int:
         """Driver-side bucket for a single query vector."""
         v = np.asarray(vec, dtype=np.float64)
@@ -520,19 +532,33 @@ class MultiSignLSH:
         CrossPolytopeLSH's machinery instead."""
         from pyspark.sql.types import ArrayType, LongType
 
-        P = np.concatenate([t.planes for t in self.tables], axis=0)
-        T, p = self.num_tables, self.num_planes
-        weights = (1 << np.arange(p, dtype=np.int64))
+        gemm = self.buckets_gemm
 
         @F.pandas_udf(ArrayType(LongType()))
         def _buckets(vecs: pd.Series) -> pd.Series:
             mat = np.array(vecs.tolist(), dtype=np.float64)
             if mat.size == 0:
                 return pd.Series([], dtype=object)
-            signs = ((mat @ P.T) >= 0.0).reshape(len(mat), T, p)
-            return pd.Series(list((signs * weights).sum(axis=2)))
+            return pd.Series(list(gemm(mat)))
 
         return _buckets
+
+    def buckets_gemm(self, mat: np.ndarray) -> np.ndarray:
+        """(rows × T) buckets of ``mat``'s rows: the signs of one
+        ``mat @ P.T`` GEMM over the stacked planes, packed per table —
+        the kernel of ``buckets_gemm_udf``."""
+        P = np.concatenate([t.planes for t in self.tables], axis=0)
+        T, p = self.num_tables, self.num_planes
+        signs = ((mat @ P.T) >= 0.0).reshape(len(mat), T, p)
+        return (signs * (1 << np.arange(p, dtype=np.int64))).sum(axis=2)
+
+    def buckets_local(self, V: np.ndarray) -> np.ndarray:
+        """(rows × T) buckets of ``V``'s rows on the driver, identical
+        to the configured hasher's Spark column: ``buckets_gemm`` for
+        "gemm", each table's ``SignLSH.buckets_fold`` for "expr"."""
+        if self.hasher == "gemm":
+            return self.buckets_gemm(V)
+        return np.stack([t.buckets_fold(V) for t in self.tables], axis=1)
 
     def _buckets_col(self, vec_col: Column | str) -> Column:
         """The per-table bucket array under the configured hasher."""

@@ -74,18 +74,21 @@ def test_transcoded_ingest_example(spark):
         assert np.array_equal(got, want)
 
 
-def test_pipeline_demo_runs_end_to_end():
+def test_pipeline_demo_runs_end_to_end(tmp_path):
     """The training-data pipeline walkthrough executes at sf0.001 —
     every print line lands (subprocess: the demo stops its own Spark
-    session, which must not kill the shared test fixture)."""
+    session, which must not kill the shared test fixture) — and leaves
+    none of its layout directories behind in the temporary directory."""
     import subprocess
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = subprocess.run(
         [sys.executable, os.path.join(repo, "examples", "pipeline_demo.py")],
         capture_output=True, text=True, timeout=540, cwd=repo,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
     )
     assert out.returncode == 0, out.stderr[-2000:]
+    assert not list(tmp_path.glob("kowari_demo_*"))
     for marker in (
         "language distribution:", "dedup:", "incremental dedup:",
         "incremental vector dedup:", "curation:", "mixture:",

@@ -141,30 +141,204 @@ def test_embedding_near_dups_exact_vs_lsh(spark, embeddings):
         assert len(a) / len(e) >= 0.2
 
 
-def test_near_dup_dim_param_skips_inference_job(spark, embeddings):
-    """Passing dim= AND an explicit edges mode makes plan construction
-    job-free (the first() fallback costs one Spark job per invocation —
-    ADVICE r5; the edges="auto" default spends one deliberate bounded
-    probe job — VERDICT r8 #1), with identical results either way."""
-    base = embeddings.limit(150).cache()
-    base.count()
+def _jobs(spark, group, fn):
+    """(fn(), the number of Spark jobs it ran)."""
     sc = spark.sparkContext
-    group = "neardup-dim-probe"
-    sc.setJobGroup(group, "plan-time job probe", interruptOnCancel=False)
+    sc.setJobGroup(group, "job probe", interruptOnCancel=False)
     try:
-        withdim = embedding_near_dups_lsh(
-            base, threshold=0.3, id_col="vec_id", round_to=6, dim=64,
-            edges="pairs",
-        )
+        out = fn()
     finally:
         sc.setJobGroup(None, None)
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
-    inferred = embedding_near_dups_lsh(
-        base, threshold=0.3, id_col="vec_id", round_to=6
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_near_dup_dim_param_skips_inference_job(spark, embeddings,
+                                                monkeypatch):
+    """On the distributed plan (forced by a driver bound of 0), passing
+    dim= AND an explicit edges mode makes plan construction job-free
+    (the dimension inference costs one Spark job — ADVICE r5; the
+    edges="auto" default spends one deliberate bounded probe job —
+    VERDICT r8 #1). A corpus under the bound is answered in memory
+    instead: construction plus collect() runs at most 2 Spark jobs
+    (a bounded row count and one collect), with and without dim, and
+    returns the same rows."""
+    from kowari_spark.operators import dedup
+
+    base = embeddings.limit(150).cache()
+    base.count()
+    with monkeypatch.context() as mp:
+        mp.setattr(dedup, "_DRIVER_MAX_ROWS", 0)
+        withdim, jobs = _jobs(spark, "neardup-dim-probe", lambda: (
+            embedding_near_dups_lsh(
+                base, threshold=0.3, id_col="vec_id", round_to=6, dim=64,
+                edges="pairs",
+            )))
+        assert jobs == 0
+        want = sorted(map(tuple, withdim.collect()))
+    assert want
+    for dim in (64, None):
+        got, jobs = _jobs(spark, f"neardup-bounded-{dim}", lambda: sorted(
+            map(tuple, embedding_near_dups_lsh(
+                base, threshold=0.3, id_col="vec_id", round_to=6, dim=dim,
+            ).collect())))
+        assert jobs <= 2, (dim, jobs)
+        assert got == want
+
+
+@pytest.mark.parametrize("op", ["near_dups", "similarity_join"])
+def test_null_first_vector_infers_dim(spark, monkeypatch, op):
+    """The distributed plans (driver bound forced to 0) infer the
+    dimension from the first NON-null vector: a null first row no
+    longer crashes the inference, and (b, c) pair up as they do with
+    dim=2."""
+    from kowari_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_DRIVER_MAX_ROWS", 0)
+    df = spark.createDataFrame(
+        [("a", None), ("b", [1.0, 0.0]), ("c", [1.0, 0.001])],
+        "id string, embedding array<double>",
     )
-    assert sorted(map(tuple, withdim.collect())) == sorted(
-        map(tuple, inferred.collect())
-    )
+    if op == "near_dups":
+        out = dedup.embedding_near_dups_lsh(df, 0.9, edges="pairs")
+        want = {("b", "c")}
+    else:
+        out = dedup.similarity_join(df, df, 0.9)
+        want = {("b", "b"), ("b", "c"), ("c", "b"), ("c", "c")}
+    assert {tuple(r[:2]) for r in out.collect()} == want
+
+
+@pytest.fixture(scope="module")
+def near_dup_base(embeddings):
+    base = embeddings.select("vec_id", "embedding").cache()
+    base.count()
+    return base
+
+
+def _hot_bucket_corpus(spark):
+    """1,100 near-copies of one 8-d vector (one bucket in every table,
+    over the 1,024-row auto bound) plus 100 random vectors."""
+    import numpy as np
+
+    rng = np.random.RandomState(0)
+    hub = rng.normal(size=8)
+    rows = [(i, (hub + rng.normal(scale=1e-6, size=8)).tolist())
+            for i in range(1100)]
+    rows += [(2000 + i, rng.normal(size=8).tolist()) for i in range(100)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def _degraded_rows(spark, base):
+    """Rows the in-memory near-dup path does not replicate, each
+    appended to a clean 40-row slice of ``base``."""
+    vec_type = base.schema["embedding"].dataType.simpleString()
+    clean = base.orderBy("vec_id").limit(40)
+    first = clean.first()["vec_id"]
+    return clean, {
+        name: spark.range(1).select(
+            F.expr(vid).cast("long").alias("vec_id"),
+            F.expr(f"CAST({vec} AS {vec_type})").alias("embedding"),
+        )
+        for name, vid, vec in (
+            ("null id", "NULL", "array_repeat(0.5D, 64)"),
+            ("null vector", "100000", "NULL"),
+            ("short vector", "100001", "array(1.0D, 2.0D)"),
+            ("NaN", "100002", "array_union(array(double('NaN')), "
+                              "array_repeat(0.5D, 63))"),
+            ("duplicate id", str(first), "array_repeat(0.5D, 64)"),
+        )
+    }
+
+
+@pytest.mark.parametrize("case", [
+    dict(edges="pairs", round_to=6, hasher="expr"),
+    dict(edges="star", round_to=None, hasher="gemm"),
+    dict(edges="auto", round_to=6, hasher="gemm"),
+    dict(edges="auto", round_to=None, hasher="expr"),
+    "hot bucket", "empty", "degraded",
+], ids=["pairs-6-expr", "star-None-gemm", "auto-6-gemm", "auto-None-expr",
+        "hot-bucket", "empty", "degraded"])
+def test_near_dups_in_memory_parity(spark, near_dup_base, monkeypatch,
+                                    case):
+    """A corpus under the driver bound is answered in memory with the
+    distributed plan's rows and schema, EXACTLY (the distributed side
+    forced by a bound of 0): every edges mode, with and without
+    rounding, under both hashers; a bucket over 1,024 rows resolves
+    "auto" to star with the same warning on both paths; an empty input
+    gives no row. A degraded corpus (null id, null vector, wrong
+    length, NaN, duplicate id — each alone declined in memory, as is a
+    result over the verified-pair cap) takes the distributed plan."""
+    from kowari_spark.operators import dedup
+    from kowari_spark.operators.hnsw import HNSW
+
+    kw = dict(threshold=0.3, round_to=6, id_col="vec_id")
+    df, warns = near_dup_base, False
+    if isinstance(case, dict):
+        kw.update(case)
+    elif case == "hot bucket":
+        df, warns = _hot_bucket_corpus(spark), True
+        kw.update(threshold=0.99)
+    elif case == "empty":
+        df = near_dup_base.limit(0)
+        kw.update(dim=64)
+    else:
+        clean, bad = _degraded_rows(spark, near_dup_base)
+        args = (0.3, 4, 4, 42, "vec_id", "embedding", 6, None, "expr",
+                "pairs")
+        assert dedup._near_dups_in_memory(clean, *args).count() > 0
+        for name, row in bad.items():
+            got = dedup._near_dups_in_memory(clean.unionByName(row), *args)
+            assert got is None, name
+        with monkeypatch.context() as mp:
+            mp.setattr(HNSW, "BEAM_MAX_EDGES", 0)
+            assert dedup._near_dups_in_memory(clean, *args) is None
+        df = clean
+        for row in bad.values():
+            df = df.unionByName(row)
+
+    plans = []
+    resolve = dedup.resolve_edges
+    monkeypatch.setattr(dedup, "resolve_edges",
+                        lambda *a, **k: plans.append(1) or resolve(*a, **k))
+
+    def run():
+        if not warns:
+            return dedup.embedding_near_dups_lsh(df, **kw)
+        with pytest.warns(UserWarning, match="resolved to 'star'"):
+            return dedup.embedding_near_dups_lsh(df, **kw)
+
+    local = run()
+    assert len(plans) == (1 if case in ("empty", "degraded") else 0)
+    monkeypatch.setattr(dedup, "_DRIVER_MAX_ROWS", 0)
+    dist = run()
+    assert local.schema == dist.schema
+
+    def collected(out):  # a NaN vector's pairs score NaN; Spark keeps them
+        return sorted(tuple("NaN" if v != v else v for v in r)
+                      for r in out.collect())
+
+    rows = collected(local)
+    assert rows == collected(dist)
+    if case == "hot bucket":
+        assert len(rows) >= 1099
+    elif case == "empty":
+        assert rows == []
+    else:
+        assert rows
+
+
+def test_near_dups_in_memory_matches_oracle(spark, near_dup_base, replay):
+    """The in-memory path reproduces, row for row, the DuckDB replay of
+    the embedding_near_dups_lsh contract query."""
+    import __spark_entry__ as entry
+
+    got = embedding_near_dups_lsh(
+        near_dup_base, threshold=0.3, num_planes=entry._NDLSH_PLANES,
+        num_tables=entry._NDLSH_TABLES, seed=7, id_col="vec_id",
+        round_to=6, dim=64, edges="pairs",
+    ).toPandas().sort_values(["id_a", "id_b"])
+    want = replay(entry._oracle_embedding_near_dups_lsh())
+    assert len(got) == len(want) > 0
+    assert got.values.tolist() == want.values.tolist()
 
 
 def test_similarity_join_two_tables(spark, embeddings):

@@ -772,6 +772,20 @@ def _run_suite(
         ).count())
         rec("doc_mixture_sample", s, r)
 
+    if want("embedding_near_dups_lsh"):
+        # perfbench ann_serve's near-dup call (threshold 0.98, 8 planes,
+        # 4 tables, dim 64). A corpus of at most dedup._DRIVER_MAX_ROWS
+        # rows runs in memory (x1, x10); x100 takes the distributed
+        # plan. The jittered copies are near-duplicates of each other,
+        # so pair counts grow with the copy families, as in
+        # semantic_dedup below.
+        from kowari_spark.operators.dedup import embedding_near_dups_lsh
+
+        s, r = timed(lambda: embedding_near_dups_lsh(
+            emb, 0.98, num_planes=8, num_tables=4, id_col="vec_id", dim=64,
+        ).count())
+        rec("embedding_near_dups_lsh", s, r)
+
     if want("semantic_dedup"):
         # SemDeDup at scale: cells must stay task-sized, so n_lists
         # grows with the corpus (sqrt growth like the partitions);
