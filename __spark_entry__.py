@@ -4800,24 +4800,137 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
+#: Validation window bookkeeping, one entry per contract query:
+#: (validated, changed) — the latest round in which the row sat in the
+#: 50-row validation window (the first 50 entries of ``queries()``,
+#: the only rows the contract check replays against the oracle each
+#: round), and the latest round that changed the code it runs (0: not
+#: since round 16). Rounds number this repository's revisions as the
+#: ``plans/rNN`` dumps do. Each round first sets ``validated`` to the
+#: previous round for every row of the previous round's window, then
+#: sets ``changed`` to its own number on each row whose code it changes.
+_VALIDATION = {
+    "collection_mor_delete": (19, 0),
+    "events_hll_p12": (19, 0),
+    "doc_temperature_exact": (19, 0),
+    "doc_bm25_resharded": (19, 0),
+    "nation_set_ops": (19, 0),
+    "customer_strings": (19, 0),
+    "orders_by_month": (19, 0),
+    "doc_dedup_keep_star": (19, 0),
+    "doc_minhash_tuned": (19, 0),
+    "doc_simhash_star": (19, 0),
+    "doc_winnow_star": (19, 0),
+    "doc_bm25_top10": (19, 0),
+    "doc_bm25_batch": (19, 0),
+    "doc_hybrid_rrf": (19, 0),
+    "doc_mixture_sample": (19, 0),
+    "doc_top_bigrams": (19, 0),
+    "doc_surprisal": (19, 0),
+    "doc_dup_spans": (19, 0),
+    "doc_despan": (19, 0),
+    "doc_repetition": (19, 0),
+    "doc_pii_scrub": (19, 0),
+    "events_retention": (19, 0),
+    "embedding_near_dups": (19, 20),
+    "embedding_near_dups_lsh": (19, 20),
+    "embedding_semantic_dedup": (19, 0),
+    "media_pipeline": (19, 0),
+    "media_near_dups": (19, 0),
+    "similarity_join": (19, 20),
+    "knn_cosine_top10": (19, 0),
+    "knn_euclidean_top10": (19, 0),
+    "media_dedup_against": (19, 0),
+    "doc_simhash_keep": (19, 0),
+    "doc_bm25_indexed": (19, 0),
+    "doc_dsir_top": (19, 0),
+    "knn_batch_top5": (19, 0),
+    "lsh_knn_top10": (19, 20),
+    "vector_stats": (19, 0),
+    "knn_manhattan_top10": (19, 0),
+    "knn_quantized_top10": (19, 0),
+    "vector_normalize": (19, 0),
+    "pricing_summary": (19, 0),
+    "revenue_by_nation": (19, 0),
+    "doc_dsir_against": (19, 0),
+    "doc_hybrid_batch_multi": (19, 20),
+    "brand_revenue": (19, 0),
+    "top_customer_per_nation": (19, 0),
+    "events_hourly": (19, 0),
+    "events_sessions": (19, 0),
+    "events_sliding": (19, 0),
+    "customers_without_orders": (19, 0),
+    "events_asof": (13, 0),
+    "doc_bm25_sharded": (14, 0),
+    "events_hll_layout": (14, 0),
+    "events_kmv_layout": (14, 0),
+    "doc_temperature_sample": (14, 0),
+    "doc_vocab_stats": (14, 0),
+    "events_hll_users": (14, 0),
+    "orders_fast_lines": (14, 0),
+    "doc_token_stats": (14, 0),
+    "doc_lang_quality": (14, 0),
+    "doc_exact_dedup": (14, 0),
+    "doc_minhash_pairs": (14, 0),
+    "doc_dup_clusters": (14, 0),
+    "doc_dedup_keep": (14, 0),
+    "doc_text_knn": (14, 0),
+    "doc_simhash_near": (14, 0),
+    "doc_winnow_pairs": (14, 0),
+    "salted_supplier_revenue": (14, 0),
+    "price_quantiles": (14, 0),
+    "doc_dedup_against": (14, 0),
+    "doc_incremental_keep": (14, 0),
+    "doc_simhash_against": (14, 0),
+    "doc_dedup_against_verified": (14, 0),
+    "doc_winnow_against": (14, 0),
+    "embedding_dedup_against": (14, 20),
+    "events_funnel": (14, 0),
+    "doc_split_sample": (14, 0),
+    "doc_pack_chunks": (14, 0),
+    "doc_decontam": (14, 0),
+    "ivfpq_knn": (14, 17),
+    "filtered_lsh_knn": (14, 20),
+    "media_dedup_keep": (14, 0),
+    "pq_knn": (14, 17),
+    "filtered_knn": (14, 0),
+    "lsh_recall_at_10": (14, 20),
+    "lsh_precision_at_10": (14, 20),
+    "hnsw_knn": (14, 18),
+    "cp_knn_top10": (14, 17),
+    "doc_hybrid_indexed": (14, 20),
+    "doc_hybrid_batch": (14, 20),
+    "doc_surprisal_buckets": (14, 0),
+    "doc_source_cap": (14, 0),
+    "embedding_cluster_cap": (14, 0),
+    "doc_semantic_decontam": (14, 0),
+    "ivf_knn": (14, 17),
+    "events_props_stats": (14, 0),
+    "events_kmv_users": (14, 0),
+    "revenue_rollup": (14, 0),
+    "doc_bm25_tombed": (14, 0),
+    "doc_dsir_unlearned": (14, 0),
+    "orders_cube": (14, 0),
+}
+
+
+def _window_order(name: str) -> tuple[int, int]:
+    """Rows changed since their last validation come first, oldest
+    change first; then every other row, least recently validated
+    first. Ties keep the table's order."""
+    validated, changed = _VALIDATION[name]
+    return (0, changed) if changed > validated else (1, validated)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ROTATION POLICY: the driver validates only the FIRST 50 entries
-    # per round (dict order = check order), so rows are ordered by
-    # driver-validation age — never/least-recently driver-validated
-    # first, most-recently-validated last; every row gets a driver row
-    # at least every two rounds. Round 15 front block: the four rows
-    # new this round (collection_mor_delete, events_hll_p12,
-    # doc_temperature_exact, doc_bm25_resharded), then the 47 rows
-    # past round 14's window (judge re-verified 47/47 hash-green via
-    # tools/check_contract.py in the r14 session). Round 14's window
-    # rows follow and return to the front in round 16.
-    return {
-        # -- new this round (never driver-validated)
+    """Every contract query, in validation-window order
+    (``_window_order``): the rows checked first are the ones changed
+    or validated longest ago."""
+    fns = {
         "collection_mor_delete": q_collection_mor_delete,
         "events_hll_p12": q_events_hll_p12,
         "doc_temperature_exact": q_doc_temperature_exact,
         "doc_bm25_resharded": q_doc_bm25_resharded,
-        # -- past round 14's 50-row window (judge-tail-verified r14)
         "nation_set_ops": q_nation_set_ops,
         "customer_strings": q_customer_strings,
         "orders_by_month": q_orders_by_month,
@@ -4865,7 +4978,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_sliding": q_events_sliding,
         "customers_without_orders": q_customers_without_orders,
         "events_asof": q_events_asof,
-        # -- round 14's driver-validated window (return to the front in r16)
         "doc_bm25_sharded": q_doc_bm25_sharded,
         "events_hll_layout": q_events_hll_layout,
         "events_kmv_layout": q_events_kmv_layout,
@@ -4917,6 +5029,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_dsir_unlearned": q_doc_dsir_unlearned,
         "orders_cube": q_orders_cube,
     }
+    if set(fns) != set(_VALIDATION):
+        raise KeyError(
+            f"queries without a _VALIDATION entry: {set(fns) ^ set(_VALIDATION)}"
+        )
+    return {name: fns[name] for name in sorted(fns, key=_window_order)}
 
 
 def oracle_sql() -> dict[str, str]:

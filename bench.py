@@ -170,8 +170,8 @@ def quality_gates(spark, sf_dir) -> dict:
     out = {"recall_lsh_at_10": round(
         mean_metric(recall_at_k(exact, mt_res, 10, id_col="vec_id"), "recall"), 4
     )}
-    qb = queries.select("query_id", F.posexplode(mt.buckets_expr("embedding")).alias("__tbl", "bucket"))
-    bk = base.select(F.col("vec_id").alias("id"), F.posexplode(mt.buckets_expr("embedding")).alias("__tbl", "bucket"))
+    qb = queries.select("query_id", F.posexplode(mt.bucket_col("embedding")).alias("__tbl", "bucket"))
+    bk = base.select(F.col("vec_id").alias("id"), F.posexplode(mt.bucket_col("embedding")).alias("__tbl", "bucket"))
     out["lsh_multi_cand_frac"] = round(
         bk.join(qb, ["__tbl", "bucket"]).select("query_id", "id").distinct().count()
         / (queries.count() * n), 4

@@ -459,7 +459,6 @@ class Collection:
         num_tables: int = 4,
         seed: int = 42,
         round_to: int | None = None,
-        hasher: str = "expr",
         edges: str = "auto",
     ) -> DataFrame:
         """Near-duplicate pairs within the collection (id_a < id_b,
@@ -469,7 +468,6 @@ class Collection:
         (``dedup._DRIVER_MAX_ROWS`` rows), distributed above it, with
         the same rows either way. The collection knows its dimension,
         so the distributed plan runs no inference job (ADVICE r5).
-        ``hasher="gemm"`` takes the big-corpus GEMM hash path;
         ``edges`` defaults to "auto" — a bounded bucket probe keeps the
         exact pairwise mode until a duplicate family could make it
         quadratic, then switches to the star candidate mode
@@ -479,7 +477,7 @@ class Collection:
         return embedding_near_dups_lsh(
             self.df(), threshold, num_planes=num_planes,
             num_tables=num_tables, seed=seed, round_to=round_to,
-            dim=self.dimension, hasher=hasher, edges=edges,
+            dim=self.dimension, edges=edges,
         )
 
     def semantic_dedup(

@@ -206,7 +206,7 @@ class SignLSHIndex(AnnIndex):
         qp = queries.select(
             F.col(query_id_col).alias("query_id"),
             F.explode(
-                self.lsh.probe_buckets_expr(F.col(query_vec_col), self.probes)
+                self.lsh.probe_col(F.col(query_vec_col), self.probes)
             ).alias("bucket"),
         )
         return (

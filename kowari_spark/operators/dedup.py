@@ -826,6 +826,13 @@ def _pair_cosine() -> Column:
     ).otherwise(dot("va", "vb") / (F.col("na") * F.col("nb")))
 
 
+def _kept_cosine(threshold: float) -> Column:
+    """``cos >= threshold`` without NaN: Spark orders NaN above every
+    double, so a vector with a NaN entry would otherwise pair with
+    every row it meets."""
+    return (F.col("cos") >= threshold) & ~F.isnan("cos")
+
+
 def embedding_near_dups(
     df: DataFrame,
     threshold: float,
@@ -855,45 +862,7 @@ def embedding_near_dups(
         a.crossJoin(b)
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", cos.alias("cos"))
-        .filter(F.col("cos") >= threshold)
-    )
-
-
-def _sign_buckets_col(vec_col, dim: int, num_planes: int, num_tables: int,
-                      seed: int, hasher: str):
-    """Per-table sign-LSH bucket array (array<long>) under the chosen
-    hasher. Plane construction — seeds ``seed..seed+T-1`` — matches
-    MultiSignLSH exactly, so ``hasher="gemm"`` reuses its GEMM kernel:
-    one float64 matmul per Arrow batch instead of T·p interpreted
-    aggregate/zip_with folds per row, the measured hash bottleneck of
-    the x1000 scale bench (bucket-for-bucket parity tested there)."""
-    from kowari_spark.operators.lsh import MultiSignLSH, SignLSH
-
-    if hasher == "gemm":
-        ml = MultiSignLSH(dim=dim, num_planes=num_planes,
-                          num_tables=num_tables, seed=seed, hasher="gemm")
-        col = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-        return ml.buckets_gemm_udf()(col)
-    if hasher != "expr":
-        raise ValueError(f"hasher must be expr|gemm, got {hasher!r}")
-    if isinstance(vec_col, str):
-        # one F.expr parse for the whole T-table array (bucket_sql);
-        # the per-plane Column builder costs ~10 py4j roundtrips/plane
-        return F.expr(
-            "array("
-            + ",".join(
-                SignLSH(dim=dim, num_planes=num_planes, seed=seed + t).bucket_sql(
-                    f"`{vec_col}`"
-                )
-                for t in range(num_tables)
-            )
-            + ")"
-        )
-    return F.array(
-        *[
-            SignLSH(dim=dim, num_planes=num_planes, seed=seed + t).bucket_expr(vec_col)
-            for t in range(num_tables)
-        ]
+        .filter(_kept_cosine(threshold))
     )
 
 
@@ -909,7 +878,6 @@ def similarity_join(
     vec_col: str = "embedding",
     round_to: int | None = None,
     dim: int | None = None,
-    hasher: str = "expr",
 ) -> DataFrame:
     """Approximate two-table similarity join (spark.ml
     approxSimilarityJoin equivalent, SURVEY.md §2.6 "Joins"): all
@@ -925,12 +893,13 @@ def similarity_join(
     Pass ``dim`` when the caller knows the vector dimension (a
     Collection always does) — the ``fsutil.infer_dim`` fallback (the
     first non-null vector's length) costs one Spark job per invocation
-    (ADVICE r5). ``hasher="gemm"`` swaps the bucket
-    expressions for the MultiSignLSH GEMM kernel (identical buckets,
-    one matmul per Arrow batch — the big-corpus hash path).
+    (ADVICE r5). Buckets are ``MultiSignLSH.bucket_col``'s: one GEMM
+    per Arrow batch, with the SQL fold's sign bits. A pair whose cosine
+    is NaN is dropped.
     """
     from kowari_spark.fsutil import infer_dim, scan_parallelism
     from kowari_spark.functions.vector import magnitude
+    from kowari_spark.operators.lsh import MultiSignLSH
 
     if dim is None:
         dim = infer_dim(left, vec_col)
@@ -938,8 +907,9 @@ def similarity_join(
     # no-op at scale, value-safe (per-row hashing + set-shaped output)
     left = scan_parallelism(left.select(F.col(left_id), F.col(vec_col)))
     right = scan_parallelism(right.select(F.col(right_id), F.col(vec_col)))
-    buckets = _sign_buckets_col(vec_col, dim, num_planes, num_tables,
-                                seed, hasher)
+    buckets = MultiSignLSH(dim, num_planes, num_tables, seed).bucket_col(
+        vec_col
+    )
 
     def _bucketed(df, id_col, out):
         return df.select(
@@ -973,7 +943,7 @@ def similarity_join(
             F.col("__rid").alias(right_id + "_r"),
             cos.alias("cos"),
         )
-        .filter(F.col("cos") >= threshold)
+        .filter(_kept_cosine(threshold))
     )
 
 
@@ -987,7 +957,6 @@ def _near_dups_in_memory(
     vec_col: str,
     round_to: int | None,
     dim: int | None,
-    hasher: str,
     edges: str,
 ) -> DataFrame | None:
     """``embedding_near_dups_lsh`` on the driver, over the rows
@@ -1002,9 +971,9 @@ def _near_dups_in_memory(
     Every step repeats one statement of the distributed plan with the
     same arithmetic, so the rows are identical (pinned by
     tests/test_text_dedup.py::test_near_dups_in_memory_parity):
-    buckets from ``MultiSignLSH.buckets_local`` (the hasher's exact
-    numpy twin), "auto" edges from the exact bucket sizes with
-    ``resolve_edges``' rule, candidates per (table, bucket) — all
+    buckets from ``MultiSignLSH.buckets`` (the kernel the distributed
+    plan's ``bucket_col`` runs per batch), "auto" edges from the exact
+    bucket sizes with ``resolve_edges``' rule, candidates per (table, bucket) — all
     pairs, or member ↔ bucket-min like ``bucket_star_edges`` — scored
     by ``_cosine_pairs`` against norms folded like ``magnitude``, and
     pairs deduplicated across tables."""
@@ -1038,8 +1007,7 @@ def _near_dups_in_memory(
         return None
     nn = np.sqrt(sq)
 
-    buckets = MultiSignLSH(width, num_planes, num_tables, seed,
-                           hasher).buckets_local(V)
+    buckets = MultiSignLSH(width, num_planes, num_tables, seed).buckets(V)
     groups = []
     for t in range(num_tables):
         _, inv, size = np.unique(buckets[:, t], return_inverse=True,
@@ -1087,7 +1055,6 @@ def embedding_near_dups_lsh(
     vec_col: str = "embedding",
     round_to: int | None = None,
     dim: int | None = None,
-    hasher: str = "expr",
     edges: str = "auto",
 ) -> DataFrame:
     """Approximate near-dup via sign-LSH OR-construction: ``num_tables``
@@ -1112,9 +1079,10 @@ def embedding_near_dups_lsh(
 
     Pass ``dim`` when known (a Collection always knows) — on the
     distributed plan the ``fsutil.infer_dim`` fallback (the first
-    non-null vector's length) costs one Spark job (ADVICE r5).
-    ``hasher="gemm"`` hashes with the MultiSignLSH GEMM kernel
-    (identical buckets, one matmul per Arrow batch).
+    non-null vector's length) costs one Spark job (ADVICE r5). Both
+    executions hash with ``MultiSignLSH``'s kernel: one GEMM per Arrow
+    batch or driver matrix, with the SQL fold's sign bits. A pair whose
+    cosine is NaN is dropped.
 
     ``edges="star"`` verifies only member↔bucket-min candidates (O(B)
     per (table, bucket) instead of O(B²) — an embedding corpus with a
@@ -1134,26 +1102,28 @@ def embedding_near_dups_lsh(
     if bound > 0 and len(df.select().limit(bound + 1).collect()) <= bound:
         pairs = _near_dups_in_memory(
             df, threshold, num_planes, num_tables, seed, id_col, vec_col,
-            round_to, dim, hasher, edges,
+            round_to, dim, edges,
         )
         if pairs is not None:
             return pairs
 
     from kowari_spark.fsutil import infer_dim, scan_parallelism
+    from kowari_spark.operators.lsh import MultiSignLSH
 
     if dim is None:
         dim = infer_dim(df, vec_col)
     # all tables' buckets in ONE pass over the data: posexplode the
     # per-table bucket array, then a single (table, bucket) self-join —
     # instead of num_tables scans + joins + a union
-    buckets = _sign_buckets_col(vec_col, dim, num_planes, num_tables,
-                                seed, hasher)
+    buckets = MultiSignLSH(dim, num_planes, num_tables, seed).bucket_col(
+        vec_col
+    )
     # few-split scans serialize the T*p plane-dot hash pass in one task
     # (guide §2.5); no-op at scale, value-safe (per-row hashing, pair
     # outputs are set-shaped)
     df = scan_parallelism(df.select(F.col(id_col), F.col(vec_col)))
     # lazy checkpoint: the bucketed relation feeds the auto probe AND
-    # both self-join sides — hash once (matters for the GEMM hasher)
+    # both self-join sides — hash once
     bucketed = df.select(
         F.col(id_col), F.posexplode(buckets).alias("__tbl", "bucket")
     ).localCheckpoint(eager=False)
@@ -1188,7 +1158,7 @@ def embedding_near_dups_lsh(
         cand.join(va, "id_a")
         .join(vb, "id_b")
         .select("id_a", "id_b", cos.alias("cos"))
-        .filter(F.col("cos") >= threshold)
+        .filter(_kept_cosine(threshold))
     )
 
 
@@ -1403,7 +1373,7 @@ def _semantic_pairs_gemm(
     """Cell-local GEMM pair scorer: each cluster's pairs score in
     ``_cosine_pairs`` inside ``applyInPandas`` — a per-pair
     interpreted expression fold is the bottleneck at scale (the same
-    Python/JVM boundary the LSH GEMM hasher and HNSW GEMM refine sit
+    Python/JVM boundary the sign-LSH kernel and HNSW GEMM refine sit
     behind). The emitted (id_a, id_b, cos) set is the exact cosine's
     (checked row for row against the contract's DuckDB replay). Only
     the skinny surviving pairs ever leave the worker.

@@ -708,6 +708,7 @@ def open_lsh_layout(spark: SparkSession, path: str):
         _LSH_META_NAME,
         MultiSignLSH,
         SignLSH,
+        _refuse_gemm_buckets,
     )
 
     sign_meta = f"{path}/{_LSH_META_NAME}"
@@ -721,10 +722,10 @@ def open_lsh_layout(spark: SparkSession, path: str):
                 seed=meta["seed"],
             )
         elif fam == "multisign":
+            _refuse_gemm_buckets(meta, path)
             inst = MultiSignLSH(
                 dim=meta["dim"], num_planes=meta["num_planes"],
                 num_tables=meta["num_tables"], seed=meta["seed"],
-                hasher=meta.get("hasher", "expr"),
             )
         else:
             raise ValueError(

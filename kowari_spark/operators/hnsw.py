@@ -196,13 +196,14 @@ class HNSW:
         metric computes each bucket's score matrix as one numpy GEMM
         inside ``applyInPandas`` (measured ~10x the expression fold on
         the 20k/200k-row scale benches); a custom registered metric
-        keeps the whole plan in native JVM expressions.
+        scores in native JVM expressions. Either way the buckets come
+        from the sign-LSH kernel, one Arrow batch GEMM.
 
         Only graph nodes take part (``_graph_nodes``). Pass ``dim`` when
         the caller knows the vector dimension (a Collection always
         does) — the ``fsutil.infer_dim`` fallback costs one Spark job per
         build (ADVICE r5, same pattern as dedup)."""
-        from kowari_spark.operators.lsh import SignLSH
+        from kowari_spark.operators.lsh import MultiSignLSH
 
         if dim is None:
             dim = infer_dim(df, vec_col)
@@ -210,13 +211,8 @@ class HNSW:
                                 id_col, self.seed, self.max_level)
         exploded = self._exploded_levels(leveled, id_col, vec_col)
 
-        buckets = F.array(
-            *[
-                SignLSH(dim=dim, num_planes=self.num_planes,
-                        seed=self.seed + t).bucket_expr("__v")
-                for t in range(self.num_tables)
-            ]
-        )
+        buckets = MultiSignLSH(dim, self.num_planes, self.num_tables,
+                               self.seed).bucket_col("__v")
         bucketed = exploded.select(
             "level", "__vid", "__v", F.posexplode(buckets).alias("__tbl", "__bkt")
         )
@@ -522,8 +518,8 @@ class HNSW:
         Every step repeats one statement of the distributed plan with
         the same arithmetic, so the edge set is identical (pinned by
         tests/test_hnsw.py::test_build_in_memory_parity): sign-LSH
-        buckets come from ``SignLSH.buckets_fold``, the numpy twin of
-        ``SignLSH.bucket_sql``; pair scores come from the same
+        buckets come from ``MultiSignLSH.buckets``, the kernel the
+        plan's ``bucket_col`` runs per batch; pair scores come from the same
         ``_pair_topm`` kernel, called once per (level, table, bucket)
         group and, in each refine round, once per (level, mid) group;
         refine 1-hop edges score through the ``similarity_expr`` fold;
@@ -533,7 +529,7 @@ class HNSW:
         from pyspark.sql import types as T
 
         from kowari_spark.fsutil import local_df
-        from kowari_spark.operators.lsh import SignLSH
+        from kowari_spark.operators.lsh import MultiSignLSH
 
         id_type = df.schema[id_col].dataType
         if not isinstance(id_type, (T.IntegralType, T.StringType)):
@@ -578,9 +574,9 @@ class HNSW:
             return key
 
         # candidate pass: one kernel call per (level, table, bucket)
-        for t in range(self.num_tables):
-            bucket = SignLSH(dim=width, num_planes=self.num_planes,
-                             seed=self.seed + t).buckets_fold(V)
+        buckets = MultiSignLSH(width, self.num_planes, self.num_tables,
+                               self.seed).buckets(V)
+        for bucket in buckets.T:
             for level in range(top + 1):
                 layer = np.flatnonzero(levels >= level)
                 for b in np.unique(bucket[layer]):
@@ -667,20 +663,23 @@ class HNSW:
         (the measured break-even) capped by the beam's
         ``BEAM_MAX_NODES``:
 
-        - bounded: for a built-in metric, one count capped at the
-          bound + 1 rows; when the rows fit, one collect of (id,
-          vector, node_level), and ``_build_in_memory`` runs the same
-          steps in numpy and returns the identical edge set through
-          ``fsutil.local_df`` — three Spark jobs instead of ~16;
+        - bounded: for a built-in metric, one zero-column collect
+          capped at the bound + 1 rows; when the rows fit, one collect
+          of (id, vector, node_level), and ``_build_in_memory`` runs
+          the same steps in numpy and returns the identical edge set
+          through ``fsutil.local_df`` — two Spark jobs instead of ~16;
         - distributed: every other case — larger graphs, custom
           metrics, input ``_build_in_memory`` declines — runs the one
           declarative plan of the module docstring, with no
           driver-side collect of any layer."""
         gemm = metric in _BUILTIN_METRICS
         max_nodes = min(self.BEAM_MAX_NODES, self.BUILD_MAX_NODES)
-        # vectors are collected only for a graph that fits
+        # vectors are collected only for a graph that fits. The size
+        # check collects zero columns under the same limit: one job and
+        # no shuffle, where limit().count() adds a single-partition
+        # exchange
         if gemm and max_nodes > 0 and (
-            df.limit(max_nodes + 1).count() <= max_nodes
+            len(df.select().limit(max_nodes + 1).collect()) <= max_nodes
         ):
             edges = self._build_in_memory(df, id_col, vec_col, metric,
                                           dim, max_nodes)

@@ -9,9 +9,20 @@ tests rely on this, tests/integration_tests.rs:240-245). Hyperplanes here
 are seeded (the reference uses unseeded thread_rng — SURVEY.md §7.2), so
 declared queries are reproducible.
 
+One hasher computes every sign bit in the package (:func:`sign_buckets`):
+one float64 GEMM over the stacked planes per Arrow batch or driver
+matrix, with every entry whose sign the GEMM cannot certify re-folded in
+dimension order. Its bits are those of the SQL dot fold
+``aggregate(zip_with(v, plane, x * y), 0.0D, acc + x) >= 0.0D`` that the
+contract's DuckDB oracle replays, on every input: a vector that is null,
+holds a null or is not ``dim`` long gets bucket 0 (its products are null,
+so every comparison is), and a NaN projection sets its bit (Spark orders
+NaN above 0.0). :func:`probe_sequences` is the one multi-probe sequence,
+called on the driver for a single query and in the batch column.
+
 Spark-first design:
-- the bucket is a plain LONG column computed by native zip_with/aggregate
-  expressions (whole-stage codegen, no Python);
+- the bucket is a plain LONG column computed per Arrow batch
+  (``bucket_col``), the only Python stage of a hash pass;
 - ``build`` writes the table ``partitionBy("bucket")`` so a bucket probe
   is PARTITION PRUNING — at 100 TB a probe reads one partition, not the
   table (SURVEY.md §4.1 maps the reference's bucket probe to exactly
@@ -23,15 +34,13 @@ Spark-first design:
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kowari_spark.functions.vector import dot as dot_expr
-from kowari_spark.functions.vector import lit_vec
 from kowari_spark.operators.topk import knn
 
 _LSH_META_NAME = "_lsh_meta.json"
@@ -41,6 +50,151 @@ _LSH_LAYOUT_VERSION = "lsh-layout-v1"
 #: below this many probed pairs; bigger query batches fall back to the
 #: broadcast equi-join (the simhash _BLOCK_ISIN_MAX discipline)
 _BUCKET_ISIN_MAX = 4096
+
+#: low-margin planes a multi-probe sequence may flip: 2^_FLIP subsets
+#: are ranked per query, so keep it small
+_FLIP = 5
+
+
+# -- the sign kernel ---------------------------------------------------------
+
+def _fold(X: np.ndarray, P: np.ndarray, rows: np.ndarray,
+          cols: np.ndarray) -> np.ndarray:
+    """X[rows[i]]·P[cols[i]] for each i, folded from 0.0 left to right
+    in dimension order: the SQL dot fold bit for bit (numpy rounds each
+    product and each sum, as the JVM does). O(len(rows)) memory."""
+    acc = np.zeros(len(rows))
+    with np.errstate(over="ignore", invalid="ignore"):
+        for j in range(X.shape[1]):
+            acc = acc + X[rows, j] * P[cols, j]
+    return acc
+
+
+def _projections(X: np.ndarray, P: np.ndarray) -> np.ndarray:
+    """X·Pᵀ in which every entry has the fold's sign: one GEMM, and the
+    fold for each entry the GEMM cannot certify.
+
+    The GEMM and the fold each lie within γ_d·(|X|·|P|ᵀ) + d·2⁻¹⁰⁷⁴
+    of the exact dot (γ_d = d·u/(1 − d·u), u = 2⁻⁵³; the second term
+    covers underflow), so an entry more than twice that from 0 has one
+    sign in both. |X|·|P|ᵀ is bounded by ‖x‖₁·‖p‖_∞ (an outer product,
+    not a second GEMM), and the factor 4 covers the rounding of the
+    bound itself. A row whose ‖x‖₁·max‖p‖_∞ is not below 2¹⁰⁰⁰ — a
+    NaN or ±inf entry, a fold that may overflow — certifies nothing."""
+    d = X.shape[1]
+    gamma = d * 2.0 ** -53 / (1.0 - d * 2.0 ** -53)
+    pmax = np.abs(P).max(axis=1)
+    with np.errstate(over="ignore", invalid="ignore"):
+        G = X @ P.T
+        l1 = np.abs(X).sum(axis=1)
+        l1[~(l1 * pmax.max() < 2.0 ** 1000)] = np.inf
+        bound = np.outer(4.0 * gamma * l1, pmax)
+        bound += 4.0 * d * 2.0 ** -1074
+        rows, cols = np.nonzero(~(np.abs(G) > bound))
+    G[rows, cols] = _fold(X, P, rows, cols)
+    return G
+
+
+def _pack(bits: np.ndarray, num_planes: int) -> np.ndarray:
+    """(rows × T·p) sign bits -> (rows × T) buckets, bit i = plane i."""
+    bits = bits.reshape(len(bits), bits.shape[1] // num_planes, num_planes)
+    return bits @ (1 << np.arange(num_planes))
+
+
+def sign_buckets(X: np.ndarray, P: np.ndarray, num_planes: int) -> np.ndarray:
+    """(rows × T) packed sign-bit buckets of ``X``'s rows under the
+    stacked planes ``P`` (T·``num_planes`` rows): the fold's bit of
+    every projection, NaN included (see :func:`_projections`)."""
+    G = _projections(X, P)
+    return _pack((G >= 0.0) | np.isnan(G), num_planes)
+
+
+def probe_sequences(X: np.ndarray, whole: np.ndarray, P: np.ndarray,
+                    probes: int) -> np.ndarray:
+    """(rows × min(probes, 2^f)) multi-probe bucket sequences of one
+    table (Lv et al., multi-probe LSH), f = min(num_planes, ``_FLIP``).
+
+    A near neighbor that missed the query's bucket disagrees on the
+    planes where the query's margin |v·p| is smallest, so the sequence
+    flips sign subsets of the f lowest-margin planes, ordered by total
+    flipped margin², ties by xor mask; the empty flip — the bucket
+    itself — comes first. ``X`` holds the ``whole`` rows (see
+    ``_whole_rows``); the others have no margin and take Spark's order
+    of null costs: every nonempty subset of planes 0..f-1 by mask, then
+    bucket 0. Margins are the folded dots themselves, so the order does
+    not depend on the batch a query is hashed in; queries are few."""
+    n, p = len(whole), len(P)
+    f = min(p, _FLIP)
+    masks = np.arange(1 << f)
+    w = min(max(probes, 1), 1 << f)
+    out = np.empty((n, w), dtype=np.int64)
+    out[~whole] = np.roll(masks, -1)[:w] if probes > 1 else 0
+    k = len(X)
+    rows, cols = np.divmod(np.arange(k * p), p)
+    D = _fold(X, P, rows, cols).reshape(k, p)
+    base = _pack((D >= 0.0) | np.isnan(D), p)
+    if probes <= 1:
+        out[whole] = base
+        return out
+    with np.errstate(over="ignore"):
+        M2 = D * D
+        low = np.argsort(M2, axis=1, kind="stable")[:, :f]  # NaN last
+        sel = np.take_along_axis(M2, low, axis=1)
+        inc = (masks[:, None] >> np.arange(f)) & 1 == 1  # (2^f × f)
+        cost = np.zeros((k, len(masks)))
+        for j in range(f):  # margin² summed in mask-bit order, as in SQL
+            cost = cost + np.where(inc[:, j], sel[:, j, None], 0.0)
+    flips = (inc[None] * (1 << low)[:, None, :]).sum(axis=2)
+    order = np.lexsort((flips, cost), axis=1)[:, :w]
+    out[whole] = base ^ np.take_along_axis(flips, order, axis=1)
+    return out
+
+
+def _whole_rows(vecs: pa.ListArray, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """(X, whole) for a ``pyarrow`` list array of vectors: ``whole``
+    marks the rows the SQL fold sees entirely — not null, ``dim`` long,
+    no null entry — and ``X`` holds them as float64 rows (float entries
+    widen exactly, like ``CAST(x AS DOUBLE)``). Any other row has a null
+    product in every fold, so every bit of it is 0."""
+    lens = vecs.value_lengths().fill_null(0).to_numpy()
+    flat = vecs.flatten()
+    owner = np.repeat(np.arange(len(vecs)), lens)
+    whole = ~vecs.is_null().to_numpy(zero_copy_only=False) & (lens == dim)
+    if flat.null_count:
+        whole[owner[flat.is_null().to_numpy(zero_copy_only=False)]] = False
+    vals = flat.to_numpy(zero_copy_only=False).astype(np.float64)
+    return vals[whole[owner]].reshape(-1, dim), whole
+
+
+def _hash_col(vec_col: Column | str, dim: int,
+              fn: Callable[[np.ndarray, np.ndarray], np.ndarray]) -> Column:
+    """Arrow UDF over ``vec_col``: each batch of vectors becomes
+    ``fn(*_whole_rows(batch, dim))`` — a (rows × w) int64 matrix — as an
+    array<long> per row. The planes ride the task closure (T·p·d
+    floats, ~57 KB at p=14, T=8, d=64)."""
+    from pyspark.sql.types import ArrayType, LongType
+
+    @F.arrow_udf(ArrayType(LongType()))
+    def sign_lsh(vecs: pa.Array) -> pa.Array:
+        out = fn(*_whole_rows(vecs, dim))
+        return pa.ListArray.from_arrays(
+            pa.array(np.arange(0, out.size + 1, out.shape[1], dtype=np.int32)),
+            pa.array(out.ravel()),
+        )
+
+    return sign_lsh(F.col(vec_col) if isinstance(vec_col, str) else vec_col)
+
+
+def _bucket_col(vec_col: Column | str, dim: int, P: np.ndarray,
+                num_planes: int) -> Column:
+    """Per-table buckets as array<long>, 0 for a row that is not whole."""
+
+    def fn(X: np.ndarray, whole: np.ndarray) -> np.ndarray:
+        out = np.zeros((len(whole), len(P) // num_planes), dtype=np.int64)
+        out[whole] = sign_buckets(X, P, num_planes)
+        return out
+
+    return _hash_col(vec_col, dim, fn)
 
 
 def _write_lsh_meta(spark, path: str, params: dict,
@@ -74,12 +228,26 @@ def _check_lsh_meta(spark, path: str, params: dict) -> None:
     if not exists(spark, meta_path):
         return
     saved = json.loads(read_bytes(spark, meta_path).decode())
+    _refuse_gemm_buckets(saved, path)
     if {k: saved.get(k) for k in params} != params:
         raise ValueError(
             f"LSH layout at {path} was built with {saved}, but this "
             f"index hashes with {params}; rebuild the layout or "
             "construct a matching instance (or open it param-free via "
             "dedup_index.open_lsh_layout)"
+        )
+
+
+def _refuse_gemm_buckets(saved: dict, path: str) -> None:
+    """Refuse a sidecar that records ``"hasher": "gemm"``: that layout
+    was bucketed by plain GEMM signs, which can differ from the fold's
+    at ULP ties, so probing it with the fold's buckets could miss rows.
+    No key, or ``"expr"``, means the fold's buckets: those load."""
+    if saved.get("hasher", "expr") != "expr":
+        raise ValueError(
+            f"LSH layout at {path} was bucketed by the removed "
+            f"hasher={saved['hasher']!r}, whose sign bits can differ "
+            "from the fold's; rebuild the layout"
         )
 
 
@@ -126,145 +294,36 @@ class SignLSH:
 
     # -- hashing ---------------------------------------------------------
 
-    def bucket_sql(self, vec_sql: str) -> str:
-        """SQL-string twin of the per-plane Column builder: the parsed
-        tree constant-folds to the IDENTICAL expression (same zip_with/
-        aggregate fold, same comparison, same long arithmetic — value
-        parity pinned by test_lsh), but the driver builds it in ONE
-        ``F.expr`` parse instead of ~10 py4j roundtrips per plane
-        (measured 0.78 s -> 0.005 s for an 8-plane bucket; probe-shaped
-        lines are driver-construction-bound once their plans are lean)."""
-        out = "CAST(0 AS BIGINT)"
-        for i, plane in enumerate(self.planes):
-            arr = ",".join(repr(float(v)) + "D" for v in plane)
-            d = (
-                f"aggregate(zip_with({vec_sql}, array({arr}), "
-                "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-                "0.0D, (acc, x) -> acc + x)"
-            )
-            out = f"({out} + (CASE WHEN {d} >= 0.0D THEN {1 << i}L ELSE 0L END))"
-        return out
+    def bucket_col(self, vec_col: Column | str) -> Column:
+        """Packed sign-bit bucket as a LONG column, hashed per Arrow
+        batch by the module's kernel."""
+        return _bucket_col(vec_col, self.dim, self.planes, self.num_planes)[0]
 
-    def bucket_expr(self, vec_col: Column | str) -> Column:
-        """Packed sign-bit bucket as a native column expression."""
-        if isinstance(vec_col, str):
-            return F.expr(self.bucket_sql(f"`{vec_col}`"))
-        col = vec_col
-        acc = F.lit(0).cast("long")
-        for i, plane in enumerate(self.planes):
-            d = dot_expr(col, lit_vec(plane))
-            acc = acc + F.when(d >= 0.0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
-        return acc
-
-    def buckets_fold(self, V: np.ndarray) -> np.ndarray:
-        """numpy twin of ``bucket_sql`` over the rows of ``V``: each
-        plane's dot folds ``x_j·p_j`` left to right in dimension order,
-        as the SQL ``aggregate`` does, so every bucket is bit-identical.
-        A projection that overflows to NaN sets its bit, because Spark
-        orders NaN above 0.0."""
-        acc = np.zeros((len(V), self.num_planes))
-        for j in range(V.shape[1]):
-            acc = acc + V[:, j, None] * self.planes[None, :, j]
-        bits = (acc >= 0.0) | np.isnan(acc)
-        return (bits << np.arange(self.num_planes)).sum(axis=1)
-
-    def bucket_of(self, vec: Sequence[float]) -> int:
-        """Driver-side bucket for a single query vector."""
-        v = np.asarray(vec, dtype=np.float64)
-        signs = (self.planes @ v) >= 0.0
-        return int(sum(1 << i for i, s in enumerate(signs) if s))
-
-    def probe_buckets_of(self, vec: Sequence[float], probes: int) -> list[int]:
-        """Driver-side twin of ``probe_buckets_expr`` (same ordering:
-        sign-flip subsets of the lowest-margin planes by total flipped
-        margin², ties by xor mask) — a single query's probe set needs no
-        Spark job, and the resulting literal list lets the bucket filter
-        prune partitions STATICALLY at the scan."""
-        base_bucket = self.bucket_of(vec)
-        if probes <= 1:
-            return [base_bucket]
-        v = np.asarray(vec, dtype=np.float64)
-        dots = self.planes @ v
-        fp = min(self.num_planes, self._FLIP)
-        ranked = sorted(
-            ((float(d * d), 1 << i) for i, d in enumerate(dots))
-        )[:fp]
-        subsets = []
-        for mask in range(1 << fp):
-            cost = sum(ranked[j][0] for j in range(fp) if (mask >> j) & 1)
-            xorv = sum(ranked[j][1] for j in range(fp) if (mask >> j) & 1)
-            subsets.append((cost, xorv))
-        subsets.sort()
-        return [base_bucket ^ x for _, x in subsets[:probes]]
-
-    # number of low-margin planes eligible for multi-probe perturbation;
-    # 2^_FLIP subsets are enumerated in the plan, so keep it small
-    _FLIP = 5
-
-    def probe_buckets_expr(self, vec_col: Column | str, probes: int) -> Column:
-        """Query-directed multi-probe sequence as ONE native expression:
-        an array of up to ``probes`` bucket ids, ordered by how likely the
-        bucket is to hold missed neighbors (Lv et al., multi-probe LSH).
-
-        A near neighbor that missed the query's bucket disagrees on the
-        planes where the query's margin |v·p| is smallest, so the probe
-        sequence enumerates sign-flip subsets of the ``_FLIP``
-        lowest-margin planes ordered by the total flipped margin². All of
-        it — margins, subset costs, xor masks — is array/struct algebra
-        inside whole-stage codegen; nothing runs in Python and the probe
-        set rides along each query row into the bucket equi-join."""
-        # bucket_expr / dot take the one-parse SQL path on string input
-        # (construction cost only; trees identical — see bucket_sql)
-        if probes <= 1:
-            if isinstance(vec_col, str):
-                return F.expr(f"array({self.bucket_sql(f'`{vec_col}`')})")
-            return F.array(self.bucket_expr(vec_col))
-        base_bucket = self.bucket_expr(vec_col)
-        col = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-        fp = min(self.num_planes, self._FLIP)
-        if isinstance(vec_col, str):
-            from kowari_spark.functions.vector import dot_sql, lit_vec_sql
-
-            dots = [
-                F.expr(dot_sql(f"`{vec_col}`", lit_vec_sql(plane)))
-                for plane in self.planes
-            ]
-        else:
-            dots = [
-                dot_expr(col, lit_vec(plane))
-                for plane in self.planes
-            ]
-        margins = F.array_sort(
-            F.array(
-                *[
-                    F.struct(
-                        (d * d).cast("double").alias("m2"),
-                        F.lit(1 << i).cast("long").alias("bit"),
-                    )
-                    for i, d in enumerate(dots)
-                ]
-            )
+    def probe_buckets(self, vec: Sequence[float] | None,
+                      probes: int) -> list[int]:
+        """One query's probe sequence on the driver (no Spark job), the
+        same as ``probe_col`` gives its row: the resulting literal list
+        lets the bucket filter prune partitions STATICALLY at the
+        scan."""
+        X, whole = _whole_rows(
+            pa.array([None if vec is None else list(vec)],
+                     pa.list_(pa.float64())),
+            self.dim,
         )
-        sel = [F.element_at(margins, j + 1) for j in range(fp)]
-        subsets = []
-        for mask in range(1 << fp):
-            cost: Column | None = None
-            xorv: Column | None = None
-            for j in range(fp):
-                if (mask >> j) & 1:
-                    cost = sel[j]["m2"] if cost is None else cost + sel[j]["m2"]
-                    xorv = sel[j]["bit"] if xorv is None else xorv + sel[j]["bit"]
-            subsets.append(
-                F.struct(
-                    (F.lit(0.0) if cost is None else cost).alias("c"),
-                    (F.lit(0).cast("long") if xorv is None else xorv.cast("long")).alias("x"),
-                )
-            )
-        ordered = F.slice(F.array_sort(F.array(*subsets)), 1, probes)
-        return F.transform(ordered, lambda s: base_bucket.bitwiseXOR(s["x"]))
+        return probe_sequences(X, whole, self.planes, probes)[0].tolist()
+
+    def probe_col(self, vec_col: Column | str, probes: int) -> Column:
+        """Array of up to ``probes`` bucket ids per row, in
+        :func:`probe_sequences` order; the probe set rides along each
+        query row into the bucket equi-join."""
+        planes = self.planes
+        return _hash_col(
+            vec_col, self.dim,
+            lambda X, whole: probe_sequences(X, whole, planes, probes),
+        )
 
     def with_buckets(self, df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-        return df.withColumn("bucket", self.bucket_expr(vec_col))
+        return df.withColumn("bucket", self.bucket_col(vec_col))
 
     # -- build (offline) --------------------------------------------------
 
@@ -331,7 +390,7 @@ class SignLSH:
         the probed bucket(s) yield < k candidates, rank the FULL table
         instead (src/index.rs:158-173).
 
-        The probe set is computed driver-side (``probe_buckets_of`` —
+        The probe set is computed driver-side (``probe_buckets`` —
         pure numpy, no Spark job) so the candidate filter is a LITERAL
         ``bucket IN (...)`` that prunes partitions statically on a
         ``build`` layout. Two pruned jobs follow: the candidate count
@@ -341,7 +400,7 @@ class SignLSH:
         n=1 through the batch machinery was measured 4-8x slower (its
         size-aggregate + broadcast stages dominate a single
         query), so the batch path is reserved for actual batches."""
-        buckets = self.probe_buckets_of(query, probes)
+        buckets = self.probe_buckets(query, probes)
         base = df if "bucket" in df.columns else self.with_buckets(df, vec_col)
         candidates = base.filter(F.col("bucket").isin(buckets))
         if candidates.count() < k:
@@ -368,7 +427,7 @@ class SignLSH:
         top-k; queries whose probed buckets hold < k candidates total are
         re-run through the exact path and unioned in (per-query fallback,
         reference semantics). ``probes > 1`` widens each query to a
-        query-directed multi-probe bucket sequence (probe_buckets_expr) —
+        query-directed multi-probe bucket sequence (``probe_col``) —
         the recall knob that costs probes/2^p of the table instead of a
         rebuild.
 
@@ -401,7 +460,7 @@ class SignLSH:
         # distinct by construction (distinct xor masks), so no candidate
         # is scored twice
         qp = q.withColumn(
-            "bucket", F.explode(self.probe_buckets_expr("__qvec", probes))
+            "bucket", F.explode(self.probe_col("__qvec", probes))
         )
 
         if prebuilt:
@@ -472,35 +531,20 @@ class MultiSignLSH:
     """
 
     def __init__(self, dim: int, num_planes: int = 4, num_tables: int = 8,
-                 seed: int = 42, hasher: str = "expr"):
+                 seed: int = 42):
         self.dim = dim
         self.num_planes = num_planes
         self.num_tables = num_tables
         self.seed = seed
-        # hasher: "expr" (default) hashes with native aggregate/zip_with
-        # folds — pure JVM, bit-parity with a SQL oracle replaying the
-        # same sequential fold, but higher-order functions are
-        # INTERPRETED per element, so T·p folds per row dominate large
-        # corpora (measured 283 s of the x1000 scale-bench probe vs
-        # 56 s for CP-LSH, which hashes with one GEMM). "gemm" computes
-        # all T·p dots per Arrow batch as one numpy float64 GEMM — the
-        # same "built-ins can't express it" boundary as CP-LSH hashing.
-        # Sign bits agree with the fold except when |v·p| is below the
-        # two summation orders' ulp gap (measure-zero on real data;
-        # parity-tested on the bench corpus) — keep one hasher per
-        # LAYOUT: probe a layout with the hasher that built it.
-        if hasher not in ("expr", "gemm"):
-            raise ValueError(f"hasher must be expr|gemm, got {hasher!r}")
-        self.hasher = hasher
         self.tables = [
             SignLSH(dim=dim, num_planes=num_planes, seed=seed + t)
             for t in range(num_tables)
         ]
+        # every table's planes, hashed by one GEMM
+        self.planes = np.concatenate([t.planes for t in self.tables])
 
     def _params(self) -> dict:
-        """Sidecar provenance. ``hasher`` participates: expr and gemm
-        sign bits can differ at ulp-margin vectors (see __init__), so
-        one hasher per LAYOUT is part of the stored contract."""
+        """Sidecar provenance (planes are a pure function of these)."""
         return {
             "version": _LSH_LAYOUT_VERSION,
             "family": "multisign",
@@ -508,69 +552,21 @@ class MultiSignLSH:
             "num_planes": self.num_planes,
             "num_tables": self.num_tables,
             "seed": self.seed,
-            "hasher": self.hasher,
         }
 
-    def buckets_expr(self, vec_col: Column | str) -> Column:
-        """Array of per-table buckets — all tables hashed in ONE pass.
-        String columns take the SQL-string builder (one parse for ALL
-        T tables — see SignLSH.bucket_sql)."""
-        if isinstance(vec_col, str):
-            return F.expr(
-                "array("
-                + ",".join(t.bucket_sql(f"`{vec_col}`") for t in self.tables)
-                + ")"
-            )
-        return F.array(*[t.bucket_expr(vec_col) for t in self.tables])
+    def buckets(self, V: np.ndarray) -> np.ndarray:
+        """(rows × T) buckets of the float64 matrix ``V``'s rows."""
+        return sign_buckets(V, self.planes, self.num_planes)
 
-    def buckets_gemm_udf(self) -> Column:
-        """pandas_udf column factory hashing every table with one
-        float64 GEMM per Arrow batch: signs of (batch × d) @ (d × T·p),
-        bits packed per table. The plane stack is T·p·d floats (~57 KB
-        at p=14, T=8, d=64) — small enough to ride the task closure; a
-        plane stack big enough to need a broadcast variable wants
-        CrossPolytopeLSH's machinery instead."""
-        from pyspark.sql.types import ArrayType, LongType
-
-        gemm = self.buckets_gemm
-
-        @F.pandas_udf(ArrayType(LongType()))
-        def _buckets(vecs: pd.Series) -> pd.Series:
-            mat = np.array(vecs.tolist(), dtype=np.float64)
-            if mat.size == 0:
-                return pd.Series([], dtype=object)
-            return pd.Series(list(gemm(mat)))
-
-        return _buckets
-
-    def buckets_gemm(self, mat: np.ndarray) -> np.ndarray:
-        """(rows × T) buckets of ``mat``'s rows: the signs of one
-        ``mat @ P.T`` GEMM over the stacked planes, packed per table —
-        the kernel of ``buckets_gemm_udf``."""
-        P = np.concatenate([t.planes for t in self.tables], axis=0)
-        T, p = self.num_tables, self.num_planes
-        signs = ((mat @ P.T) >= 0.0).reshape(len(mat), T, p)
-        return (signs * (1 << np.arange(p, dtype=np.int64))).sum(axis=2)
-
-    def buckets_local(self, V: np.ndarray) -> np.ndarray:
-        """(rows × T) buckets of ``V``'s rows on the driver, identical
-        to the configured hasher's Spark column: ``buckets_gemm`` for
-        "gemm", each table's ``SignLSH.buckets_fold`` for "expr"."""
-        if self.hasher == "gemm":
-            return self.buckets_gemm(V)
-        return np.stack([t.buckets_fold(V) for t in self.tables], axis=1)
-
-    def _buckets_col(self, vec_col: Column | str) -> Column:
-        """The per-table bucket array under the configured hasher."""
-        if self.hasher == "gemm":
-            col = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-            return self.buckets_gemm_udf()(col)
-        return self.buckets_expr(vec_col)
+    def bucket_col(self, vec_col: Column | str) -> Column:
+        """Array of per-table buckets: all tables hashed in ONE pass,
+        one GEMM per Arrow batch."""
+        return _bucket_col(vec_col, self.dim, self.planes, self.num_planes)
 
     def with_buckets(self, df: DataFrame, vec_col: str = "embedding") -> DataFrame:
         """Exploded (one row per table) bucketed relation."""
         return df.select(
-            "*", F.posexplode(self._buckets_col(vec_col)).alias("__tbl", "bucket")
+            "*", F.posexplode(self.bucket_col(vec_col)).alias("__tbl", "bucket")
         )
 
     def build(self, df: DataFrame, path: str, vec_col: str = "embedding",
@@ -650,7 +646,7 @@ class MultiSignLSH:
             F.col(query_vec_col).alias("__qvec"),
         )
         qb = q.select(
-            "query_id", F.posexplode(self._buckets_col("__qvec")).alias("__tbl", "bucket")
+            "query_id", F.posexplode(self.bucket_col("__qvec")).alias("__tbl", "bucket")
         )
         if prebuilt:
             # STATIC partition pruning via the literal-IN discipline
@@ -691,7 +687,7 @@ class MultiSignLSH:
             bucketed = df.select(
                 F.col(id_col),
                 F.col(vec_col),
-                F.posexplode(self._buckets_col(vec_col)).alias("__tbl", "bucket"),
+                F.posexplode(self.bucket_col(vec_col)).alias("__tbl", "bucket"),
             )
         # one candidate computation feeds the sizes, the re-score and
         # the fallback anti-join: the subtree ends in the dedup's

@@ -6,6 +6,7 @@ brute-force fallback when the bucket is small) and adds the recall
 acceptance the reference never asserted (SURVEY.md §5.2.6).
 """
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -29,28 +30,122 @@ def test_bucket_expr_matches_driver_side(base, lsh):
     """Executor-side bucket column == driver-side numpy bucket."""
     rows = lsh.with_buckets(base).select("id", "embedding", "bucket").limit(50).collect()
     for r in rows:
-        assert r["bucket"] == lsh.bucket_of(r["embedding"])
+        assert lsh.probe_buckets(r["embedding"], 1) == [r["bucket"]]
 
 
-def test_bucket_sql_parity_with_column_builder(base, lsh):
-    """The SQL-string bucket builder (one F.expr parse — the
-    construction-cost fix) must be VALUE-identical to the legacy
-    per-plane Column builder on every row, for both the single-table
-    bucket and the multi-table array (a Column input takes the legacy
-    path, a string input the SQL path — same rows, exact equality)."""
+#: vectors the SQL dot fold treats specially, hashed with dim 4: bucket
+#: 0 for a null vector, a null entry, a short or long vector (every
+#: product is null); the NaN bit set; overflow, underflow and zeros
+_INF, _NAN = float("inf"), float("nan")
+_DEGRADED = [
+    [0.5, -1.0, 2.0, 0.25], None, [1.0, None, 2.0, 3.0], [1.0, 2.0],
+    [1.0, -2.0, 3.0, -4.0, 5.0], [_NAN, 1.0, -2.0, 3.0],
+    [_INF, 1.0, -2.0, 3.0], [1.0, -_INF, 2.0, 3.0], [_INF, -_INF, 0.0, 0.0],
+    [0.0, 0.0, 0.0, 0.0], [], [_NAN, None, 1.0, 1.0], [5e-324, 0.0, 0.0, 0.0],
+    [1e308] * 4, [-0.0] * 4, [1e-170, -1e-170, 1e-170, 1e-170],
+]
+#: per row of _DEGRADED, as the SQL fold (``aggregate(zip_with(...))``
+#: over the literal planes) returned them before the kernel replaced it:
+#: SignLSH(4, 6, seed=3) bucket of the double and of the float column,
+#: MultiSignLSH(4, 5, 3, seed=11) buckets of both, and SignLSH's
+#: 6-probe sequence of the double column
+_FOLD_FROZEN = [
+    (8, 8, [5, 22, 3], [5, 22, 3], [8, 40, 9, 0, 41, 24]),
+    (0, 0, [0, 0, 0], [0, 0, 0], [1, 2, 3, 4, 5, 6]),
+    (0, 0, [0, 0, 0], [0, 0, 0], [1, 2, 3, 4, 5, 6]),
+    (0, 0, [0, 0, 0], [0, 0, 0], [1, 2, 3, 4, 5, 6]),
+    (0, 0, [0, 0, 0], [0, 0, 0], [1, 2, 3, 4, 5, 6]),
+    (63, 63, [31, 31, 31], [31, 31, 31], [63, 62, 61, 60, 59, 58]),
+    (11, 11, [12, 28, 7], [12, 28, 7], [11, 10, 9, 8, 15, 14]),
+    (12, 12, [19, 20, 19], [19, 20, 19], [12, 13, 14, 15, 8, 9]),
+    (15, 15, [31, 28, 23], [31, 28, 23], [15, 7, 31, 23, 47, 39]),
+    (63, 63, [31, 31, 31], [31, 31, 31], [63, 62, 61, 60, 59, 58]),
+    (0, 0, [0, 0, 0], [0, 0, 0], [1, 2, 3, 4, 5, 6]),
+    (0, 0, [0, 0, 0], [0, 0, 0], [1, 2, 3, 4, 5, 6]),
+    (43, 63, [14, 28, 23], [31, 31, 31], [43, 42, 41, 40, 47, 46]),
+    (11, 59, [12, 8, 3], [13, 31, 15], [11, 10, 9, 8, 15, 14]),
+    (63, 63, [31, 31, 31], [31, 31, 31], [63, 62, 61, 60, 59, 58]),
+    (8, 63, [1, 4, 3], [31, 31, 31], [8, 9, 10, 11, 12, 13]),
+]
+
+
+def test_kernel_reproduces_fold_on_degraded_rows(spark):
+    """The bucket and probe columns reproduce, row for row, what the SQL
+    fold gave on null, short, long, NaN, ±inf, overflowing and
+    subnormal vectors, on double and float columns; the driver-side
+    probe sequence agrees with the column's."""
     from kowari_spark.operators.lsh import MultiSignLSH
 
-    fast = [r["b"] for r in base.select(lsh.bucket_expr("embedding").alias("b")).collect()]
-    legacy = [
-        r["b"] for r in base.select(lsh.bucket_expr(F.col("embedding")).alias("b")).collect()
+    lsh = SignLSH(dim=4, num_planes=6, seed=3)
+    ml = MultiSignLSH(dim=4, num_planes=5, num_tables=3, seed=11)
+    df = spark.createDataFrame(
+        list(enumerate(_DEGRADED)), "id long, v array<double>"
+    ).withColumn("f", F.col("v").cast("array<float>"))
+    got = [
+        (r["b"], r["bf"], list(r["m"]), list(r["mf"]), list(r["p"]))
+        for r in df.select(
+            "id", lsh.bucket_col("v").alias("b"), lsh.bucket_col("f").alias("bf"),
+            ml.bucket_col("v").alias("m"), ml.bucket_col("f").alias("mf"),
+            lsh.probe_col("v", 6).alias("p"),
+        ).orderBy("id").collect()
     ]
-    assert fast == legacy
-    ml = MultiSignLSH(dim=lsh.dim, num_planes=4, num_tables=5, seed=7)
-    fast_m = [r["b"] for r in base.select(ml.buckets_expr("embedding").alias("b")).collect()]
-    legacy_m = [
-        r["b"] for r in base.select(ml.buckets_expr(F.col("embedding")).alias("b")).collect()
-    ]
-    assert fast_m == legacy_m
+    assert got == _FOLD_FROZEN
+    for vec, want in zip(_DEGRADED, _FOLD_FROZEN):
+        assert lsh.probe_buckets(vec, 6) == want[4]
+        assert lsh.probe_buckets(vec, 1) == [want[0]]
+
+
+def _fold_by_hand(x, p):
+    acc = 0.0
+    for a, b in zip(x, p):
+        acc = acc + a * b
+    return acc
+
+
+def _bucket_by_hand(x, planes):
+    bucket = 0
+    for i, p in enumerate(planes):
+        v = _fold_by_hand(x, p)
+        if v >= 0.0 or v != v:  # Spark orders NaN above 0.0
+            bucket |= 1 << i
+    return bucket
+
+
+def test_kernel_matches_fold_at_ulp_ties(spark):
+    """Rows on a plane's null space (|x·p| at rounding level, where the
+    summation order decides the sign), overflowing and subnormal rows:
+    the kernel's buckets equal a by-hand dimension-order fold, plain
+    ``X @ P.T`` signs do not, and the driver single-query bucket equals
+    the layout's bucket column."""
+    from kowari_spark.operators.lsh import MultiSignLSH
+
+    d = 300  # past the BLAS K-block, so the GEMM sums in another order
+    ml = MultiSignLSH(dim=d, num_planes=8, num_tables=2, seed=5)
+    P = ml.planes
+    rng = np.random.default_rng(0)
+    X = rng.normal(size=(96, d))
+    for i in range(80):
+        p = P[i % len(P)]
+        X[i] -= (X[i] @ p) / (p @ p) * p
+    X[80:84] *= 1e307  # products overflow to ±inf, sums to NaN
+    X[84:88] *= 1e-320  # products underflow into subnormals
+    X[88:92] = 0.0
+    X[92:96, ::2] = 5e-324
+    want = np.array([
+        [_bucket_by_hand(x, P[t * 8:(t + 1) * 8].tolist()) for t in range(2)]
+        for x in X.tolist()
+    ])
+    assert (ml.buckets(X) == want).all()
+    with np.errstate(all="ignore"):
+        plain = ((X @ P.T) >= 0.0).reshape(len(X), 2, 8) @ (1 << np.arange(8))
+    assert (plain != want).any()
+
+    single = [SignLSH(dim=d, num_planes=8, seed=5 + t) for t in range(2)]
+    df = spark.createDataFrame(list(enumerate(X.tolist())), "id long, v array<double>")
+    for t, lsh in enumerate(single):
+        rows = lsh.with_buckets(df, "v").orderBy("id").collect()
+        assert [r["bucket"] for r in rows] == want[:, t].tolist()
+        assert [lsh.probe_buckets(r["v"], 1)[0] for r in rows] == want[:, t].tolist()
 
 
 def test_self_query_rank1(base, lsh):
@@ -114,10 +209,9 @@ def test_eval_metrics_semantics(spark):
 def test_multiprobe_probe_sequence(base, lsh):
     """probes=1 is exactly the base bucket; probes>1 prepends it and adds
     distinct single/multi-bit perturbations of the low-margin planes."""
-    row = base.first()
     probe_df = base.limit(3).select(
-        "id", lsh.probe_buckets_expr("embedding", 8).alias("probes"),
-        lsh.bucket_expr("embedding").alias("bucket"),
+        "id", lsh.probe_col("embedding", 8).alias("probes"),
+        lsh.bucket_col("embedding").alias("bucket"),
     )
     for r in probe_df.collect():
         assert r["probes"][0] == r["bucket"]  # cost-0 subset first
@@ -131,25 +225,43 @@ def test_multiprobe_sequence_prefix_property(base, lsh):
     pool only grows), and every probe differs from the base bucket only
     on low-margin planes. (End recall is NOT monotone in probes by
     design: widening the pool past k candidates disables the reference's
-    brute-force fallback, which is the point of probing.)"""
+    brute-force fallback, which is the point of probing.) The sequence
+    is the by-hand enumeration: flip subsets of the five lowest-margin
+    planes, ordered by summed margin², ties by xor mask."""
+    from itertools import combinations
+
     rows = base.limit(5).select(
-        lsh.probe_buckets_expr("embedding", 4).alias("p4"),
-        lsh.probe_buckets_expr("embedding", 16).alias("p16"),
+        "embedding",
+        lsh.probe_col("embedding", 4).alias("p4"),
+        lsh.probe_col("embedding", 16).alias("p16"),
     ).collect()
     for r in rows:
         assert list(r["p16"][:4]) == list(r["p4"])
+        dots = [_fold_by_hand(r["embedding"], p) for p in lsh.planes]
+        base_bucket = _bucket_by_hand(r["embedding"], lsh.planes)
+        low = sorted(range(len(dots)), key=lambda i: (dots[i] * dots[i], i))[:5]
+        subsets = []
+        for size in range(6):
+            for planes in combinations(range(5), size):
+                cost = 0.0
+                for j in planes:
+                    cost = cost + dots[low[j]] * dots[low[j]]
+                subsets.append((cost, sum(1 << low[j] for j in planes)))
+        want = [base_bucket ^ x for _, x in sorted(subsets)[:16]]
+        assert list(r["p16"]) == want
 
 
 def test_probe_buckets_driver_matches_expr(base, lsh):
-    """probe_buckets_of (numpy, drives the single-query static prune)
-    must produce the same ordered probe sequence as the native
-    probe_buckets_expr used by the batch path."""
+    """probe_buckets (the driver-side call behind the single-query
+    static prune) must produce the same ordered probe sequence as the
+    batch path's probe column: one function serves both."""
     rows = base.limit(10).select(
-        "embedding", lsh.probe_buckets_expr("embedding", 8).alias("p")
+        "embedding", lsh.probe_col("embedding", 8).alias("p"),
+        lsh.bucket_col("embedding").alias("b"),
     ).collect()
     for r in rows:
-        assert lsh.probe_buckets_of(r["embedding"], 8) == list(r["p"])
-        assert lsh.probe_buckets_of(r["embedding"], 1) == [lsh.bucket_of(r["embedding"])]
+        assert lsh.probe_buckets(r["embedding"], 8) == list(r["p"])
+        assert lsh.probe_buckets(r["embedding"], 1) == [r["b"]]
 
 
 def test_single_query_probe_prunes_built_layout(tmp_path, base, lsh, spark):
@@ -160,7 +272,7 @@ def test_single_query_probe_prunes_built_layout(tmp_path, base, lsh, spark):
     lsh.build(base, path)
     loaded = lsh.load(spark, path)
     q = base.first()["embedding"]
-    buckets = lsh.probe_buckets_of(q, 4)
+    buckets = lsh.probe_buckets(q, 4)
     cand = loaded.filter(F.col("bucket").isin(buckets))
     plan = cand._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "bucket" in plan
@@ -204,33 +316,63 @@ def test_multitable_built_layout_roundtrip(tmp_path, base, spark):
     assert a == b
 
 
-def test_multitable_gemm_hasher_parity_and_results(base):
-    """The GEMM hasher (one float64 numpy GEMM per Arrow batch) must
-    assign every vector to the same (table, bucket) cells as the native
-    expression fold — sign bits only diverge when |v·p| sits inside the
-    two summation orders' ulp gap, which real data never does — and the
-    full query_batch must return identical rows under either hasher."""
+def test_multitable_buckets_match_single_tables(base):
+    """Table t of MultiSignLSH(seed) hashes like SignLSH(seed + t) —
+    the plane construction HNSW and the near-dup join rely on — in the
+    bucket column and in the driver-side ``buckets``."""
     from kowari_spark.operators.lsh import MultiSignLSH
 
-    expr = MultiSignLSH(dim=64, num_planes=6, num_tables=4, seed=42)
-    gemm = MultiSignLSH(dim=64, num_planes=6, num_tables=4, seed=42,
-                        hasher="gemm")
-    a = sorted(map(tuple, expr.with_buckets(base)
-                 .select("id", "__tbl", "bucket").collect()))
-    b = sorted(map(tuple, gemm.with_buckets(base)
-                 .select("id", "__tbl", "bucket").collect()))
-    assert a == b
-    queries = base.select(F.col("id").alias("query_id"), "embedding").limit(6)
-    ra = sorted(map(tuple, expr.query_batch(base, queries, 5, round_to=6).collect()))
-    rb = sorted(map(tuple, gemm.query_batch(base, queries, 5, round_to=6).collect()))
-    assert ra == rb
+    ml = MultiSignLSH(dim=64, num_planes=6, num_tables=4, seed=42)
+    single = [SignLSH(dim=64, num_planes=6, seed=42 + t) for t in range(4)]
+    rows = base.select(
+        "embedding", ml.bucket_col("embedding").alias("m"),
+        *[t.bucket_col("embedding").alias(f"b{i}") for i, t in enumerate(single)],
+    ).collect()
+    V = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    got = np.array([r["m"] for r in rows])
+    assert (got == ml.buckets(V)).all()
+    assert (got == np.array([[r[f"b{i}"] for i in range(4)] for r in rows])).all()
 
 
-def test_multitable_hasher_validation():
+def test_multitable_hasher_validation(tmp_path, base, spark):
+    """The ``hasher`` knob is gone: passing it is a TypeError. A layout
+    whose sidecar records the removed GEMM hasher is refused with a
+    rebuild message by ``load`` and ``open_lsh_layout``; a sidecar that
+    records "expr", or no hasher, loads (its buckets are the fold's)."""
+    import json
+
+    from kowari_spark.fsutil import read_bytes, write_bytes
+    from kowari_spark.operators.dedup_index import open_lsh_layout
     from kowari_spark.operators.lsh import MultiSignLSH
 
-    with pytest.raises(ValueError, match="hasher"):
-        MultiSignLSH(dim=8, hasher="blas")
+    from kowari_spark.operators.dedup import (
+        embedding_near_dups_lsh,
+        similarity_join,
+    )
+
+    for call in (
+        lambda: MultiSignLSH(dim=8, hasher="gemm"),
+        lambda: embedding_near_dups_lsh(base, 0.9, hasher="gemm"),
+        lambda: similarity_join(base, base, 0.9, hasher="gemm"),
+    ):
+        with pytest.raises(TypeError, match="hasher"):
+            call()
+    mt = MultiSignLSH(dim=64, num_planes=2, num_tables=2, seed=3)
+    path = str(tmp_path / "mt_hasher")
+    mt.build(base.limit(20), path)
+    meta_path = f"{path}/_lsh_meta.json"
+    meta = json.loads(read_bytes(spark, meta_path).decode())
+    assert "hasher" not in meta
+    for hasher in (None, "expr"):
+        if hasher:
+            write_bytes(spark, meta_path, json.dumps(dict(meta, hasher=hasher)).encode())
+        assert mt.load(spark, path).count() == 40
+        assert open_lsh_layout(spark, path)[0]._params() == mt._params()
+    write_bytes(spark, meta_path, json.dumps(dict(meta, hasher="gemm")).encode())
+    with pytest.raises(ValueError, match="rebuild"):
+        mt.load(spark, path)
+    with pytest.raises(ValueError, match="rebuild"):
+        open_lsh_layout(spark, path)
 
 
 def test_build_refuses_empty_input(tmp_path, base, spark):

@@ -306,19 +306,11 @@ def _run_suite(
 
     p = max(4, int(math.log2(max(n / 100, 2))))
     if want("lsh_knn_top10"):
+        # hashes with one GEMM per Arrow batch (operators/lsh.py kernel)
         ml = MultiSignLSH(dim=64, num_planes=p, num_tables=8, seed=42)
         s, r = timed(lambda: ml.query_batch(
             emb, queries, 10, id_col="vec_id", round_to=6).count())
         rec("lsh_knn_top10", s, r)
-
-    if want("lsh_knn_top10_gemm"):
-        # same probe, GEMM hasher: T·p interpreted folds per row vs one
-        # numpy GEMM per Arrow batch — identical buckets (parity-tested)
-        mlg = MultiSignLSH(dim=64, num_planes=p, num_tables=8, seed=42,
-                           hasher="gemm")
-        s, r = timed(lambda: mlg.query_batch(
-            emb, queries, 10, id_col="vec_id", round_to=6).count())
-        rec("lsh_knn_top10_gemm", s, r)
 
     if want("ivf_fit") or want("ivf_knn"):
         ivf = IVF(n_lists=16, n_probe=3, max_iter=3, seed=42)
