@@ -4817,8 +4817,8 @@ _VALIDATION = {
     "nation_set_ops": (19, 0),
     "customer_strings": (19, 0),
     "orders_by_month": (19, 0),
-    "doc_dedup_keep_star": (19, 0),
-    "doc_minhash_tuned": (19, 0),
+    "doc_dedup_keep_star": (19, 21),
+    "doc_minhash_tuned": (19, 21),
     "doc_simhash_star": (19, 0),
     "doc_winnow_star": (19, 0),
     "doc_bm25_top10": (19, 0),
@@ -4832,12 +4832,12 @@ _VALIDATION = {
     "doc_repetition": (19, 0),
     "doc_pii_scrub": (19, 0),
     "events_retention": (19, 0),
-    "embedding_near_dups": (19, 20),
-    "embedding_near_dups_lsh": (19, 20),
-    "embedding_semantic_dedup": (19, 0),
+    "embedding_near_dups": (20, 20),
+    "embedding_near_dups_lsh": (20, 20),
+    "embedding_semantic_dedup": (19, 21),
     "media_pipeline": (19, 0),
     "media_near_dups": (19, 0),
-    "similarity_join": (19, 20),
+    "similarity_join": (20, 20),
     "knn_cosine_top10": (19, 0),
     "knn_euclidean_top10": (19, 0),
     "media_dedup_against": (19, 0),
@@ -4845,7 +4845,7 @@ _VALIDATION = {
     "doc_bm25_indexed": (19, 0),
     "doc_dsir_top": (19, 0),
     "knn_batch_top5": (19, 0),
-    "lsh_knn_top10": (19, 20),
+    "lsh_knn_top10": (20, 20),
     "vector_stats": (19, 0),
     "knn_manhattan_top10": (19, 0),
     "knn_quantized_top10": (19, 0),
@@ -4853,58 +4853,58 @@ _VALIDATION = {
     "pricing_summary": (19, 0),
     "revenue_by_nation": (19, 0),
     "doc_dsir_against": (19, 0),
-    "doc_hybrid_batch_multi": (19, 20),
+    "doc_hybrid_batch_multi": (20, 20),
     "brand_revenue": (19, 0),
     "top_customer_per_nation": (19, 0),
     "events_hourly": (19, 0),
     "events_sessions": (19, 0),
     "events_sliding": (19, 0),
     "customers_without_orders": (19, 0),
-    "events_asof": (13, 0),
-    "doc_bm25_sharded": (14, 0),
-    "events_hll_layout": (14, 0),
-    "events_kmv_layout": (14, 0),
-    "doc_temperature_sample": (14, 0),
-    "doc_vocab_stats": (14, 0),
-    "events_hll_users": (14, 0),
-    "orders_fast_lines": (14, 0),
-    "doc_token_stats": (14, 0),
-    "doc_lang_quality": (14, 0),
-    "doc_exact_dedup": (14, 0),
-    "doc_minhash_pairs": (14, 0),
-    "doc_dup_clusters": (14, 0),
-    "doc_dedup_keep": (14, 0),
-    "doc_text_knn": (14, 0),
-    "doc_simhash_near": (14, 0),
-    "doc_winnow_pairs": (14, 0),
-    "salted_supplier_revenue": (14, 0),
-    "price_quantiles": (14, 0),
-    "doc_dedup_against": (14, 0),
-    "doc_incremental_keep": (14, 0),
-    "doc_simhash_against": (14, 0),
-    "doc_dedup_against_verified": (14, 0),
-    "doc_winnow_against": (14, 0),
-    "embedding_dedup_against": (14, 20),
-    "events_funnel": (14, 0),
-    "doc_split_sample": (14, 0),
-    "doc_pack_chunks": (14, 0),
-    "doc_decontam": (14, 0),
-    "ivfpq_knn": (14, 17),
-    "filtered_lsh_knn": (14, 20),
-    "media_dedup_keep": (14, 0),
-    "pq_knn": (14, 17),
-    "filtered_knn": (14, 0),
-    "lsh_recall_at_10": (14, 20),
-    "lsh_precision_at_10": (14, 20),
-    "hnsw_knn": (14, 18),
-    "cp_knn_top10": (14, 17),
-    "doc_hybrid_indexed": (14, 20),
-    "doc_hybrid_batch": (14, 20),
-    "doc_surprisal_buckets": (14, 0),
-    "doc_source_cap": (14, 0),
-    "embedding_cluster_cap": (14, 0),
-    "doc_semantic_decontam": (14, 0),
-    "ivf_knn": (14, 17),
+    "events_asof": (20, 0),
+    "doc_bm25_sharded": (20, 0),
+    "events_hll_layout": (20, 0),
+    "events_kmv_layout": (20, 0),
+    "doc_temperature_sample": (20, 0),
+    "doc_vocab_stats": (20, 0),
+    "events_hll_users": (20, 0),
+    "orders_fast_lines": (20, 0),
+    "doc_token_stats": (20, 0),
+    "doc_lang_quality": (20, 0),
+    "doc_exact_dedup": (20, 0),
+    "doc_minhash_pairs": (20, 21),
+    "doc_dup_clusters": (20, 21),
+    "doc_dedup_keep": (20, 21),
+    "doc_text_knn": (20, 0),
+    "doc_simhash_near": (20, 0),
+    "doc_winnow_pairs": (20, 0),
+    "salted_supplier_revenue": (20, 0),
+    "price_quantiles": (20, 0),
+    "doc_dedup_against": (20, 21),
+    "doc_incremental_keep": (20, 21),
+    "doc_simhash_against": (20, 0),
+    "doc_dedup_against_verified": (20, 21),
+    "doc_winnow_against": (20, 0),
+    "embedding_dedup_against": (20, 20),
+    "events_funnel": (20, 0),
+    "doc_split_sample": (20, 0),
+    "doc_pack_chunks": (20, 0),
+    "doc_decontam": (20, 0),
+    "ivfpq_knn": (20, 17),
+    "filtered_lsh_knn": (20, 20),
+    "media_dedup_keep": (20, 21),
+    "pq_knn": (20, 17),
+    "filtered_knn": (20, 0),
+    "lsh_recall_at_10": (20, 20),
+    "lsh_precision_at_10": (20, 20),
+    "hnsw_knn": (20, 18),
+    "cp_knn_top10": (20, 17),
+    "doc_hybrid_indexed": (20, 20),
+    "doc_hybrid_batch": (20, 20),
+    "doc_surprisal_buckets": (20, 0),
+    "doc_source_cap": (20, 0),
+    "embedding_cluster_cap": (20, 0),
+    "doc_semantic_decontam": (20, 0),
+    "ivf_knn": (20, 17),
     "events_props_stats": (14, 0),
     "events_kmv_users": (14, 0),
     "revenue_rollup": (14, 0),

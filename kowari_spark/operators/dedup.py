@@ -10,7 +10,13 @@ near-dup — each designed as a shuffle-conscious DataFrame pipeline:
   (|docs|·b rows) -> self-join on (band, key) — the join key is the band
   bucket so the shuffle moves only (id, band_key) pairs, never documents;
 - verification joins shingle sets back ONLY for candidate pairs
-  (candidate set << n²);
+  (candidate set << n²); a corpus within the driver bounds
+  (``_DRIVER_MAX_ROWS`` rows, ``_DRIVER_MAX_TEXT_BYTES`` of text) runs
+  that same algorithm in memory — a size check and one collect, the
+  same numpy signature kernel (``_minhash_matrix``) the mapInPandas
+  pass runs, md5 band keys, exact shingle-set Jaccard — and returns
+  identical rows with no shuffle (two Spark jobs on a single-partition
+  input);
 - embedding near-dup: exact O(n²) variant for oracles/small n, LSH-bucket
   variant as the 100 TB path (pairs only form inside a bucket); a corpus
   within the driver bound (``_DRIVER_MAX_ROWS``) runs that same LSH
@@ -203,6 +209,42 @@ def exact_dup_groups(
 
 # -- MinHash + LSH ----------------------------------------------------------
 
+def _shingle_set(text: str, shingle_n: int) -> set[str]:
+    """``functions.text.shingles`` of a non-null text, as a set:
+    single-space split, the whole text below ``shingle_n`` tokens."""
+    toks = text.split(" ")
+    if len(toks) < shingle_n:
+        return {text}
+    return {" ".join(toks[j: j + shingle_n])
+            for j in range(len(toks) - shingle_n + 1)}
+
+
+def _minhash_matrix(texts, a: list[int], b: list[int], shingle_n: int):
+    """The signature kernel of both minhash executions: a
+    (len(texts), len(a)) int64 matrix whose entry (d, i) is the min
+    over document d's shingle hashes m of (a_i·m + b_i) mod p, p =
+    2³¹−1. Each shingle is md5-hashed once (``numerics.py_hash64``,
+    reduced mod p); the affine mins are one numpy pass per hash over
+    every shingle of the batch, reduced per document. The int64
+    arithmetic is exact: a_i, m < p, so a_i·m + b_i < 2⁶². NULL text
+    hashes as the empty string."""
+    import numpy as np
+
+    from kowari_spark.numerics import py_hash64
+
+    hs, starts = [], []
+    for t in texts:
+        starts.append(len(hs))
+        hs.extend(map(py_hash64, _shingle_set("" if t is None else t,
+                                              shingle_n)))
+    out = np.empty((len(starts), len(a)), dtype=np.int64)
+    if starts:  # every document has at least one shingle
+        H = np.asarray(hs, dtype=np.int64) % MINHASH_P  # hashes < 2⁶⁰
+        for i, (ai, bi) in enumerate(zip(a, b)):
+            out[:, i] = np.minimum.reduceat((ai * H + bi) % MINHASH_P, starts)
+    return out
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -217,17 +259,18 @@ def minhash_signatures(
     Per-document minhash needs no cross-document state, so the
     signature is computed ROW-LOCALLY in one ``mapInPandas`` pass — no
     shingle explode, no shuffle (4.6x faster than the explode +
-    ``groupBy(id)`` min-aggregate plan at 5M docs, BASELINE.md). Same
-    tokenization as ``functions.text.shingles`` (single-space split,
-    whole-text fallback for sub-``shingle_n`` docs), the md5-prefix
-    base hash (``numerics.py_hash64``, the portable-hash contract's one
-    Python home) and the affine (a·m + b) mod p mins — exact integer
-    math, so the DuckDB replay matches bit-for-bit. NULL text hashes as
-    the empty string, like every fingerprint family here."""
+    ``groupBy(id)`` min-aggregate plan at 5M docs, BASELINE.md). Each
+    Arrow batch runs ``_minhash_matrix``, the kernel the in-memory
+    ``minhash_dedup_pairs`` runs on the driver: same tokenization as
+    ``functions.text.shingles`` (single-space split, whole-text
+    fallback for sub-``shingle_n`` docs), the md5-prefix base hash
+    (``numerics.py_hash64``, the portable-hash contract's one Python
+    home) and the affine (a·m + b) mod p mins — exact integer math, so
+    the DuckDB replay matches bit-for-bit. NULL text hashes as the
+    empty string, like every fingerprint family here."""
     import pandas as pd
 
     from kowari_spark.fsutil import scan_parallelism
-    from kowari_spark.numerics import py_hash64
 
     # few-split scans serialize the per-shingle md5 pass (guide §2.5);
     # no-op whenever the input is already as parallel as the session
@@ -237,26 +280,12 @@ def minhash_signatures(
     schema = f"{id_col} {id_type}, " + ", ".join(
         f"m{i} long" for i in range(num_hashes)
     )
-    p = MINHASH_P
 
     def sig(batches):
         for pdf in batches:
+            M = _minhash_matrix(pdf[text_col], a, b, shingle_n)
             out = {id_col: pdf[id_col].to_numpy()}
-            cols = [[] for _ in range(num_hashes)]
-            for txt in pdf[text_col]:
-                toks = ("" if txt is None else txt).split(" ")
-                if len(toks) >= shingle_n:
-                    grams = {
-                        " ".join(toks[j: j + shingle_n])
-                        for j in range(len(toks) - shingle_n + 1)
-                    }
-                else:
-                    grams = {" ".join(toks)}
-                hs = [py_hash64(g) % p for g in grams]
-                for i, (ai, bi) in enumerate(zip(a, b)):
-                    cols[i].append(min((ai * m + bi) % p for m in hs))
-            for i in range(num_hashes):
-                out[f"m{i}"] = pd.array(cols[i], dtype="int64")
+            out.update((f"m{i}", M[:, i]) for i in range(num_hashes))
             yield pd.DataFrame(out)
 
     return df.mapInPandas(sig, schema)
@@ -434,6 +463,115 @@ def jaccard_pairs(
     )
 
 
+def _minhash_pairs_in_memory(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    threshold: float,
+    num_hashes: int,
+    bands: int,
+    shingle_n: int,
+    seed: int,
+    edges: str,
+) -> DataFrame | None:
+    """``minhash_dedup_pairs`` on the driver, for a corpus of at most
+    ``_DRIVER_MAX_ROWS`` rows and ``_DRIVER_MAX_TEXT_BYTES`` text bytes.
+    Returns None — the caller then runs the distributed plan — for an
+    id type other than integral or string (only these order identically
+    in Python and Spark), a null or repeated id, a corpus over either
+    bound, or more all-pairs candidates than ``HNSW.BEAM_MAX_EDGES``.
+
+    Two collects: the size check (ids and ``octet_length(text)`` under
+    ``limit(_DRIVER_MAX_ROWS + 1)`` — no exchange), then (id, text).
+    Every later step repeats one statement of the distributed plan, so
+    the rows are identical (pinned by tests/test_text_dedup.py::
+    test_minhash_in_memory_parity): signatures from
+    ``_minhash_matrix``, the kernel ``minhash_signatures`` runs per
+    Arrow batch; band keys as the md5 of ``minhash_bands``'
+    ``concat_ws(",", …)`` string; "auto" edges from the exact bucket
+    sizes with ``resolve_edges``' rule; candidates per (band, key)
+    bucket — all pairs, or member ↔ bucket-min like
+    ``bucket_star_edges`` — deduplicated across bands; and the exact
+    Jaccard of ``jaccard_pairs`` over ``functions.text.shingles``' sets,
+    where NULL text is the set {NULL}."""
+    import hashlib
+    from itertools import combinations
+
+    import numpy as np
+    from pyspark.sql import types as T
+
+    from kowari_spark.fsutil import local_df
+    from kowari_spark.operators.hnsw import HNSW
+
+    field = df.schema[id_col]
+    bound = _DRIVER_MAX_ROWS
+    if bound <= 0 or not isinstance(field.dataType,
+                                    (T.IntegralType, T.StringType)):
+        return None
+    sized = df.select(id_col, F.octet_length(text_col)).limit(
+        bound + 1).collect()
+    ids = [r[0] for r in sized]
+    if (len(ids) > bound or None in ids or len(set(ids)) != len(ids)
+            or sum(r[1] or 0 for r in sized) > _DRIVER_MAX_TEXT_BYTES):
+        return None
+    # position == id rank: bucket mins and id_a < id_b are positional
+    rows = sorted(df.select(id_col, text_col).limit(bound + 1).collect(),
+                  key=lambda r: r[0])
+    ids = [r[0] for r in rows]
+    texts = [r[1] for r in rows]
+
+    a, b = minhash_params(num_hashes, seed)
+    step = 4096  # documents per kernel call: bounds the shingle buffer
+    sig = np.concatenate(
+        [_minhash_matrix(texts[i: i + step], a, b, shingle_n)
+         for i in range(0, len(texts), step)]
+        or [np.zeros((0, num_hashes), dtype=np.int64)]
+    )
+    r = num_hashes // bands
+    buckets: dict = {}
+    for band in range(bands):
+        for pos, vals in enumerate(sig[:, band * r: (band + 1) * r].tolist()):
+            key = hashlib.md5(",".join(map(str, vals)).encode()).hexdigest()
+            buckets.setdefault((band, key), []).append(pos)
+    groups = [g for g in buckets.values() if len(g) > 1]
+    if edges == "auto":
+        edges = "pairs"
+        if any(len(g) > _AUTO_STAR_BUCKET for g in groups):
+            _warn_star(["band", "band_key"], _AUTO_STAR_BUCKET, stacklevel=4)
+            edges = "star"
+    cand = set()
+    if edges == "star":
+        for g in groups:
+            cand.update((g[0], m) for m in g[1:])
+    elif sum(len(g) * (len(g) - 1) // 2 for g in groups) > HNSW.BEAM_MAX_EDGES:
+        return None
+    else:
+        for g in groups:
+            cand.update(combinations(g, 2))
+
+    sets: dict = {}
+
+    def shingled(pos):
+        if pos not in sets:
+            t = texts[pos]
+            sets[pos] = {None} if t is None else _shingle_set(t, shingle_n)
+        return sets[pos]
+
+    out = []
+    for pa, pb in cand:
+        sa, sb = shingled(pa), shingled(pb)
+        inter = len(sa & sb)
+        jac = inter / (len(sa) + len(sb) - inter)
+        if jac >= threshold:
+            out.append((ids[pa], ids[pb], jac))
+    schema = T.StructType([
+        T.StructField("id_a", field.dataType),
+        T.StructField("id_b", field.dataType),
+        T.StructField("jaccard", T.DoubleType()),
+    ])
+    return local_df(df.sparkSession, out, schema)
+
+
 def minhash_dedup_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -446,6 +584,25 @@ def minhash_dedup_pairs(
     edges: str = "auto",
 ) -> DataFrame:
     """Near-dup pairs: LSH candidates verified by exact Jaccard >= t.
+    Output: (id_a, id_b, jaccard), id_a < id_b.
+
+    Two executions of one algorithm, chosen by the input alone:
+
+    - bounded: a size check collects the ids and text byte lengths
+      under ``limit(_DRIVER_MAX_ROWS + 1)``; when the corpus fits that
+      row bound and ``_DRIVER_MAX_TEXT_BYTES``, one collect of (id,
+      text), and ``_minhash_pairs_in_memory`` signs, buckets and
+      verifies it on the driver and returns the identical rows through
+      ``fsutil.local_df`` — two bounded collects (one Spark job each
+      on a single-partition input), no shuffle;
+    - distributed: every other case — a larger corpus, or input the
+      in-memory path declines — runs ``minhash_band_pairs`` (the band
+      self-join shuffles only (id, band_key) pairs) and
+      ``jaccard_pairs``. This is the 100 TB path.
+
+    Both executions sign documents with one numpy kernel
+    (``_minhash_matrix``: per Arrow batch in ``minhash_signatures``, per
+    driver chunk in memory).
 
     ``num_hashes="auto"`` derives (num_hashes, bands) from ``threshold``
     via :func:`minhash_banding` — the S-curve's steep region lands on
@@ -456,9 +613,11 @@ def minhash_dedup_pairs(
     per bucket) — every surviving edge passes the exact Jaccard bound,
     but verification on star edges can split components verified
     all-pairs would join through intermediate members (the verified-
-    variant trade, module docstring). ``"auto"`` (default) probes the
-    band buckets and stays on "pairs" until one could go quadratic —
-    pin "pairs" when the verified pair list itself is the output."""
+    variant trade, module docstring). ``"auto"`` (default) stays on
+    "pairs" until a band bucket holds more than 1,024 documents — a
+    bounded probe on the distributed plan, the exact bucket sizes in
+    memory — pin "pairs" when the verified pair list itself is the
+    output."""
     if num_hashes == "auto":
         num_hashes, bands = minhash_banding(threshold)
     elif bands is None:
@@ -470,6 +629,14 @@ def minhash_dedup_pairs(
             "derives both); pass an explicit bands with an explicit "
             f"num_hashes={num_hashes}"
         )
+    if num_hashes % bands:
+        raise ValueError("num_hashes must divide evenly into bands")
+    _check_edges(edges)
+    pairs = _minhash_pairs_in_memory(df, text_col, id_col, threshold,
+                                     num_hashes, bands, shingle_n, seed,
+                                     edges)
+    if pairs is not None:
+        return pairs
     cand = minhash_band_pairs(df, text_col, id_col, num_hashes, bands,
                               shingle_n, seed, edges=edges)
     return jaccard_pairs(df, cand, text_col, id_col, shingle_n).filter(
@@ -666,11 +833,12 @@ def _cc_star(canon: DataFrame, max_iter: int) -> DataFrame:
     return canon
 
 
-def _cc_unionfind(canon0: DataFrame) -> DataFrame:
+def _cc_unionfind(canon0: DataFrame, rows=None) -> DataFrame:
     """Exact connected components for SMALL edge sets (the ``auto``
-    route at or under ``_DRIVER_MAX_ROWS`` rows, checked by the caller's
-    count): ONE bounded collect (≤ 64k canonical edges ≈ 1 MB) and a
-    driver-side union-find, instead of O(diameter) iterative rounds.
+    route at or under ``_DRIVER_MAX_ROWS`` rows): ONE bounded collect
+    (≤ 64k canonical edges ≈ 1 MB; ``rows`` when the caller already
+    collected them) and a driver-side union-find, instead of
+    O(diameter) iterative rounds.
 
     The r15 measurement that motivates it: the propagation loop this
     replaces ran 12–20+ driver barriers (≈ 0.6 s each at sf0.1 — the
@@ -688,7 +856,8 @@ def _cc_unionfind(canon0: DataFrame) -> DataFrame:
     their own cluster). Python's str/int min agrees with Spark's
     ordering (UTF-8 byte order preserves code-point order), so labels
     are bit-identical to the distributed result."""
-    rows = canon0.collect()
+    if rows is None:
+        rows = canon0.collect()
     parent: dict = {}
 
     def find(x):
@@ -732,8 +901,20 @@ def _cc_unionfind(canon0: DataFrame) -> DataFrame:
 #: of at most this many rows finds its near-dups in memory
 #: (``embedding_near_dups_lsh``; measured on 64-d clustered vectors at
 #: local[4] with edges="pairs": 6.8 s in memory vs 500.7 s distributed
-#: at 65,536 rows, plans/r19/README.md)
+#: at 65,536 rows, plans/r19/README.md), as does a text corpus of at
+#: most this many rows and ``_DRIVER_MAX_TEXT_BYTES`` (``minhash_dedup_pairs``)
 _DRIVER_MAX_ROWS = 65536
+
+#: the text-byte bound of the in-memory ``minhash_dedup_pairs``: the
+#: driver hashes every shingle in one Python process, the distributed
+#: plan on every core. Measured at local[4] on short documents (30-80
+#: words), in memory vs distributed: 4.1 vs 5.2 s at 3.5 MB, 6.1 vs
+#: 5.2 s at 7 MB, 13.2 vs 9.1 s at 14 MB (64k rows, inside the row
+#: bound), so the cap sits at the short-document break-even; longer
+#: documents cost the driver less per byte (8.6 vs 26.0 s at 11 MB of
+#: 400-1,000-word documents), so the cap sends some of those to the
+#: slower plan (plans/r21/README.md)
+_DRIVER_MAX_TEXT_BYTES = 8 << 20
 
 
 def dedup_clusters(
@@ -745,32 +926,35 @@ def dedup_clusters(
     Near-dup relations aren't transitive, but dedup treats them so (one
     survivor per component — the standard MinHash-dedup final step).
 
-    Adaptive algorithm choice (the edge count is a free aggregate on the
-    checkpointed edge list):
+    Adaptive algorithm choice:
 
     - big edge sets (or ``algorithm="star"``): large-star/small-star
       contraction — O(log² n) rounds independent of diameter, the only
       shape that survives a 100 TB high-diameter graph;
-    - small edge sets (``algorithm="auto"``, <= 64k edges): min-label
-      propagation — 2 shuffles/round beats star's ~5 on the shallow
-      graphs near-dup clusters actually form; if it has NOT converged
-      within ``max_iter`` hops (adversarially deep small graph), the
-      partially-contracted graph (edges relabeled through the current
-      labels) is finished by star contraction and the labels composed,
-      so the result is exact for every input.
+    - small edge sets (``algorithm="auto"``, at most
+      ``_DRIVER_MAX_ROWS`` distinct edges): ``_cc_unionfind`` on the
+      driver, exact for any diameter.
 
-    localCheckpoint materializes the input edge list once (it is
-    typically the tail of an expensive minhash/jaccard pipeline) and
-    truncates per-round lineage so plans don't grow with iterations.
+    In "auto" mode one collect under ``limit(_DRIVER_MAX_ROWS + 1)``
+    both decides the route and feeds the union-find. Only an edge set
+    over the bound is localCheckpoint'ed (it is typically the tail of
+    an expensive minhash/jaccard pipeline), which also truncates
+    per-round lineage so star plans don't grow with iterations.
     """
-    canon0 = (
-        pairs.select(
-            F.greatest("id_a", "id_b").alias("hi"),
-            F.least("id_a", "id_b").alias("lo"),
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    canon0 = pairs.select(
+        F.greatest("id_a", "id_b").alias("hi"),
+        F.least("id_a", "id_b").alias("lo"),
+    ).distinct()
+    if algorithm == "auto":
+        rows = canon0.limit(_DRIVER_MAX_ROWS + 1).collect()
+        if len(rows) <= _DRIVER_MAX_ROWS:
+            # small edge set: driver union-find — exact for any
+            # diameter, no job beyond this collect (r15: the
+            # propagation loop it replaced cost ~100+ jobs on the
+            # semantic-dedup pair graph). canon0 holds every node,
+            # self-pair isolates included, so every node is labeled.
+            return _cc_unionfind(canon0, rows)
+    canon0 = canon0.localCheckpoint()
     canon = canon0.filter(F.col("hi") != F.col("lo"))
     all_nodes = (
         canon0.select(F.col("hi").alias("id"))
@@ -787,17 +971,7 @@ def dedup_clusters(
         ).select("id", F.col("id").alias("cluster_id"))
         return child.unionByName(roots)
 
-    if algorithm == "star" or (
-        algorithm == "auto" and canon0.count() > _DRIVER_MAX_ROWS
-    ):
-        return _finish(_cc_star(canon, max_iter))
-
-    # small edge set: ONE bounded collect + driver union-find — exact
-    # for any diameter, 1 job instead of O(diameter) barrier rounds
-    # (r15: the propagation loop this replaces cost ~100+ jobs on the
-    # semantic-dedup pair graph). all_nodes is derived from the same
-    # canon0, so every node (incl. self-pair isolates) is labeled.
-    return _cc_unionfind(canon0)
+    return _finish(_cc_star(canon, max_iter))
 
 
 def dedup_keep_representatives(

@@ -22,7 +22,7 @@ driver-side collect, in one declarative plan covering every level at
 once:
 
 1. each node explodes into rows for levels 0..node_level, so a single
-   (level, table, bucket) self-join builds all layers together;
+   (level, table, bucket) grouping builds all layers together;
 2. candidate pairs come from a multi-table sign-LSH OR-construction
    (same machinery as dedup.embedding_near_dups_lsh) — pairs only form
    inside buckets, never the n² cross product;
@@ -163,11 +163,14 @@ class HNSW:
 
     def _exploded_levels(self, leveled: DataFrame, id_col: str,
                          vec_col: str) -> DataFrame:
-        """One row per (node, level in 0..node_level): a single self-join
-        over this relation builds every layer's graph at once."""
+        """One row per (node, level in 0..node_level), with ``leveled``'s
+        other columns: a single bucket grouping over this relation
+        builds every layer's graph at once."""
         return leveled.select(
             F.col(id_col).alias("__vid"),
             F.col(vec_col).alias("__v"),
+            *[c for c in leveled.columns
+              if c not in (id_col, vec_col, "node_level")],
             F.explode(F.sequence(F.lit(0), F.col("node_level"))).alias("level"),
         )
 
@@ -181,7 +184,7 @@ class HNSW:
     ) -> DataFrame:
         """First-round edge set as ONE un-materialized declarative plan.
 
-        Shape (either scoring): LSH (level, table, bucket) self-join →
+        Shape (either scoring): LSH (level, table, bucket) grouping →
         score pairs INSIDE their bucket (map-side; no pair ever
         shuffles carrying vectors) → per-(bucket, src) top-m pushdown —
         EXACT, because any edge in a src's global top-M beats all but
@@ -209,12 +212,14 @@ class HNSW:
             dim = infer_dim(df, vec_col)
         leveled = assign_levels(self._graph_nodes(df, id_col, vec_col, dim),
                                 id_col, self.seed, self.max_level)
-        exploded = self._exploded_levels(leveled, id_col, vec_col)
-
+        # a node's buckets do not depend on its level: hash once per
+        # node, before the level explode
         buckets = MultiSignLSH(dim, self.num_planes, self.num_tables,
-                               self.seed).bucket_col("__v")
-        bucketed = exploded.select(
-            "level", "__vid", "__v", F.posexplode(buckets).alias("__tbl", "__bkt")
+                               self.seed).bucket_col(vec_col)
+        hashed = leveled.select(id_col, vec_col, "node_level",
+                                F.posexplode(buckets).alias("__tbl", "__bkt"))
+        bucketed = self._exploded_levels(hashed, id_col, vec_col).select(
+            "level", "__vid", "__v", "__tbl", "__bkt"
         )
 
         if metric in _BUILTIN_METRICS:
@@ -235,24 +240,27 @@ class HNSW:
         )
 
     def _bucket_topm_expr(self, bucketed: DataFrame, metric: str) -> DataFrame:
-        """Native-expression bucket scoring: vectors ride the bucket
-        self-join (n·T·levels rows, bounded), pairs score map-side, and
-        the per-(bucket, src) top-m window needs NO extra exchange (its
-        keys are a superset of the join keys)."""
-        a = bucketed.select(
-            "level", F.col("__vid").alias("src"),
-            F.col("__v").alias("__sv"), "__tbl", "__bkt",
-        )
-        b = bucketed.select(
-            "level", F.col("__vid").alias("dst"),
-            F.col("__v").alias("__dv"), "__tbl", "__bkt",
+        """Native-expression bucket scoring: vectors ride one exchange
+        into per-bucket member lists (n·T·levels rows, bounded), every
+        member pairs with every other member of its list and pairs score
+        map-side, and the per-(bucket, src) top-m window needs NO extra
+        exchange (its keys are a superset of the grouping keys). One
+        grouping instead of a bucket self-join: the relation, and the
+        hash kernel under it, is computed once, not once per side."""
+        members = bucketed.groupBy("level", "__tbl", "__bkt").agg(
+            F.collect_list(F.struct("__vid", "__v")).alias("__m")
         )
         scored = (
-            a.join(b, ["level", "__tbl", "__bkt"])
-            .filter(F.col("src") != F.col("dst"))
+            members.select("level", "__tbl", "__bkt", "__m",
+                           F.explode("__m").alias("__a"))
+            .select("level", "__tbl", "__bkt", "__a",
+                    F.explode("__m").alias("__b"))
+            .filter(F.col("__a.__vid") != F.col("__b.__vid"))
             .select(
-                "level", "__tbl", "__bkt", "src", "dst",
-                _score(metric, "__dv", "__sv").alias("__s"),
+                "level", "__tbl", "__bkt",
+                F.col("__a.__vid").alias("src"),
+                F.col("__b.__vid").alias("dst"),
+                _score(metric, F.col("__b.__v"), F.col("__a.__v")).alias("__s"),
             )
         )
         wb = Window.partitionBy("level", "__tbl", "__bkt", "src").orderBy(

@@ -74,18 +74,18 @@ def test_recall_vs_bruteforce(base, index):
 def test_build_plan_no_python_no_collect(base, alias):
     """The round-1 build collected every layer to the driver (via
     knn_batch's query broadcast). The expression plan (a custom
-    metric's) runs one Python function, the sign-LSH hash kernel — one
-    ArrowEvalPython per side of the bucket self-join, as each side
-    folded its own buckets before — and no other: no grouped-map or
-    batch Python eval, no driver-side collect of the layer — candidates
-    come from the LSH self-join, pruning from a window."""
+    metric's) runs one Python function, the sign-LSH hash kernel, once
+    per node (before the level explode, under the one bucket grouping)
+    — a single ArrowEvalPython — and no other: no grouped-map or batch
+    Python eval, no driver-side collect of the layer — candidates come
+    from the LSH buckets, pruning from a window."""
     import re
 
     hnsw = HNSW(m=8, ef=32, seed=42)
     plan = hnsw.candidate_graph(
         base, metric=alias
     )._jdf.queryExecution().executedPlan().toString()
-    assert re.findall(r"ArrowEvalPython \[(\w+)\(", plan) == ["sign_lsh"] * 2
+    assert re.findall(r"ArrowEvalPython \[(\w+)\(", plan) == ["sign_lsh"]
     for forbidden in ("MapInPandas", "BatchEvalPython",
                       "FlatMapGroupsInPandas"):
         assert forbidden not in plan, f"{forbidden} in build plan"

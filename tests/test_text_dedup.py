@@ -966,3 +966,191 @@ def test_arrow_engines_tolerate_null_text(spark):
         got = sorted(map(tuple, dsir_logweights(df, tgt).collect()))
         want = sorted(map(tuple, dsir_logweights(empt, tgt).collect()))
         assert got == want, n
+
+
+# -- MinHash near-dups in memory ---------------------------------------------
+
+#: degraded texts: NULL (hashed as "", shingled as {NULL}), empty,
+#: under 3 tokens, doubled / trailing / leading spaces, non-ASCII
+DEGRADED_TEXTS = [None, "", "one", "two words", "exactly three tokens",
+                  "alpha  beta gamma delta", "alpha beta gamma delta ",
+                  " leading space here", "naïve café über straße 東京 タワー",
+                  "a b c d e f g h a b c"]
+
+#: 4-hash signatures (seed 42) of DEGRADED_TEXTS, frozen from the
+#: per-element Python loop the numpy kernel replaced
+DEGRADED_SIGS = [
+    [1359693764, 1936003003, 343593266, 1162043726],
+    [1359693764, 1936003003, 343593266, 1162043726],
+    [412408389, 642512695, 437850339, 2051712453],
+    [148592619, 1625790111, 583024362, 1938636348],
+    [982713112, 1749636243, 610368938, 957301310],
+    [305302950, 194880523, 580963205, 371107824],
+    [305302950, 1311400255, 580963205, 678117988],
+    [1018527666, 440118558, 75084938, 877240866],
+    [321856543, 108798126, 295043194, 543686219],
+    [666700886, 568810974, 471382165, 811253368],
+]
+
+
+def test_minhash_kernel_matches_loop_and_sql_on_degraded_rows(spark):
+    """The numpy signature kernel (``_minhash_matrix``, run per Arrow
+    batch by ``minhash_signatures`` and on the driver by the in-memory
+    ``minhash_dedup_pairs``) reproduces the frozen signatures, the
+    per-element (a·m + b) mod p loop it replaced, and the SQL
+    ``minhash_signature`` column (NULL text as the empty string)."""
+    import hashlib
+
+    from kowari_spark.functions.text import MINHASH_P, minhash_params
+    from kowari_spark.operators.dedup import (
+        _minhash_matrix,
+        minhash_signatures,
+    )
+
+    a, b = minhash_params(4, 42)
+    assert _minhash_matrix(DEGRADED_TEXTS, a, b, 3).tolist() == DEGRADED_SIGS
+    assert _minhash_matrix([], a, b, 3).shape == (0, 4)
+
+    def loop(text):
+        toks = ("" if text is None else text).split(" ")
+        grams = ({" ".join(toks[j:j + 3]) for j in range(len(toks) - 2)}
+                 if len(toks) >= 3 else {" ".join(toks)})
+        hs = [int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % MINHASH_P
+              for g in grams]
+        return [min((ai * m + bi) % MINHASH_P for m in hs)
+                for ai, bi in zip(a, b)]
+
+    assert [loop(t) for t in DEGRADED_TEXTS] == DEGRADED_SIGS
+    df = spark.createDataFrame(list(enumerate(DEGRADED_TEXTS)),
+                               "doc_id long, text string")
+    sql = df.select("doc_id", minhash_signature(
+        F.coalesce("text", F.lit("")), num_hashes=4)).collect()
+    assert [list(r[1]) for r in sorted(sql)] == DEGRADED_SIGS
+    got = sorted(map(tuple, minhash_signatures(df, num_hashes=4).collect()))
+    assert [list(r[1:]) for r in got] == DEGRADED_SIGS
+
+
+def _minhash_corpus(docs, id_type="long"):
+    """200 documents of the contract table, near copies of 40 of them,
+    and the degraded texts twice each (NULL-NULL, ""-"" and equal short
+    texts pair up; NULL and "" share a signature but not a shingle), in
+    one partition: a bounded collect then runs one Spark job (Spark
+    scans more partitions of a limit in further jobs)."""
+    spark = docs.sparkSession
+    clean = docs.orderBy("doc_id").limit(200).select("doc_id", "text")
+    near = clean.limit(40).select(
+        (F.col("doc_id") + 100_000).alias("doc_id"),
+        F.concat("text", F.lit(" plus a short tail")).alias("text"),
+    )
+    bad = spark.createDataFrame(
+        [(200_000 + i, t) for i, t in enumerate(DEGRADED_TEXTS * 2)],
+        "doc_id long, text string",
+    )
+    out = clean.unionByName(near).unionByName(bad)
+    return out.select(F.col("doc_id").cast(id_type).alias("doc_id"),
+                      "text").coalesce(1)
+
+
+@pytest.mark.parametrize("bound", ["_DRIVER_MAX_ROWS", "_DRIVER_MAX_TEXT_BYTES"])
+@pytest.mark.parametrize("edges,id_type", [
+    ("pairs", "long"), ("star", "int"), ("auto", "string"), ("hot", "long"),
+])
+def test_minhash_in_memory_parity(spark, docs, monkeypatch, edges, id_type,
+                                  bound):
+    """A corpus inside both driver bounds is answered in memory (2 Spark
+    jobs) with the distributed plan's rows and schema, EXACTLY — the
+    distributed side forced by setting either bound to 0 — for every
+    edges mode, integer and string ids and degraded texts. "hot" adds a
+    1,100-copy family (one band bucket over the 1,024-row auto bound):
+    "auto" resolves to star with the same warning on both paths."""
+    from kowari_spark.operators import dedup
+
+    df = _minhash_corpus(docs, id_type).cache()
+    df.count()
+    kw = dict(threshold=0.5, edges=edges)
+    if edges == "hot":
+        fam = spark.range(1100).select(
+            (F.col("id") + 300_000).alias("doc_id"),
+            F.lit("one planted boilerplate family text").alias("text"),
+        )
+        df = df.unionByName(fam).coalesce(1).cache()
+        df.count()
+        kw["edges"] = "auto"
+
+    def run():
+        if edges != "hot":
+            return dedup.minhash_dedup_pairs(df, **kw)
+        with pytest.warns(UserWarning, match="resolved to 'star'"):
+            return dedup.minhash_dedup_pairs(df, **kw)
+
+    def run_collect():
+        out = run()
+        return out.schema, out.collect()
+
+    (schema, rows), jobs = _jobs(
+        spark, f"mh-local-{edges}-{id_type}-{bound}", run_collect)
+    assert jobs == 2
+    monkeypatch.setattr(dedup, bound, 0)
+    dist = run()
+    assert schema == dist.schema
+    rows = sorted(map(tuple, rows))
+    assert rows == sorted(map(tuple, dist.collect()))
+    got = {(a, b): j for a, b, j in rows}
+    key = (lambda i: i) if id_type != "string" else str
+    # NULL, "" and "two words" twice each; star keeps the bucket-min
+    # (NULL) edges only, as NULL and "" share every band bucket
+    known = [(200_000, 200_010), (200_001, 200_011), (200_003, 200_013)]
+    for a, b in known[:1] if edges in ("star", "hot") else known:
+        assert got[(key(a), key(b))] == 1.0
+    assert (key(200_000), key(200_001)) not in got          # NULL vs ""
+    if edges == "hot":
+        assert len(rows) >= 1099
+
+
+def test_minhash_in_memory_declines(spark, docs, monkeypatch):
+    """Input the in-memory path does not take runs the distributed plan,
+    with its rows: a repeated id or a corpus over either bound costs
+    only the size-check job beyond the distributed plan's jobs, more
+    all-pairs candidates than ``HNSW.BEAM_MAX_EDGES`` the size check
+    and the text collect, and a non-integral id type (double) none.
+    Each bound admits a corpus that exactly fills it."""
+    from kowari_spark.operators import dedup
+    from kowari_spark.operators.hnsw import HNSW
+
+    base = _minhash_corpus(docs).cache()
+    n = base.count()
+    nbytes = base.agg(F.sum(F.octet_length("text"))).first()[0]
+    rows, nbytes_cap = "_DRIVER_MAX_ROWS", "_DRIVER_MAX_TEXT_BYTES"
+    cases = {
+        "repeated id": (base.unionByName(base.limit(1)).coalesce(1), {}, 1),
+        "double id": (base.select(F.col("doc_id").cast("double")
+                                  .alias("doc_id"), "text"), {}, 0),
+        "over bytes": (base, {(dedup, nbytes_cap): nbytes - 1}, 1),
+        "over rows": (base, {(dedup, rows): n - 1}, 1),
+        "over candidates": (base, {(HNSW, "BEAM_MAX_EDGES"): 0}, 2),
+        "full bytes": (base, {(dedup, nbytes_cap): nbytes}, None),
+        "full rows": (base, {(dedup, rows): n}, None),
+    }
+    for name, (df, bounds, extra) in cases.items():
+        df = df.cache()
+        df.count()
+
+        def run():
+            out = dedup.minhash_dedup_pairs(df, threshold=0.5, edges="pairs")
+            return sorted(map(tuple, out.collect()))
+
+        with monkeypatch.context() as mp:
+            for (target, k), v in bounds.items():
+                mp.setattr(target, k, v)
+            got, jobs = _jobs(spark, f"mh-decline-{name}", run)
+            args = (df, "text", "doc_id", 0.5, 16, 4, 3, 42, "pairs")
+            declined = dedup._minhash_pairs_in_memory(*args) is None
+        with monkeypatch.context() as mp:
+            mp.setattr(dedup, "_DRIVER_MAX_ROWS", 0)
+            want, dist_jobs = _jobs(spark, f"mh-dist-{name}", run)
+        assert got == want, name
+        assert declined == (extra is not None), name
+        if extra is None:
+            assert jobs == 2, name
+        else:
+            assert jobs == dist_jobs + extra, (name, jobs, dist_jobs)
