@@ -4810,47 +4810,47 @@ def entry(spark: SparkSession) -> DataFrame:
 #: previous round for every row of the previous round's window, then
 #: sets ``changed`` to its own number on each row whose code it changes.
 _VALIDATION = {
-    "collection_mor_delete": (19, 0),
-    "events_hll_p12": (19, 0),
-    "doc_temperature_exact": (19, 0),
-    "doc_bm25_resharded": (19, 0),
-    "nation_set_ops": (19, 0),
-    "customer_strings": (19, 0),
-    "orders_by_month": (19, 0),
-    "doc_dedup_keep_star": (19, 21),
-    "doc_minhash_tuned": (19, 21),
-    "doc_simhash_star": (19, 0),
-    "doc_winnow_star": (19, 0),
-    "doc_bm25_top10": (19, 0),
-    "doc_bm25_batch": (19, 0),
-    "doc_hybrid_rrf": (19, 0),
-    "doc_mixture_sample": (19, 0),
-    "doc_top_bigrams": (19, 0),
-    "doc_surprisal": (19, 0),
-    "doc_dup_spans": (19, 0),
-    "doc_despan": (19, 0),
-    "doc_repetition": (19, 0),
-    "doc_pii_scrub": (19, 0),
-    "events_retention": (19, 0),
+    "collection_mor_delete": (21, 0),
+    "events_hll_p12": (21, 0),
+    "doc_temperature_exact": (21, 0),
+    "doc_bm25_resharded": (21, 0),
+    "nation_set_ops": (21, 0),
+    "customer_strings": (21, 0),
+    "orders_by_month": (21, 0),
+    "doc_dedup_keep_star": (21, 22),
+    "doc_minhash_tuned": (21, 22),
+    "doc_simhash_star": (21, 0),
+    "doc_winnow_star": (21, 0),
+    "doc_bm25_top10": (21, 0),
+    "doc_bm25_batch": (21, 0),
+    "doc_hybrid_rrf": (21, 0),
+    "doc_mixture_sample": (21, 0),
+    "doc_top_bigrams": (21, 0),
+    "doc_surprisal": (21, 0),
+    "doc_dup_spans": (21, 0),
+    "doc_despan": (21, 0),
+    "doc_repetition": (21, 0),
+    "doc_pii_scrub": (21, 0),
+    "events_retention": (21, 0),
     "embedding_near_dups": (20, 20),
-    "embedding_near_dups_lsh": (20, 20),
-    "embedding_semantic_dedup": (19, 21),
-    "media_pipeline": (19, 0),
-    "media_near_dups": (19, 0),
+    "embedding_near_dups_lsh": (20, 22),
+    "embedding_semantic_dedup": (21, 22),
+    "media_pipeline": (21, 0),
+    "media_near_dups": (21, 0),
     "similarity_join": (20, 20),
-    "knn_cosine_top10": (19, 0),
-    "knn_euclidean_top10": (19, 0),
-    "media_dedup_against": (19, 0),
-    "doc_simhash_keep": (19, 0),
-    "doc_bm25_indexed": (19, 0),
-    "doc_dsir_top": (19, 0),
-    "knn_batch_top5": (19, 0),
+    "knn_cosine_top10": (21, 0),
+    "knn_euclidean_top10": (21, 0),
+    "media_dedup_against": (21, 0),
+    "doc_simhash_keep": (21, 0),
+    "doc_bm25_indexed": (21, 0),
+    "doc_dsir_top": (21, 0),
+    "knn_batch_top5": (21, 0),
     "lsh_knn_top10": (20, 20),
-    "vector_stats": (19, 0),
-    "knn_manhattan_top10": (19, 0),
-    "knn_quantized_top10": (19, 0),
-    "vector_normalize": (19, 0),
-    "pricing_summary": (19, 0),
+    "vector_stats": (21, 0),
+    "knn_manhattan_top10": (21, 0),
+    "knn_quantized_top10": (21, 0),
+    "vector_normalize": (21, 0),
+    "pricing_summary": (21, 0),
     "revenue_by_nation": (19, 0),
     "doc_dsir_against": (19, 0),
     "doc_hybrid_batch_multi": (20, 20),
@@ -4871,46 +4871,46 @@ _VALIDATION = {
     "doc_token_stats": (20, 0),
     "doc_lang_quality": (20, 0),
     "doc_exact_dedup": (20, 0),
-    "doc_minhash_pairs": (20, 21),
-    "doc_dup_clusters": (20, 21),
-    "doc_dedup_keep": (20, 21),
+    "doc_minhash_pairs": (21, 22),
+    "doc_dup_clusters": (21, 22),
+    "doc_dedup_keep": (21, 22),
     "doc_text_knn": (20, 0),
     "doc_simhash_near": (20, 0),
     "doc_winnow_pairs": (20, 0),
     "salted_supplier_revenue": (20, 0),
     "price_quantiles": (20, 0),
-    "doc_dedup_against": (20, 21),
-    "doc_incremental_keep": (20, 21),
+    "doc_dedup_against": (21, 21),
+    "doc_incremental_keep": (21, 21),
     "doc_simhash_against": (20, 0),
-    "doc_dedup_against_verified": (20, 21),
+    "doc_dedup_against_verified": (21, 21),
     "doc_winnow_against": (20, 0),
     "embedding_dedup_against": (20, 20),
     "events_funnel": (20, 0),
     "doc_split_sample": (20, 0),
     "doc_pack_chunks": (20, 0),
     "doc_decontam": (20, 0),
-    "ivfpq_knn": (20, 17),
+    "ivfpq_knn": (20, 22),
     "filtered_lsh_knn": (20, 20),
-    "media_dedup_keep": (20, 21),
-    "pq_knn": (20, 17),
+    "media_dedup_keep": (21, 21),
+    "pq_knn": (20, 22),
     "filtered_knn": (20, 0),
     "lsh_recall_at_10": (20, 20),
     "lsh_precision_at_10": (20, 20),
-    "hnsw_knn": (20, 18),
+    "hnsw_knn": (20, 22),
     "cp_knn_top10": (20, 17),
     "doc_hybrid_indexed": (20, 20),
     "doc_hybrid_batch": (20, 20),
     "doc_surprisal_buckets": (20, 0),
     "doc_source_cap": (20, 0),
-    "embedding_cluster_cap": (20, 0),
+    "embedding_cluster_cap": (20, 22),
     "doc_semantic_decontam": (20, 0),
-    "ivf_knn": (20, 17),
-    "events_props_stats": (14, 0),
-    "events_kmv_users": (14, 0),
-    "revenue_rollup": (14, 0),
-    "doc_bm25_tombed": (14, 0),
-    "doc_dsir_unlearned": (14, 0),
-    "orders_cube": (14, 0),
+    "ivf_knn": (20, 22),
+    "events_props_stats": (21, 0),
+    "events_kmv_users": (21, 0),
+    "revenue_rollup": (21, 0),
+    "doc_bm25_tombed": (21, 0),
+    "doc_dsir_unlearned": (21, 0),
+    "orders_cube": (21, 0),
 }
 
 

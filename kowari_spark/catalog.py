@@ -465,7 +465,7 @@ class Collection:
         cosine >= threshold) via the bucketed sign-LSH path
         (operators/dedup.embedding_near_dups_lsh): in memory, in two
         Spark jobs, while the collection fits the driver bound
-        (``dedup._DRIVER_MAX_ROWS`` rows), distributed above it, with
+        (``fsutil._DRIVER_MAX_ROWS`` rows), distributed above it, with
         the same rows either way. The collection knows its dimension,
         so the distributed plan runs no inference job (ADVICE r5).
         ``edges`` defaults to "auto" — a bounded bucket probe keeps the

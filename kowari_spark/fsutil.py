@@ -369,6 +369,47 @@ def local_df(spark: SparkSession, rows, schema=None):
 
 # -- bounded driver-side input ---------------------------------------------
 
+#: the driver-side row bound: an input of at most this many rows may be
+#: collected and answered on the driver — the in-memory embedding and
+#: MinHash near-dups and the driver union-find (``operators/dedup.py``;
+#: measured on 64-d clustered vectors at local[4] with edges="pairs":
+#: 6.8 s in memory vs 500.7 s distributed at 65,536 rows,
+#: plans/r19/README.md) and the in-memory IVF and PQ fits
+#: (``operators/quantizer.py``)
+_DRIVER_MAX_ROWS = 65536
+
+
+def _narrow(df) -> bool:
+    """Whether ``df``'s physical plan has no exchange (scans, unions,
+    projections, filters, row-local UDFs): planning only, no job."""
+    return "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+
+
+def bounded_collect(df, max_rows: int) -> list:
+    """At most ``max_rows`` + 1 of ``df``'s rows, in partition order, from
+    one Spark job. ``limit(n).collect()`` scans partitions in rounds
+    that grow by ``spark.sql.limit.scaleUpFactor`` — one job per round,
+    so 2+ jobs on a multi-file read. A narrow plan is first coalesced to
+    one partition, which the limit then reads in one task, in the same
+    row order. A plan with an exchange keeps the plain limit: coalescing
+    would run its aggregate or join's final stage in one task."""
+    return (df.coalesce(1) if _narrow(df) else df).limit(max_rows + 1).collect()
+
+
+def fits_driver(df, max_rows: int) -> bool:
+    """Whether ``df`` has at most ``max_rows`` rows, from one Spark job
+    with no shuffle: on a narrow plan a count over the coalesced limit
+    (one task that stops after ``max_rows`` + 1 rows and returns one
+    number), else a zero-column ``limit().collect()`` (``limit().count()``
+    would add a single-partition exchange). False when ``max_rows`` <= 0."""
+    if max_rows <= 0:
+        return False
+    cols = df.select()
+    if _narrow(cols):
+        return cols.coalesce(1).limit(max_rows + 1).count() <= max_rows
+    return len(cols.limit(max_rows + 1).collect()) <= max_rows
+
+
 def infer_dim(df, vec_col: str) -> int:
     """The first non-null vector's length: one Spark job. The fallback
     of every operator that is not told its vector dimension."""
@@ -382,36 +423,42 @@ def infer_dim(df, vec_col: str) -> int:
 
 
 def collect_vectors(df, max_rows: int, drop: bool = False,
-                    dim: int | None = None):
+                    dim: int | None = None, cut: bool = False):
     """(rows, V) for ``df``'s columns (id, vector, ...): the collected
-    rows and their vectors as one float64 matrix, from one collect
-    capped at ``max_rows`` + 1 rows — the bounded input of every
-    driver-side path (the HNSW beam and in-memory build, the in-memory
-    embedding near-dup). None when the rows do not fit (none, or more
-    than ``max_rows``), an id or vector is null, the vectors are ragged
-    (the distributed fold's zip_with truncation is not replicated) or
-    an entry is non-finite (NaN sorts last in Python keys but first in
-    Spark's descending double order). With ``drop``, rows whose vector
-    is null or not ``dim`` long are dropped first; ``dim`` None is then
-    inferred from the collected rows the way ``infer_dim`` infers it,
-    with no Spark job."""
+    rows and their vectors as one float64 matrix, from one
+    ``bounded_collect`` of ``max_rows`` + 1 rows — the bounded input of
+    every driver-side path (the HNSW beam and in-memory build, the
+    in-memory embedding near-dup, the in-memory IVF and PQ fits). None
+    when the rows do not fit (none, or more than ``max_rows``), an id
+    or vector is null, the vectors are ragged (the distributed fold's
+    zip_with truncation is not replicated) or an entry is non-finite
+    (NaN sorts last in Python keys but first in Spark's descending
+    double order). With ``drop``, rows whose vector is null or not
+    ``dim`` long (with ``cut``: shorter than ``dim``) are dropped first;
+    ``dim`` None is then inferred from the collected rows the way
+    ``infer_dim`` infers it, with no Spark job. With ``cut``, V holds
+    each vector's first ``dim`` entries (PQ's ignore-the-tail rule)."""
     import numpy as np
 
     if max_rows <= 0:
         return None
-    rows = df.limit(max_rows + 1).collect()
+    rows = bounded_collect(df, max_rows)
     if len(rows) > max_rows:
         return None
     if drop:
         if dim is None:
             dim = next((len(r[1]) for r in rows if r[1] is not None), None)
-        rows = [r for r in rows if r[1] is not None and len(r[1]) == dim]
+        rows = [r for r in rows if r[1] is not None and (
+            len(r[1]) >= dim if cut else len(r[1]) == dim)]
     if not rows or any(r[0] is None or r[1] is None for r in rows):
         return None
-    width = len(rows[0][1])
-    if any(len(r[1]) != width for r in rows):
-        return None
-    V = np.asarray([r[1] for r in rows], dtype=np.float64)  # null -> nan
+    if cut:
+        vecs = [r[1][:dim] for r in rows]
+    else:
+        vecs = [r[1] for r in rows]
+        if any(len(v) != len(vecs[0]) for v in vecs):
+            return None
+    V = np.asarray(vecs, dtype=np.float64)  # null entry -> nan
     if not np.isfinite(V).all():
         return None
     return rows, V

@@ -11,15 +11,15 @@ near-dup — each designed as a shuffle-conscious DataFrame pipeline:
   bucket so the shuffle moves only (id, band_key) pairs, never documents;
 - verification joins shingle sets back ONLY for candidate pairs
   (candidate set << n²); a corpus within the driver bounds
-  (``_DRIVER_MAX_ROWS`` rows, ``_DRIVER_MAX_TEXT_BYTES`` of text) runs
-  that same algorithm in memory — a size check and one collect, the
-  same numpy signature kernel (``_minhash_matrix``) the mapInPandas
-  pass runs, md5 band keys, exact shingle-set Jaccard — and returns
-  identical rows with no shuffle (two Spark jobs on a single-partition
+  (``fsutil._DRIVER_MAX_ROWS`` rows, ``_DRIVER_MAX_TEXT_BYTES`` of
+  text) runs that same algorithm in memory — a size check and one
+  collect, the same numpy signature kernel (``_minhash_matrix``) the
+  mapInPandas pass runs, md5 band keys, exact shingle-set Jaccard — and
+  returns identical rows with no shuffle (two Spark jobs on a narrow
   input);
 - embedding near-dup: exact O(n²) variant for oracles/small n, LSH-bucket
   variant as the 100 TB path (pairs only form inside a bucket); a corpus
-  within the driver bound (``_DRIVER_MAX_ROWS``) runs that same LSH
+  within the driver bound (``fsutil._DRIVER_MAX_ROWS``) runs that same LSH
   algorithm in memory — one bounded collect, numpy buckets and GEMM
   pair selection, the exact SQL cosine fold to verify — and returns
   identical rows in two Spark jobs.
@@ -66,6 +66,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kowari_spark import fsutil
 from kowari_spark.functions.text import (
     MINHASH_P,
     base_hash64,
@@ -475,14 +476,16 @@ def _minhash_pairs_in_memory(
     edges: str,
 ) -> DataFrame | None:
     """``minhash_dedup_pairs`` on the driver, for a corpus of at most
-    ``_DRIVER_MAX_ROWS`` rows and ``_DRIVER_MAX_TEXT_BYTES`` text bytes.
+    ``fsutil._DRIVER_MAX_ROWS`` rows and ``_DRIVER_MAX_TEXT_BYTES`` text
+    bytes.
     Returns None — the caller then runs the distributed plan — for an
     id type other than integral or string (only these order identically
     in Python and Spark), a null or repeated id, a corpus over either
     bound, or more all-pairs candidates than ``HNSW.BEAM_MAX_EDGES``.
 
-    Two collects: the size check (ids and ``octet_length(text)`` under
-    ``limit(_DRIVER_MAX_ROWS + 1)`` — no exchange), then (id, text).
+    Two ``fsutil.bounded_collect`` calls (one Spark job each on a narrow
+    input, no exchange): the size check (ids and
+    ``octet_length(text)``), then (id, text).
     Every later step repeats one statement of the distributed plan, so
     the rows are identical (pinned by tests/test_text_dedup.py::
     test_minhash_in_memory_parity): signatures from
@@ -504,18 +507,18 @@ def _minhash_pairs_in_memory(
     from kowari_spark.operators.hnsw import HNSW
 
     field = df.schema[id_col]
-    bound = _DRIVER_MAX_ROWS
+    bound = fsutil._DRIVER_MAX_ROWS
     if bound <= 0 or not isinstance(field.dataType,
                                     (T.IntegralType, T.StringType)):
         return None
-    sized = df.select(id_col, F.octet_length(text_col)).limit(
-        bound + 1).collect()
+    sized = fsutil.bounded_collect(
+        df.select(id_col, F.octet_length(text_col)), bound)
     ids = [r[0] for r in sized]
     if (len(ids) > bound or None in ids or len(set(ids)) != len(ids)
             or sum(r[1] or 0 for r in sized) > _DRIVER_MAX_TEXT_BYTES):
         return None
     # position == id rank: bucket mins and id_a < id_b are positional
-    rows = sorted(df.select(id_col, text_col).limit(bound + 1).collect(),
+    rows = sorted(fsutil.bounded_collect(df.select(id_col, text_col), bound),
                   key=lambda r: r[0])
     ids = [r[0] for r in rows]
     texts = [r[1] for r in rows]
@@ -589,12 +592,12 @@ def minhash_dedup_pairs(
     Two executions of one algorithm, chosen by the input alone:
 
     - bounded: a size check collects the ids and text byte lengths
-      under ``limit(_DRIVER_MAX_ROWS + 1)``; when the corpus fits that
-      row bound and ``_DRIVER_MAX_TEXT_BYTES``, one collect of (id,
-      text), and ``_minhash_pairs_in_memory`` signs, buckets and
-      verifies it on the driver and returns the identical rows through
-      ``fsutil.local_df`` — two bounded collects (one Spark job each
-      on a single-partition input), no shuffle;
+      of at most ``fsutil._DRIVER_MAX_ROWS`` + 1 rows; when the corpus
+      fits that row bound and ``_DRIVER_MAX_TEXT_BYTES``, one collect
+      of (id, text), and ``_minhash_pairs_in_memory`` signs, buckets
+      and verifies it on the driver and returns the identical rows
+      through ``fsutil.local_df`` — two ``fsutil.bounded_collect``
+      calls (one Spark job each on a narrow input), no shuffle;
     - distributed: every other case — a larger corpus, or input the
       in-memory path declines — runs ``minhash_band_pairs`` (the band
       self-join shuffles only (id, band_key) pairs) and
@@ -835,7 +838,7 @@ def _cc_star(canon: DataFrame, max_iter: int) -> DataFrame:
 
 def _cc_unionfind(canon0: DataFrame, rows=None) -> DataFrame:
     """Exact connected components for SMALL edge sets (the ``auto``
-    route at or under ``_DRIVER_MAX_ROWS`` rows): ONE bounded collect
+    route at or under ``fsutil._DRIVER_MAX_ROWS`` rows): ONE bounded collect
     (≤ 64k canonical edges ≈ 1 MB; ``rows`` when the caller already
     collected them) and a driver-side union-find, instead of
     O(diameter) iterative rounds.
@@ -894,17 +897,6 @@ def _cc_unionfind(canon0: DataFrame, rows=None) -> DataFrame:
     )
 
 
-#: the driver-side bound of this module: an edge set of at most this
-#: many rows routes to the driver union-find in "auto" mode (one ~1 MB
-#: bounded collect beats ANY number of iterative rounds; star
-#: contraction still owns everything larger), and an embedding corpus
-#: of at most this many rows finds its near-dups in memory
-#: (``embedding_near_dups_lsh``; measured on 64-d clustered vectors at
-#: local[4] with edges="pairs": 6.8 s in memory vs 500.7 s distributed
-#: at 65,536 rows, plans/r19/README.md), as does a text corpus of at
-#: most this many rows and ``_DRIVER_MAX_TEXT_BYTES`` (``minhash_dedup_pairs``)
-_DRIVER_MAX_ROWS = 65536
-
 #: the text-byte bound of the in-memory ``minhash_dedup_pairs``: the
 #: driver hashes every shingle in one Python process, the distributed
 #: plan on every core. Measured at local[4] on short documents (30-80
@@ -932,11 +924,12 @@ def dedup_clusters(
       contraction — O(log² n) rounds independent of diameter, the only
       shape that survives a 100 TB high-diameter graph;
     - small edge sets (``algorithm="auto"``, at most
-      ``_DRIVER_MAX_ROWS`` distinct edges): ``_cc_unionfind`` on the
-      driver, exact for any diameter.
+      ``fsutil._DRIVER_MAX_ROWS`` distinct edges): ``_cc_unionfind`` on
+      the driver, exact for any diameter.
 
-    In "auto" mode one collect under ``limit(_DRIVER_MAX_ROWS + 1)``
-    both decides the route and feeds the union-find. Only an edge set
+    In "auto" mode one collect under
+    ``limit(fsutil._DRIVER_MAX_ROWS + 1)`` both decides the route and
+    feeds the union-find. Only an edge set
     over the bound is localCheckpoint'ed (it is typically the tail of
     an expensive minhash/jaccard pipeline), which also truncates
     per-round lineage so star plans don't grow with iterations.
@@ -946,8 +939,8 @@ def dedup_clusters(
         F.least("id_a", "id_b").alias("lo"),
     ).distinct()
     if algorithm == "auto":
-        rows = canon0.limit(_DRIVER_MAX_ROWS + 1).collect()
-        if len(rows) <= _DRIVER_MAX_ROWS:
+        rows = canon0.limit(fsutil._DRIVER_MAX_ROWS + 1).collect()
+        if len(rows) <= fsutil._DRIVER_MAX_ROWS:
             # small edge set: driver union-find — exact for any
             # diameter, no job beyond this collect (r15: the
             # propagation loop it replaced cost ~100+ jobs on the
@@ -1134,8 +1127,8 @@ def _near_dups_in_memory(
     edges: str,
 ) -> DataFrame | None:
     """``embedding_near_dups_lsh`` on the driver, over the rows
-    ``fsutil.collect_vectors`` returns for at most ``_DRIVER_MAX_ROWS``
-    rows. Returns None — the caller then runs the distributed plan —
+    ``fsutil.collect_vectors`` returns for at most
+    ``fsutil._DRIVER_MAX_ROWS`` rows. Returns None — the caller then runs the distributed plan —
     when that collect does, and for the other input the distributed
     plan may treat differently: a vector that is not ``dim`` long,
     duplicate or non-integral/non-string ids, a squared norm that
@@ -1161,7 +1154,7 @@ def _near_dups_in_memory(
     field = df.schema[id_col]
     if not isinstance(field.dataType, (T.IntegralType, T.StringType)):
         return None  # only these order identically in Python and Spark
-    got = collect_vectors(df.select(id_col, vec_col), _DRIVER_MAX_ROWS)
+    got = collect_vectors(df.select(id_col, vec_col), fsutil._DRIVER_MAX_ROWS)
     if got is None:
         return None
     rows, V = got
@@ -1239,7 +1232,8 @@ def embedding_near_dups_lsh(
 
     Two executions of one algorithm, chosen by the input alone:
 
-    - bounded: one row count capped at ``_DRIVER_MAX_ROWS`` + 1 rows;
+    - bounded: one zero-column size check (``fsutil.fits_driver``)
+      against ``fsutil._DRIVER_MAX_ROWS``;
       when the rows fit, one collect of (id, vector), and
       ``_near_dups_in_memory`` hashes, buckets and scores them in
       numpy and returns the identical rows through ``fsutil.local_df``
@@ -1269,11 +1263,8 @@ def embedding_near_dups_lsh(
     memory — pin "pairs" when the complete verified pair list is the
     contract."""
     _check_edges(edges)
-    bound = _DRIVER_MAX_ROWS
-    # vectors are collected only for a corpus that fits. The size check
-    # collects zero columns under the same limit: one job and no
-    # shuffle, where limit().count() adds a single-partition exchange
-    if bound > 0 and len(df.select().limit(bound + 1).collect()) <= bound:
+    # vectors are collected only for a corpus that fits
+    if fsutil.fits_driver(df, fsutil._DRIVER_MAX_ROWS):
         pairs = _near_dups_in_memory(
             df, threshold, num_planes, num_tables, seed, id_col, vec_col,
             round_to, dim, edges,

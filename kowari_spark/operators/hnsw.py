@@ -66,7 +66,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kowari_spark.fsutil import collect_vectors, infer_dim
+from kowari_spark.fsutil import collect_vectors, fits_driver, infer_dim
 from kowari_spark.functions.vector import _BUILTIN_METRICS
 from kowari_spark.operators.topk import _score, _rounded
 
@@ -671,8 +671,8 @@ class HNSW:
         (the measured break-even) capped by the beam's
         ``BEAM_MAX_NODES``:
 
-        - bounded: for a built-in metric, one zero-column collect
-          capped at the bound + 1 rows; when the rows fit, one collect
+        - bounded: for a built-in metric, one zero-column size check
+          (``fsutil.fits_driver``); when the rows fit, one collect
           of (id, vector, node_level), and ``_build_in_memory`` runs
           the same steps in numpy and returns the identical edge set
           through ``fsutil.local_df`` — two Spark jobs instead of ~16;
@@ -682,13 +682,8 @@ class HNSW:
           driver-side collect of any layer."""
         gemm = metric in _BUILTIN_METRICS
         max_nodes = min(self.BEAM_MAX_NODES, self.BUILD_MAX_NODES)
-        # vectors are collected only for a graph that fits. The size
-        # check collects zero columns under the same limit: one job and
-        # no shuffle, where limit().count() adds a single-partition
-        # exchange
-        if gemm and max_nodes > 0 and (
-            len(df.select().limit(max_nodes + 1).collect()) <= max_nodes
-        ):
+        # vectors are collected only for a graph that fits
+        if gemm and fits_driver(df, max_nodes):
             edges = self._build_in_memory(df, id_col, vec_col, metric,
                                           dim, max_nodes)
             if edges is not None:

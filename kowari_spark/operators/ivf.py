@@ -1,5 +1,5 @@
-"""IVF (inverted-file) ANN index — seeded distributed k-means coarse
-quantizer + partition-pruned probe.
+"""IVF (inverted-file) ANN index — seeded k-means coarse quantizer +
+partition-pruned probe.
 
 Beyond-reference surface (task north star "similarity search"): the
 reference ships brute force, sign-LSH and HNSW (src/index.rs); IVF is
@@ -8,22 +8,24 @@ into ``n_lists`` Voronoi cells, store each cell as a partition, and at
 query time score only the ``n_probe`` cells nearest the query.
 
 Spark-first design:
-- **fit** is distributed Lloyd's k-means with deterministic
-  farthest-first seeding (Gonzalez 1985 "maxmin" traversal — the
-  deterministic analog of k-means++ D² sampling: instead of sampling
-  the next seed proportional to D², take its argmax; no RNG state, no
-  transcendentals, so the whole fit stays bit-reproducible across
-  engines). Each seeding round is ONE distributed argmax job (min
-  distance to the chosen set is a native fold over a literal centroid
-  matrix, TakeOrderedAndProject picks the farthest row); assignment is
-  the shared numpy argmin encoder in one row-local ``mapInPandas``
-  pass (operators/quantizer.py); the update step reduces (cell, dim)
-  partial sums map-side, so each Lloyd iteration shuffles at most
-  n_lists*d tiny rows, never vectors. At 100 TB run the k seeding
-  scans over a hash-sampled subset (``fit(df.sample(...))``) — seeds
-  only need to cover the space, and the measured recall win over the
-  round-2 hash-order sample comes from spread, not from seeing every
-  row.
+- **fit** is Lloyd's k-means with deterministic farthest-first seeding
+  (Gonzalez 1985 "maxmin" traversal — the deterministic analog of
+  k-means++ D² sampling: instead of sampling the next seed proportional
+  to D², take its argmax; no RNG state, no transcendentals, so the
+  whole fit stays bit-reproducible across engines), in two executions
+  of one algorithm (operators/quantizer.py). A corpus within the driver
+  bound (``fsutil._DRIVER_MAX_ROWS`` rows) is collected once and fitted
+  in numpy: two Spark jobs, no shuffle. Any larger corpus runs the
+  distributed plan: the seeds come from ONE md5-ordered sample collect
+  (``seed_sample``; the exact opt-in runs one distributed argmax job
+  per seed — min distance to the chosen set is a native fold over a
+  literal centroid matrix, TakeOrderedAndProject picks the farthest
+  row); assignment is the shared numpy argmin kernel in one row-local
+  ``mapInPandas`` pass; the update step reduces (cell, dim) partial
+  sums map-side, so each Lloyd iteration shuffles at most n_lists*d
+  tiny rows, never vectors. Both executions share the seeding
+  traversal, the argmin kernel and the Lloyd update, and give
+  bit-identical centroids on a single-partition input.
 - **build** writes the assigned table ``partitionBy("list_id")`` — a
   probe then reads n_probe/n_lists of the data via partition pruning
   (same layout trick as the LSH index, SURVEY.md §4.1).
@@ -42,8 +44,6 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# decimal-correct Spark ROUND parity for driver-side centroid rounding
-from kowari_spark.numerics import round_half_up as _round_half_up
 from kowari_spark.operators.topk import knn, knn_batch
 
 _META_NAME = "_ivf_meta.json"
@@ -73,10 +73,11 @@ class IVF:
         # latency once n is large enough that sqrt(n) cells are bigger
         # than the target cell size (n > c²; c=4000 → n > 16M), but you
         # pay the quadratic build to get there — pass an explicit
-        # n_lists when you want that trade. n is the persist-warming
-        # count of the fit projection (the PQ.fit pattern — the fit
-        # persists and re-scans the projection every Lloyd pass anyway,
-        # so materializing it once adds no extra pass; explicit int
+        # n_lists when you want that trade. n is the number of fitted
+        # rows: in memory, the collected rows; distributed, the
+        # persist-warming count of the fit projection (the fit persists
+        # and re-scans the projection every Lloyd pass anyway, so
+        # materializing it once adds no extra pass; explicit int
         # n_lists keeps the count-free fit path).
         if isinstance(n_lists, str) and n_lists != "auto":
             raise ValueError(f"n_lists must be an int or 'auto', got {n_lists!r}")
@@ -121,41 +122,51 @@ class IVF:
 
     # -- fit ---------------------------------------------------------------
 
-    # shared with PQ (operators/quantizer.py) so the fold/literal
-    # arithmetic both SQL oracles replay lives exactly once
-    @staticmethod
-    def _cents_lit(cents) -> "F.Column":
-        from kowari_spark.operators.quantizer import cents_lit
-
-        return cents_lit(cents)
-
-    @staticmethod
-    def _d2_fold(vec_col: str, c) -> "F.Column":
-        from kowari_spark.operators.quantizer import d2_fold
-
-        return d2_fold(F.col(vec_col), c)
-
     def fit(self, df: DataFrame, id_col: str = "id", vec_col: str = "embedding") -> "IVF":
-        """Deterministic distributed k-means (Lloyd, ``max_iter`` rounds).
+        """Deterministic k-means (Lloyd, ``max_iter`` rounds) from
+        farthest-first seeds, in one of two executions chosen by the
+        input alone (``quantizer.fit_input``):
 
-        The (id, vector) projection is persisted for the duration of the
-        fit — every iteration re-scans it, and at 100 TB re-reading the
-        source per iteration would dominate the build.
+        - in memory: a corpus of at most ``fsutil._DRIVER_MAX_ROWS``
+          rows is collected once (a zero-column size check and one
+          collect: two Spark jobs, no shuffle) and seeded and fitted
+          in numpy with the arithmetic of the distributed plan —
+          bit-identical centroids on a single-partition input;
+        - distributed: every other corpus, or input the in-memory path
+          declines. The (id, vector) projection is persisted for the
+          duration of the fit — every iteration re-scans it, and at
+          100 TB re-reading the source per iteration would dominate
+          the build.
 
         Degraded rows (null / wrong-length vectors) carry no fittable
-        signal — they assign a null list_id by design —
-        and are filtered before seeding AND the Lloyd reduce, mirroring
+        signal — they assign a null list_id by design — and are
+        filtered before seeding AND the Lloyd reduce, mirroring
         PQ.fit's degraded-row rule: a short vector reaching the seed
         sample would yield a ragged centroid matrix, and a null list_id
         reaching the driver accumulation would broadcast over the whole
         centroid array (ADVICE r7). The expected dimension is taken
         from the first non-null row, exactly like PQ's dim inference."""
+        from kowari_spark.operators import quantizer
+
         # per-fit sizing hygiene: restore the constructor spec so an
         # "auto" instance refit on a different-size corpus re-derives
         # sqrt(n) / n_lists//16 instead of reusing the stale resolution
         # (ADVICE r8)
         self.n_lists = self._n_lists_spec
         self.n_probe = self._n_probe_spec
+        got = quantizer.fit_input(df, id_col, vec_col)
+        if got is not None:
+            ids, V = got
+            self._resolve_sizes(len(ids))
+            # the sample, or every row: the traversal over every row in
+            # md5 order is the exact mode's argmax scans (tested)
+            self.centroids = quantizer.fit_in_memory(
+                ids, V, self.seed, self._seed_sample_size(),
+                lambda pts: self._seeds_from(pts)[None],
+                self.max_iter, self.round_centroids,
+            )[0]
+            return self
+
         first = df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
         if first is None:
             raise ValueError("cannot fit an IVF on an empty DataFrame")
@@ -166,22 +177,61 @@ class IVF:
             .persist()
         )
         try:
-            if self.n_lists == "auto":
-                import math
-
-                # persist-warming count (the PQ.fit pattern): every
-                # Lloyd pass re-scans the persisted projection, so
-                # materializing it here adds no extra pass over the
-                # data — and it gives the exact n the sqrt sizing needs
-                n = vecs.count()
-                self.n_lists = max(1, min(n, int(round(math.sqrt(n)))))
-            if self.n_probe == "auto":
-                # ~1/16 of the cells per probe (the measured ~6%-of-
-                # corpus operating point from BASELINE's x1000 table)
-                self.n_probe = max(1, int(self.n_lists) // 16)
+            # persist-warming count (the PQ.fit pattern): every Lloyd
+            # pass re-scans the persisted projection, so materializing
+            # it here adds no extra pass over the data — and it gives
+            # the exact n the sqrt sizing needs
+            self._resolve_sizes(
+                vecs.count() if self.n_lists == "auto" else None
+            )
             return self._fit(vecs, id_col, vec_col)
         finally:
             vecs.unpersist()
+
+    def _resolve_sizes(self, n: int | None) -> None:
+        """Resolve "auto" sizing from the fit's row count ``n``."""
+        if self.n_lists == "auto":
+            import math
+
+            self.n_lists = max(1, min(n, int(round(math.sqrt(n)))))
+        if self.n_probe == "auto":
+            # ~1/16 of the cells per probe (the measured ~6%-of-
+            # corpus operating point from BASELINE's x1000 table)
+            self.n_probe = max(1, int(self.n_lists) // 16)
+
+    def _seed_sample_size(self) -> int | None:
+        """Rows the sampled traversal seeds from (None: every row)."""
+        if self.seed_sample is None:
+            return None
+        sample = (
+            self.AUTO_SEED_PER_LIST * self.n_lists
+            if self.seed_sample == "auto"
+            else self.seed_sample
+        )
+        if sample < self.n_lists:
+            raise ValueError(
+                f"seed_sample={sample} < n_lists={self.n_lists}"
+            )
+        return sample
+
+    def _check_rows(self, n: int) -> None:
+        if n < self.n_lists:
+            raise ValueError(
+                f"need >= {self.n_lists} vectors to fit {self.n_lists} lists"
+            )
+
+    def _seeds_from(self, pts) -> np.ndarray:
+        """Gonzalez maxmin seeds over (id, vector) ``pts`` in md5
+        order — the shared traversal (operators/quantizer.py)."""
+        from kowari_spark.operators.quantizer import gonzalez_maxmin
+
+        if not pts:
+            raise ValueError("cannot fit an IVF on an empty DataFrame")
+        # cardinality check for free from the seed rows — no extra
+        # scan (ADVICE r5)
+        self._check_rows(len(pts))
+        return np.asarray(gonzalez_maxmin(pts, self.n_lists),
+                          dtype=np.float64)
 
     def _seed_farthest_first(self, df: DataFrame, id_col: str,
                              vec_col: str) -> np.ndarray:
@@ -192,29 +242,40 @@ class IVF:
         selected seed is an EXACT data vector (no arithmetic on it), and
         min-of-distances is order-independent, so an external engine
         re-running the same traversal lands on identical seeds."""
-        if self.seed_sample is not None:
-            return self._seed_farthest_first_sampled(df, id_col, vec_col)
+        from kowari_spark.operators.quantizer import cents_lit, d2_fold
+
+        md5 = F.md5(F.concat(F.col(id_col).cast("string"),
+                             F.lit(f"#{self.seed}")))
+        sample = self._seed_sample_size()
+        if sample is not None:
+            # sampled traversal: collect the md5-top-``sample`` rows
+            # once, then run the identical maxmin loop driver-side —
+            # same sequential (x-y)² fold, same max-mind / lowest-id
+            # tie-break, so with ``seed_sample >= n`` the seeds are
+            # bit-identical to the exact loop below. Seeds only need to
+            # cover the space; at scale a few-thousand-row sample does
+            # that while k full argmax scans would dominate the build.
+            rows = (
+                df.select(id_col, vec_col).orderBy(md5).limit(sample)
+                .collect()
+            )
+            return self._seeds_from(
+                [(r[id_col], [float(x) for x in r[vec_col]]) for r in rows]
+            )
         # exact mode (opt-in): n_lists-1 distributed argmax scans. The
         # cardinality check rides the cheap limit collect — never a full
         # count (ADVICE r5).
-        if len(df.select(id_col).limit(self.n_lists).collect()) < self.n_lists:
-            raise ValueError(
-                f"need >= {self.n_lists} vectors to fit {self.n_lists} lists"
-            )
-        first = (
-            df.select(id_col, vec_col)
-            .orderBy(F.md5(F.concat(F.col(id_col).cast("string"),
-                                    F.lit(f"#{self.seed}"))))
-            .limit(1)
-            .collect()
+        self._check_rows(
+            len(df.select(id_col).limit(self.n_lists).collect())
         )
+        first = df.select(id_col, vec_col).orderBy(md5).limit(1).collect()
         if not first:
             raise ValueError("cannot fit an IVF on an empty DataFrame")
         seeds = [[float(x) for x in first[0][vec_col]]]
         for _ in range(self.n_lists - 1):
             mind = F.array_min(
-                F.transform(self._cents_lit(seeds),
-                            lambda c: self._d2_fold(vec_col, c))
+                F.transform(cents_lit(seeds),
+                            lambda c: d2_fold(F.col(vec_col), c))
             )
             row = (
                 df.select(F.col(id_col), F.col(vec_col), mind.alias("__mind"))
@@ -225,91 +286,46 @@ class IVF:
             seeds.append([float(x) for x in row[vec_col]])
         return np.asarray(seeds, dtype=np.float64)
 
-    def _seed_farthest_first_sampled(self, df: DataFrame, id_col: str,
-                                     vec_col: str) -> np.ndarray:
-        """Sampled variant of the traversal: collect the md5-top-
-        ``seed_sample`` rows once, then run the identical maxmin loop
-        driver-side — same sequential (x-y)² fold, same max-mind /
-        lowest-id tie-break, so with ``seed_sample >= n`` the seeds are
-        bit-identical to the distributed loop. Seeds only need to cover
-        the space; at scale a few-thousand-row sample does that while k
-        full argmax scans would dominate the build."""
-        sample = (
-            self.AUTO_SEED_PER_LIST * self.n_lists
-            if self.seed_sample == "auto"
-            else self.seed_sample
-        )
-        if sample < self.n_lists:
-            raise ValueError(
-                f"seed_sample={sample} < n_lists={self.n_lists}"
-            )
-        rows = (
-            df.select(id_col, vec_col)
-            .orderBy(F.md5(F.concat(F.col(id_col).cast("string"),
-                                    F.lit(f"#{self.seed}"))))
-            .limit(sample)
-            .collect()
-        )
-        if not rows:
-            raise ValueError("cannot fit an IVF on an empty DataFrame")
-        if len(rows) < self.n_lists:
-            # cardinality check for free from the seed collect — no
-            # extra scan (ADVICE r5)
-            raise ValueError(
-                f"need >= {self.n_lists} vectors to fit {self.n_lists} lists"
-            )
-        pts = [(r[id_col], [float(x) for x in r[vec_col]]) for r in rows]
-        from kowari_spark.operators.quantizer import gonzalez_maxmin
-
-        return np.asarray(gonzalez_maxmin(pts, self.n_lists), dtype=np.float64)
-
     def _fit(self, df: DataFrame, id_col: str, vec_col: str) -> "IVF":
-        # cardinality validation happens inside the seeding paths (from
-        # the seed collect itself, or a limit-n_lists probe) — an
-        # unconditional count() here was a whole-table scan per fit at
-        # the 100 TB design point (ADVICE r5)
-        self.centroids = self._seed_farthest_first(df, id_col, vec_col)
+        """The distributed fit over the persisted projection ``df``.
+        Cardinality validation happens inside the seeding (from the
+        seed collect itself, or a limit-n_lists probe) — an
+        unconditional count() here was a whole-table scan per fit at
+        the 100 TB design point (ADVICE r5)."""
+        from kowari_spark.operators.quantizer import lloyd
 
-        for _ in range(self.max_iter):
+        def sums_of(books):
+            self.centroids = books[0]  # what with_lists assigns against
+            # degraded rows (null/short/overlong vectors) carry a null
+            # list_id by design — drop them before the reduce: an
+            # unfiltered null key would reach the driver accumulation
+            # as an index, and numpy treats None as np.newaxis — the
+            # assignment would broadcast over the ENTIRE centroid array
+            # (silent total corruption; ADVICE r7)
             assigned = self.with_lists(
                 df.select(vec_col), vec_col
-            ).select("list_id", vec_col)
-            # degraded rows (null/short/overlong vectors) carry a null
-            # list_id by design — drop them before the reduce,
-            # mirroring PQ.fit: an unfiltered null key would
-            # reach the driver accumulation as acc[None], and numpy
-            # treats None as np.newaxis — new_c[None] = ... broadcasts
-            # the assignment over the ENTIRE centroid array (silent
-            # total corruption; ADVICE r7)
-            assigned = assigned.filter(F.col("list_id").isNotNull())
-            # element-wise mean per cell: explode (cell, dim, value) and
+            ).select("list_id", vec_col).filter(F.col("list_id").isNotNull())
+            # element-wise sum per cell: explode (cell, dim, value) and
             # reduce — map-side partial aggregation keeps the shuffle at
             # n_lists*d rows
-            sums = (
-                assigned.select("list_id", F.posexplode(vec_col).alias("dim", "val"))
+            rows = (
+                assigned.select("list_id",
+                                F.posexplode(vec_col).alias("dim", "val"))
                 .groupBy("list_id", "dim")
-                .agg(F.sum(F.col("val").cast("double")).alias("s"), F.count("*").alias("n"))
+                .agg(F.sum(F.col("val").cast("double")).alias("s"),
+                     F.count("*").alias("n"))
                 .collect()
             )
-            new_c = self.centroids.copy()
-            acc: dict[int, np.ndarray] = {}
-            cnt: dict[int, int] = {}
-            for r in sums:
-                if r["list_id"] is None:  # belt over the filter above
-                    continue
-                acc.setdefault(r["list_id"], np.zeros(self.centroids.shape[1]))[r["dim"]] = r["s"]
-                cnt[r["list_id"]] = r["n"]
-            for lid, vec in acc.items():
-                new_c[lid] = vec / cnt[lid]  # empty cells keep old centroid
-                if self.round_centroids is not None:
-                    new_c[lid] = [
-                        _round_half_up(float(x), self.round_centroids)
-                        for x in new_c[lid]
-                    ]
-            if np.allclose(new_c, self.centroids, atol=1e-12):
-                self.centroids = new_c
-                break
-            self.centroids = new_c
+            sums = np.zeros(books.shape)
+            counts = np.zeros(books.shape[:2], dtype=np.int64)
+            for r in rows:
+                sums[0, r["list_id"], r["dim"]] = r["s"]
+                counts[0, r["list_id"]] = r["n"]
+            return sums, counts
+
+        seeds = self._seed_farthest_first(df, id_col, vec_col)
+        self.centroids = lloyd(seeds[None], sums_of, self.max_iter,
+                               self.round_centroids)[0]
         return self
 
     # -- build (offline layout) -------------------------------------------

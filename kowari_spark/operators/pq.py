@@ -21,10 +21,14 @@ Spark-first design:
   shared numpy argmin encoder), one posexplode keyed by
   (sub, code, dim) reduces the per-centroid sums map-side, so each
   Lloyd iteration shuffles m*k_sub*(d/m) = k_sub*d tiny rows total,
-  never vectors, regardless of m. Centroids land on a fixed decimal
-  grid (HALF_UP) each round so the whole fit is bit-reproducible across
-  engines — same contract as IVF, and the SQL oracle re-derives the
-  entire fit (seeding + Lloyd + encode + ADC) independently.
+  never vectors, regardless of m. A corpus within the driver bound
+  (``fsutil._DRIVER_MAX_ROWS`` rows) skips that plan: it is collected
+  once and fitted in numpy by the same seeding, argmin kernel and Lloyd
+  update (operators/quantizer.py) — two Spark jobs, no shuffle.
+  Centroids land on a fixed decimal grid (HALF_UP) each round so the
+  whole fit is bit-reproducible across engines — same contract as IVF,
+  and the SQL oracle re-derives the entire fit (seeding + Lloyd +
+  encode + ADC) independently.
 - **encode/build** is one row-local ``mapInPandas`` pass (all m
   argmins per row in vectorized numpy — no shuffle; 9.6x faster at x10
   than m·k_sub interpreted fold lambdas per row, BASELINE.md); ``build``
@@ -50,7 +54,6 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kowari_spark.numerics import round_half_up as _round_half_up
 
 _META_NAME = "_pq_meta.json"
 #: bump when the fit/encode arithmetic changes — load() refuses a layout
@@ -101,32 +104,50 @@ class PQ:
 
     def fit(self, df: DataFrame, id_col: str = "id",
             vec_col: str = "embedding", dim: int | None = None) -> "PQ":
-        """Deterministic per-subspace k-means: ONE seeding collect covers
-        all m subspaces, each Lloyd iteration is ONE distributed pass
-        (all subspaces assigned and reduced together). Pass ``dim=`` to
-        skip the first() inference job (repo-wide fast-path convention).
+        """Deterministic per-subspace k-means: ONE seeding sample covers
+        all m subspaces, and each Lloyd round assigns and reduces every
+        subspace together. Two executions of one algorithm, chosen by
+        the input alone (``quantizer.fit_input``):
 
-        The (id, vector) projection is persisted for the duration of the
-        fit — every iteration re-scans it, and at 100 TB re-reading the
-        source per iteration would dominate the build."""
-        if dim is None:
-            first = df.select(vec_col).first()
-            if first is None:
-                raise ValueError("cannot fit a PQ on an empty DataFrame")
-            dim = len(first[0])
-        if dim % self.m != 0:
-            raise ValueError(
-                f"dim={dim} is not divisible by m={self.m} subspaces"
+        - in memory: a corpus of at most ``fsutil._DRIVER_MAX_ROWS``
+          rows is collected once (a zero-column size check and one
+          collect: two Spark jobs, no shuffle, no ``first()``) and
+          seeded and fitted in numpy with the arithmetic of the
+          distributed plan — bit-identical codebooks on a
+          single-partition input;
+        - distributed: every other corpus, or input the in-memory path
+          declines. Pass ``dim=`` to skip the ``fsutil.infer_dim``
+          job. The (id, vector) projection is persisted for the
+          duration of the fit — every iteration re-scans it, and at
+          100 TB re-reading the source per iteration would dominate
+          the build.
+
+        ``dim`` None is the first non-null vector's length. Degraded
+        rows (null / shorter than dim) can't be fully encoded (encode
+        yields null codes by design) — they carry no fittable signal,
+        so both executions fit on the fully-covered rows only. Overlong
+        vectors keep encode's ignore-the-tail semantics."""
+        from kowari_spark.fsutil import infer_dim
+        from kowari_spark.operators import quantizer
+
+        if dim is not None:
+            self._set_dim(dim)
+        got = quantizer.fit_input(df, id_col, vec_col, dim=dim, cut=True)
+        if got is not None:
+            ids, V = got
+            self._set_dim(V.shape[1])
+            self.codebooks = quantizer.fit_in_memory(
+                ids, V, self.seed, self._seed_sample_size(),
+                self._seeds_from, self.max_iter, self.round_centroids,
             )
-        self.dim = dim
-        # degraded rows (null / shorter than dim) can't be fully encoded
-        # (encode yields null codes by design) and would crash the Lloyd
-        # reduce on the null code index — they carry no fittable signal,
-        # so fit on the fully-covered rows only. Overlong vectors keep
-        # encode's ignore-the-tail semantics.
+            return self
+
+        if dim is None:
+            self._set_dim(infer_dim(df, vec_col))
         vecs = (
             df.select(id_col, vec_col)
-            .filter(F.col(vec_col).isNotNull() & (F.size(vec_col) >= dim))
+            .filter(F.col(vec_col).isNotNull()
+                    & (F.size(vec_col) >= self.dim))
             .persist()
         )
         try:
@@ -134,29 +155,41 @@ class PQ:
         finally:
             vecs.unpersist()
 
-    def _seed_rows(self, df: DataFrame, id_col: str, vec_col: str):
-        """The md5-ordered seeding sample (ONE collect; ``None`` =
-        whole table, the exact-traversal opt-in)."""
+    def _set_dim(self, dim: int) -> None:
+        if dim % self.m != 0:
+            raise ValueError(
+                f"dim={dim} is not divisible by m={self.m} subspaces"
+            )
+        self.dim = dim
+
+    def _seed_sample_size(self) -> int | None:
+        """Rows of the md5-ordered seeding sample (None: every row, the
+        exact-traversal opt-in)."""
         n = (
             self.AUTO_SEED_PER_CENTROID * self.k_sub
             if self.seed_sample == "auto"
             else self.seed_sample
         )
-        ordered = df.select(id_col, vec_col).orderBy(
-            F.md5(F.concat(F.col(id_col).cast("string"),
-                           F.lit(f"#{self.seed}")))
-        )
-        if n is not None:
-            if n < self.k_sub:
-                raise ValueError(f"seed_sample={n} < k_sub={self.k_sub}")
-            ordered = ordered.limit(n)
-        rows = ordered.collect()
-        if len(rows) < self.k_sub:
+        if n is not None and n < self.k_sub:
+            raise ValueError(f"seed_sample={n} < k_sub={self.k_sub}")
+        return n
+
+    def _seeds_from(self, pts) -> np.ndarray:
+        """(m, k_sub, ds) seed codebooks: the shared Gonzalez maxmin
+        traversal (operators/quantizer.gonzalez_maxmin, also IVF's
+        seeding) per subspace, over the (id, vector) seeding sample
+        ``pts`` in md5 order — so the SQL replay is identical
+        CTE-for-CTE."""
+        if len(pts) < self.k_sub:
             raise ValueError(
                 f"need >= {self.k_sub} vectors to fit {self.k_sub} "
-                f"centroids per subspace, got {len(rows)}"
+                f"centroids per subspace, got {len(pts)}"
             )
-        return rows
+        ds = self._ds
+        return np.asarray([
+            self._gonzalez([(i, v[j * ds:(j + 1) * ds]) for i, v in pts])
+            for j in range(self.m)
+        ], dtype=np.float64)
 
     def _gonzalez(self, pts) -> list[list[float]]:
         """Farthest-first traversal over (id, subvector) points — the
@@ -168,25 +201,32 @@ class PQ:
         return gonzalez_maxmin(pts, self.k_sub)
 
     def _fit(self, df: DataFrame, id_col: str, vec_col: str) -> "PQ":
-        rows = self._seed_rows(df, id_col, vec_col)
-        ds = self._ds
-        books = []
-        for j in range(self.m):
-            pts = [
-                (r[id_col], [float(x) for x in r[vec_col]][j * ds:(j + 1) * ds])
-                for r in rows
-            ]
-            books.append(self._gonzalez(pts))
-        self.codebooks = np.asarray(books, dtype=np.float64)
+        """The distributed fit over the persisted projection ``df``."""
+        from kowari_spark.operators.quantizer import lloyd
 
-        for _ in range(self.max_iter):
+        ordered = df.select(id_col, vec_col).orderBy(
+            F.md5(F.concat(F.col(id_col).cast("string"),
+                           F.lit(f"#{self.seed}")))
+        )
+        n = self._seed_sample_size()
+        if n is not None:
+            ordered = ordered.limit(n)
+        seeds = self._seeds_from([
+            (r[id_col], [float(x) for x in r[vec_col]])
+            for r in ordered.collect()
+        ])
+        ds = self._ds
+
+        def sums_of(books):
+            self.codebooks = books  # what with_codes encodes against
             # one pass: every subspace's code, then (sub, code, local
-            # dim) partial sums — k_sub*d skinny rows total on the wire
+            # dim) partial sums — k_sub*d skinny rows total on the wire;
+            # an overlong vector's tail is cut, as encode ignores it
             coded = self.with_codes(
                 df.select(vec_col), vec_col, code_col="__codes"
             ).select(
                 "__codes",
-                F.posexplode(vec_col).alias("dim", "val"),
+                F.posexplode(F.slice(vec_col, 1, self.dim)).alias("dim", "val"),
             ).select(
                 (F.col("dim") / ds).cast("int").alias("sub"),
                 (F.col("dim") % ds).alias("ldim"),
@@ -195,32 +235,20 @@ class PQ:
                 ).alias("code"),
                 F.col("val").cast("double").alias("val"),
             )
-            sums = (
+            rows = (
                 coded.groupBy("sub", "code", "ldim")
                 .agg(F.sum("val").alias("s"), F.count("*").alias("n"))
                 .collect()
             )
-            new_b = self.codebooks.copy()
-            accs = {j: np.zeros((self.k_sub, ds)) for j in range(self.m)}
-            cnts = {j: np.zeros(self.k_sub, dtype=np.int64) for j in range(self.m)}
-            for r in sums:
-                accs[r["sub"]][r["code"], r["ldim"]] = r["s"]
-                cnts[r["sub"]][r["code"]] = r["n"]
-            for j in range(self.m):
-                for c in range(self.k_sub):
-                    if cnts[j][c] == 0:
-                        continue  # empty cells keep their centroid
-                    mean = accs[j][c] / cnts[j][c]
-                    if self.round_centroids is not None:
-                        mean = [
-                            _round_half_up(float(x), self.round_centroids)
-                            for x in mean
-                        ]
-                    new_b[j, c] = mean
-            if np.allclose(new_b, self.codebooks, atol=1e-12):
-                self.codebooks = new_b
-                break
-            self.codebooks = new_b
+            sums = np.zeros(books.shape)
+            counts = np.zeros(books.shape[:2], dtype=np.int64)
+            for r in rows:
+                sums[r["sub"], r["code"], r["ldim"]] = r["s"]
+                counts[r["sub"], r["code"]] = r["n"]
+            return sums, counts
+
+        self.codebooks = lloyd(seeds, sums_of, self.max_iter,
+                               self.round_centroids)
         return self
 
     # -- encode / build -----------------------------------------------------

@@ -7,8 +7,19 @@ fold, Lloyd means land on a decimal grid), and both SQL oracles replay
 that arithmetic CTE-for-CTE — so the arithmetic lives ONCE here and a
 change to it breaks both oracles loudly instead of silently diverging
 one engine (the py_hash64/_bm25_core extraction discipline).
-"""
 
+Each fit has two executions of one algorithm, chosen by the input
+alone. A corpus of at most ``fsutil._DRIVER_MAX_ROWS`` rows is fitted
+on the driver from the rows ``fit_input`` collects (a size check and
+one collect: two Spark jobs, no shuffle); every other corpus runs the
+distributed plan, one assignment pass and one (cell, dim) reduce per
+Lloyd round. Both feed the same ``lloyd`` loop: the in-memory rounds
+take their sums from ``local_sums`` (``encode_block``, the argmin
+kernel ``argmin_codes_arrow`` runs per Arrow batch, then ``np.add.at``
+in collect order), the distributed rounds from a ``groupBy`` reduce.
+On a single-partition input the two give bit-identical codebooks:
+Spark's per-partition double ``sum`` adds in row order too.
+"""
 from __future__ import annotations
 
 from pyspark.sql import Column
@@ -119,6 +130,133 @@ def _gonzalez_scalar(pts, k: int) -> list[list[float]]:
                 mind[rid] = dd
     return seeds
 
+def encode_block(V, books):
+    """(n, m) int32 codes of the rows of ``V`` (n, m·ds) against
+    ``books`` (m, k, ds): per subspace, each centroid's squared distance
+    accumulates DIMENSION-BY-DIMENSION (the sequential fold the SQL
+    replay runs) and np.argmin takes the first minimum, like
+    array_position(array_min). The argmin kernel of every assignment:
+    ``argmin_codes_arrow`` per Arrow batch, ``local_sums`` on the
+    driver."""
+    import numpy as np
+
+    m, k_sub, ds = books.shape
+    codes = np.empty((len(V), m), dtype=np.int32)
+    for j in range(m):
+        sub = V[:, j * ds:(j + 1) * ds]
+        acc = np.zeros((len(V), k_sub))
+        for dd in range(ds):
+            diff = sub[:, dd:dd + 1] - books[j][:, dd][None, :]
+            acc += diff * diff
+        # all-NaN rows (a NaN anywhere in the subvector poisons
+        # every centroid distance) take index 0 — the same code
+        # SQL's array_position(array_min) resolves to
+        codes[:, j] = np.argmin(acc, axis=1)
+    return codes
+
+
+def local_sums(V, books):
+    """One in-memory Lloyd assignment: (sums (m, k, ds), counts (m, k))
+    of the rows of ``V`` per (subspace, code). ``np.add.at`` adds the
+    rows in collect order, one at a time, from 0.0 — the order of
+    Spark's per-partition ``sum`` over the same rows."""
+    import numpy as np
+
+    m, k_sub, ds = books.shape
+    codes = encode_block(V, books)
+    sums = np.zeros(books.shape)
+    counts = np.zeros((m, k_sub), dtype=np.int64)
+    for j in range(m):
+        np.add.at(sums[j], codes[:, j], V[:, j * ds:(j + 1) * ds])
+        counts[j] = np.bincount(codes[:, j], minlength=k_sub)
+    return sums, counts
+
+
+def lloyd(books, sums_of, max_iter: int, round_to: int | None):
+    """Up to ``max_iter`` Lloyd rounds from ``books`` (m, k, ds), shared
+    by both executions of both fits. ``sums_of(books)`` returns the
+    round's (sums, counts) per (subspace, code) — ``local_sums`` in
+    memory, a ``groupBy`` reduce distributed. Every non-empty cell moves
+    to its mean, rounded HALF_UP to ``round_to`` decimals when set (the
+    grid absorbs summation-order ulps across engines); an empty cell
+    keeps its centroid. Stops early once a round's codebooks are
+    ``np.allclose`` (atol 1e-12) to the previous round's."""
+    import numpy as np
+
+    from kowari_spark.numerics import round_half_up
+
+    for _ in range(max_iter):
+        sums, counts = sums_of(books)
+        new = books.copy()
+        for j, c in zip(*np.nonzero(counts)):
+            mean = sums[j, c] / counts[j, c]
+            if round_to is not None:
+                mean = [round_half_up(float(x), round_to) for x in mean]
+            new[j, c] = mean
+        done = np.allclose(new, books, atol=1e-12)
+        books = new
+        if done:
+            break
+    return books
+
+
+def md5_order(ids, seed: int) -> list[int]:
+    """Positions of ``ids`` in the seeding order of both fits,
+    ``orderBy(md5(concat(cast(id as string), '#seed')))``: Python's
+    ``str`` of an integral or string id is Spark's cast."""
+    import hashlib
+
+    keys = [hashlib.md5(f"{i}#{seed}".encode()).hexdigest() for i in ids]
+    return sorted(range(len(ids)), key=keys.__getitem__)
+
+
+def fit_in_memory(ids, V, seed: int, sample: int | None, seeds_from,
+                  max_iter: int, round_to: int | None):
+    """The in-memory execution of both fits over ``fit_input``'s rows:
+    ``seeds_from`` seeds from the md5-top-``sample`` rows (every row
+    for None) as (id, vector) points in md5 order, then ``lloyd`` runs
+    on ``local_sums``."""
+    order = md5_order(ids, seed)
+    pts = [(ids[i], V[i].tolist()) for i in order[:sample]]
+    return lloyd(seeds_from(pts), lambda b: local_sums(V, b), max_iter,
+                 round_to)
+
+
+def fit_input(df, id_col: str, vec_col: str, dim: int | None = None,
+              cut: bool = False):
+    """(ids, V) for an in-memory fit, or None — the caller then runs the
+    distributed plan. Spark work: one zero-column size check
+    (``fsutil.fits_driver``), then one ``fsutil.collect_vectors``
+    collect; no ``first()``, no ``persist()``. The rows are the ones
+    the distributed fit keeps: a null vector or one not ``dim`` long
+    (``cut``: shorter than ``dim``, tail ignored — PQ's rule) is
+    dropped, ``dim`` None meaning the first non-null vector's length.
+    Declined without a Spark job: an id that is neither integral nor
+    string (``cast(id as string)`` and Python's ``str`` then order
+    differently). Declined after the size check: more than
+    ``fsutil._DRIVER_MAX_ROWS`` rows. Declined after the collect: no
+    row left, a null id, a non-finite entry, repeated ids (the md5
+    seeding order ties)."""
+    from pyspark.sql import types as T
+
+    from kowari_spark import fsutil
+
+    if not isinstance(df.schema[id_col].dataType,
+                      (T.IntegralType, T.StringType)):
+        return None
+    bound = fsutil._DRIVER_MAX_ROWS
+    if not fsutil.fits_driver(df, bound):
+        return None
+    got = fsutil.collect_vectors(df.select(id_col, vec_col), bound,
+                                 drop=True, dim=dim, cut=cut)
+    if got is None:
+        return None
+    rows, V = got
+    ids = [r[0] for r in rows]
+    if len(set(ids)) != len(ids):
+        return None
+    return ids, V
+
 
 def argmin_codes_arrow(df, books, vec_col: str, code_col: str):
     """Arrow argmin-encode path shared by PQ (m subspaces) and IVF
@@ -137,26 +275,12 @@ def argmin_codes_arrow(df, books, vec_col: str, code_col: str):
     )
 
     books = np.ascontiguousarray(np.asarray(books, dtype=np.float64))
-    m, k_sub, ds = books.shape
+    m, _, ds = books.shape
     out_schema = StructType(
         list(df.schema.fields)
         + [StructField(code_col, ArrayType(IntegerType()))]
     )
     dim = m * ds
-
-    def encode_block(V: np.ndarray) -> np.ndarray:
-        codes = np.empty((len(V), m), dtype=np.int32)
-        for j in range(m):
-            sub = V[:, j * ds:(j + 1) * ds]
-            acc = np.zeros((len(V), k_sub))
-            for dd in range(ds):
-                diff = sub[:, dd:dd + 1] - books[j][:, dd][None, :]
-                acc += diff * diff
-            # all-NaN rows (a NaN anywhere in the subvector poisons
-            # every centroid distance) take index 0 — the same code
-            # SQL's array_position(array_min) resolves to
-            codes[:, j] = np.argmin(acc, axis=1)
-        return codes
 
     def gen(batches):
         for pdf in batches:
@@ -171,7 +295,7 @@ def argmin_codes_arrow(df, books, vec_col: str, code_col: str):
                 V = np.asarray(
                     [np.asarray(v[:dim], dtype=np.float64) for v in vals]
                 )
-                out = [list(map(int, row)) for row in encode_block(V)]
+                out = [list(map(int, row)) for row in encode_block(V, books)]
             else:
                 # degraded rows follow the SQL semantics: a null
                 # vector -> all-null codes; a short vector encodes
@@ -187,7 +311,7 @@ def argmin_codes_arrow(df, books, vec_col: str, code_col: str):
                         arr[:dim] if len(arr) >= dim
                         else np.concatenate([arr, np.zeros(dim - len(arr))])
                     )
-                    block = encode_block(padded[np.newaxis, :])
+                    block = encode_block(padded[np.newaxis, :], books)
                     out.append([
                         int(block[0, j]) if (j + 1) * ds <= len(arr)
                         else None

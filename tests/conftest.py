@@ -48,3 +48,41 @@ def replay(sf_dir):
         return con.execute(sql).df()
 
     return run
+
+
+@pytest.fixture
+def each_execution(monkeypatch):
+    """``for name in each_execution(): ...`` runs the loop body once per
+    execution of a bounded operator: "memory" at the default driver row
+    bound, then "distributed" with ``fsutil._DRIVER_MAX_ROWS`` forced
+    to 0."""
+    from kowari_spark import fsutil
+
+    def run():
+        for name in ("memory", "distributed"):
+            with monkeypatch.context() as mp:
+                if name == "distributed":
+                    mp.setattr(fsutil, "_DRIVER_MAX_ROWS", 0)
+                yield name
+
+    return run
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> (fn(), the number of Spark jobs it ran)."""
+    import itertools
+
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def run(fn):
+        group = f"count-jobs-{next(groups)}"
+        sc.setJobGroup(group, "job count probe", interruptOnCancel=False)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -1,8 +1,10 @@
 """IVF index tests: deterministic fit, layout, probe recall vs exact."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from kowari_spark import fsutil
 from kowari_spark.operators.ivf import IVF
 from kowari_spark.operators.topk import knn_batch
 from kowari_spark.operators.eval import mean_metric, recall_at_k
@@ -92,17 +94,20 @@ def test_build_saves_and_load_restores_quantizer(base, tmp_path, spark):
     assert len(top) == 3
 
 
-def test_sampled_seeding_matches_distributed_when_sample_covers(base):
-    """seed_sample >= n must reproduce the distributed farthest-first
+def test_sampled_seeding_matches_distributed_when_sample_covers(base, each_execution):
+    """seed_sample >= n must reproduce the exact farthest-first
     traversal bit-for-bit — the parity claim of the driver-side loop
-    (same sequential fold, same max-mind/lowest-id tie-break)."""
-    full = IVF(n_lists=8, max_iter=2, seed=1, seed_sample=None).fit(
-        base, id_col="vec_id"
-    )
-    sampled = IVF(n_lists=8, max_iter=2, seed=1, seed_sample=10_000).fit(
-        base, id_col="vec_id"
-    )
-    assert (full.centroids == sampled.centroids).all()
+    (same sequential fold, same max-mind/lowest-id tie-break) against
+    the distributed argmax scans, and in memory, where both modes run
+    the driver loop."""
+    for _ in each_execution():
+        full = IVF(n_lists=8, max_iter=2, seed=1, seed_sample=None).fit(
+            base, id_col="vec_id"
+        )
+        sampled = IVF(n_lists=8, max_iter=2, seed=1, seed_sample=10_000).fit(
+            base, id_col="vec_id"
+        )
+        assert (full.centroids == sampled.centroids).all()
 
 
 def test_default_seeding_is_sampled_one_collect(base, spark):
@@ -203,14 +208,12 @@ def test_with_lists_arrow_parity_and_auto_dispatch(spark, embeddings):
     assert "MapInPandas" in plan
 
 
-def test_fit_engines_agree_and_auto_fit_uses_arrow(spark):
+def test_fit_engines_agree_and_auto_fit_uses_arrow(spark, each_execution):
     """The fitted centroids equal a by-hand Lloyd replay from the same
     seeds: each round every vector joins its reference-fold cell and
     every non-empty cell moves to its members' mean on the 1e-6
     HALF_UP grid (summation order differences vanish on the grid)."""
     from decimal import ROUND_HALF_UP, Decimal
-
-    import numpy as np
 
     def grid(x):
         return float(Decimal(x).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
@@ -221,24 +224,25 @@ def test_fit_engines_agree_and_auto_fit_uses_arrow(spark):
                   for i in range(16)]).alias("embedding"),
     ).cache()
     kw = dict(n_lists=8, n_probe=2, seed=42, round_centroids=6)
-    fitted = IVF(max_iter=3, **kw).fit(big, id_col="id")
-    cents = IVF(max_iter=0, **kw).fit(big, id_col="id").centroids.copy()
-    vecs = [list(r["embedding"]) for r in big.collect()]
-    for _ in range(3):
-        sums = np.zeros_like(cents)
-        cnts = np.zeros(len(cents), dtype=np.int64)
-        for v in vecs:
-            c = _fold_cell(cents, v)
-            sums[c] += v
-            cnts[c] += 1
-        new = cents.copy()
-        for c in np.flatnonzero(cnts):
-            new[c] = [grid(x) for x in sums[c] / cnts[c]]
-        if np.allclose(new, cents, atol=1e-12):
+    for _ in each_execution():
+        fitted = IVF(max_iter=3, **kw).fit(big, id_col="id")
+        cents = IVF(max_iter=0, **kw).fit(big, id_col="id").centroids.copy()
+        vecs = [list(r["embedding"]) for r in big.collect()]
+        for _ in range(3):
+            sums = np.zeros_like(cents)
+            cnts = np.zeros(len(cents), dtype=np.int64)
+            for v in vecs:
+                c = _fold_cell(cents, v)
+                sums[c] += v
+                cnts[c] += 1
+            new = cents.copy()
+            for c in np.flatnonzero(cnts):
+                new[c] = [grid(x) for x in sums[c] / cnts[c]]
+            if np.allclose(new, cents, atol=1e-12):
+                cents = new
+                break
             cents = new
-            break
-        cents = new
-    assert np.array_equal(fitted.centroids, cents)
+        assert np.array_equal(fitted.centroids, cents)
 
 
 def test_gonzalez_vectorized_matches_scalar():
@@ -264,15 +268,13 @@ def test_gonzalez_vectorized_matches_scalar():
     assert gonzalez_maxmin(ragged, 2) == _gonzalez_scalar(ragged, 2)
 
 
-def test_fit_ignores_degraded_rows(spark):
+def test_fit_ignores_degraded_rows(spark, each_execution):
     """Null / short / overlong vectors assign a null list_id by design
     and carry no fittable signal — fit must produce the SAME centroids
     as fitting the clean subset alone. Previously a null list_id
     reaching the driver accumulation hit numpy's None-is-np.newaxis
     semantics: new_c[None] = vec/cnt[None] silently broadcast over the
     ENTIRE centroid matrix (ADVICE r7)."""
-    import numpy as np
-
     clean = [(i, [float((i * 7 + j * 3) % 13) for j in range(8)])
              for i in range(40)]
     degraded = [(100, None), (101, [1.0, 2.0, 3.0]), (102, [0.0] * 9)]
@@ -280,18 +282,19 @@ def test_fit_ignores_degraded_rows(spark):
         clean + degraded, "id long, embedding array<double>"
     )
     sub = spark.createDataFrame(clean, "id long, embedding array<double>")
-    a = IVF(n_lists=4, max_iter=2, seed=42).fit(full, id_col="id")
-    b = IVF(n_lists=4, max_iter=2, seed=42).fit(sub, id_col="id")
-    assert np.array_equal(a.centroids, b.centroids)
-    # and with decimal-grid rounding the degraded path must not crash
-    # (the broadcast bug surfaced there as an opaque TypeError)
-    c = IVF(n_lists=4, max_iter=2, seed=42, round_centroids=6).fit(
-        full, id_col="id"
-    )
-    d = IVF(n_lists=4, max_iter=2, seed=42, round_centroids=6).fit(
-        sub, id_col="id"
-    )
-    assert np.array_equal(c.centroids, d.centroids)
+    for _ in each_execution():
+        a = IVF(n_lists=4, max_iter=2, seed=42).fit(full, id_col="id")
+        b = IVF(n_lists=4, max_iter=2, seed=42).fit(sub, id_col="id")
+        assert np.array_equal(a.centroids, b.centroids)
+        # and with decimal-grid rounding the degraded path must not crash
+        # (the broadcast bug surfaced there as an opaque TypeError)
+        c = IVF(n_lists=4, max_iter=2, seed=42, round_centroids=6).fit(
+            full, id_col="id"
+        )
+        d = IVF(n_lists=4, max_iter=2, seed=42, round_centroids=6).fit(
+            sub, id_col="id"
+        )
+        assert np.array_equal(c.centroids, d.centroids)
 
 
 def test_gonzalez_nan_fails_intelligibly():
@@ -309,29 +312,28 @@ def test_gonzalez_nan_fails_intelligibly():
         gonzalez_maxmin(pts, 3)
 
 
-def test_auto_sizing_resolves_sqrt_n(base, spark):
+def test_auto_sizing_resolves_sqrt_n(base, spark, each_execution):
     """n_lists='auto' -> round(sqrt(n)) via the persist-warming count
     (the PQ.fit pattern); n_probe='auto' -> n_lists // 16 floored at 1.
     The resolved fit is bit-identical to an explicit fit with the same
     numbers (auto-sizing changes no arithmetic)."""
     import math
 
-    import numpy as np
-
     n = base.count()
-    auto = IVF(n_lists="auto", n_probe="auto", max_iter=2, seed=42).fit(
-        base, id_col="vec_id"
-    )
-    want_lists = max(1, min(n, int(round(math.sqrt(n)))))
-    assert auto.n_lists == want_lists
-    assert auto.n_probe == max(1, want_lists // 16)
-    explicit = IVF(n_lists=want_lists, n_probe=auto.n_probe, max_iter=2,
-                   seed=42).fit(base, id_col="vec_id")
-    assert np.array_equal(auto.centroids, explicit.centroids)
-    with pytest.raises(ValueError, match="n_lists"):
-        IVF(n_lists="mystery")
-    with pytest.raises(ValueError, match="n_probe"):
-        IVF(n_probe="mystery")
+    for _ in each_execution():
+        auto = IVF(n_lists="auto", n_probe="auto", max_iter=2, seed=42).fit(
+            base, id_col="vec_id"
+        )
+        want_lists = max(1, min(n, int(round(math.sqrt(n)))))
+        assert auto.n_lists == want_lists
+        assert auto.n_probe == max(1, want_lists // 16)
+        explicit = IVF(n_lists=want_lists, n_probe=auto.n_probe, max_iter=2,
+                       seed=42).fit(base, id_col="vec_id")
+        assert np.array_equal(auto.centroids, explicit.centroids)
+        with pytest.raises(ValueError, match="n_lists"):
+            IVF(n_lists="mystery")
+        with pytest.raises(ValueError, match="n_probe"):
+            IVF(n_probe="mystery")
 
 
 def test_auto_sizing_rederived_per_fit(spark, embeddings):
@@ -354,3 +356,106 @@ def test_auto_sizing_rederived_per_fit(spark, embeddings):
     ivf2.fit(vecs.limit(100), id_col="id")
     ivf2.fit(vecs.limit(400), id_col="id")
     assert (ivf2.n_lists, ivf2.n_probe) == (4, 2)
+
+
+def _string_degraded(spark):
+    """61 8-d rows with string ids in one partition: a null vector first
+    (dim comes from the first NON-null row), 58 clean rows, then a
+    short and an overlong vector — both executions drop all three."""
+    clean = [(f"s{i}", [float((i * 7 + j * 3) % 13) + 0.1 * i
+                        for j in range(8)]) for i in range(58)]
+    return spark.createDataFrame(
+        [("x0", None)] + clean + [("x1", [1.0, 2.0, 3.0]), ("x2", [0.5] * 11)],
+        "id string, embedding array<double>",
+    ).coalesce(1)
+
+
+_PARITY = {
+    "long-round-none": ("long", dict(n_lists=8, max_iter=3)),
+    "long-round6-exact": ("long", dict(n_lists=8, max_iter=3,
+                                       round_centroids=6, seed_sample=None)),
+    "long-auto-lists": ("long", dict(n_lists="auto", n_probe="auto",
+                                     max_iter=3, seed_sample=64)),
+    "string-degraded-round6": ("string", dict(n_lists=4, max_iter=3,
+                                              round_centroids=6,
+                                              seed_sample=20)),
+    "string-degraded-exact": ("string", dict(n_lists=4, max_iter=3,
+                                             seed_sample=None)),
+    "multi-file-round6": ("multi", dict(n_lists=8, max_iter=3,
+                                        round_centroids=6)),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PARITY))
+def test_fit_in_memory_parity(spark, base, tmp_path, monkeypatch,
+                              count_jobs, case):
+    """A corpus inside the driver bound is fitted in memory in 2 Spark
+    jobs (size check, collect), with the distributed fit's centroids
+    (the driver bound forced to 0) bit for bit on a single-partition
+    input: round_centroids None and 6, seed_sample "auto", None and an
+    int, n_lists="auto", integral and string ids, null/short/overlong
+    vectors. A 3-file input's partial sums merge in shuffle order on
+    the distributed side, so there only the 1e-6 grid makes them
+    equal."""
+    kind, kw = _PARITY[case]
+    if kind == "string":
+        df, id_col = _string_degraded(spark), "id"
+    elif kind == "multi":
+        path = str(tmp_path / "emb3")
+        base.repartition(3).write.parquet(path)
+        df, id_col = spark.read.parquet(path), "vec_id"
+        assert len(df.inputFiles()) == 3
+    else:
+        df, id_col = base, "vec_id"
+    mem, jobs = count_jobs(lambda: IVF(**kw).fit(df, id_col=id_col))
+    assert jobs == 2, case
+    monkeypatch.setattr(fsutil, "_DRIVER_MAX_ROWS", 0)
+    dist = IVF(**kw).fit(df, id_col=id_col)
+    assert (mem.n_lists, mem.n_probe) == (dist.n_lists, dist.n_probe)
+    assert np.array_equal(mem.centroids, dist.centroids), case
+
+
+def test_fit_in_memory_declines(spark, base, monkeypatch, count_jobs):
+    """Input the in-memory fit does not take runs the distributed plan,
+    with its centroids. Beyond the distributed plan's jobs it costs: the
+    size check for a corpus one row over the bound; the size check and
+    the collect for a NaN entry or a repeated id (seen in the collected
+    rows); nothing for a double id (the schema says so). A corpus that
+    exactly fills the bound runs in memory in 2 jobs."""
+    from kowari_spark.operators.quantizer import fit_input, md5_order
+
+    df = base.select(F.col("vec_id").alias("id"), "embedding")
+    ids = [r[0] for r in df.select("id").collect()]
+    n = len(ids)
+    # a NaN row outside the 64-row seeding sample: the distributed fit
+    # then runs to the end instead of refusing the sample
+    last = ids[md5_order(ids, 42)[-1]]
+    nan = F.array_repeat(F.lit(float("nan")), 64)
+    cases = {
+        "over the bound": (df, n - 1, 1),
+        "fills the bound": (df, n, None),
+        "double id": (df.withColumn("id", F.col("id").cast("double")), n, 0),
+        "repeated id": (df.unionByName(df.filter(F.col("id") == ids[0])),
+                        n + 1, 2),
+        "nan": (df.withColumn("embedding", F.when(F.col("id") == last, nan)
+                              .otherwise(F.col("embedding"))), n, 2),
+    }
+    kw = dict(n_lists=4, max_iter=2, seed=42, seed_sample=64)
+    for name, (case, bound, extra) in cases.items():
+        case = case.cache()
+        case.count()
+        with monkeypatch.context() as mp:
+            mp.setattr(fsutil, "_DRIVER_MAX_ROWS", bound)
+            declined = fit_input(case, "id", "embedding") is None
+            got, jobs = count_jobs(lambda: IVF(**kw).fit(case))
+        with monkeypatch.context() as mp:
+            mp.setattr(fsutil, "_DRIVER_MAX_ROWS", 0)
+            want, dist_jobs = count_jobs(lambda: IVF(**kw).fit(case))
+        assert np.array_equal(got.centroids, want.centroids,
+                              equal_nan=True), name
+        assert declined == (extra is not None), name
+        if extra is None:
+            assert jobs == 2, name
+        else:
+            assert jobs == dist_jobs + extra, (name, jobs, dist_jobs)
+        case.unpersist()

@@ -5,6 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from kowari_spark import fsutil
 from kowari_spark.operators.pq import PQ
 from kowari_spark.operators.topk import knn
 
@@ -196,7 +197,7 @@ def test_rerank_index_exact_topk(base, fitted):
         assert mine == exact
 
 
-def test_fit_replay_in_duckdb(base):
+def test_fit_replay_in_duckdb(base, each_execution):
     """Re-derive one subspace's Gonzalez seeding driver-side from a
     DuckDB md5-ordered sample and check the fitted codebook's seeds-
     round-0 behavior: the final codebooks must be reproducible from the
@@ -216,10 +217,11 @@ def test_fit_replay_in_duckdb(base):
     pq = PQ(m=4, k_sub=8, max_iter=0, seed=42)
     pq.dim = 64
     seeds = pq._gonzalez(pts)
-    fitted0 = PQ(m=4, k_sub=8, max_iter=0, seed=42).fit(
-        base, id_col="vec_id", dim=64
-    )
-    assert np.array_equal(np.asarray(seeds), fitted0.codebooks[0])
+    for _ in each_execution():
+        fitted0 = PQ(m=4, k_sub=8, max_iter=0, seed=42).fit(
+            base, id_col="vec_id", dim=64
+        )
+        assert np.array_equal(np.asarray(seeds), fitted0.codebooks[0])
 
 
 def _fold_codes(books, vec):
@@ -275,7 +277,7 @@ def test_arrow_encoder_is_shuffle_free(base, fitted):
     assert "Exchange" not in plan
 
 
-def test_fit_codebooks_agree_across_encoders(base):
+def test_fit_codebooks_agree_across_encoders(base, each_execution):
     """The fitted codebooks equal a by-hand Lloyd replay from the same
     seeds: each round every vector joins its reference-fold code per
     subspace, and every non-empty centroid moves to its members' mean
@@ -286,24 +288,25 @@ def test_fit_codebooks_agree_across_encoders(base):
     def grid(x):
         return float(Decimal(x).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
 
-    fitted = PQ(m=4, k_sub=8, max_iter=2, seed=42).fit(
-        base, id_col="vec_id", dim=64)
-    books = PQ(m=4, k_sub=8, max_iter=0, seed=42).fit(
-        base, id_col="vec_id", dim=64).codebooks.copy()
     vecs = [[float(x) for x in r["embedding"]]
             for r in base.select("embedding").collect()]
-    for _ in range(2):
-        sums = np.zeros((4, 8, 16))
-        cnts = np.zeros((4, 8), dtype=np.int64)
-        for v in vecs:
-            for j, c in enumerate(_fold_codes(books, v)):
-                sums[j, c] += v[j * 16:(j + 1) * 16]
-                cnts[j, c] += 1
-        for j in range(4):
-            for c in range(8):
-                if cnts[j, c]:
-                    books[j, c] = [grid(x) for x in sums[j, c] / cnts[j, c]]
-    assert np.array_equal(fitted.codebooks, books)
+    for _ in each_execution():
+        fitted = PQ(m=4, k_sub=8, max_iter=2, seed=42).fit(
+            base, id_col="vec_id", dim=64)
+        books = PQ(m=4, k_sub=8, max_iter=0, seed=42).fit(
+            base, id_col="vec_id", dim=64).codebooks.copy()
+        for _ in range(2):
+            sums = np.zeros((4, 8, 16))
+            cnts = np.zeros((4, 8), dtype=np.int64)
+            for v in vecs:
+                for j, c in enumerate(_fold_codes(books, v)):
+                    sums[j, c] += v[j * 16:(j + 1) * 16]
+                    cnts[j, c] += 1
+            for j in range(4):
+                for c in range(8):
+                    if cnts[j, c]:
+                        books[j, c] = [grid(x) for x in sums[j, c] / cnts[j, c]]
+        assert np.array_equal(fitted.codebooks, books)
 
 
 def test_encoder_typo_rejected():
@@ -355,12 +358,12 @@ def test_layout_sidecar_records_encoder_provenance(base, tmp_path, spark):
         assert "encoder" not in json.load(f)  # one encoder: nothing to record
 
 
-def test_fit_ignores_degraded_rows(spark):
+def test_fit_ignores_degraded_rows(spark, each_execution):
     """Null / short vectors can't be encoded (null codes by design) —
     fit must skip them instead of crashing the Lloyd reduce, and the
-    result equals fitting on the clean subset alone."""
-    import numpy as np
-
+    result equals fitting on the clean subset alone. An overlong
+    vector is fitted on its first ``dim`` entries, as encode reads it
+    (the distributed reduce used to index past the last subspace)."""
     clean = [(i, [float((i * 7 + j * 3) % 13) for j in range(8)])
              for i in range(40)]
     degraded = [(100, None), (101, [1.0, 2.0, 3.0])]
@@ -368,9 +371,14 @@ def test_fit_ignores_degraded_rows(spark):
         clean + degraded, "id long, embedding array<double>"
     )
     sub = spark.createDataFrame(clean, "id long, embedding array<double>")
-    a = PQ(m=2, k_sub=4, max_iter=2, seed=42).fit(full, id_col="id", dim=8)
-    b = PQ(m=2, k_sub=4, max_iter=2, seed=42).fit(sub, id_col="id", dim=8)
-    assert np.array_equal(a.codebooks, b.codebooks)
+    tail = [(i, v + [99.0, -99.0]) for i, v in clean[:5]] + clean[5:]
+    long = spark.createDataFrame(tail, "id long, embedding array<double>")
+    for _ in each_execution():
+        a = PQ(m=2, k_sub=4, max_iter=2, seed=42).fit(full, id_col="id", dim=8)
+        b = PQ(m=2, k_sub=4, max_iter=2, seed=42).fit(sub, id_col="id", dim=8)
+        assert np.array_equal(a.codebooks, b.codebooks)
+        c = PQ(m=2, k_sub=4, max_iter=2, seed=42).fit(long, id_col="id", dim=8)
+        assert np.array_equal(c.codebooks, b.codebooks)
 
 
 def test_load_refuses_bare_parquet(spark, tmp_path):
@@ -381,3 +389,109 @@ def test_load_refuses_bare_parquet(spark, tmp_path):
     spark.range(3).write.parquet(path)
     with pytest.raises(ValueError, match="sidecar"):
         PQ().load(spark, path)
+
+
+def _string_degraded(spark):
+    """61 8-d rows with string ids in one partition: a null vector first
+    (dim comes from the first NON-null row), 58 clean rows, then a
+    short vector (dropped) and an overlong one (fitted on its first 8
+    entries)."""
+    clean = [(f"s{i}", [float((i * 7 + j * 3) % 13) + 0.1 * i
+                        for j in range(8)]) for i in range(58)]
+    return spark.createDataFrame(
+        [("x0", None)] + clean
+        + [("x1", [1.0, 2.0, 3.0]), ("x2", [0.5] * 8 + [7.0, 9.0, 3.0])],
+        "id string, embedding array<double>",
+    ).coalesce(1)
+
+
+_PARITY = {
+    "long-dim-round6": ("long", 64, dict(m=4, k_sub=8, max_iter=3)),
+    "long-infer-round-none": ("long", None, dict(
+        m=4, k_sub=8, max_iter=3, round_centroids=None)),
+    "long-exact": ("long", 64, dict(m=4, k_sub=8, max_iter=2,
+                                    seed_sample=None)),
+    "long-int-sample": ("long", None, dict(m=4, k_sub=8, max_iter=2,
+                                           seed_sample=40)),
+    "string-degraded-round6": ("string", None, dict(m=2, k_sub=4,
+                                                    max_iter=3)),
+    "string-degraded-exact": ("string", 8, dict(
+        m=2, k_sub=4, max_iter=3, round_centroids=None, seed_sample=None)),
+    "multi-file-round6": ("multi", 64, dict(m=4, k_sub=8, max_iter=3)),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PARITY))
+def test_fit_in_memory_parity(spark, base, tmp_path, monkeypatch,
+                              count_jobs, case):
+    """A corpus inside the driver bound is fitted in memory in 2 Spark
+    jobs (size check, collect; no first() even without ``dim``), with
+    the distributed fit's codebooks (the driver bound forced to 0) bit
+    for bit on a single-partition input: round_centroids None and 6,
+    seed_sample "auto", None and an int, integral and string ids,
+    null/short/overlong vectors, ``dim`` given or inferred. A 3-file
+    input's partial sums merge in shuffle order on the distributed
+    side, so there only the 1e-6 grid makes them equal."""
+    kind, dim, kw = _PARITY[case]
+    if kind == "string":
+        df, id_col = _string_degraded(spark), "id"
+    elif kind == "multi":
+        path = str(tmp_path / "emb3")
+        base.repartition(3).write.parquet(path)
+        df, id_col = spark.read.parquet(path), "vec_id"
+        assert len(df.inputFiles()) == 3
+    else:
+        df, id_col = base, "vec_id"
+    mem, jobs = count_jobs(lambda: PQ(**kw).fit(df, id_col=id_col, dim=dim))
+    assert jobs == 2, case
+    monkeypatch.setattr(fsutil, "_DRIVER_MAX_ROWS", 0)
+    dist = PQ(**kw).fit(df, id_col=id_col, dim=dim)
+    assert mem.dim == dist.dim
+    assert np.array_equal(mem.codebooks, dist.codebooks), case
+
+
+def test_fit_in_memory_declines(spark, base, monkeypatch, count_jobs):
+    """Input the in-memory fit does not take runs the distributed plan,
+    with its codebooks. Beyond the distributed plan's jobs it costs: the
+    size check for a corpus one row over the bound; the size check and
+    the collect for a NaN entry or a repeated id (seen in the collected
+    rows); nothing for a double id (the schema says so). A corpus that
+    exactly fills the bound runs in memory in 2 jobs."""
+    from kowari_spark.operators.quantizer import fit_input, md5_order
+
+    df = base.select(F.col("vec_id").alias("id"), "embedding")
+    ids = [r[0] for r in df.select("id").collect()]
+    n = len(ids)
+    # a NaN row outside the 40-row seeding sample: the distributed fit
+    # then runs to the end instead of refusing the sample
+    last = ids[md5_order(ids, 42)[-1]]
+    nan = F.array_repeat(F.lit(float("nan")), 64)
+    cases = {
+        "over the bound": (df, n - 1, 1),
+        "fills the bound": (df, n, None),
+        "double id": (df.withColumn("id", F.col("id").cast("double")), n, 0),
+        "repeated id": (df.unionByName(df.filter(F.col("id") == ids[0])),
+                        n + 1, 2),
+        "nan": (df.withColumn("embedding", F.when(F.col("id") == last, nan)
+                              .otherwise(F.col("embedding"))), n, 2),
+    }
+    kw = dict(m=4, k_sub=8, max_iter=2, seed=42, seed_sample=40)
+    for name, (case, bound, extra) in cases.items():
+        case = case.cache()
+        case.count()
+        with monkeypatch.context() as mp:
+            mp.setattr(fsutil, "_DRIVER_MAX_ROWS", bound)
+            declined = fit_input(case, "id", "embedding", dim=64,
+                                 cut=True) is None
+            got, jobs = count_jobs(lambda: PQ(**kw).fit(case, dim=64))
+        with monkeypatch.context() as mp:
+            mp.setattr(fsutil, "_DRIVER_MAX_ROWS", 0)
+            want, dist_jobs = count_jobs(lambda: PQ(**kw).fit(case, dim=64))
+        assert np.array_equal(got.codebooks, want.codebooks,
+                              equal_nan=True), name
+        assert declined == (extra is not None), name
+        if extra is None:
+            assert jobs == 2, name
+        else:
+            assert jobs == dist_jobs + extra, (name, jobs, dist_jobs)
+        case.unpersist()

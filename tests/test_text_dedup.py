@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from kowari_spark import fsutil
 from kowari_spark.functions.text import (
     fingerprint_key,
     lang_id,
@@ -167,7 +168,7 @@ def test_near_dup_dim_param_skips_inference_job(spark, embeddings,
     base = embeddings.limit(150).cache()
     base.count()
     with monkeypatch.context() as mp:
-        mp.setattr(dedup, "_DRIVER_MAX_ROWS", 0)
+        mp.setattr(fsutil, "_DRIVER_MAX_ROWS", 0)
         withdim, jobs = _jobs(spark, "neardup-dim-probe", lambda: (
             embedding_near_dups_lsh(
                 base, threshold=0.3, id_col="vec_id", round_to=6, dim=64,
@@ -193,7 +194,7 @@ def test_null_first_vector_infers_dim(spark, monkeypatch, op):
     dim=2."""
     from kowari_spark.operators import dedup
 
-    monkeypatch.setattr(dedup, "_DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(fsutil, "_DRIVER_MAX_ROWS", 0)
     df = spark.createDataFrame(
         [("a", None), ("b", [1.0, 0.0]), ("c", [1.0, 0.001])],
         "id string, embedding array<double>",
@@ -307,7 +308,7 @@ def test_near_dups_in_memory_parity(spark, near_dup_base, monkeypatch,
 
     local = run()
     assert len(plans) == (1 if case in ("empty", "degraded") else 0)
-    monkeypatch.setattr(dedup, "_DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(fsutil, "_DRIVER_MAX_ROWS", 0)
     dist = run()
     assert local.schema == dist.schema
 
@@ -1090,7 +1091,8 @@ def test_minhash_in_memory_parity(spark, docs, monkeypatch, edges, id_type,
     (schema, rows), jobs = _jobs(
         spark, f"mh-local-{edges}-{id_type}-{bound}", run_collect)
     assert jobs == 2
-    monkeypatch.setattr(dedup, bound, 0)
+    monkeypatch.setattr(fsutil if bound == "_DRIVER_MAX_ROWS" else dedup,
+                        bound, 0)
     dist = run()
     assert schema == dist.schema
     rows = sorted(map(tuple, rows))
@@ -1126,10 +1128,10 @@ def test_minhash_in_memory_declines(spark, docs, monkeypatch):
         "double id": (base.select(F.col("doc_id").cast("double")
                                   .alias("doc_id"), "text"), {}, 0),
         "over bytes": (base, {(dedup, nbytes_cap): nbytes - 1}, 1),
-        "over rows": (base, {(dedup, rows): n - 1}, 1),
+        "over rows": (base, {(fsutil, rows): n - 1}, 1),
         "over candidates": (base, {(HNSW, "BEAM_MAX_EDGES"): 0}, 2),
         "full bytes": (base, {(dedup, nbytes_cap): nbytes}, None),
-        "full rows": (base, {(dedup, rows): n}, None),
+        "full rows": (base, {(fsutil, rows): n}, None),
     }
     for name, (df, bounds, extra) in cases.items():
         df = df.cache()
@@ -1146,7 +1148,7 @@ def test_minhash_in_memory_declines(spark, docs, monkeypatch):
             args = (df, "text", "doc_id", 0.5, 16, 4, 3, 42, "pairs")
             declined = dedup._minhash_pairs_in_memory(*args) is None
         with monkeypatch.context() as mp:
-            mp.setattr(dedup, "_DRIVER_MAX_ROWS", 0)
+            mp.setattr(fsutil, "_DRIVER_MAX_ROWS", 0)
             want, dist_jobs = _jobs(spark, f"mh-dist-{name}", run)
         assert got == want, name
         assert declined == (extra is not None), name

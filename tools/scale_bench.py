@@ -323,6 +323,8 @@ def _run_suite(
         rec("lsh_knn_top10", s, r)
 
     if want("ivf_fit") or want("ivf_knn"):
+        # a corpus of at most fsutil._DRIVER_MAX_ROWS rows (x1, x10) is
+        # fitted in memory, x100 by the distributed Lloyd plan
         ivf = IVF(n_lists=16, n_probe=3, max_iter=3, seed=42)
         s, _ = timed(lambda: ivf.fit(emb, id_col="vec_id") and 0)
         if want("ivf_fit"):
@@ -334,6 +336,15 @@ def _run_suite(
                 lists, queries.limit(4), 10, id_col="vec_id", round_to=6).count())
             rec("ivf_knn", s, r)
             lists.unpersist()
+
+    if want("pq_fit"):
+        # the fit alone (pq_build adds the encode and write); in memory
+        # at x1 and x10, distributed at x100, as ivf_fit
+        from kowari_spark.operators.pq import PQ as _PQ
+
+        pqf = _PQ(m=8, k_sub=16, max_iter=2, seed=42)
+        s, _ = timed(lambda: pqf.fit(emb, id_col="vec_id", dim=64) and 0)
+        rec("pq_fit", s, 0)
 
     if want("hnsw_build") or want("hnsw_knn"):
         h = HNSW(m=8, ef=32, seed=42, num_planes=p, num_tables=4)
@@ -776,7 +787,7 @@ def _run_suite(
 
     if want("embedding_near_dups_lsh"):
         # perfbench ann_serve's near-dup call (threshold 0.98, 8 planes,
-        # 4 tables, dim 64). A corpus of at most dedup._DRIVER_MAX_ROWS
+        # 4 tables, dim 64). A corpus of at most fsutil._DRIVER_MAX_ROWS
         # rows runs in memory (x1, x10); x100 takes the distributed
         # plan. The jittered copies are near-duplicates of each other,
         # so pair counts grow with the copy families, as in
